@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{StoreCommit, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,18 +12,17 @@ import org.apache.spark.sql.functions._
   * terms' buckets via partition pruning. At 100 TB a probe lists and
   * reads |query buckets| / |buckets| of the postings, never the corpus.
   *
-  * Layout (self-contained — a later session probes or appends without
-  * the builder's driver state). Since round 11 every mutation commits
-  * through ONE versioned manifest, making append/compact crash-safe:
+  * Layout (self-contained — a later process probes or appends without
+  * the writer's in-memory state):
   *   dir/postings/epoch=<e>/bucket=<b>/  (doc_id, term, tf),
   *                                       b = pmod(xxhash64(term), B)
   *   dir/norms/epoch=<e>/                (doc_id, dl) per-doc lengths
   *                                       (Lucene's doc-norms analogue)
   *   dir/dict_v<g>/                      (term, df) — the vocabulary-sized
   *                                       term dictionary, generation-versioned
-  *   dir/_manifest.properties            THE commit point: n docs, token
-  *                                       mass, layout params, the committed
-  *                                       epoch list, the live dict generation
+  *   dir/_manifest.properties            n docs, token mass, layout params,
+  *                                       the committed epoch list, the live
+  *                                       dict generation
   *
   * A term's postings live ENTIRELY in its hash bucket, so per-term df/tf
   * read from pruned buckets are exact — probe ≡ the in-memory
@@ -31,17 +30,9 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle. Append is O(delta + vocabulary): a batch's postings and
   * norms land in a NEW epoch directory (old files never read or
   * rewritten), the dict merges delta dfs into the next generation
-  * directory, and only then does one atomic manifest rename publish all
-  * four tables at once. A reader always resolves the manifest first, so
-  * it sees the pre-append index until the instant of commit and the
-  * complete post-append index after — there is no window where landed
-  * postings pair with a stale dict (the round-10 non-atomicity this
-  * design retires). A crashed append leaves only invisible residue
-  * (an uncommitted epoch dir, an unreferenced dict generation), and
-  * re-running the SAME append is the whole recovery protocol: staging
-  * deletes residue at the manifest's frozen next-epoch/next-gen names
-  * before writing. Manifest-rename atomicity is the filesystem's rename
-  * contract (POSIX/HDFS; an object store needs its usual committer).
+  * directory, and one [[graft.sources.StoreCommit]] manifest rename
+  * publishes all four tables at once — no reader ever pairs landed
+  * postings with a stale dict.
   *
   * [[compact]] bounds the file-count growth of calendar time: N daily
   * appends = N epoch dirs per probed bucket, so probes open O(N) files.
@@ -62,40 +53,21 @@ object Bm25Index {
     * = the live dict_v<g>. */
   private[graft] case class Manifest(n: Long, mass: Long, numBuckets: Int,
                                          epochs: Seq[Long], nextEpoch: Long,
-                                         dictGen: Long) {
+                                         dictGen: Long) extends StoreCommit.Manifest {
     def dictDir(dir: String): String = s"$dir/dict_v$dictGen"
+    def layout: StoreCommit.Layout = Layout
+    def fields: Seq[(String, Any)] = Seq("n" -> n, "mass" -> mass,
+      "numBuckets" -> numBuckets, "epochs" -> epochs, "nextEpoch" -> nextEpoch,
+      "dictGen" -> dictGen)
+    override def generation: Option[Long] = Some(dictGen)
   }
 
-  private def manifestPath(dir: String) =
-    java.nio.file.Paths.get(dir, "_manifest.properties")
+  private val Layout = StoreCommit.Layout("graft bm25 index manifest",
+    epochTables = Seq("postings", "norms"), genPrefixes = Seq("dict_v"))
 
-  /** Publish `m` as the index's current state: write a sibling temp file,
-    * then one atomic rename — the only instant at which any mutation
-    * becomes visible. */
-  private[graft] def commitManifest(dir: String, m: Manifest): Unit = {
-    val p = new java.util.Properties()
-    p.setProperty("n", m.n.toString)
-    p.setProperty("mass", m.mass.toString)
-    p.setProperty("numBuckets", m.numBuckets.toString)
-    p.setProperty("epochs", m.epochs.mkString(","))
-    p.setProperty("nextEpoch", m.nextEpoch.toString)
-    p.setProperty("dictGen", m.dictGen.toString)
-    val tmp = java.nio.file.Paths.get(dir, "_manifest.properties.staged")
-    val out = java.nio.file.Files.newOutputStream(tmp)
-    try p.store(out, "graft bm25 index manifest") finally out.close()
-    java.nio.file.Files.move(tmp, manifestPath(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private[graft] def readManifest(dir: String): Manifest = {
-    val p = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(manifestPath(dir))
-    try p.load(in) finally in.close()
-    Manifest(p.getProperty("n").toLong, p.getProperty("mass").toLong,
-      p.getProperty("numBuckets").toInt,
-      p.getProperty("epochs").split(',').filter(_.nonEmpty).map(_.toLong).toSeq,
-      p.getProperty("nextEpoch").toLong, p.getProperty("dictGen").toLong)
+  private[graft] def readManifest(dir: String): Manifest = StoreCommit.read(dir) { p =>
+    Manifest(p("n").toLong, p("mass").toLong, p("numBuckets").toInt,
+      p.epochs("epochs"), p("nextEpoch").toLong, p("dictGen").toLong)
   }
 
   // ------------------------------------------------------------ build
@@ -125,7 +97,7 @@ object Bm25Index {
       // store left behind under dynamic partition overwrite, inflating the
       // committed stats that every probe's idf/avgdl derive from
       val r = dl.agg(count(lit(1)), sum(col("dl"))).first()
-      commitManifest(dir, Manifest(r.getLong(0),
+      StoreCommit.publish(dir, Manifest(r.getLong(0),
         Option(r.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L), numBuckets,
         epochs = Seq(0L), nextEpoch = 1L, dictGen = 0L))
     } finally Pinned.releaseSince(spark, m, Seq.empty)
@@ -133,34 +105,20 @@ object Bm25Index {
 
   // ----------------------------------------------------------- append
 
-  /** Append a batch. Crash-safe: all four tables stage invisibly (new
-    * epoch dir, next dict generation), then [[commitManifest]] publishes
-    * them in one rename. Recovery from a crash anywhere in between is
-    * re-running the append — staging deletes the residue first. */
-  def append(docs: DataFrame, dir: String): Unit = {
-    val (staged, cleanup) = stageAppend(docs, dir)
-    commitManifest(dir, staged)
-    cleanup()
-  }
+  /** Append a batch: all four tables stage invisibly (new epoch dir,
+    * next dict generation), then one manifest commit publishes them. */
+  def append(docs: DataFrame, dir: String): Unit =
+    StoreCommit.commit(dir, stageAppend(docs, dir))
 
   /** The staging half of [[append]], exposed for the crash-injection
     * spec: everything lands on disk, nothing is visible until the caller
-    * commits. Returns the manifest to commit and the retired-artifact
-    * cleanup to run AFTER the commit (the pre-append dict generation —
-    * deleting it before the rename would corrupt the still-live index). */
-  private[graft] def stageAppend(docs: DataFrame,
-                                     dir: String): (Manifest, () => Unit) = {
+    * commits the returned manifest. */
+  private[graft] def stageAppend(docs: DataFrame, dir: String): Manifest = {
     val spark = docs.sparkSession
     val meta = readManifest(dir)
     val e = meta.nextEpoch
     val g = meta.dictGen + 1
-    // sweep everything the manifest doesn't reference: residue of a
-    // crashed earlier append at the frozen nextEpoch/dictGen names (so
-    // re-running the append is idempotent) AND retired epochs/dict
-    // generations whose post-commit delete crashed
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/postings"), "epoch=", meta.epochs.toSet)
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/norms"), "epoch=", meta.epochs.toSet)
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(dir), "dict_v", Set(meta.dictGen))
+    StoreCommit.sweep(dir, meta)
     val m = Pinned.marker(spark)
     val tf = Bm25.tfStage(docs)
     try {
@@ -183,10 +141,8 @@ object Bm25Index {
       val r = dl.agg(count(lit(1)), sum(col("dl"))).first()
       val (dn, dmass) =
         (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L))
-      val retiredDict = meta.dictDir(dir)
-      (meta.copy(n = meta.n + dn, mass = meta.mass + dmass,
-        epochs = meta.epochs :+ e, nextEpoch = e + 1, dictGen = g),
-        () => ClusterStore.deleteRecursively(java.nio.file.Paths.get(retiredDict)))
+      meta.copy(n = meta.n + dn, mass = meta.mass + dmass,
+        epochs = meta.epochs :+ e, nextEpoch = e + 1, dictGen = g)
     } finally Pinned.releaseSince(spark, m, Seq.empty)
   }
 
@@ -197,22 +153,15 @@ object Bm25Index {
     * commits the single-epoch manifest atomically, then deletes the
     * retired epoch dirs. Logical content is unchanged — the probe gate
     * re-passes its oracle over a compacted index — but a probe now opens
-    * O(1) files per pruned bucket instead of O(appends). Crash-safe like
-    * append: the rewrite stages at the frozen nextEpoch name (invisible,
-    * healed on re-run), and a crash after commit but before the deletes
-    * only leaves retired dirs that no reader resolves ([[compact]] or
-    * [[stageAppend]] on the next run removes them, keyed off the
-    * manifest's epoch list). At real scale the one-file-per-bucket target
-    * is the numBuckets sizing rule: buckets are chosen so a bucket ≈ one
-    * healthy parquet file; a size-tiered variant would split per-bucket
-    * output by target bytes instead of count — the manifest mechanics
-    * are unchanged. */
+    * O(1) files per pruned bucket instead of O(appends). At real scale
+    * the one-file-per-bucket target is the numBuckets sizing rule:
+    * buckets are chosen so a bucket ≈ one healthy parquet file; a
+    * size-tiered variant would split per-bucket output by target bytes
+    * instead of count — the manifest mechanics are unchanged. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val meta = readManifest(dir)
     val e = meta.nextEpoch
-    // heals staged residue at e AND orphaned retired epochs in one sweep
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/postings"), "epoch=", meta.epochs.toSet)
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/norms"), "epoch=", meta.epochs.toSet)
+    StoreCommit.sweep(dir, meta)
     val committed = meta.epochs.map(java.lang.Long.valueOf)
     // two independent rewrites into disjoint dirs — overlapped (guide §2.6)
     ParallelJobs.par(
@@ -228,11 +177,7 @@ object Bm25Index {
         .select(col("doc_id"), col("dl"))
         .withColumn("epoch", lit(e))
         .write.mode("append").partitionBy("epoch").parquet(s"$dir/norms"))
-    commitManifest(dir, meta.copy(epochs = Seq(e), nextEpoch = e + 1))
-    for (old <- meta.epochs) {
-      ClusterStore.deleteRecursively(java.nio.file.Paths.get(s"$dir/postings/epoch=$old"))
-      ClusterStore.deleteRecursively(java.nio.file.Paths.get(s"$dir/norms/epoch=$old"))
-    }
+    StoreCommit.commit(dir, meta.copy(epochs = Seq(e), nextEpoch = e + 1))
   }
 
   // ----------------------------------------------------------- remove
@@ -256,9 +201,7 @@ object Bm25Index {
     val meta = readManifest(dir)
     val e = meta.nextEpoch
     val g = meta.dictGen + 1
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/postings"), "epoch=", meta.epochs.toSet)
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/norms"), "epoch=", meta.epochs.toSet)
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(dir), "dict_v", Set(meta.dictGen))
+    StoreCommit.sweep(dir, meta)
     val committed = meta.epochs.map(java.lang.Long.valueOf)
     val rem = removedIds.select(col("doc_id"))
     val postings = spark.read.parquet(s"$dir/postings")
@@ -288,15 +231,9 @@ object Bm25Index {
     // n/mass re-derived exactly from the staged kept norms (narrow scan)
     val r = spark.read.parquet(s"$dir/norms").filter(col("epoch") === e)
       .agg(count(lit(1)), sum(col("dl"))).first()
-    commitManifest(dir, meta.copy(n = r.getLong(0),
+    StoreCommit.commit(dir, meta.copy(n = r.getLong(0),
       mass = Option(r.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L),
       epochs = Seq(e), nextEpoch = e + 1, dictGen = g))
-    for (old <- meta.epochs) {
-      ClusterStore.deleteRecursively(java.nio.file.Paths.get(s"$dir/postings/epoch=$old"))
-      ClusterStore.deleteRecursively(java.nio.file.Paths.get(s"$dir/norms/epoch=$old"))
-    }
-    ClusterStore.deleteRecursively(
-      java.nio.file.Paths.get(s"$dir/dict_v${meta.dictGen}"))
   }
 
   /** The automated maintenance decision, mirroring
@@ -367,7 +304,7 @@ object Bm25Index {
 
   private def buildIndex(docs: DataFrame, prefix: String): String = {
     val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    ClusterStore.deleteRecursivelyOnExit(tmp)
+    TempDirs.registerForCleanup(tmp)
     val idx = tmp.resolve("index").toString
     write(docs, idx)
     idx

@@ -190,7 +190,7 @@ object BpeTrain {
       : (Seq[(Int, String, String, String, Long)], Seq[(String, Long)]) = {
     val spark = docs.sparkSession
     val tmp = java.nio.file.Files.createTempDirectory("graft_bpe_train")
-    ClusterStore.deleteRecursivelyOnExit(tmp)
+    TempDirs.registerForCleanup(tmp)
     initialSeqs(docs, dictCap).write.parquet(s"$tmp/state_0")
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var rank = 1
@@ -206,7 +206,7 @@ object BpeTrain {
           best.head.getLong(2))
         merges += ((rank, l, r, l + r, c))
         mergePair(dict, l, r).write.parquet(s"$tmp/state_$rank")
-        ClusterStore.deleteRecursively(tmp.resolve(s"state_${rank - 1}"))
+        graft.sources.StoreCommit.deleteRecursively(tmp.resolve(s"state_${rank - 1}"))
         rank += 1
       }
     }

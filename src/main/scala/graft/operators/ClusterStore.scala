@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{StoreCommit, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,27 +28,19 @@ import org.apache.spark.sql.functions._
   *                     build). [[append]] reads old cardinalities from
   *                     here, which is what keeps the delta path at ONE
   *                     scan of the old corpus.
-  *   `<dir>/_manifest.properties` — THE commit point (since r11, the
-  *                     store-wide manifest discipline): shingle width,
-  *                     threshold, the corpus stamp (doc count + max
-  *                     doc_id), the committed epoch list, and the live
-  *                     clusters generation. A consumer mixing artifacts
-  *                     computed under different parameters — or an
-  *                     [[append]] fed an oldDocs frame that drifted from
-  *                     the corpus the store was built over — would
-  *                     silently produce garbage, so reads and appends
-  *                     verify against it.
+  *   `<dir>/_manifest.properties` — shingle width, threshold, the
+  *                     corpus stamp (doc count + max doc_id), the
+  *                     committed epoch list, and the live clusters
+  *                     generation. A consumer mixing artifacts computed
+  *                     under different parameters — or an [[append]] fed
+  *                     an oldDocs frame that drifted from the corpus the
+  *                     store was built over — would silently produce
+  *                     garbage, so reads and appends verify against it.
   *
-  * [[append]] is crash-safe: the delta's pairs and cards land in a NEW
-  * epoch, the re-labeled cluster map lands in the NEXT generation dir,
-  * and one atomic manifest rename publishes all three tables plus the
-  * advanced corpus stamp at once (this replaces the round-10
-  * clusters_new/clusters_old rename dance, whose swap was crash-safe but
-  * whose pairs/cards/stamp were not). A reader resolves the manifest
-  * first and sees the pre-append store until the instant of commit;
-  * recovery from a crash anywhere in staging is re-running the append —
-  * staging deletes residue at the manifest's frozen next-epoch/next-gen
-  * names, so the re-run cannot double-append.
+  * Every op commits through [[graft.sources.StoreCommit]]: the op's
+  * pairs and cards land in a NEW epoch, the re-labeled cluster map in the
+  * NEXT generation dir, and one manifest rename publishes all three
+  * tables plus the corpus stamp at once.
   *
   * Scale: both tables are pair-graph-bounded (the near-dup minority),
   * typically orders of magnitude smaller than the corpus — a consumer
@@ -87,41 +79,24 @@ object ClusterStore {
   val RelabelConf = "spark.graft.clusterstore.relabel"
 
   /** The store's commit point: config + corpus stamp + committed epochs
-    * + the live clusters generation, published only by one atomic rename
-    * of `_manifest.properties`. */
+    * + the live clusters generation. */
   private[graft] case class Manifest(cfg: Config, nDocs: Long, maxDocId: Long,
                                      epochs: Seq[Long], nextEpoch: Long,
-                                     clustersGen: Long)
-
-  private def manifestPath(dir: String) =
-    java.nio.file.Paths.get(dir, "_manifest.properties")
-
-  private[graft] def commitManifest(dir: String, m: Manifest): Unit = {
-    val p = new java.util.Properties()
-    p.setProperty("n", m.cfg.n.toString)
-    p.setProperty("threshold", m.cfg.threshold.toString)
-    p.setProperty("n_docs", m.nDocs.toString)
-    p.setProperty("max_doc_id", m.maxDocId.toString)
-    p.setProperty("epochs", m.epochs.mkString(","))
-    p.setProperty("nextEpoch", m.nextEpoch.toString)
-    p.setProperty("clustersGen", m.clustersGen.toString)
-    val tmp = java.nio.file.Paths.get(dir, "_manifest.properties.staged")
-    val out = java.nio.file.Files.newOutputStream(tmp)
-    try p.store(out, "graft near-dup cluster store manifest") finally out.close()
-    java.nio.file.Files.move(tmp, manifestPath(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+                                     clustersGen: Long) extends StoreCommit.Manifest {
+    def layout: StoreCommit.Layout = Layout
+    def fields: Seq[(String, Any)] = Seq("n" -> cfg.n, "threshold" -> cfg.threshold,
+      "n_docs" -> nDocs, "max_doc_id" -> maxDocId, "epochs" -> epochs,
+      "nextEpoch" -> nextEpoch, "clustersGen" -> clustersGen)
+    override def generation: Option[Long] = Some(clustersGen)
   }
 
-  private[graft] def readManifest(dir: String): Manifest = {
-    val p = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(manifestPath(dir))
-    try p.load(in) finally in.close()
-    Manifest(
-      Config(p.getProperty("n").toInt, p.getProperty("threshold").toDouble),
-      p.getProperty("n_docs").toLong, p.getProperty("max_doc_id").toLong,
-      p.getProperty("epochs").split(',').filter(_.nonEmpty).map(_.toLong).toSeq,
-      p.getProperty("nextEpoch").toLong, p.getProperty("clustersGen").toLong)
+  private val Layout = StoreCommit.Layout("graft near-dup cluster store manifest",
+    epochTables = Seq("pairs", "cards"), genPrefixes = Seq("clusters_v"))
+
+  private[graft] def readManifest(dir: String): Manifest = StoreCommit.read(dir) { p =>
+    Manifest(Config(p("n").toInt, p("threshold").toDouble),
+      p("n_docs").toLong, p("max_doc_id").toLong, p.epochs("epochs"),
+      p("nextEpoch").toLong, p("clustersGen").toLong)
   }
 
   /** The stored pair-graph config — consumers derive behavior from THIS,
@@ -178,7 +153,7 @@ object ClusterStore {
           .write.mode("overwrite").partitionBy("epoch").parquet(s"$dir/pairs"))
       NearDupClusters.connectedComponents(pairs, Some(m))
         .write.mode("overwrite").parquet(s"$dir/clusters_v0")
-      commitManifest(dir, Manifest(cfg, nDocs, maxId,
+      StoreCommit.publish(dir, Manifest(cfg, nDocs, maxId,
         epochs = Seq(0L), nextEpoch = 1L, clustersGen = 0L))
     } finally {
       pairs.unpersist(blocking = false)
@@ -218,13 +193,10 @@ object ClusterStore {
   def buildStoreFor(spark: SparkSession, dir: String): String =
     builtStores.computeIfAbsent(dir, _ => {
       val p = java.nio.file.Files.createTempDirectory("graft_cluster_store")
-      deleteRecursivelyOnExit(p)
+      TempDirs.registerForCleanup(p)
       write(Tables.documents(spark, dir), p.toString)
       p.toString
     })
-
-  private[operators] def deleteRecursivelyOnExit(root: java.nio.file.Path): Unit =
-    TempDirs.registerForCleanup(root) // one JVM-wide hook, not one per dir
 
   /** Gated query: quality-max canonical selection CONSUMING the persisted
     * cluster map (building it first if this JVM hasn't). Same oracle as
@@ -294,20 +266,16 @@ object ClusterStore {
     * union, which is precisely what the `cluster_append` gate checks
     * against the full-corpus oracle. */
   def append(spark: SparkSession, dir: String,
-             oldDocs: DataFrame, newDocs: DataFrame): Unit = {
-    val (staged, cleanup) = stageAppend(spark, dir, oldDocs, newDocs)
-    commitManifest(dir, staged)
-    cleanup()
-  }
+             oldDocs: DataFrame, newDocs: DataFrame): Unit =
+    StoreCommit.commit(dir, stageAppend(spark, dir, oldDocs, newDocs))
 
   /** The staging half of [[append]] (exposed for the crash spec): the
     * delta's pairs/cards epoch, the next cluster generation, and the
     * advanced stamp all land invisibly; nothing is published until the
-    * returned manifest commits. The cleanup (retired clusters
-    * generation) runs AFTER the commit. */
+    * returned manifest commits. */
   private[graft] def stageAppend(spark: SparkSession, dir: String,
                                  oldDocs: DataFrame,
-                                 newDocs: DataFrame): (Manifest, () => Unit) = {
+                                 newDocs: DataFrame): Manifest = {
     val manifest = readManifest(dir)
     val cfg = manifest.cfg
     val (nStored, maxStored) = (manifest.nDocs, manifest.maxDocId)
@@ -318,13 +286,7 @@ object ClusterStore {
         "appending against a drifted backlog would persist an incomplete pair graph")
     val e = manifest.nextEpoch
     val g = manifest.clustersGen + 1
-    // sweep everything the manifest doesn't reference: residue of a
-    // crashed earlier append at the frozen names (the manifest never
-    // advanced, so a re-run cannot double-append) AND retired
-    // epochs/generations whose post-commit delete crashed
-    sweepOrphans(java.nio.file.Paths.get(s"$dir/pairs"), "epoch=", manifest.epochs.toSet)
-    sweepOrphans(java.nio.file.Paths.get(s"$dir/cards"), "epoch=", manifest.epochs.toSet)
-    sweepOrphans(java.nio.file.Paths.get(dir), "clusters_v", Set(manifest.clustersGen))
+    StoreCommit.sweep(dir, manifest)
     val m = Pinned.marker(spark)
     val newArrs = Pinned.pin(Dedup.shingleArrays(newDocs, cfg.n))
     val newCards = newArrs
@@ -335,14 +297,7 @@ object ClusterStore {
     val deltaPairs = discoverDeltaPairs(oldDocs, newSh,
       readCards(spark, dir).unionByName(newCards), cfg)
     val deltaP = deltaPairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-stage wall clock on stderr: append is the flagship recurring
-    // cost, and a drifting stage should name itself from the logs alone
-    var t0 = System.nanoTime()
-    def lap(stage: String): Unit = {
-      val t1 = System.nanoTime()
-      System.err.println(f"[store-append] $stage ${(t1 - t0) / 1e9}%.2fs")
-      t0 = t1
-    }
+    val lap = lapTimer("store-append")
     try {
       // three independent staging jobs overlapped (guide §2.6; see
       // [[removeAndAppend]]'s rationale — disjoint outputs, shared reads
@@ -354,90 +309,16 @@ object ClusterStore {
           .write.mode("append").partitionBy("epoch").parquet(s"$dir/cards"),
         () => corpusStamp(newDocs))
       lap("pairs ∥ cards ∥ stamp staged")
-      // the merged pair list: committed epochs + the STAGED epoch, all
-      // read back from disk — the staged files exist (landed above), and
-      // a plain scan is what CC's edge pin evaluates fastest (the first
-      // r11 cut unioned deltaP's in-memory lineage here instead and the
-      // CC lap read 6.1 s vs 1.6 s — re-evaluating the persisted delta
-      // through the union beat the point of having landed it). External
-      // readers still resolve the manifest: the staged epoch stays
-      // invisible to readPairs until the caller commits.
+      // the merged pair list: committed epochs + the STAGED epoch, read
+      // back from disk; readers resolve the manifest, so the staged epoch
+      // stays invisible to readPairs until the caller commits
       val allPairs = spark.read.parquet(s"$dir/pairs")
         .filter(col("epoch").isin(
           (manifest.epochs :+ e).map(java.lang.Long.valueOf): _*))
         .select(col("id1"), col("id2"), col("n_common"), col("jaccard"))
-      // INCREMENTAL re-label: merging can only happen through a delta
-      // pair, so a component none of whose members touches one is
-      // unchanged — its stored (doc_id, cluster_id) rows carry over
-      // verbatim, and only the TOUCHED subgraph (every pair of an
-      // affected old component, plus the delta pairs) goes through CC.
-      // Cost: one semi-join pass over the stored pair list to carve the
-      // subgraph (a single scan+shuffle), then CC iteration rounds that
-      // are CHURN-bounded instead of all-near-dup-history-bounded — at
-      // 100 TB the accumulated pair graph dwarfs any day's churn, and
-      // re-running multi-round CC over all of it per append was the
-      // remaining O(history) stage in the ingest loop.
-      //
-      // POLICY ([[RelabelConf]]): the subgraph path must only run in the
-      // data-bound regime — at small edge counts every CC round is a
-      // fixed-cost scheduling unit (measured: full CC 1.5 s vs carve +
-      // churn counts + subgraph CC 5.8 s on sf0.1's ~20k-pair graph), so
-      // `auto` gates on BOTH an absolute pair floor and the churn
-      // fraction. The churn decision reads CLUSTER-bounded counts plus a
-      // parquet-footer row count, never the corpus.
-      val policy = spark.conf.get(RelabelConf, "auto")
-      val oldClusters = readClusters(spark, dir)
-      val incremental = policy match {
-        case "incremental" => true
-        case "full" => false
-        case _ =>
-          val storedPairs = readPairs(spark, dir).count() // footer-only
-          storedPairs >= IncrementalPairFloor && {
-            val seeds0 = deltaP.select(col("id1").as("doc_id"))
-              .unionAll(deltaP.select(col("id2").as("doc_id"))).distinct()
-            val total = oldClusters.select(col("cluster_id")).distinct().count()
-            val touchedN = oldClusters.join(seeds0, Seq("doc_id"))
-              .select(col("cluster_id")).distinct().count()
-            lap(s"churn counts ($touchedN/$total components touched)")
-            total > 0 && touchedN.toDouble / total <= IncrementalChurnCutoff
-          }
-      }
-      if (!incremental) {
-        // full re-label over the merged pair list (pair-graph-bounded)
-        NearDupClusters.connectedComponents(allPairs, Some(m))
-          .write.mode("overwrite").parquet(s"$dir/clusters_v$g")
-        lap("full CC re-label")
-      } else {
-        val seeds = deltaP.select(col("id1").as("doc_id"))
-          .unionAll(deltaP.select(col("id2").as("doc_id"))).distinct()
-        val affected = oldClusters.join(seeds, Seq("doc_id"))
-          .select(col("cluster_id")).distinct()
-        val affectedDocs = oldClusters.join(affected, Seq("cluster_id"))
-          .select(col("doc_id"))
-        // old pairs never cross components, so id1-membership alone selects
-        // exactly the affected components' edges; delta pairs always have
-        // id1 in seeds
-        val touched = affectedDocs.unionAll(seeds).distinct()
-        val sub = allPairs
-          .join(touched.withColumnRenamed("doc_id", "id1"), Seq("id1"), "left_semi")
-        val relabeled = NearDupClusters.connectedComponents(sub, Some(m))
-        val untouched = oldClusters.join(affected, Seq("cluster_id"), "left_anti")
-          .select(col("doc_id"), col("cluster_id"))
-        untouched.unionByName(relabeled)
-          .write.mode("overwrite").parquet(s"$dir/clusters_v$g")
-        lap("incremental CC re-label (touched subgraph)")
-      }
-      // nothing is live yet: the staged epoch, the next cluster
-      // generation, and the advanced stamp all publish together in the
-      // caller's ONE manifest rename (the pre-r11 clusters_new/old rename
-      // dance protected only the cluster map; the manifest protects all
-      // three tables plus the stamp)
-      val retiredGen = manifest.clustersGen
-      (manifest.copy(nDocs = nStored + nNew,
-        maxDocId = math.max(maxStored, maxNew),
-        epochs = manifest.epochs :+ e, nextEpoch = e + 1, clustersGen = g),
-        () => deleteRecursively(
-          java.nio.file.Paths.get(s"$dir/clusters_v$retiredGen")))
+      relabel(spark, dir, allPairs, endpoints(deltaP), g, m, lap)
+      manifest.copy(nDocs = nStored + nNew, maxDocId = math.max(maxStored, maxNew),
+        epochs = manifest.epochs :+ e, nextEpoch = e + 1, clustersGen = g)
     } finally {
       deltaP.unpersist(blocking = false)
       Pinned.releaseSince(spark, m, Seq.empty)
@@ -481,6 +362,83 @@ object ClusterStore {
       .select(col("id1"), col("id2"), col("n_common"), col("jaccard"))
   }
 
+  /** Both endpoints of every pair in `pairs`, as `doc_id`s. */
+  private def endpoints(pairs: DataFrame): DataFrame =
+    pairs.select(col("id1").as("doc_id")).unionAll(pairs.select(col("id2").as("doc_id")))
+
+  /** The stored pair graph minus every edge touching a removed id. */
+  private def keptPairs(spark: SparkSession, dir: String, rem: DataFrame): DataFrame =
+    readPairs(spark, dir)
+      .join(rem.withColumnRenamed("doc_id", "id1"), Seq("id1"), "left_anti")
+      .join(rem.withColumnRenamed("doc_id", "id2"), Seq("id2"), "left_anti")
+      .select(col("id1"), col("id2"), col("n_common"), col("jaccard"))
+
+  /** Write clusters generation `g`: the connected components of `edges`
+    * (the op's final pair list, read back from the staged epoch files —
+    * a plain scan is what CC's edge pin evaluates fastest; unioning the
+    * in-memory delta lineage instead measured 6.1 s vs 1.6 s). `seedIds`
+    * are the docs whose component the op may change: removed docs (a
+    * removal only SPLITS the components it sat in) and delta-pair
+    * endpoints (a delta pair can MERGE components).
+    *
+    * Policy ([[RelabelConf]]): the subgraph path carves every edge of a
+    * component holding a seed — old pairs never cross components, so
+    * id1-membership selects them, and a delta pair always has a seed as
+    * id1 — re-runs CC over that alone and carries untouched components'
+    * rows over verbatim; a removed id sits in an affected component by
+    * construction, so it cannot survive via the carry-over. Under `auto`
+    * it runs only in the data-bound regime: at least
+    * [[IncrementalPairFloor]] stored pairs AND at most
+    * [[IncrementalChurnCutoff]] of the components touched (cluster-bounded
+    * counts, never the corpus). Below the floor every CC round is a
+    * fixed-cost scheduling unit (sf0.1: full CC 1.5 s vs carve + churn
+    * counts + subgraph CC 5.8 s). Both paths give identical output. */
+  private def relabel(spark: SparkSession, dir: String, edges: DataFrame,
+                      seedIds: DataFrame, g: Long, m: Long,
+                      lap: String => Unit): Unit = {
+    val oldClusters = readClusters(spark, dir)
+    val seeds = seedIds.distinct()
+    val incremental = spark.conf.get(RelabelConf, "auto") match {
+      case "incremental" => true
+      case "full" => false
+      case _ =>
+        readPairs(spark, dir).count() >= IncrementalPairFloor && { // footer-only
+          val total = oldClusters.select(col("cluster_id")).distinct().count()
+          val touchedN = oldClusters.join(seeds, Seq("doc_id"))
+            .select(col("cluster_id")).distinct().count()
+          lap(s"churn counts ($touchedN/$total components touched)")
+          total > 0 && touchedN.toDouble / total <= IncrementalChurnCutoff
+        }
+    }
+    val clusters =
+      if (!incremental) NearDupClusters.connectedComponents(edges, Some(m))
+      else {
+        val affected = oldClusters.join(seeds, Seq("doc_id"))
+          .select(col("cluster_id")).distinct()
+        val touched = oldClusters.join(affected, Seq("cluster_id"))
+          .select(col("doc_id")).unionAll(seeds).distinct()
+        val sub = edges
+          .join(touched.withColumnRenamed("doc_id", "id1"), Seq("id1"), "left_semi")
+        oldClusters.join(affected, Seq("cluster_id"), "left_anti")
+          .select(col("doc_id"), col("cluster_id"))
+          .unionByName(NearDupClusters.connectedComponents(sub, Some(m)))
+      }
+    clusters.write.mode("overwrite").parquet(s"$dir/clusters_v$g")
+    lap(if (incremental) "incremental CC re-label (touched subgraph)" else "full CC re-label")
+  }
+
+  /** Per-stage wall clock on stderr, `[tag] <stage> <seconds>`: store ops
+    * are the recurring cost, and a drifting stage should name itself
+    * from the logs alone. */
+  private def lapTimer(tag: String): String => Unit = {
+    var t0 = System.nanoTime()
+    stage => {
+      val t1 = System.nanoTime()
+      System.err.println(f"[$tag] $stage ${(t1 - t0) / 1e9}%.2fs")
+      t0 = t1
+    }
+  }
+
   /** Remove documents from the store — the deletion half of the
     * dataset-version loop ([[CorpusDiff]]'s `removed ∪ changed` docs must
     * LEAVE the pair graph before the changed docs' new text re-enters via
@@ -489,86 +447,38 @@ object ClusterStore {
     *   - pairs/cards REWRITE filtered into one fresh epoch — both tables
     *     are pair-graph-bounded (the near-dup minority), so a deletion
     *     costs edge-list work, never corpus work, and the rewrite doubles
-    *     as an epoch compaction (same coalescing win, same manifest flip);
-    *   - clusters: removal can only SPLIT components, and only components
-    *     CONTAINING a removed doc can change — under the [[RelabelConf]]
-    *     `auto` policy (shared with [[append]]) a LARGE graph carves the
-    *     affected components' surviving edges and carries untouched rows
-    *     over verbatim, while a small (scheduling-bound) graph takes the
-    *     measured-cheaper full re-label over the kept pairs; both paths
-    *     are correct and identical in output (a member whose last pair
-    *     died drops out of the map naturally, exactly as a from-scratch
-    *     build would drop it);
+    *     as an epoch compaction;
+    *   - clusters: [[relabel]] over the kept pairs, seeded with the
+    *     removed ids (a member whose last pair died drops out of the map
+    *     naturally, exactly as a from-scratch build would drop it);
     *   - the corpus stamp re-computes over `remainingDocs` (a doc_id-only
     *     column-pruned aggregate) so a later [[append]]'s drift guard
     *     keeps holding against the post-delete corpus.
     *
-    * Crash-safe like every store op: the filtered epoch and the next
-    * clusters generation land invisibly, ONE manifest rename publishes
-    * both plus the new stamp, and pre-staging sweeps heal any residue of
-    * a crashed earlier attempt. Equality with from-scratch over the
-    * remaining corpus is what the `corpus_diff_recurate` gate checks. */
+    * Equality with from-scratch over the remaining corpus is what the
+    * `corpus_diff_recurate` gate checks. */
   def remove(spark: SparkSession, dir: String,
              removedIds: DataFrame, remainingDocs: DataFrame): Unit = {
     val manifest = readManifest(dir)
     val e = manifest.nextEpoch
     val g = manifest.clustersGen + 1
-    sweepOrphans(java.nio.file.Paths.get(s"$dir/pairs"), "epoch=", manifest.epochs.toSet)
-    sweepOrphans(java.nio.file.Paths.get(s"$dir/cards"), "epoch=", manifest.epochs.toSet)
-    sweepOrphans(java.nio.file.Paths.get(dir), "clusters_v", Set(manifest.clustersGen))
+    StoreCommit.sweep(dir, manifest)
     val rem = removedIds.select(col("doc_id")).distinct()
-    readPairs(spark, dir)
-      .join(rem.withColumnRenamed("doc_id", "id1"), Seq("id1"), "left_anti")
-      .join(rem.withColumnRenamed("doc_id", "id2"), Seq("id2"), "left_anti")
-      .select(col("id1"), col("id2"), col("n_common"), col("jaccard"))
+    keptPairs(spark, dir, rem)
       .withColumn("epoch", lit(e))
       .write.mode("append").partitionBy("epoch").parquet(s"$dir/pairs")
     readCards(spark, dir).join(rem, Seq("doc_id"), "left_anti")
       .withColumn("epoch", lit(e))
       .write.mode("append").partitionBy("epoch").parquet(s"$dir/cards")
-    // clusters: only components a removed doc sat in can change (removal
-    // only SPLITS), so the re-label is carve-eligible — under the SAME
-    // [[RelabelConf]] policy as [[append]]: at small edge counts every CC
-    // round is a fixed-cost scheduling unit and the carve's extra joins
-    // are measured pure loss, so `auto` takes the full re-label over the
-    // kept pairs (identical output — both paths are correct; the policy
-    // buys only wall time) and carves only in the data-bound regime.
     val kept = spark.read.parquet(s"$dir/pairs").filter(col("epoch") === e)
       .select(col("id1"), col("id2"), col("n_common"), col("jaccard"))
     // marker scopes CC's mid-iteration pin release to ITS pins only — a
     // composite caller's (recurate loop) earlier pinned stages survive
     val m = Pinned.marker(spark)
-    val oldClusters = readClusters(spark, dir)
-    val incremental = spark.conf.get(RelabelConf, "auto") match {
-      case "incremental" => true
-      case "full" => false
-      case _ => readPairs(spark, dir).count() >= IncrementalPairFloor
-    }
-    val relabeled =
-      if (!incremental) NearDupClusters.connectedComponents(kept, Some(m))
-      else {
-        val affected = oldClusters.join(rem, Seq("doc_id"))
-          .select(col("cluster_id")).distinct()
-        val affectedDocs = oldClusters.join(affected, Seq("cluster_id"))
-          .select(col("doc_id"))
-        // surviving edges of affected components select by id1-membership
-        // (old pairs never cross components)
-        val sub = kept.join(affectedDocs.withColumnRenamed("doc_id", "id1"),
-          Seq("id1"), "left_semi")
-        val untouched = oldClusters.join(affected, Seq("cluster_id"), "left_anti")
-          .select(col("doc_id"), col("cluster_id"))
-        untouched.unionByName(NearDupClusters.connectedComponents(sub, Some(m)))
-      }
-    relabeled.write.mode("overwrite").parquet(s"$dir/clusters_v$g")
+    relabel(spark, dir, kept, rem, g, m, lapTimer("store-remove"))
     val (nRem, maxRem) = corpusStamp(remainingDocs)
-    commitManifest(dir, manifest.copy(nDocs = nRem, maxDocId = maxRem,
+    StoreCommit.commit(dir, manifest.copy(nDocs = nRem, maxDocId = maxRem,
       epochs = Seq(e), nextEpoch = e + 1, clustersGen = g))
-    for (old <- manifest.epochs) {
-      deleteRecursively(java.nio.file.Paths.get(s"$dir/pairs/epoch=$old"))
-      deleteRecursively(java.nio.file.Paths.get(s"$dir/cards/epoch=$old"))
-    }
-    deleteRecursively(
-      java.nio.file.Paths.get(s"$dir/clusters_v${manifest.clustersGen}"))
   }
 
   /** The composed single-commit dataset-version step: remove `removedIds`
@@ -593,14 +503,9 @@ object ClusterStore {
     *     the sequential pair's LAST re-label ran over this same set, so
     *     the resulting cluster map is identical (pinned by the
     *     Round21 composed-op spec);
-    *   - ONE atomic manifest rename publishes the epoch, the next
-    *     clusters generation, and the post-remove+append stamp together.
-    *     A reader sees the pre-op store until the commit instant; a crash
-    *     anywhere in staging leaves the manifest untouched and the orphan
-    *     sweeps heal the residue on re-run — the same per-op crash
-    *     contract, with one commit instead of two (the store is never
-    *     published in the half-removed state, which no consumer of the
-    *     recurate loop ever read anyway).
+    *   - ONE manifest commit publishes the epoch, the next clusters
+    *     generation, and the post-remove+append stamp together: the
+    *     store is never published in the half-removed state.
     *
     * Contract: `remainingDocs` must BE the store's corpus minus
     * `removedIds`. (In the sequential pair, [[append]]'s drift guard
@@ -616,9 +521,7 @@ object ClusterStore {
     val cfg = manifest.cfg
     val e = manifest.nextEpoch
     val g = manifest.clustersGen + 1
-    sweepOrphans(java.nio.file.Paths.get(s"$dir/pairs"), "epoch=", manifest.epochs.toSet)
-    sweepOrphans(java.nio.file.Paths.get(s"$dir/cards"), "epoch=", manifest.epochs.toSet)
-    sweepOrphans(java.nio.file.Paths.get(dir), "clusters_v", Set(manifest.clustersGen))
+    StoreCommit.sweep(dir, manifest)
     val rem = removedIds.select(col("doc_id")).distinct()
     val m = Pinned.marker(spark)
     val newArrs = Pinned.pin(Dedup.shingleArrays(newDocs, cfg.n))
@@ -629,12 +532,7 @@ object ClusterStore {
     val deltaPairs = discoverDeltaPairs(remainingDocs, newSh,
       keptCards.unionByName(newCards), cfg)
     val deltaP = deltaPairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var t0 = System.nanoTime()
-    def lap(stage: String): Unit = {
-      val t1 = System.nanoTime()
-      System.err.println(f"[store-rma] $stage ${(t1 - t0) / 1e9}%.2fs")
-      t0 = t1
-    }
+    val lap = lapTimer("store-rma")
     try {
       // THREE independent staging jobs overlapped (guide §2.6): the
       // kept+delta pairs write, the cards write, and the post-op stamp
@@ -651,10 +549,7 @@ object ClusterStore {
         // (the r11 adjudication — re-evaluating lineage through a union
         // cost the CC lap 6.1 s vs 1.6 s), and deltaP is persisted, so the
         // union streams its cached blocks rather than re-discovering.
-        () => readPairs(spark, dir)
-          .join(rem.withColumnRenamed("doc_id", "id1"), Seq("id1"), "left_anti")
-          .join(rem.withColumnRenamed("doc_id", "id2"), Seq("id2"), "left_anti")
-          .select(col("id1"), col("id2"), col("n_common"), col("jaccard"))
+        () => keptPairs(spark, dir, rem)
           .unionByName(deltaP)
           .withColumn("epoch", lit(e))
           .write.mode("append").partitionBy("epoch").parquet(s"$dir/pairs"),
@@ -669,65 +564,15 @@ object ClusterStore {
             .unionAll(newDocs.select(col("doc_id")))))
       lap("pairs ∥ cards ∥ stamp staged")
       // the merged pair list read back from disk (the staged files exist;
-      // see stageAppend's adjudication of disk-scan vs in-memory lineage)
+      // see [[relabel]] on disk scan vs in-memory lineage)
       val allPairs = spark.read.parquet(s"$dir/pairs")
         .filter(col("epoch") === e)
         .select(col("id1"), col("id2"), col("n_common"), col("jaccard"))
-      // ONE re-label under the shared [[RelabelConf]] policy. Seeds for
-      // the carve are BOTH change sources: removal splits components a
-      // removed doc sat in; delta pairs merge components an endpoint sits
-      // in — a component touching neither carries over verbatim.
-      val policy = spark.conf.get(RelabelConf, "auto")
-      val oldClusters = readClusters(spark, dir)
-      val seeds = deltaP.select(col("id1").as("doc_id"))
-        .unionAll(deltaP.select(col("id2").as("doc_id")))
-        .unionAll(rem).distinct()
-      val incremental = policy match {
-        case "incremental" => true
-        case "full" => false
-        case _ =>
-          val storedPairs = readPairs(spark, dir).count() // footer-only
-          storedPairs >= IncrementalPairFloor && {
-            val total = oldClusters.select(col("cluster_id")).distinct().count()
-            val touchedN = oldClusters.join(seeds, Seq("doc_id"))
-              .select(col("cluster_id")).distinct().count()
-            lap(s"churn counts ($touchedN/$total components touched)")
-            total > 0 && touchedN.toDouble / total <= IncrementalChurnCutoff
-          }
-      }
-      if (!incremental) {
-        NearDupClusters.connectedComponents(allPairs, Some(m))
-          .write.mode("overwrite").parquet(s"$dir/clusters_v$g")
-        lap("full CC re-label")
-      } else {
-        val affected = oldClusters.join(seeds, Seq("doc_id"))
-          .select(col("cluster_id")).distinct()
-        val affectedDocs = oldClusters.join(affected, Seq("cluster_id"))
-          .select(col("doc_id"))
-        // kept pairs never cross old components, so id1-membership in an
-        // affected component selects exactly their surviving edges; delta
-        // pairs always have id1 in seeds (new docs included via the union)
-        val touched = affectedDocs.unionAll(seeds).distinct()
-        val sub = allPairs
-          .join(touched.withColumnRenamed("doc_id", "id1"), Seq("id1"), "left_semi")
-        val relabeled = NearDupClusters.connectedComponents(sub, Some(m))
-        // components containing a removed doc are affected BY CONSTRUCTION
-        // (rem ⊆ seeds), so no removed id can survive via the carry-over
-        val untouched = oldClusters.join(affected, Seq("cluster_id"), "left_anti")
-          .select(col("doc_id"), col("cluster_id"))
-        untouched.unionByName(relabeled)
-          .write.mode("overwrite").parquet(s"$dir/clusters_v$g")
-        lap("incremental CC re-label (touched subgraph)")
-      }
-      commitManifest(dir, manifest.copy(
-        nDocs = nAll, maxDocId = maxAll,
+      // ONE re-label; removal splits components a removed doc sat in,
+      // delta pairs merge components an endpoint sits in
+      relabel(spark, dir, allPairs, endpoints(deltaP).unionAll(rem), g, m, lap)
+      StoreCommit.commit(dir, manifest.copy(nDocs = nAll, maxDocId = maxAll,
         epochs = Seq(e), nextEpoch = e + 1, clustersGen = g))
-      for (old <- manifest.epochs) {
-        deleteRecursively(java.nio.file.Paths.get(s"$dir/pairs/epoch=$old"))
-        deleteRecursively(java.nio.file.Paths.get(s"$dir/cards/epoch=$old"))
-      }
-      deleteRecursively(
-        java.nio.file.Paths.get(s"$dir/clusters_v${manifest.clustersGen}"))
     } finally {
       deltaP.unpersist(blocking = false)
       Pinned.releaseSince(spark, m, Seq.empty)
@@ -742,9 +587,7 @@ object ClusterStore {
   def compact(spark: SparkSession, dir: String): Unit = {
     val m = readManifest(dir)
     val e = m.nextEpoch
-    // heals staged residue at e AND orphaned retired epochs in one sweep
-    sweepOrphans(java.nio.file.Paths.get(s"$dir/pairs"), "epoch=", m.epochs.toSet)
-    sweepOrphans(java.nio.file.Paths.get(s"$dir/cards"), "epoch=", m.epochs.toSet)
+    StoreCommit.sweep(dir, m)
     // two independent rewrites into disjoint dirs — overlapped (guide §2.6)
     ParallelJobs.par(
       () => readPairs(spark, dir)
@@ -755,11 +598,7 @@ object ClusterStore {
         .repartition(spark.sparkContext.defaultParallelism / 4 max 1)
         .withColumn("epoch", lit(e))
         .write.mode("append").partitionBy("epoch").parquet(s"$dir/cards"))
-    commitManifest(dir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
-    for (old <- m.epochs) {
-      deleteRecursively(java.nio.file.Paths.get(s"$dir/pairs/epoch=$old"))
-      deleteRecursively(java.nio.file.Paths.get(s"$dir/cards/epoch=$old"))
-    }
+    StoreCommit.commit(dir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
   }
 
   /** The automated maintenance decision, mirroring the other stores'. */
@@ -768,31 +607,6 @@ object ClusterStore {
     if (due) compact(spark, dir)
     due
   }
-
-  private[operators] def deleteRecursively(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root))
-      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-
-  /** Remove every `prefix<num>` entry under `parent` whose number fails
-    * `keep` — the orphans a crash between manifest commit and the
-    * post-commit deletes can leave behind (invisible to readers, who
-    * resolve the manifest, but disk grows and full-directory listings
-    * keep touching dead files). Every store's staging/compact path calls
-    * this with keep = the committed set, which ALSO heals residue at the
-    * frozen next-epoch/next-generation staging names — one primitive for
-    * both recovery jobs. */
-  private[graft] def sweepOrphans(parent: java.nio.file.Path, prefix: String,
-                                  keep: Long => Boolean): Unit =
-    if (java.nio.file.Files.isDirectory(parent)) {
-      val s = java.nio.file.Files.list(parent)
-      try s.forEach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith(prefix))
-          name.stripPrefix(prefix).toLongOption
-            .filterNot(keep).foreach(_ => deleteRecursively(p))
-      } finally s.close()
-    }
 
   /** One BACKLOG store per (JVM, source dir): built from every doc except
     * the [[DedupIndex.DeltaMod]] residue class — the same split the
@@ -813,7 +627,7 @@ object ClusterStore {
   private[operators] def copyStore(src: String, prefix: String = "graft_cluster_append"): String = {
     val t0 = System.nanoTime()
     val dst = java.nio.file.Files.createTempDirectory(prefix)
-    deleteRecursivelyOnExit(dst)
+    TempDirs.registerForCleanup(dst)
     val srcPath = java.nio.file.Paths.get(src)
     java.nio.file.Files.walk(srcPath).forEach { p =>
       val t = dst.resolve(srcPath.relativize(p).toString)
@@ -856,7 +670,7 @@ object ClusterStore {
     val delta = docs.filter(col("doc_id") % DedupIndex.DeltaMod === 0)
     val backlogStore = backlogStores.computeIfAbsent(dir, _ => {
       val p = java.nio.file.Files.createTempDirectory("graft_cluster_backlog")
-      deleteRecursivelyOnExit(p)
+      TempDirs.registerForCleanup(p)
       write(backlog, p.toString)
       p.toString
     })

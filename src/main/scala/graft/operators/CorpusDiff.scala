@@ -134,7 +134,7 @@ object CorpusDiff {
     val day2 = newDay(docs)
     val backlog = day1Stores.computeIfAbsent(dir, _ => {
       val p = java.nio.file.Files.createTempDirectory("graft_diff_day1")
-      ClusterStore.deleteRecursivelyOnExit(p)
+      TempDirs.registerForCleanup(p)
       ClusterStore.write(day1, p.toString)
       p.toString
     })

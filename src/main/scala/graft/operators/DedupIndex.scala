@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{StoreCommit, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,16 +20,14 @@ import org.apache.spark.sql.functions._
   *                     hashed shingle arrays, read candidate-bounded
   *                     (semi-join on candidate ids) for exact-Jaccard
   *                     verification.
-  *   `<dir>/_manifest.properties`      — THE commit point (since r11,
-  *                     the store-wide manifest discipline): the signature
-  *                     config (a delta computed under different
-  *                     parameters would silently produce garbage buckets,
-  *                     so reads verify) plus the committed epoch list.
+  *   `<dir>/_manifest.properties`      — the signature config (a delta
+  *                     computed under different parameters would silently
+  *                     produce garbage buckets, so reads verify) plus the
+  *                     committed epoch list.
   *
-  * Append is crash-safe: a batch's bands and shingles land in a NEW
-  * epoch directory, invisible until one atomic manifest rename commits
-  * both tables at once; recovery from a crash in between is re-running
-  * the append (staging deletes residue at the frozen next-epoch name).
+  * Every mutation commits through [[graft.sources.StoreCommit]]: a
+  * batch's bands and shingles land in a NEW epoch directory, invisible
+  * until one manifest rename commits both tables at once.
   * [[compact]] collapses the committed epochs into one — one file per
   * band — so delta-probe cost stays O(1) files per pruned band
   * regardless of how many daily appends the store has absorbed.
@@ -46,36 +44,18 @@ object DedupIndex {
                     seed: Long = 42L)
 
   private[graft] case class Manifest(cfg: Config, epochs: Seq[Long],
-                                     nextEpoch: Long)
-
-  private def manifestPath(dir: String) =
-    java.nio.file.Paths.get(dir, "_manifest.properties")
-
-  private[graft] def commitManifest(dir: String, m: Manifest): Unit = {
-    val p = new java.util.Properties()
-    p.setProperty("n", m.cfg.n.toString)
-    p.setProperty("numHashes", m.cfg.numHashes.toString)
-    p.setProperty("bands", m.cfg.bands.toString)
-    p.setProperty("seed", m.cfg.seed.toString)
-    p.setProperty("epochs", m.epochs.mkString(","))
-    p.setProperty("nextEpoch", m.nextEpoch.toString)
-    val tmp = java.nio.file.Paths.get(dir, "_manifest.properties.staged")
-    val out = java.nio.file.Files.newOutputStream(tmp)
-    try p.store(out, "graft MinHash signature index manifest") finally out.close()
-    java.nio.file.Files.move(tmp, manifestPath(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+                                     nextEpoch: Long) extends StoreCommit.Manifest {
+    def layout: StoreCommit.Layout = Layout
+    def fields: Seq[(String, Any)] = Seq("n" -> cfg.n, "numHashes" -> cfg.numHashes,
+      "bands" -> cfg.bands, "seed" -> cfg.seed, "epochs" -> epochs, "nextEpoch" -> nextEpoch)
   }
 
-  private[graft] def readManifest(dir: String): Manifest = {
-    val p = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(manifestPath(dir))
-    try p.load(in) finally in.close()
-    Manifest(
-      Config(p.getProperty("n").toInt, p.getProperty("numHashes").toInt,
-        p.getProperty("bands").toInt, p.getProperty("seed").toLong),
-      p.getProperty("epochs").split(',').filter(_.nonEmpty).map(_.toLong).toSeq,
-      p.getProperty("nextEpoch").toLong)
+  private val Layout = StoreCommit.Layout("graft MinHash signature index manifest",
+    epochTables = Seq("bands", "shingles"))
+
+  private[graft] def readManifest(dir: String): Manifest = StoreCommit.read(dir) { p =>
+    Manifest(Config(p("n").toInt, p("numHashes").toInt, p("bands").toInt, p("seed").toLong),
+      p.epochs("epochs"), p("nextEpoch").toLong)
   }
 
   /** The stored signature config — every delta derives its signatures
@@ -112,7 +92,7 @@ object DedupIndex {
           .write.mode("overwrite").partitionBy("epoch", "band").parquet(s"$dir/bands"),
         () => arrs.withColumn("epoch", lit(0L))
           .write.mode("overwrite").partitionBy("epoch").parquet(s"$dir/shingles"))
-      commitManifest(dir, Manifest(cfg, epochs = Seq(0L), nextEpoch = 1L))
+      StoreCommit.publish(dir, Manifest(cfg, epochs = Seq(0L), nextEpoch = 1L))
     } finally arrs.unpersist(blocking = false)
   }
 
@@ -123,7 +103,7 @@ object DedupIndex {
     * commits them together; recovery = re-run. Like [[write]], unpersists
     * exactly its own derived stage. */
   def append(docs: DataFrame, dir: String): Unit =
-    commitManifest(dir, stageAppend(docs, dir))
+    StoreCommit.commit(dir, stageAppend(docs, dir))
 
   /** The staging half of [[append]] (exposed for the crash spec):
     * everything lands, nothing is visible until the returned manifest is
@@ -131,10 +111,7 @@ object DedupIndex {
   private[graft] def stageAppend(docs: DataFrame, dir: String): Manifest = {
     val m = readManifest(dir)
     val e = m.nextEpoch
-    // sweep unreferenced epochs: residue of a crashed earlier append at
-    // the frozen epoch name AND retired epochs a crashed compact left
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/bands"), "epoch=", m.epochs.toSet)
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/shingles"), "epoch=", m.epochs.toSet)
+    StoreCommit.sweep(dir, m)
     val (banded, arrs) = derive(docs, m.cfg)
     try {
       // independent writes, disjoint dirs — overlapped (guide §2.6)
@@ -155,9 +132,7 @@ object DedupIndex {
   def compact(spark: SparkSession, dir: String): Unit = {
     val m = readManifest(dir)
     val e = m.nextEpoch
-    // heals staged residue at e AND orphaned retired epochs in one sweep
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/bands"), "epoch=", m.epochs.toSet)
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/shingles"), "epoch=", m.epochs.toSet)
+    StoreCommit.sweep(dir, m)
     val committed = m.epochs.map(java.lang.Long.valueOf)
     // two independent rewrites into disjoint dirs — overlapped (guide §2.6)
     ParallelJobs.par(
@@ -172,11 +147,7 @@ object DedupIndex {
         .select(col("doc_id"), col("harr"))
         .withColumn("epoch", lit(e))
         .write.mode("append").partitionBy("epoch").parquet(s"$dir/shingles"))
-    commitManifest(dir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
-    for (old <- m.epochs) {
-      ClusterStore.deleteRecursively(java.nio.file.Paths.get(s"$dir/bands/epoch=$old"))
-      ClusterStore.deleteRecursively(java.nio.file.Paths.get(s"$dir/shingles/epoch=$old"))
-    }
+    StoreCommit.commit(dir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
   }
 
   /** Remove documents' signatures from the index — the takedown
@@ -190,8 +161,7 @@ object DedupIndex {
   def remove(spark: SparkSession, dir: String, removedIds: DataFrame): Unit = {
     val m = readManifest(dir)
     val e = m.nextEpoch
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/bands"), "epoch=", m.epochs.toSet)
-    ClusterStore.sweepOrphans(java.nio.file.Paths.get(s"$dir/shingles"), "epoch=", m.epochs.toSet)
+    StoreCommit.sweep(dir, m)
     val committed = m.epochs.map(java.lang.Long.valueOf)
     val rem = removedIds.select(col("doc_id"))
     // two independent filtered rewrites, disjoint dirs — overlapped (§2.6)
@@ -209,11 +179,7 @@ object DedupIndex {
         .select(col("doc_id"), col("harr"))
         .withColumn("epoch", lit(e))
         .write.mode("append").partitionBy("epoch").parquet(s"$dir/shingles"))
-    commitManifest(dir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
-    for (old <- m.epochs) {
-      ClusterStore.deleteRecursively(java.nio.file.Paths.get(s"$dir/bands/epoch=$old"))
-      ClusterStore.deleteRecursively(java.nio.file.Paths.get(s"$dir/shingles/epoch=$old"))
-    }
+    StoreCommit.commit(dir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
   }
 
   /** The automated maintenance decision, mirroring
@@ -296,15 +262,12 @@ object DedupIndex {
     * exit (pre-round-7 every invocation leaked one under /tmp). */
   private val builtIdx = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def deleteRecursivelyOnExit(root: java.nio.file.Path): Unit =
-    TempDirs.registerForCleanup(root) // one JVM-wide hook, not one per dir
-
   /** Build (memoized) the backlog index for `dir`'s documents table and
     * return its path. Thread-safe; at most one build per source dir. */
   def buildIndexFor(spark: SparkSession, dir: String): String =
     builtIdx.computeIfAbsent(dir, _ => {
       val p = java.nio.file.Files.createTempDirectory("graft_dedup_index")
-      deleteRecursivelyOnExit(p)
+      TempDirs.registerForCleanup(p)
       write(Tables.documents(spark, dir)
         .filter(col("doc_id") % DeltaMod =!= 0), p.toString)
       p.toString
@@ -366,7 +329,7 @@ object DedupIndex {
     val backlog = docs.filter(col("doc_id") % DeltaMod =!= 0)
     val base = halfIdx.computeIfAbsent(dir, _ => {
       val p = java.nio.file.Files.createTempDirectory("graft_dedup_half")
-      deleteRecursivelyOnExit(p)
+      TempDirs.registerForCleanup(p)
       write(backlog.filter(col("doc_id") % 2 === 0), p.toString)
       p.toString
     })

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{StoreCommit, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -277,43 +277,31 @@ object Similarity {
 
   // ------------------------------------------------------ IVF maintenance
 
-  /** Index layout (since round 11, generation-versioned):
+  /** Index layout (generation-versioned; the tiers add sidecars):
     *   dir/data_v<g>/centroid_id=<c>/   the corpus, partitioned by cell
     *   dir/_quantizer_v<g>/             the coarse centroids
     *   dir/_health_v<g>/                build-time health baseline
-    *   dir/_manifest.properties         THE commit point: the live gen g
+    *   dir/_manifest.properties         the live gen g
     *
     * Every whole-index rewrite — a rebuild, [[compactIvfIndex]], or
     * [[requantizeIvfIndex]] — stages a complete next generation beside
-    * the live one and publishes it with ONE atomic manifest rename, then
-    * deletes the retired generation: a reader resolves the manifest
-    * first, so it sees a complete index before, during, and after, and a
-    * crash mid-rewrite leaves only invisible residue that re-running the
-    * op heals (the [[ClusterStore]] clusters-swap discipline, promoted
-    * store-wide; rename atomicity is the filesystem's contract).
-    * Appends land files INSIDE the live generation's cell dirs — a
-    * single-table write under parquet's commit protocol, no cross-table
-    * window to protect. */
-  private def ivfManifestPath(dir: String) =
-    java.nio.file.Paths.get(dir, "_manifest.properties")
-
-  private[graft] def ivfGen(dir: String): Long = {
-    val p = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(ivfManifestPath(dir))
-    try p.load(in) finally in.close()
-    p.getProperty("gen").toLong
+    * the live one and publishes it through [[StoreCommit]], which then
+    * deletes the retired generation. Appends land files INSIDE the live
+    * generation's cell dirs — a single-table write under parquet's commit
+    * protocol, no cross-table window to protect. */
+  private[graft] case class IvfManifest(gen: Long) extends StoreCommit.Manifest {
+    def layout: StoreCommit.Layout = IvfLayout
+    def fields: Seq[(String, Any)] = Seq("gen" -> gen)
+    def epochs: Seq[Long] = Nil
+    override def generation: Option[Long] = Some(gen)
   }
 
-  private def commitIvfGen(dir: String, gen: Long): Unit = {
-    val p = new java.util.Properties()
-    p.setProperty("gen", gen.toString)
-    val tmp = java.nio.file.Paths.get(dir, "_manifest.properties.staged")
-    val out = java.nio.file.Files.newOutputStream(tmp)
-    try p.store(out, "graft ivf index manifest") finally out.close()
-    java.nio.file.Files.move(tmp, ivfManifestPath(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Every tier's generation dirs: the data and the sidecars. */
+  private val IvfLayout = StoreCommit.Layout("graft ivf index manifest",
+    genPrefixes = Seq("data_v", "_quantizer_v", "_health_v", "_sq8_v",
+      "_quantizer1_v", "_quantizer2_v", "_pq_v"))
+
+  private[graft] def ivfGen(dir: String): Long = StoreCommit.read(dir)(_("gen").toLong)
 
   private[graft] def ivfDataDir(dir: String): String =
     s"$dir/data_v${ivfGen(dir)}"
@@ -355,15 +343,10 @@ object Similarity {
                                 preserveHealthBaseline: Boolean,
                                 coalesceCells: Boolean): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val cur = if (java.nio.file.Files.exists(ivfManifestPath(dir)))
-      Some(ivfGen(dir)) else None
-    val next = cur.map(_ + 1).getOrElse(0L)
-    // sweep every generation the manifest doesn't reference: residue of a
-    // crashed earlier promote at gen `next` (the manifest never advanced)
-    // AND retired generations whose post-commit delete crashed
-    for (p <- Seq("data_v", "_quantizer_v", "_health_v"))
-      ClusterStore.sweepOrphans(java.nio.file.Paths.get(dir), p,
-        g => cur.contains(g))
+    // a fresh dir has no live generation: gen -1 sweeps every version
+    val cur = if (StoreCommit.exists(dir)) ivfGen(dir) else -1L
+    val next = cur + 1
+    StoreCommit.sweep(dir, IvfManifest(cur))
     val assigned = assignToCentroids(rows, centroids)
     val toWrite = if (coalesceCells)
       // one writer per cell → one file per cell dir, the compaction target
@@ -371,7 +354,7 @@ object Similarity {
     else assigned
     if (preserveHealthBaseline) {
       toWrite.write.partitionBy("centroid_id").parquet(s"$dir/data_v$next")
-      spark.read.parquet(s"$dir/_health_v${cur.get}")
+      spark.read.parquet(s"$dir/_health_v$cur")
         .coalesce(1).write.parquet(s"$dir/_health_v$next")
     } else {
       val obs = org.apache.spark.sql.Observation(s"ivf_health_${obsSeq.incrementAndGet()}")
@@ -383,9 +366,7 @@ object Similarity {
         .coalesce(1).write.parquet(s"$dir/_health_v$next")
     }
     saveQuantizer(spark, s"$dir/_quantizer_v$next", centroids)
-    commitIvfGen(dir, next)
-    for (p <- Seq("data_v", "_quantizer_v", "_health_v"))
-      ClusterStore.sweepOrphans(java.nio.file.Paths.get(dir), p, _ == next)
+    StoreCommit.commit(dir, IvfManifest(next))
   }
 
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -1031,7 +1012,7 @@ object Similarity {
     import spark.implicits._
     Seq((mn.toSeq, mx.toSeq)).toDF("mn", "mx")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/_sq8_v$gen")
-    commitIvfGen(dir, gen)
+    StoreCommit.commit(dir, IvfManifest(gen))
   }
 
   /** Re-quantize the compressed tier: the stats-refresh op the
@@ -1044,7 +1025,7 @@ object Similarity {
     * from-scratch build at the new C (`ivf_sq8_requantize`). */
   def requantizeIvfSq8Index(spark: SparkSession, dir: String, source: DataFrame,
                             numCentroids: Int): Unit =
-    promoteFreshGeneration(dir, Seq("_quantizer_v", "_sq8_v"))(
+    promoteFreshGeneration(dir)(
       stageSq8Generation(source, dir, numCentroids, _))
 
   /** Partition-pruned probe over the SQ8 index: list/read ONLY the probed
@@ -1157,45 +1138,31 @@ object Similarity {
     (r.getAs[Seq[Double]]("mn").toArray, r.getAs[Seq[Double]]("mx").toArray)
   }
 
-  /** ONE generation-rewrite discipline for every tiered store: sweep
-    * crashed-promote residue, stage the kept rows cell-coalesced into
-    * data_v(g+1), carry the listed sidecars forward UNCHANGED (the
-    * frozen-stats/frozen-codebook rule), one-rename commit, sweep the
-    * retired generation. A new sidecar added to a tier changes exactly
-    * one `sidecars` list — the commit/sweep skeleton cannot drift
-    * between tiers. */
+  /** ONE generation-rewrite discipline for every tiered store: stage the
+    * kept rows cell-coalesced into data_v(g+1) and carry the listed
+    * sidecars forward UNCHANGED (the frozen-stats/frozen-codebook rule)
+    * between the two [[StoreCommit]] sweeps. A new sidecar goes into the
+    * tier's `sidecars` list and [[IvfLayout]]. */
   private def rewriteGeneration(spark: SparkSession, dir: String,
                                 sidecars: Seq[String],
                                 keep: DataFrame => DataFrame): Unit = {
     val g = ivfGen(dir)
     val next = g + 1
-    val prefixes = "data_v" +: sidecars
-    // sweep residue of a crashed earlier promote (manifest never advanced)
-    for (p <- prefixes)
-      ClusterStore.sweepOrphans(java.nio.file.Paths.get(dir), p, _ == g)
+    StoreCommit.sweep(dir, IvfManifest(g))
     keep(spark.read.parquet(s"$dir/data_v$g"))
       .repartition(col("centroid_id"))
       .write.partitionBy("centroid_id").parquet(s"$dir/data_v$next")
     for (q <- sidecars)
       spark.read.parquet(s"$dir/$q$g").coalesce(1).write.parquet(s"$dir/$q$next")
-    commitIvfGen(dir, next)
-    for (p <- prefixes)
-      ClusterStore.sweepOrphans(java.nio.file.Paths.get(dir), p, _ == next)
+    StoreCommit.commit(dir, IvfManifest(next))
   }
 
-  /** The sweep/stage/sweep skeleton of a FULL-rebuild promote (the two
-    * requantize ops): residue swept, a complete next generation staged
-    * and committed by `stage`, the retired generation swept. */
-  private def promoteFreshGeneration(dir: String, sidecars: Seq[String])
-                                    (stage: Long => Unit): Unit = {
+  /** A FULL-rebuild promote (the requantize ops): residue swept, then a
+    * complete next generation staged and committed by `stage`. */
+  private def promoteFreshGeneration(dir: String)(stage: Long => Unit): Unit = {
     val g = ivfGen(dir)
-    val next = g + 1
-    val prefixes = "data_v" +: sidecars
-    for (p <- prefixes)
-      ClusterStore.sweepOrphans(java.nio.file.Paths.get(dir), p, _ == g)
-    stage(next)
-    for (p <- prefixes)
-      ClusterStore.sweepOrphans(java.nio.file.Paths.get(dir), p, _ == next)
+    StoreCommit.sweep(dir, IvfManifest(g))
+    stage(g + 1)
   }
 
   /** One memoized temp-dir store per (JVM, memo key) — the build-once
@@ -1207,7 +1174,7 @@ object Similarity {
                         key: String, prefix: String)(build: String => Unit): String =
     map.computeIfAbsent(key, _ => {
       val tmp = java.nio.file.Files.createTempDirectory(prefix)
-      ClusterStore.deleteRecursivelyOnExit(tmp)
+      TempDirs.registerForCleanup(tmp)
       val p = tmp.resolve("index").toString
       build(p)
       p
@@ -1453,7 +1420,7 @@ object Similarity {
       .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/data_v$gen")
     saveQuantizer(spark, s"$dir/_quantizer1_v$gen", cents1)
     saveQuantizer(spark, s"$dir/_quantizer2_v$gen", cents2)
-    commitIvfGen(dir, gen)
+    StoreCommit.commit(dir, IvfManifest(gen))
   }
 
   /** Re-quantize the IMI tier: retrain BOTH half codebooks on the
@@ -1463,7 +1430,7 @@ object Similarity {
     * every row must re-assign). */
   def requantizeImiIndex(spark: SparkSession, dir: String, source: DataFrame,
                          c1: Int, c2: Int, iterations: Int = 2): Unit =
-    promoteFreshGeneration(dir, Seq("_quantizer1_v", "_quantizer2_v"))(
+    promoteFreshGeneration(dir)(
       stageImiGeneration(source, dir, c1, c2, iterations, _))
 
   /** Partition-pruned probe over the persisted IMI index: quantizers
@@ -1895,7 +1862,7 @@ object Similarity {
     import spark.implicits._
     Seq((mn.toSeq, mx.toSeq)).toDF("mn", "mx")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/_sq8_v$gen")
-    commitIvfGen(dir, gen)
+    StoreCommit.commit(dir, IvfManifest(gen))
   }
 
   /** Partition-pruned probe over the composed tier: reload both half
@@ -1960,7 +1927,7 @@ object Similarity {
     * sizes (`imi_sq8_requantize`). */
   def requantizeImiSq8Index(spark: SparkSession, dir: String, source: DataFrame,
                             c1: Int, c2: Int, iterations: Int = 2): Unit =
-    promoteFreshGeneration(dir, Seq("_quantizer1_v", "_quantizer2_v", "_sq8_v"))(
+    promoteFreshGeneration(dir)(
       stageImiSq8Generation(source, dir, c1, c2, iterations, _))
 
   private val imiSq8Stores = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -2464,7 +2431,7 @@ object Similarity {
   private def buildHashIndex(e: DataFrame, prefix: String, dim: Int,
                              numCentroids: Int): String = {
     val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    ClusterStore.deleteRecursivelyOnExit(tmp)
+    TempDirs.registerForCleanup(tmp)
     val idx = tmp.resolve("index").toString
     writeIvfIndexWith(e, idx, hashCentroids(dim, numCentroids))
     idx
@@ -2503,7 +2470,7 @@ object Similarity {
     val dim = requireOracleDim(e, dir)
     val idx = ivfTrainedStores.computeIfAbsent(dir, _ => {
       val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_trained")
-      ClusterStore.deleteRecursivelyOnExit(tmp)
+      TempDirs.registerForCleanup(tmp)
       val p = tmp.resolve("index").toString
       writeIvfIndexWith(e, p, trainCentroids(e, numCentroids, iterations, Some(dim)))
       p
@@ -2870,7 +2837,7 @@ object Similarity {
       .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/data_v$gen")
     saveQuantizer(spark, s"$dir/_quantizer_v$gen", coarse)
     savePqCodebooks(spark, s"$dir/_pq_v$gen", cbs)
-    commitIvfGen(dir, gen)
+    StoreCommit.commit(dir, IvfManifest(gen))
   }
 
   /** The m codebooks as one sidecar: rows (s, cid, c DOUBLE[]) —
@@ -2993,7 +2960,7 @@ object Similarity {
   def requantizeIvfPqIndex(spark: SparkSession, dir: String, source: DataFrame,
                            numCentroids: Int, kpq: Int = PqK,
                            iterations: Int = PqIterations): Unit =
-    promoteFreshGeneration(dir, Seq("_quantizer_v", "_pq_v"))(
+    promoteFreshGeneration(dir)(
       stagePqGeneration(source, dir, numCentroids, kpq, iterations, _))
 
   private val ivfPqStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -3351,7 +3318,7 @@ object Similarity {
       .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/data_v$gen")
     saveQuantizer(spark, s"$dir/_quantizer_v$gen", coarse)
     savePqCodebooks(spark, s"$dir/_pq_v$gen", cbs)
-    commitIvfGen(dir, gen)
+    StoreCommit.commit(dir, IvfManifest(gen))
   }
 
   /** [[trainPq]] under the EUCLIDEAN metric — required for residual

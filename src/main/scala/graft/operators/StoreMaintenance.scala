@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{StoreCommit, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,7 +51,7 @@ object StoreMaintenance {
                policy: Policy = Policy()): Seq[Action] = {
     def exists(sub: String) =
       java.nio.file.Files.exists(java.nio.file.Paths.get(dir, sub))
-    if (!exists("_manifest.properties")) Seq(Action(dir, "unknown", "none", fired = false))
+    if (!StoreCommit.exists(dir)) Seq(Action(dir, "unknown", "none", fired = false))
     else if (exists("postings"))
       Seq(Action(dir, "bm25", "compact",
         Bm25Index.maybeCompact(spark, dir, policy.maxEpochs)))
@@ -129,7 +129,7 @@ object StoreMaintenance {
         .count(p => p.toString.endsWith(".parquet"))
     }
     val root = java.nio.file.Files.createTempDirectory("graft_maint_loop")
-    ClusterStore.deleteRecursivelyOnExit(root)
+    TempDirs.registerForCleanup(root)
     val idx = root.resolve("dedup_index").toString
     DedupIndex.write(dayBatch(0), idx)
     val policy = Policy(maxEpochs = 4)

@@ -21,18 +21,13 @@ object TempDirs {
     if (hooked.compareAndSet(false, true))
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
         var d = dirs.poll()
-        while (d != null) { deleteRecursively(d); d = dirs.poll() }
+        while (d != null) {
+          try graft.sources.StoreCommit.deleteRecursively(d)
+          catch { case scala.util.control.NonFatal(_) => () }
+          d = dirs.poll()
+        }
       }, "graft-tempdirs-cleanup"))
     dirs.add(p)
     p
   }
-
-  /** Best-effort recursive delete, usable OUTSIDE shutdown too (e.g.
-    * pruning a superseded store generation): swallows non-fatal errors so
-    * a locked or vanished file never aborts the remaining deletions. */
-  def deleteRecursively(root: java.nio.file.Path): Unit =
-    try java.nio.file.Files.walk(root)
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    catch { case scala.util.control.NonFatal(_) => () }
 }

@@ -76,16 +76,6 @@ object Pipeline {
       (day, day.count())
     }
 
-    // Store maintenance runs EVERY daily cycle, right after the ingest
-    // that grows the store: the policy sweep decides (one manifest read
-    // when nothing is due) and compaction fires only when epoch growth
-    // has crossed the threshold — the daily-ops wiring the stores'
-    // maybeCompact/maybeRequantize primitives exist for.
-    task[Seq[graft.operators.StoreMaintenance.Action]]("store_maintenance",
-      acts => Map("fired" -> acts.count(_.fired).toString)) {
-      graft.operators.StoreMaintenance.run(spark, Seq(storeDir))
-    }
-
     // Q1 (cached: shared by Q2/Q3 through the nd result)
     val aggregated = Queries.ordersAggregated(
       orders, master("products"), master("warehouses")).cache()
@@ -138,6 +128,17 @@ object Pipeline {
            |"items_with_demand":${summary.itemsWithDemand},"purchase_orders":${summary.purchaseOrders},
            |"total_cost":${summary.totalCost}}""".stripMargin.replace("\n", ""))
       ()
+    }
+
+    // Store maintenance runs EVERY daily cycle: the policy sweep decides
+    // (one manifest read when nothing is due) and compaction fires only
+    // when epoch growth has crossed the threshold. It runs LAST: the day's
+    // snapshot plan lists the store's files when load_snapshots resolves
+    // it, and a compaction retires those files, so every read of that
+    // plan (net_demand and its retries, the summary) must come first.
+    task[Seq[graft.operators.StoreMaintenance.Action]]("store_maintenance",
+      acts => Map("fired" -> acts.count(_.fired).toString)) {
+      graft.operators.StoreMaintenance.run(spark, Seq(storeDir))
     }
 
     summary

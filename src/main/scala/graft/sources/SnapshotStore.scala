@@ -15,26 +15,17 @@ import org.apache.spark.sql.functions._
   * from the highest batch (ROW_NUMBER over the key ordered by batch_seq
   * DESC — SURVEY §2.4(5)).
   *
-  * Layout (since round 12, the store-wide manifest discipline — this was
-  * the one store still publishing through bare parquet appends):
+  * Layout:
   *   dir/data/epoch=<e>/snapshot_date=<d>/   one epoch per append batch
-  *   dir/_manifest.properties                THE commit point: the
-  *                                           committed epoch list
+  *   dir/_manifest.properties                the committed epoch list
   *   dir/_graft_batch_seq                    seq sidecar (control plane
   *                                           for the LWW order domain;
   *                                           see below — NOT a commit
   *                                           point, any failure degrades
   *                                           to a data scan)
   *
-  * [[append]] is crash-safe: a batch lands invisibly in a new epoch dir,
-  * then ONE atomic manifest rename publishes it. A reader resolves the
-  * manifest first, so it sees the pre-append store until the instant of
-  * commit; a crashed append leaves only an uncommitted epoch dir that
-  * re-running the append sweeps (the manifest's nextEpoch never
-  * advanced). The daily procurement pipeline writes THIS store, so it
-  * carries the same crash-injection spec as the other three
-  * ([[graft.operators.Bm25Index]], [[graft.operators.DedupIndex]],
-  * [[graft.operators.ClusterStore]]).
+  * Every mutation commits through [[StoreCommit]]: a batch lands
+  * invisibly in a new epoch dir and one manifest rename publishes it.
   *
   * Scale design: epochs are the outer partition level, `snapshot_date`
   * the inner one, so the reference's `WHERE snapshot_date = DATE '...'`
@@ -57,35 +48,21 @@ object SnapshotStore {
 
   /** The store's commit point: the committed epoch list. */
   private[graft] case class Manifest(epochs: Seq[Long], nextEpoch: Long)
-
-  private def manifestPath(dir: String) =
-    java.nio.file.Paths.get(dir, "_manifest.properties")
-
-  private[graft] def commitManifest(dir: String, m: Manifest): Unit = {
-    val p = new java.util.Properties()
-    p.setProperty("epochs", m.epochs.mkString(","))
-    p.setProperty("nextEpoch", m.nextEpoch.toString)
-    val tmp = java.nio.file.Paths.get(dir, "_manifest.properties.staged")
-    val out = java.nio.file.Files.newOutputStream(tmp)
-    try p.store(out, "graft snapshot store manifest") finally out.close()
-    java.nio.file.Files.move(tmp, manifestPath(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      extends StoreCommit.Manifest {
+    def layout: StoreCommit.Layout = Layout
+    def fields: Seq[(String, Any)] = Seq("epochs" -> epochs, "nextEpoch" -> nextEpoch)
   }
 
-  private[graft] def readManifest(dir: String): Manifest = {
-    val p = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(manifestPath(dir))
-    try p.load(in) finally in.close()
-    Manifest(
-      p.getProperty("epochs").split(',').filter(_.nonEmpty).map(_.toLong).toSeq,
-      p.getProperty("nextEpoch").toLong)
-  }
+  private val Layout =
+    StoreCommit.Layout("graft snapshot store manifest", epochTables = Seq("data"))
+
+  private[graft] def readManifest(dir: String): Manifest =
+    StoreCommit.read(dir)(p => Manifest(p.epochs("epochs"), p("nextEpoch").toLong))
 
   /** The manifest, or the empty-store state when none exists yet (first
     * append against a fresh directory). */
   private def manifestOrEmpty(dir: String): Manifest =
-    if (java.nio.file.Files.exists(manifestPath(dir))) readManifest(dir)
+    if (StoreCommit.exists(dir)) readManifest(dir)
     else Manifest(Seq.empty, 0L)
 
   // ----------------------------------------------------- sequence sidecar
@@ -202,8 +179,7 @@ object SnapshotStore {
 
   private def doAppend(snapshots: DataFrame, storeDir: String, batchSeq: Long,
                        current: Long): Unit = {
-    val staged = stageAppend(snapshots, storeDir, batchSeq, current)
-    commitManifest(storeDir, staged)
+    StoreCommit.commit(storeDir, stageAppend(snapshots, storeDir, batchSeq, current))
   }
 
   /** The staging half of an append, exposed for the crash-injection spec:
@@ -216,11 +192,7 @@ object SnapshotStore {
     val fs = hadoopFs(snapshots.sparkSession, storeDir)
     val m = manifestOrEmpty(storeDir)
     val e = m.nextEpoch
-    // sweep epochs the manifest doesn't reference: residue of a crashed
-    // earlier append at the frozen epoch name AND retired epochs a
-    // crashed compact left behind
-    graft.operators.ClusterStore.sweepOrphans(
-      java.nio.file.Paths.get(dataDir(storeDir)), "epoch=", m.epochs.toSet)
+    StoreCommit.sweep(storeDir, m)
     if (current < batchSeq) writeSeqSidecar(fs, storeDir, batchSeq)
     snapshots
       .withColumn("batch_seq", lit(batchSeq))
@@ -295,17 +267,14 @@ object SnapshotStore {
   def compact(spark: SparkSession, storeDir: String): Unit = {
     val m = readManifest(storeDir)
     val e = m.nextEpoch
-    graft.operators.ClusterStore.sweepOrphans(
-      java.nio.file.Paths.get(dataDir(storeDir)), "epoch=", m.epochs.toSet)
+    StoreCommit.sweep(storeDir, m)
     latestPerKey(committedRaw(spark, storeDir))
       .drop("epoch")
       .repartition(col("snapshot_date")) // one writer per date → one file
       .withColumn("epoch", lit(e))
       .write.mode("append").partitionBy("epoch", "snapshot_date")
       .parquet(dataDir(storeDir))
-    commitManifest(storeDir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
-    graft.operators.ClusterStore.sweepOrphans(
-      java.nio.file.Paths.get(dataDir(storeDir)), "epoch=", Set(e))
+    StoreCommit.commit(storeDir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
   }
 
   // ----------------------------------------------------------- remove
@@ -329,8 +298,7 @@ object SnapshotStore {
         s"[${keyCols.mkString(",")}]")
     val m = readManifest(storeDir)
     val e = m.nextEpoch
-    graft.operators.ClusterStore.sweepOrphans(
-      java.nio.file.Paths.get(dataDir(storeDir)), "epoch=", m.epochs.toSet)
+    StoreCommit.sweep(storeDir, m)
     latestPerKey(committedRaw(spark, storeDir))
       .join(keys.distinct(), kc, "left_anti")
       .drop("epoch")
@@ -338,9 +306,7 @@ object SnapshotStore {
       .withColumn("epoch", lit(e))
       .write.mode("append").partitionBy("epoch", "snapshot_date")
       .parquet(dataDir(storeDir))
-    commitManifest(storeDir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
-    graft.operators.ClusterStore.sweepOrphans(
-      java.nio.file.Paths.get(dataDir(storeDir)), "epoch=", Set(e))
+    StoreCommit.commit(storeDir, m.copy(epochs = Seq(e), nextEpoch = e + 1))
   }
 
   /** The automated maintenance decision, mirroring the other stores':

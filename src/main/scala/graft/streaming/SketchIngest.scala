@@ -150,7 +150,7 @@ object SketchIngest {
         s"[sketch-ingest] unparsable generation dir '$n' — quarantined " +
           "(not counted against the grace window, never pruned)"))
     owned.sortBy(n => ord(n).get).dropRight(GenerationsKept).foreach(g =>
-      graft.operators.TempDirs.deleteRecursively(root.resolve(g)))
+      graft.sources.StoreCommit.deleteRecursively(root.resolve(g)))
   }
 
   /** Production wiring: watch `watchDir` for document parquet, maintain

@@ -148,4 +148,22 @@ class ProcurementPipelineSpec extends SparkSpec {
     assert(po.filter(col("order_quantity") % col("pack_size") =!= 0 &&
       col("order_quantity") =!= col("min_order_qty")).count() === 0)
   }
+
+  test("a day whose store maintenance compacts the store completes like a fresh-store day") {
+    val t = Files.createTempDirectory("graft_maint_day").toString
+    val g = new DataGenerator(seed = 11L)
+    import spark.implicits._
+    // 7 committed epochs: the day's append is the 8th, so the default
+    // maintenance policy compacts the store during the day
+    for (d <- 1 to 7)
+      SnapshotStore.appendNext(g.snapshots(runDate.minusDays(d)).toDF(), s"$t/store")
+    Pipeline.writeRawDay(spark, g, s"$t/raw", runDate, numOrders = 200,
+      snapshotDate = runDate)
+    val day = Pipeline.run(spark, s"$t/raw", s"$t/store", s"$t/out", runDate, master,
+      retryDelayMs = 0L)
+    assert(SnapshotStore.readManifest(s"$t/store").epochs.size === 1)
+    val fresh = Pipeline.run(spark, s"$t/raw", s"$t/fresh_store", s"$t/fresh_out",
+      runDate, master, retryDelayMs = 0L)
+    assert(day === fresh)
+  }
 }

@@ -26,7 +26,7 @@ class Round18Spec extends SparkSpec {
       // c/d never driver-verified -> first (alphabetical between them);
       // b last seen r1 beats a last seen r2
       assert(order === Seq("c_gate", "d_gate", "b_gate", "a_gate"))
-    } finally graft.operators.TempDirs.deleteRecursively(dir)
+    } finally scala.util.Try(graft.sources.StoreCommit.deleteRecursively(dir))
   }
 
   test("verifyOrder: a FAILED or errored driver row is anti-evidence, not evidence") {
@@ -42,7 +42,7 @@ class Round18Spec extends SparkSpec {
       val order = Verify.verifyOrder(Seq("good", "bad_hash", "bad_err"), dir.toString)
       assert(order === Seq("bad_err", "bad_hash", "good"),
         "failed/errored rows must sort as never-verified; only the green row is evidence")
-    } finally graft.operators.TempDirs.deleteRecursively(dir)
+    } finally scala.util.Try(graft.sources.StoreCommit.deleteRecursively(dir))
   }
 
   test("verifyOrder: a name prefixing another is never credited by the longer key") {
@@ -55,7 +55,7 @@ class Round18Spec extends SparkSpec {
       val order = Verify.verifyOrder(Seq("ann_recall", "ann_recall_pq"), dir.toString)
       assert(order === Seq("ann_recall", "ann_recall_pq"),
         "ann_recall has no row of its own and must sort as never-verified")
-    } finally graft.operators.TempDirs.deleteRecursively(dir)
+    } finally scala.util.Try(graft.sources.StoreCommit.deleteRecursively(dir))
   }
 
   test("verifyOrder: no artifacts degrades to alphabetical (the old order)") {
@@ -92,7 +92,7 @@ class Round18Spec extends SparkSpec {
         Seq("a_new_gate", "q1_agg_orders", "s5_row_counts", "z_new_gate"), dir.toString)
       assert(order === Seq("q1_agg_orders", "s5_row_counts", "a_new_gate", "z_new_gate"),
         "driver-verified-last-round flagship gates still precede never-verified ones")
-    } finally graft.operators.TempDirs.deleteRecursively(dir)
+    } finally scala.util.Try(graft.sources.StoreCommit.deleteRecursively(dir))
   }
 
   test("FlagshipVerify names registered queries and matches Bench's pinned trio") {

@@ -168,7 +168,7 @@ class SketchSpec extends SparkSpec {
       val after2 = Sketches.storeEstimates(
         spark.read.parquet(graft.streaming.SketchIngest.currentGenPath(dir))).collect().toSeq
       assert(after2 == after1)
-    } finally graft.operators.TempDirs.deleteRecursively(root)
+    } finally scala.util.Try(graft.sources.StoreCommit.deleteRecursively(root))
   }
 
   test("sketch ingest prune keeps a GenerationsKept-deep reader grace window") {
@@ -212,7 +212,7 @@ class SketchSpec extends SparkSpec {
         Seq((21L, "even newer words arrive", "s1")).toDF("doc_id", "text", "source"), 4L)
       assert(gens() === Set("gen-b2", "gen-b3", "gen-b4", "gen-bcorrupt"),
         "a foreign dir is quarantined: no grace slot consumed, nothing foreign deleted")
-    } finally graft.operators.TempDirs.deleteRecursively(root)
+    } finally scala.util.Try(graft.sources.StoreCommit.deleteRecursively(root))
   }
 
   test("sketch-only plan partial-aggregates map-side (the 100 TB shape)") {
