@@ -10,7 +10,7 @@ package graft
   * that `settle()` (cache clear + state-store stop + System.gc) provably
   * does not clear. A fresh JVM is the only isolation that makes a number
   * equal its isolated measurement BY CONSTRUCTION. The fork unit is ONE
-  * QUERY — except for [[SparkEntry.benchForkFamilies]]: gates sharing a
+  * QUERY — except for a [[Gate.Group]]: gates sharing a
   * memoized build measure inside one worker (train once, serve many),
   * because fork-per-query re-paid the same training ~20× and that
   * redundant wall is what broke round 15's cap. `SPARK_GRAFT_FORK=0`
@@ -49,7 +49,7 @@ package graft
   *      the r17 driver run let two contention-inflated entries eat ~30%
   *      of the budget and evict 83 labels including the trio.
   *      Tasks run must-entries first, then build phases, then
-  *      [[SparkEntry.lowPriorityBench]] cost-twins in the per-round
+  *      droppable [[Gate]] cost-twins in the per-round
   *      rotation order; before each task the remaining budget is checked
   *      against the task's estimated cost (prior-round min × executions
   *      ×1.2 + startup). Tasks that do not fit are CUT — named in
@@ -74,7 +74,7 @@ package graft
   * round 9 (passes on the line, ~4.7 KB) and round 10 (full-precision
   * doubles, 2,458 chars) outgrew the driver's 2,000-char tail capture
   * and recorded parsed:null. Values are 1 ms rounded; when the full
-  * entry list would still not fit, the [[SparkEntry.lowPriorityBench]]
+  * entry list would still not fit, the droppable [[Gate]]
   * anchors overflow to bench.json and the line carries a "more":N count.
   */
 object Bench {
@@ -98,9 +98,9 @@ object Bench {
     }
 
   /** Query names to run, honoring SPARK_GRAFT_ONLY (local narrowing; the
-    * driver never sets it). Unknown names abort — a typo'd filter would
-    * otherwise measure ZERO queries and print total=0 as if it were a
-    * (spectacular) result. */
+    * driver never sets it) — the one parser Bench and Verify share. An
+    * empty or typo'd filter aborts: it would otherwise measure ZERO
+    * queries and print total=0 as if it were a (spectacular) result. */
   private[graft] def selectedNames(): Seq[String] = {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -114,18 +114,9 @@ object Bench {
       .filter(n => only.forall(_.contains(n)))
   }
 
-  /** One-time build phases measured as their own entries (their consuming
-    * queries memoize the artifact, so warm measured passes time the
-    * CONSUME path alone — these keep the BUILD cost visible): key →
-    * (phase name, only run when this query is selected). */
-  private[graft] val buildPhases: Seq[(String, String)] = Seq(
-    "dedup_index_build" -> "dedup_delta_lsh",
-    "cluster_store_build" -> "dedup_canonical_indexed",
-    // since the BPE gates share one memoized training run (production
-    // economics: train once, apply everywhere), their warm entries time
-    // the CONSUME path (~0.2 s) — this phase keeps the ~14 s training
-    // loop visible in the record, the dedup_index_build convention
-    "bpe_train" -> "text_bpe_vocab")
+  /** A gate marked droppable; build phases and unknown labels are not. */
+  private def isDroppable(label: String): Boolean =
+    SparkEntry.byName.get(label).exists(_.droppable)
 
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
@@ -134,12 +125,13 @@ object Bench {
     val fork = sys.env.getOrElse("SPARK_GRAFT_FORK", "1") != "0"
     val passes = passesEnv(warmups, fork)
     val names = selectedNames()
-    // build phases only make sense with a warmup pass: cold mode's consumer
-    // entry already includes the memoized build (an honest cold number) and
-    // a second build would double-count the cost in "total"
+    // build phases (of selected gates) only make sense with a warmup pass:
+    // cold mode's consumer entry already includes the memoized build (an
+    // honest cold number) and a second build would double-count the cost
+    // in "total"
     val phases =
       if (warmups == 0) Seq.empty
-      else buildPhases.collect { case (p, q) if names.contains(q) => p }
+      else SparkEntry.gates.filter(g => names.contains(g.name)).flatMap(_.phase)
     // prior floors are read ONCE, up front: the incremental partial writes
     // below overwrite bench.json mid-run, so a late read would compare
     // this run against its own first half. Wall floors for labels no
@@ -147,7 +139,7 @@ object Bench {
     // would otherwise carry a renamed/retired gate's entry forever
     val prior = readPriorQueries()
     val priorWall = readPriorWalls().view.filterKeys(k =>
-      SparkEntry.queries.contains(k) || buildPhases.exists(_._1 == k)).toMap
+      SparkEntry.queries.contains(k) || SparkEntry.phases.exists(_.name == k)).toMap
     val seed = roundSeed()
 
     val (results: Seq[(String, Double, Seq[Double])], cut: Seq[String],
@@ -158,11 +150,10 @@ object Bench {
       // anchors whose production twin already ran, and WHICH anchors get
       // trimmed rotates round-over-round like the compact-line overflow
       // set. Queries sharing a memoized build fold into ONE worker unit
-      // ([[SparkEntry.benchForkFamilies]]), with their build phases
-      // attached, so the family's training runs once, not once per fork.
-      val must = names.filterNot(SparkEntry.lowPriorityBench.contains)
-      val dropQ = rotationOrder(names.filter(SparkEntry.lowPriorityBench.contains), seed)
-      val units = forkUnits(must ++ dropQ, phases)
+      // (a memo [[Gate.Group]]), with their build phases attached, so the
+      // family's training runs once, not once per fork.
+      val (drop, must) = names.partition(isDroppable)
+      val units = forkUnits(must ++ rotationOrder(drop, seed), phases.map(_.name))
       // default 1620: r16 ran to 1812 s sbt wall and SURVIVED the driver
       // cap (rc 0) — direct evidence the cap is above 1812. Budget 1620
       // lands ~1650 s wall: ~160 s inside the proven-survivable point,
@@ -229,7 +220,7 @@ object Bench {
     System.err.println(compact)
     require(compact.length < 1800,
       s"metric line is ${compact.length} chars — breaches the driver's " +
-        "tail-capture budget; move oracle-anchor twins to SparkEntry.lowPriorityBench " +
+        "tail-capture budget; mark oracle-anchor twins droppable in SparkEntry.gates " +
         "(full record already persisted to bench.json)")
     println(compact)
     if (failed.nonEmpty) sys.exit(1)
@@ -389,7 +380,7 @@ object Bench {
 
   /** The driver-facing one-line metric JSON, assembled under [[LineCap]].
     * Every result is a candidate; when the full set does not fit,
-    * [[SparkEntry.lowPriorityBench]] entries (oracle-anchor twins whose
+    * droppable [[Gate]] entries (oracle-anchor twins whose
     * production path is also on the line, replay harnesses) are dropped
     * greedily — never a FAILED entry, which must always reach the driver.
     * Dropped entries are reported via the returned seq (logged to stderr)
@@ -411,12 +402,12 @@ object Bench {
     // re-add order rotates with the round seed ([[roundSeed]]): a fixed
     // order would strand a constant overflow set with no committed floor
     val droppable = rotationOrder(results.collect {
-      case (k, v) if SparkEntry.lowPriorityBench.contains(k) && v >= 0 => k
+      case (k, v) if isDroppable(k) && v >= 0 => k
     }, seed)
     var kept = Set.empty[String]
     def render(trips: Seq[String], tripDropped: Int): String = {
       val entries = results.filter { case (k, v) =>
-        v < 0 || !SparkEntry.lowPriorityBench.contains(k) || kept(k)
+        v < 0 || !isDroppable(k) || kept(k)
       }
       val omitted = droppable.count(!kept(_))
       val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmtSecs(v) }
@@ -499,56 +490,46 @@ object Bench {
 
   /** One forked worker's workload: `tasks` are ("q:<name>" |
     * "phase:<name>", display label) pairs measured sequentially in one
-    * JVM. Singleton for isolated queries; a whole
-    * [[SparkEntry.benchForkFamilies]] family (plus its build phases) for
-    * memo-sharing gates (`memo = true` — these carry the one-time build
-    * surcharge in estimates); a [[SparkEntry.benchBatchFamilies]] batch
-    * of cheap gates amortizing one startup (`memo = false`). */
+    * JVM. Singleton for isolated queries; a whole [[Gate.Group]]
+    * otherwise: a memo family (plus its build phases) for memo-sharing
+    * gates (`memo = true` — these carry the one-time build surcharge in
+    * estimates), or a batch of cheap gates amortizing one startup
+    * (`memo = false`). */
   private[graft] final case class BenchUnit(tasks: Seq[(String, String)],
                                             memo: Boolean = false) {
     def labels: Seq[String] = tasks.map(_._2)
     def spec: String = tasks.map(_._1).mkString(";")
   }
 
-  /** Group the ordered query names into fork units. A family unit is
+  /** Group the ordered query names into fork units. A group's unit is
     * emitted at its FIRST member's position in `ordered` (so a family
-    * with any must-entry runs in the must block), members kept in their
-    * `ordered` relative order, the family's build phases appended last
-    * (measurePhase bypasses the memo deliberately, so phase cost stays
-    * visible regardless of position). Phases whose family never formed
-    * (consumer filtered out) trail as singletons. */
+    * with any must-entry runs in the must block), the family's build
+    * phases appended last (measurePhase bypasses the memo deliberately,
+    * so phase cost stays visible regardless of position). Phases whose
+    * family never formed (consumer filtered out) trail as singletons. */
   private[graft] def forkUnits(ordered: Seq[String], phases: Seq[String]): Seq[BenchUnit] = {
-    val memoFamOf: Map[String, String] = SparkEntry.benchForkFamilies.flatMap {
-      case (f, ms) => ms.map(_ -> f)
-    }
-    // cost-batches group like memo families but carry no build surcharge
-    val famOf: Map[String, String] = memoFamOf ++
-      SparkEntry.benchBatchFamilies.flatMap { case (f, ms) => ms.map(_ -> f) }
-    val consumerOf: Map[String, String] = buildPhases.toMap // phase -> consumer query
+    val inOrdered = ordered.toSet
     // build phases only ever attach to MEMO families (their consumers
     // are the memo-sharing gates); a batch never owns a phase
-    val phaseFam: Map[String, String] =
-      phases.flatMap(p => consumerOf.get(p).flatMap(memoFamOf.get).map(p -> _)).toMap
+    val phaseFam: Map[String, Gate.Group] = SparkEntry.gates.flatMap(g =>
+      g.phase.map(_.name).filter(phases.contains) zip g.group.filter(_.memo)).toMap
     val emitted = scala.collection.mutable.Set[String]()
     val units = scala.collection.mutable.ArrayBuffer[BenchUnit]()
-    val declared: Map[String, Seq[String]] =
-      SparkEntry.benchForkFamilies ++ SparkEntry.benchBatchFamilies
     for (n <- ordered if !emitted(n)) {
-      famOf.get(n) match {
+      SparkEntry.byName.get(n).flatMap(_.group) match {
         case Some(f) =>
-          // members run in the family's DECLARED order, not `ordered`'s:
-          // queries is a HashMap, so `ordered` scrambles on every key
-          // insertion — r17's run had a 12-member family re-shuffled so
-          // a streaming beast ran before a light probe and inflated it
-          // 3×. The declared Seq is curated (light probes first,
-          // lifecycle next, streaming last) and STABLE round-over-round,
-          // which is what per-member floors assume.
-          val inOrdered = ordered.toSet
-          val members = declared(f).filter(inOrdered.contains)
+          // members run in TABLE row order, not `ordered`'s: a hash-keyed
+          // `ordered` scrambles on every key insertion — r17's run had a
+          // 12-member family re-shuffled so a streaming beast ran before a
+          // light probe and inflated it 3×. Row order is curated (light
+          // probes first, lifecycle next, streaming last) and STABLE
+          // round-over-round, which is what per-member floors assume.
+          val members = SparkEntry.gates.collect {
+            case g if g.group.contains(f) && inOrdered(g.name) => g.name
+          }
           val famPhases = phases.filter(p => phaseFam.get(p).contains(f))
           units += BenchUnit(members.map(m => (s"q:$m", m)) ++
-            famPhases.map(p => (s"phase:$p", p)),
-            memo = memoFamOf.contains(n))
+            famPhases.map(p => (s"phase:$p", p)), memo = f.memo)
           emitted ++= members
         case None =>
           units += BenchUnit(Seq((s"q:$n", n)))
@@ -569,7 +550,7 @@ object Bench {
   private[graft] def estimateLabel(label: String, prior: Map[String, Double],
                                    execs: Int): Double =
     prior.get(label).map(_ * execs * 1.2).getOrElse(
-      if (SparkEntry.benchBatchFamilies.values.exists(_.contains(label)))
+      if (SparkEntry.byName.get(label).flatMap(_.group).exists(!_.memo))
         BatchDefaultEstSecs
       else DefaultEstSecs)
 
@@ -629,12 +610,12 @@ object Bench {
     * cannot be tail-killed. */
   private[graft] val PinnedSecondLabel = "corpus_curate_e2e"
 
-  /** A task that survives a must-trim: a query outside
-    * [[SparkEntry.lowPriorityBench]], or a build phase (the one-time
-    * build costs the line keeps visible). The ONE copy of the predicate
-    * — [[isMustUnit]] and [[trimToMust]] must never diverge. */
+  /** A task that survives a must-trim: a gate not marked droppable, or a
+    * build phase (the one-time build costs the line keeps visible). The
+    * ONE copy of the predicate — [[isMustUnit]] and [[trimToMust]] must
+    * never diverge. */
   private def isMustTask(spec: String, label: String): Boolean =
-    spec.startsWith("phase:") || !SparkEntry.lowPriorityBench.contains(label)
+    spec.startsWith("phase:") || !isDroppable(label)
 
   /** A unit carrying at least one must gate or build phase. */
   private[graft] def isMustUnit(u: BenchUnit): Boolean =
@@ -713,8 +694,7 @@ object Bench {
                                          Map[String, Double]) = {
     def elapsed(): Double = (System.nanoTime() - t0) / 1e9
     def execs(label: String): Int =
-      if (SparkEntry.replayHarnessQueries(label) ||
-        SparkEntry.iterativeHarnessQueries(label)) warmups + 1
+      if (SparkEntry.byName.get(label).exists(_.harness)) warmups + 1
       else warmups + passes
     // the per-entry WATCHDOG ceiling: no label may hold a worker longer
     // than WatchdogBudgetFrac of the wall budget (~194 s at the default
@@ -1260,8 +1240,9 @@ object BenchWorker {
     }
     val specs = unitSpec.split(";").toSeq
     val qNames = specs.collect { case s if s.startsWith("q:") => s.drop(2) }
-    val phaseNames = specs.collect { case s if s.startsWith("phase:") => s.drop(6) }
-    require(qNames.size + phaseNames.size == specs.size,
+    val phases = specs.collect { case s if s.startsWith("phase:") => s.drop(6) }
+      .flatMap(p => SparkEntry.phases.find(_.name == p))
+    require(qNames.size + phases.size == specs.size,
       s"unknown bench task in unit: $unitSpec")
     // fork mode warms replay queries too: this JVM is FRESH, so an
     // unwarmed replay measures codegen/JIT cold start of the whole
@@ -1278,10 +1259,10 @@ object BenchWorker {
         passes.toInt, warmReplays = true)
       record(r.head._1, r.head._2, r.head._3)
     }
-    phaseNames.foreach { p =>
-      val (_, v, ps) = BenchCore.measurePhase(spark, sfDir, p,
+    phases.foreach { p =>
+      val (l, v, ps) = BenchCore.measurePhase(spark, sfDir, p,
         warmups.toInt, passes.toInt)
-      record(p, v, ps)
+      record(l, v, ps)
     }
     spark.stop()
   }
@@ -1344,9 +1325,7 @@ private[graft] object BenchCore {
   def measure(spark: SparkSession, sfDir: String, names: Seq[String],
               warmups: Int, passes: Int,
               warmReplays: Boolean = false): Seq[(String, Double, Seq[Double])] = {
-    val harness = (n: String) => SparkEntry.replayHarnessQueries(n) ||
-      SparkEntry.iterativeHarnessQueries(n)
-    val planNames = names.filterNot(harness)
+    val planNames = names.filterNot(n => SparkEntry.byName.get(n).exists(_.harness))
     val warmNames = if (warmReplays) names else planNames
     (1 to warmups).foreach(_ => warmNames.foreach(n => once(spark, sfDir, n)))
     val byPass = (1 to passes).map { p =>
@@ -1373,45 +1352,19 @@ private[graft] object BenchCore {
     * fresh temp directory, so no pass reads another's file-listing warmth
     * on the OUTPUT side; the input-scan/codegen/JIT warmth is exactly what
     * the warmup pass is for. */
-  def measurePhase(spark: SparkSession, sfDir: String, phase: String,
+  def measurePhase(spark: SparkSession, sfDir: String, phase: Gate.Phase,
                    warmups: Int, passes: Int): (String, Double, Seq[Double]) = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
+    def once(): Double =
       try {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bench_phase")
-        try {
-          phase match {
-            case "dedup_index_build" =>
-              graft.operators.DedupIndex.write(
-                graft.sources.Tables.documents(spark, sfDir)
-                  .filter(org.apache.spark.sql.functions.col("doc_id")
-                    % graft.operators.DedupIndex.DeltaMod =!= 0),
-                tmp.toString)
-            case "cluster_store_build" =>
-              graft.operators.ClusterStore.write(
-                graft.sources.Tables.documents(spark, sfDir), tmp.toString)
-            case "bpe_train" => // memo-bypassing: the full training loop
-              graft.operators.BpeTrain.train(
-                graft.sources.Tables.documents(spark, sfDir))
-            case other => sys.error(s"unknown bench phase: $other")
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[bench] $phase $secs%.2fs")
-          secs
-        } finally {
-          // best-effort: cleanup failure must not void the measurement
-          try java.nio.file.Files.walk(tmp)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
+        val secs = phase.timeOnce(spark, sfDir)
+        System.err.println(f"[bench] ${phase.name} $secs%.2fs")
+        secs
       } catch {
-        case e: Throwable => System.err.println(s"[bench] $phase: $e"); -1.0
+        case e: Throwable => System.err.println(s"[bench] ${phase.name}: $e"); -1.0
       } finally settle(spark)
-    }
     (1 to warmups).foreach(_ => once())
     val vs = (1 to passes).map(_ => once())
     val v = if (vs.isEmpty || vs.exists(_ < 0)) -1.0 else vs.min
-    (phase, v, vs)
+    (phase.name, v, vs)
   }
 }

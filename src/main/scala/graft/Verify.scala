@@ -16,7 +16,7 @@ import java.nio.file.{Files, Paths}
   *      process dies.
   *   2. Queries ran sequentially (~18 min for 149 at sf0.01, mostly
   *      driver-side planning + small jobs that never fill 32 cores). They
-  *      now run on SPARK_GRAFT_VERIFY_PAR worker threads (default 12), each
+  *      now run on SPARK_GRAFT_VERIFY_PAR worker threads (default 16), each
   *      with its OWN `spark.newSession()` — same SparkContext and JVM-wide
   *      memo stores (ConcurrentHashMap.computeIfAbsent serializes builds
   *      per key), but isolated SQLConf and temp-view catalogs, so the
@@ -36,23 +36,13 @@ object Verify {
     val spark = GraftSession.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY narrows local iteration, same contract as Bench —
-    // including Bench's guards: an empty or typo'd filter must abort, not
-    // silently verify ZERO queries while still writing oracle_sql.json.
-    // The driver never sets it, so round verifies stay complete.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { o =>
-      require(o.nonEmpty, "SPARK_GRAFT_ONLY is set but names no queries")
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
+    // SPARK_GRAFT_ONLY narrows local iteration through Bench's parser: an
+    // empty or typo'd filter aborts here, before oracle_sql.json is
+    // written, instead of silently verifying ZERO queries. The driver
+    // never sets it, so round verifies stay complete.
+    val names = verifyOrder(Bench.selectedNames())
     // oracle SQL FIRST (see scaladoc): a partial run must stay comparable
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson())
-
-    val names = verifyOrder(SparkEntry.queries.keys.toSeq)
-      .filter(n => only.forall(_.contains(n)))
     // default 16 (was 12, before that 8): the r19 driver window cleared
     // 125 of 162 gates in the 780 s budget at par 12 under box contention;
     // the quiet rehearsal did all 162 in 193 s, so throughput — not plan
@@ -204,21 +194,22 @@ object Verify {
         n.has(f) && !n.path(f).asBoolean(true)) &&
       !(n.has("err") && !n.path("err").isNull)
 
-  /** SparkEntry.oracleSql as one JSON object. JSON string escape:
-    * backslash, quote, and ALL control chars (<0x20) — a tab or CR in
-    * builder-authored SQL would otherwise make the driver's json.load fail
-    * and silently zero the round's correctness. */
-  private[graft] def oracleJson(): String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
+  /** Every gate's oracle SQL as one JSON object, keyed by gate name. */
+  private[graft] def oracleJson(): String =
+    SparkEntry.gates.map(g => s"${jsonString(g.name)}: ${jsonString(g.oracle)}")
+      .mkString("{", ",", "}")
+
+  /** `s` as a JSON string literal. Escapes backslash, quote, and ALL
+    * control chars (<0x20) — a tab or CR in hand-written oracle SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -219,50 +219,16 @@ object ScaleBench {
         else ""
       println(s"""{"scale":"$label","rel_volume":$rel,"query":"$name","sec":$sec$copy}""")
     }
-    // one-time index build per scale, measured against a fresh directory
-    // (mirrors Bench's dedup_index_build phase)
-    // one-time cluster-store build per scale (mirrors Bench's
-    // cluster_store_build phase; the dedup_canonical_indexed rows above
+    // one-time store builds per scale, through the same build phases Bench
+    // measures (the dedup_canonical_indexed / dedup_delta_lsh rows above
     // time the CONSUME path, warm via the memoized per-dir build)
-    if (headline.contains("dedup_canonical_indexed")) {
-      for ((label, dir, rel) <- scales) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_scale_cstore")
-        val t0 = System.nanoTime()
-        try {
-          graft.operators.ClusterStore.write(
-            graft.sources.Tables.documents(spark, dir), tmp.toString)
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(s"""{"scale":"$label","rel_volume":$rel,"query":"cluster_store_build","sec":$sec}""")
-        } finally {
-          try java.nio.file.Files.walk(tmp)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          catch { case scala.util.control.NonFatal(_) => () }
-          Pinned.release(spark)
-        }
-      }
-    }
-    if (headline.contains("dedup_delta_lsh")) {
-      for ((label, dir, rel) <- scales) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_scale_idx")
-        val t0 = System.nanoTime()
-        try {
-          graft.operators.DedupIndex.write(
-            graft.sources.Tables.documents(spark, dir)
-              .filter(col("doc_id") % graft.operators.DedupIndex.DeltaMod =!= 0),
-            tmp.toString)
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(s"""{"scale":"$label","rel_volume":$rel,"query":"dedup_index_build","sec":$sec}""")
-        } finally {
-          // best-effort: a cleanup failure must not abort the remaining
-          // scales (or replace the build's own exception)
-          try java.nio.file.Files.walk(tmp)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          catch { case scala.util.control.NonFatal(_) => () }
-          Pinned.release(spark)
-        }
-      }
+    for (consumer <- Seq("dedup_canonical_indexed", "dedup_delta_lsh")
+         if headline.contains(consumer);
+         phase <- SparkEntry.byName(consumer).phase; (label, dir, rel) <- scales) {
+      try {
+        val sec = phase.timeOnce(spark, dir)
+        println(s"""{"scale":"$label","rel_volume":$rel,"query":"${phase.name}","sec":$sec}""")
+      } finally Pinned.release(spark)
     }
     spark.stop()
   }

@@ -15,7 +15,7 @@ class BenchLineSpec extends AnyFunSuite {
   // (two digits before the point → 6-char renders, wider than typical)
   private def fullResults(v: Double = 12.345678): Seq[(String, Double)] =
     (SparkEntry.queries.keys.toSeq.sorted ++
-      Bench.buildPhases.map(_._1)).map(_ -> v)
+      SparkEntry.phases.map(_.name)).map(_ -> v)
 
   test("fmtSecs: 1 ms precision, trailing zeros trimmed, failures intact") {
     assert(Bench.fmtSecs(9.642186593) === "9.642")
@@ -44,7 +44,7 @@ class BenchLineSpec extends AnyFunSuite {
     val (line, omitted) =
       Bench.compactLine(fullResults() ++ future, "/root/testdata/sf0.1")
     assert(line.length < 1800, s"line is ${line.length} chars — " +
-      "grow SparkEntry.lowPriorityBench before adding more gates")
+      "mark more SparkEntry.gates rows droppable before adding more gates")
     val parsed = mapper.readTree(line)
     for ((k, _) <- future) assert(parsed.get("queries").has(k))
     // the budget was paid by dropping low-priority anchors, visibly
@@ -60,7 +60,7 @@ class BenchLineSpec extends AnyFunSuite {
     val (line, omitted) = Bench.compactLine(results, "/root/testdata/sf0.1")
     assert(omitted.nonEmpty)
     for ((k, _) <- omitted)
-      assert(SparkEntry.lowPriorityBench.contains(k), s"$k is not droppable")
+      assert(SparkEntry.byName.get(k).exists(_.droppable), s"$k is not droppable")
     val parsed = mapper.readTree(line)
     assert(parsed.get("queries").has("dedup_canonical"),
       "a FAILED low-priority entry must still reach the driver")
@@ -156,9 +156,9 @@ class BenchLineSpec extends AnyFunSuite {
       val (line, omitted) = Bench.compactLine(results, "/root/testdata/sf0.1",
         Nil, seed = s)
       assert(line.length < 1800, s"seed $s line is ${line.length} chars")
-      // rotation must never widen droppability: only lowPriorityBench falls off
+      // rotation must never widen droppability: only droppable gates fall off
       for ((k, _) <- omitted)
-        assert(SparkEntry.lowPriorityBench.contains(k), s"$k is not droppable")
+        assert(SparkEntry.byName.get(k).exists(_.droppable), s"$k is not droppable")
       // deterministic within a round
       val (again, _) = Bench.compactLine(results, "/root/testdata/sf0.1",
         Nil, seed = s)
@@ -221,9 +221,10 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("forkUnits: families fold into one unit at the first member's position") {
-    val fams = SparkEntry.benchForkFamilies
+    val groups = SparkEntry.gates.flatMap(g => g.group.map(_ -> g.name)).groupMap(_._1)(_._2)
+    val fams = groups.collect { case (f, ms) if f.memo => f.name -> ms }
     val ordered = SparkEntry.queries.keys.toSeq.sorted
-    val phases = Bench.buildPhases.map(_._1)
+    val phases = SparkEntry.phases.map(_.name)
     val units = Bench.forkUnits(ordered, phases)
     // every query appears exactly once across units; phases exactly once
     val all = units.flatMap(_.labels)
@@ -239,11 +240,15 @@ class BenchLineSpec extends AnyFunSuite {
     }
     // cost batches fold like families but are NOT memo-flagged (no
     // build surcharge — the r17 coverage re-tier)
-    for ((b, members) <- SparkEntry.benchBatchFamilies) {
+    for ((b, members) <- groups.collect { case (f, ms) if !f.memo => f.name -> ms }) {
       val owners = units.filter(_.labels.exists(members.contains))
       assert(owners.size === 1, s"batch $b split across ${owners.size} units")
       assert(members.toSet.subsetOf(owners.head.labels.toSet))
       assert(!owners.head.memo, s"batch $b unit must not be memo-flagged")
+      // a batch is homogeneous in droppability, so the budget trimmer cuts
+      // whole batches and never strands a must gate behind a droppable one
+      assert(members.map(SparkEntry.byName(_).droppable).distinct.size === 1,
+        s"batch $b mixes must and droppable gates")
     }
     // build phases attach to their consumer's family unit
     val bpeUnit = units.find(_.labels.contains("text_bpe_vocab")).get
@@ -266,7 +271,7 @@ class BenchLineSpec extends AnyFunSuite {
     // ivf_float family declares its streaming replay LAST
     val ivfFloat = units.find(_.labels.contains("ivf_ann_topk")).get
     val qLabels = ivfFloat.tasks.filter(_._1.startsWith("q:")).map(_._2)
-    assert(qLabels === SparkEntry.benchForkFamilies("ivf_float"))
+    assert(qLabels === SparkEntry.gates.filter(_.group.exists(_.name == "ivf_float")).map(_.name))
     assert(qLabels.last === "ivf_stream_append")
   }
 
@@ -433,15 +438,15 @@ class BenchLineSpec extends AnyFunSuite {
     // ivf_pq_rerank (must) pulls the whole pq family forward when
     // ordered must-first
     val ordered = SparkEntry.queries.keys.toSeq.sorted
-    val phases = Bench.buildPhases.map(_._1)
-    val must = ordered.filterNot(SparkEntry.lowPriorityBench.contains)
-    val dropQ = ordered.filter(SparkEntry.lowPriorityBench.contains)
+    val phases = SparkEntry.phases.map(_.name)
+    val must = ordered.filterNot(SparkEntry.byName(_).droppable)
+    val dropQ = ordered.filter(SparkEntry.byName(_).droppable)
     val units2 = Bench.forkUnits(must ++ dropQ, phases)
     val pqIdx = units2.indexWhere(_.labels.contains("ivf_pq_rerank"))
     val firstDropOnlyIdx = units2.indexWhere(u =>
-      u.labels.forall(l => SparkEntry.lowPriorityBench.contains(l)))
+      u.labels.forall(l => SparkEntry.byName.get(l).exists(_.droppable)))
     assert(pqIdx >= 0 && (firstDropOnlyIdx < 0 || pqIdx < firstDropOnlyIdx ||
-      units2(pqIdx).labels.exists(l => !SparkEntry.lowPriorityBench.contains(l))))
+      units2(pqIdx).labels.exists(l => !SparkEntry.byName.get(l).exists(_.droppable))))
   }
 
   test("when everything fits, nothing is dropped and no 'more' field appears") {
