@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.operators.Similarity.{Build, Op, Tier}
 import graft.sources.Tables
 import graft.streaming.{CorpusIngest, EventStreams, SketchIngest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -456,19 +457,20 @@ object SparkEntry {
         Similarity.ivfAnnOracle(), droppable = true),
       // the PERSISTED index lifecycle under the SAME oracle: save → quantizer reload →
       // partition-pruned probe must equal in-memory IVF
-      Gate("ivf_probe_indexed", Similarity.ivfProbeIndexedFromDir(_, _), Similarity.ivfAnnOracle()),
+      Gate("ivf_probe_indexed", Similarity.lifecycle(Tier.Ivf)(), Similarity.ivfAnnOracle()),
       // the health scan over a built+appended index, in exact integers (micros-rounded assigned
       // cosines, long sums — no float aggregation)
-      Gate("ivf_index_health", Similarity.indexHealthGateFromDir(_, _),
+      Gate("ivf_index_health", Similarity.healthGate(Tier.Ivf)(),
         Similarity.indexHealthOracle()),
       // filtered (predicate-constrained) search: top-k among documents satisfying a metadata
       // predicate — the index is NOT rebuilt per predicate; candidates semi-join the allowed
       // ids before re-score, on the float tier and composed with the PQ/ADC tier
       // droppable: filtered variant of ivf_probe_indexed (on the line): same probe + one
       // candidate semi-join
-      Gate("ivf_ann_filtered", Similarity.ivfAnnFilteredFromDir(_, _),
+      Gate("ivf_ann_filtered", Similarity.lifecycle(Tier.Ivf, Op.Filtered())(),
         Similarity.ivfAnnFilteredOracle(), droppable = true),
-      Gate("ivf_mrl_rerank", Similarity.ivfMrlRerankFromDir(_, _), Similarity.ivfMrlRerankOracle()),
+      Gate("ivf_mrl_rerank", Similarity.lifecycle(Tier.Ivf, Op.Rerank())(Build(dPrime = 16)),
+        Similarity.ivfMrlRerankOracle()),
       // the production path: vector list probes the PERSISTED index (partition-pruned cells,
       // sidecar quantizer) — same oracle
       Gate("hybrid_rrf_indexed", HybridRetrieval.fromDirIndexed(_, _), HybridRetrieval.oracleIvf()),
@@ -478,30 +480,31 @@ object SparkEntry {
       // O(batch) index ingestion: append the DeltaMod delta to the backlog index, probe — must
       // equal a same-quantizer rebuild over the union
       // droppable: strict cost-subset of ivf_index_compact's gate (build+append+compact)
-      Gate("ivf_index_append", Similarity.ivfAppendProbeFromDir(_, _),
+      Gate("ivf_index_append", Similarity.lifecycle(Tier.Ivf, Op.Append)(),
         Similarity.ivfAnnOracle(), droppable = true),
       // compaction is content-preserving: build + append + compact (rewrite cells coalesced,
       // promote the next generation) + probe == the SAME full-corpus oracle as every other IVF
       // gate
-      Gate("ivf_index_compact", Similarity.ivfCompactProbeFromDir(_, _), Similarity.ivfAnnOracle()),
+      Gate("ivf_index_compact", Similarity.lifecycle(Tier.Ivf, Op.Compact)(),
+        Similarity.ivfAnnOracle()),
       // deletion: remove a residue class from the full index (filtered generation promote, same
       // quantizer) — probe must equal a rebuild over the kept vectors (the oracle on the
       // filtered relation)
       // droppable: the three store-deletion gates share the filtered-rewrite mechanics of their
       // compact siblings (on the line); the deletion flagship on the line is the composed
       // corpus_diff_recurate loop
-      Gate("ivf_index_remove", Similarity.ivfRemoveProbeFromDir(_, _),
+      Gate("ivf_index_remove", Similarity.lifecycle(Tier.Ivf, Op.Remove)(),
         Similarity.ivfRemoveOracle(), droppable = true),
       // growth maintenance: re-quantize to C=32 and probe — must equal a from-scratch build at
       // the new C (the oracle at numCentroids=32)
       // droppable: same promote-generation primitive as ivf_index_compact (on the line)
-      Gate("ivf_requantize", Similarity.ivfRequantizeProbeFromDir(_, _),
+      Gate("ivf_requantize", Similarity.lifecycle(Tier.Ivf, Op.Requantize(Build(32)))(),
         Similarity.ivfAnnOracle(numCentroids = 32), droppable = true),
       // STREAMING index ingestion: the delta replayed as micro-batches with planted
       // re-deliveries; watermark dedup -> the same O(batch) append -> probe must STILL equal
       // the same-quantizer rebuild over the union
       // replay harness
-      Gate("ivf_stream_append", Similarity.ivfStreamAppendProbeFromDir(_, _),
+      Gate("ivf_stream_append", Similarity.lifecycle(Tier.Ivf, Op.StreamAppend())(),
         Similarity.ivfAnnOracle(), harness = true, droppable = true)) ++
     family("ivf_trained")(
       // k-means quantizer TRAINING, exact: md5 init, integer-micros Lloyd updates, T iterations
@@ -521,7 +524,7 @@ object SparkEntry {
       // the FULL production configuration: persisted index built with the trained quantizer,
       // sidecar round-trip, partition-pruned probe
       // iterative harness: training + index build memoized; probe plan after
-      Gate("ivf_probe_trained", Similarity.ivfProbeTrainedFromDir(_, _),
+      Gate("ivf_probe_trained", Similarity.lifecycle(Tier.IvfTrained)(),
         Similarity.ivfAnnTrainedOracle(), harness = true),
       // SemDeDup under the trained quantizer — the production swap the scaladoc promises, gated
       // instead of asserted
@@ -536,7 +539,7 @@ object SparkEntry {
       // sweeps, retiring the O(N*C) flat assignment sweep; persisted combined-cell index,
       // pruned probe
       // iterative harness: two half-space training loops + memoized build
-      Gate("ivf_ann_imi", Similarity.imiAnnFromDir(_, _),
+      Gate("ivf_ann_imi", Similarity.lifecycle(Tier.Imi)(),
         Similarity.imiAnnOracle(), harness = true),
       // IMI lifecycle parity: O(batch) append under the frozen half codebooks (oracle trains on
       // the backlog only), and takedown via the filtered generation rewrite (oracle restricts
@@ -544,28 +547,28 @@ object SparkEntry {
       // iterative harness: backlog training loops + memoized backlog build
       // droppable: lifecycle sibling of ivf_index_append (the flagship ivf_ann_imi stays on the
       // line)
-      Gate("ivf_imi_append", Similarity.imiAppendProbeFromDir(_, _),
+      Gate("ivf_imi_append", Similarity.lifecycle(Tier.Imi, Op.Append)(),
         Similarity.imiAnnOracle(trainWhere = backlog), harness = true, droppable = true),
       // iterative harness: the same memoized trained build + one rewrite
       // droppable: filtered-rewrite sibling of ivf_index_remove
-      Gate("ivf_imi_remove", Similarity.imiRemoveProbeFromDir(_, _),
+      Gate("ivf_imi_remove", Similarity.lifecycle(Tier.Imi, Op.Remove)(),
         Similarity.imiAnnOracle(keepWhere = backlog), harness = true, droppable = true),
       // IMI compaction (content-preserving, re-passes the append oracle) and requantize (both
       // codebooks retrained at the new C over the union — must equal a from-scratch build at
       // (16, 16))
       // iterative harness: backlog training loops + append + one rewrite
       // droppable: lifecycle sibling of ivf_index_compact
-      Gate("ivf_imi_compact", Similarity.imiCompactProbeFromDir(_, _),
+      Gate("ivf_imi_compact", Similarity.lifecycle(Tier.Imi, Op.Compact)(),
         Similarity.imiAnnOracle(trainWhere = backlog), harness = true, droppable = true),
       // iterative harness: backlog + union retraining at the new C
       // droppable: rebuild-at-newC sibling of ivf_requantize
-      Gate("ivf_imi_requantize", Similarity.imiRequantizeProbeFromDir(_, _),
+      Gate("ivf_imi_requantize", Similarity.lifecycle(Tier.Imi, Op.Requantize(Build(16, 16)))(),
         Similarity.imiAnnOracle(c1 = 16, c2 = 16), harness = true, droppable = true),
       // the drift scan on the two-level tier: per-row quality = sum of the two half-space
       // assigned cosines, micros-exact integer surface
       // droppable: scan twin of ivf_index_health (on the line), two half-space sweeps instead
       // of one flat
-      Gate("ivf_imi_health", Similarity.imiHealthGateFromDir(_, _),
+      Gate("ivf_imi_health", Similarity.healthGate(Tier.Imi)(Build(8, 8, iterations = 0)),
         Similarity.imiHealthOracle(), droppable = true),
       // the two-level path: vector list probes the persisted trained IMI index — only the list
       // source moves; lex + fusion identical
@@ -583,35 +586,35 @@ object SparkEntry {
       // the COMPOSED serving tier a 100 TB deployment runs: two-level IMI cells storing SQ8
       // codes — O(sqrt(C)·dim) assignment AND 4x less probe read; probe = pruned combined-cell
       // read -> decode -> asymmetric re-score. Full lifecycle under the one shared
-      // rewriteGeneration discipline (sidecars: both codebooks + extrema)
+      // generation-rewrite discipline (sidecars: both codebooks + extrema)
       // iterative harness: two half-space training loops + memoized build
-      Gate("imi_sq8_probe", Similarity.imiSq8ProbeFromDir(_, _),
+      Gate("imi_sq8_probe", Similarity.lifecycle(Tier.ImiSq8)(),
         Similarity.imiSq8Oracle(), harness = true),
       // iterative harness: backlog training loops + memoized backlog build
       // droppable: lifecycle sibling of imi_sq8_probe (on the line); the ivf_index_append
       // rationale
-      Gate("imi_sq8_append", Similarity.imiSq8AppendProbeFromDir(_, _),
+      Gate("imi_sq8_append", Similarity.lifecycle(Tier.ImiSq8, Op.Append)(),
         Similarity.imiSq8Oracle(trainWhere = backlog, statsWhere = backlog),
         harness = true, droppable = true),
       // iterative harness: the memoized composed build + one rewrite
       // droppable: filtered-rewrite sibling of ivf_imi_remove
-      Gate("imi_sq8_remove", Similarity.imiSq8RemoveProbeFromDir(_, _),
+      Gate("imi_sq8_remove", Similarity.lifecycle(Tier.ImiSq8, Op.Remove)(),
         Similarity.imiSq8Oracle(keepWhere = backlog), harness = true, droppable = true),
       // iterative harness: backlog training loops + append + one rewrite
       // droppable: lifecycle sibling of ivf_imi_compact
-      Gate("imi_sq8_compact", Similarity.imiSq8CompactProbeFromDir(_, _),
+      Gate("imi_sq8_compact", Similarity.lifecycle(Tier.ImiSq8, Op.Compact)(),
         Similarity.imiSq8Oracle(trainWhere = backlog, statsWhere = backlog),
         harness = true, droppable = true),
       // iterative harness: backlog + union retraining at the new C
       // droppable: rebuild-at-newC sibling of ivf_imi_requantize
-      Gate("imi_sq8_requantize", Similarity.imiSq8RequantizeProbeFromDir(_, _),
+      Gate("imi_sq8_requantize", Similarity.lifecycle(Tier.ImiSq8, Op.Requantize(Build(16, 16)))(),
         Similarity.imiSq8Oracle(c1 = 16, c2 = 16), harness = true, droppable = true),
       // streaming ingest on the composed tier: watermark-deduped replay through the SAME
       // O(batch) append — one transform, every tier
       // oracle: the streaming ingestion path on the composed tier: the SAME oracle as the
       // one-shot batch append — the callback-sink design's claim
       // replay harness
-      Gate("imi_sq8_stream_append", Similarity.imiSq8StreamAppendProbeFromDir(_, _),
+      Gate("imi_sq8_stream_append", Similarity.lifecycle(Tier.ImiSq8, Op.StreamAppend())(),
         Similarity.imiSq8Oracle(trainWhere = backlog, statsWhere = backlog),
         harness = true, droppable = true),
       // the compressed-tier path: vector list probes the IMI x SQ8 index (pruned code reads +
@@ -627,34 +630,34 @@ object SparkEntry {
       // pruned cell read -> decode -> asymmetric re-score against full-precision queries
       // droppable: flat-quantizer compressed tier; the composed imi_sq8_probe serving tier
       // stays on the line
-      Gate("ivf_sq8_probe", Similarity.ivfSq8ProbeFromDir(_, _),
+      Gate("ivf_sq8_probe", Similarity.lifecycle(Tier.IvfSq8)(),
         Similarity.ivfSq8Oracle(), droppable = true),
       // O(batch) SQ8 ingestion: encode the delta under the PERSISTED quantizer + stats (both
       // frozen at build, production semantics), land in cell dirs, probe — oracle freezes stats
       // at the backlog
       // droppable: lifecycle sibling of ivf_sq8_probe (on the line); the ivf_index_append
       // rationale
-      Gate("ivf_sq8_append", Similarity.ivfSq8AppendProbeFromDir(_, _),
+      Gate("ivf_sq8_append", Similarity.lifecycle(Tier.IvfSq8, Op.Append)(),
         Similarity.ivfSq8AppendOracle(), droppable = true),
       // deletion on the compressed tier: filtered code rewrite under the FROZEN build-time
       // stats (no re-encode) — probe must equal the SQ8 oracle over the kept relation with
       // stats still at the build corpus
       // droppable: filtered-rewrite sibling of the three float-store removes (same rationale,
       // same droppable class)
-      Gate("ivf_sq8_remove", Similarity.ivfSq8RemoveProbeFromDir(_, _),
+      Gate("ivf_sq8_remove", Similarity.lifecycle(Tier.IvfSq8, Op.Remove)(),
         Similarity.ivfSq8RemoveOracle(), droppable = true),
       // SQ8 compaction: identity-filter generation rewrite, one file per cell, codes verbatim —
       // content-preserving (re-passes the append oracle)
       // droppable: lifecycle sibling of ivf_index_compact (same rewrite class; ivf_sq8_probe
       // stays on the line)
-      Gate("ivf_sq8_compact", Similarity.ivfSq8CompactProbeFromDir(_, _),
+      Gate("ivf_sq8_compact", Similarity.lifecycle(Tier.IvfSq8, Op.Compact)(),
         Similarity.ivfSq8AppendOracle(), droppable = true),
       // SQ8 requantize: quantizer AND extrema re-derived from the SOURCE floats at newC (codes
       // are lossy — a real requantize re-reads the upstream table) — must equal a from-scratch
       // build at newC
       // droppable: rebuild-at-newC sibling of ivf_requantize (already droppable for the same
       // reason)
-      Gate("ivf_sq8_requantize", Similarity.ivfSq8RequantizeProbeFromDir(_, _),
+      Gate("ivf_sq8_requantize", Similarity.lifecycle(Tier.IvfSq8, Op.Requantize(Build(32)))(),
         Similarity.ivfSq8Oracle(numCentroids = 32), droppable = true)) ++
     family("ivf_pq")(
       // the PQ tier: m per-subspace codebooks trained with the exact-Lloyd machinery, cells
@@ -664,35 +667,35 @@ object SparkEntry {
       // iterative harness: m per-subspace training loops + memoized build
       // droppable: raw-ADC anchor; the serving path ivf_pq_rerank (shortlist + refine) stays on
       // the line
-      Gate("ivf_pq_probe", Similarity.ivfPqProbeFromDir(_, _),
+      Gate("ivf_pq_probe", Similarity.lifecycle(Tier.IvfPq)(),
         Similarity.ivfPqOracle(), harness = true, droppable = true),
       // the PQ tier's SERVING path: ADC shortlist (O(m)/candidate, codes only) -> exact
       // re-score of the R survivors against full-precision vectors (the IVFPQ+refine shape) —
       // recall recovered at R >> k
       // iterative harness: the memoized trained build + shortlist + refine
-      Gate("ivf_pq_rerank", Similarity.ivfPqRerankFromDir(_, _),
+      Gate("ivf_pq_rerank", Similarity.lifecycle(Tier.IvfPq, Op.Rerank())(),
         Similarity.ivfPqRerankOracle(), harness = true),
       // iterative harness: the memoized trained build + filtered probe
       // droppable: filtered variant of the PQ probe (rationale above; ivf_pq_rerank stays on
       // the line)
-      Gate("ivf_pq_filtered", Similarity.ivfPqFilteredFromDir(_, _),
+      Gate("ivf_pq_filtered", Similarity.lifecycle(Tier.IvfPq, Op.Filtered())(),
         Similarity.ivfPqFilteredOracle(), harness = true, droppable = true),
       // iterative harness: backlog training loops + memoized backlog build
       // droppable: lifecycle sibling of ivf_pq_rerank (on the line); the ivf_index_append
       // rationale
-      Gate("ivf_pq_append", Similarity.ivfPqAppendProbeFromDir(_, _),
+      Gate("ivf_pq_append", Similarity.lifecycle(Tier.IvfPq, Op.Append)(),
         Similarity.ivfPqOracle(trainWhere = backlog), harness = true, droppable = true),
       // iterative harness: the memoized trained build + one rewrite
       // droppable: filtered-rewrite sibling of ivf_sq8_remove
-      Gate("ivf_pq_remove", Similarity.ivfPqRemoveProbeFromDir(_, _),
+      Gate("ivf_pq_remove", Similarity.lifecycle(Tier.IvfPq, Op.Remove)(),
         Similarity.ivfPqOracle(keepWhere = backlog), harness = true, droppable = true),
       // iterative harness: backlog training loops + append + one rewrite
       // droppable: lifecycle sibling of ivf_sq8_compact
-      Gate("ivf_pq_compact", Similarity.ivfPqCompactProbeFromDir(_, _),
+      Gate("ivf_pq_compact", Similarity.lifecycle(Tier.IvfPq, Op.Compact)(),
         Similarity.ivfPqOracle(trainWhere = backlog), harness = true, droppable = true),
       // iterative harness: backlog + union retraining at the new C
       // droppable: rebuild-at-newC sibling of ivf_sq8_requantize
-      Gate("ivf_pq_requantize", Similarity.ivfPqRequantizeProbeFromDir(_, _),
+      Gate("ivf_pq_requantize", Similarity.lifecycle(Tier.IvfPq, Op.Requantize(Build(32)))(),
         Similarity.ivfPqOracle(numCentroids = 32), harness = true, droppable = true)) ++
     family("ivf_pqr")(
       // the RESIDUAL-encoded PQ tier (the FAISS IVFPQ shape): codebooks trained on x −
@@ -701,14 +704,14 @@ object SparkEntry {
       // iterative harness: m residual training loops + memoized build
       // droppable: raw-ADC anchor of the residual tier; the serving path ivf_pqr_rerank stays
       // on the line
-      Gate("ivf_pqr_probe", Similarity.ivfPqResProbeFromDir(_, _),
+      Gate("ivf_pqr_probe", Similarity.lifecycle(Tier.IvfPqRes)(),
         Similarity.ivfPqResOracle(), harness = true, droppable = true),
       // iterative harness: the memoized residual build + shortlist + refine
-      Gate("ivf_pqr_rerank", Similarity.ivfPqResRerankFromDir(_, _),
+      Gate("ivf_pqr_rerank", Similarity.lifecycle(Tier.IvfPqRes, Op.Rerank())(),
         Similarity.ivfPqResRerankOracle(), harness = true),
       // iterative harness: backlog residual training + memoized backlog build
       // droppable: lifecycle sibling of ivf_pqr_rerank (the ivf_index_append rationale)
-      Gate("ivf_pqr_append", Similarity.ivfPqResAppendProbeFromDir(_, _),
+      Gate("ivf_pqr_append", Similarity.lifecycle(Tier.IvfPqRes, Op.Append)(),
         Similarity.ivfPqResOracle(trainWhere = backlog), harness = true, droppable = true)) ++
     family("dedup_index")(
       // incremental dedup: delta vs persisted signature index must equal the full-corpus LSH on

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Persisted BM25 inverted index — the retrieval member of the pay-once
   * family ([[DedupIndex]] signatures, [[ClusterStore]] pair graph,
-  * [[Similarity.writeIvfIndex]] cells): the tokenize + tf shuffle — the
+  * [[Similarity.Tier]] cells): the tokenize + tf shuffle — the
   * corpus-scale stage of every BM25 query — is written ONCE as a
   * bucket-partitioned postings table, and each probe reads only the query
   * terms' buckets via partition pruning. At 100 TB a probe lists and

@@ -642,12 +642,17 @@ object ClusterStore {
     dst.toString
   }
 
-  private val lastCopySecs = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val lastCopySecs =
+    new java.util.concurrent.atomic.AtomicLong(java.lang.Double.doubleToLongBits(Double.NaN))
 
   /** Seconds the most recent [[copyStore]] took — lets harnesses subtract
-    * the scaffolding share from an append measurement. */
+    * the scaffolding share from an append measurement. NaN when no copy
+    * ran since the last [[resetStoreCopySecs]]. */
   def lastStoreCopySecs: Double =
     java.lang.Double.longBitsToDouble(lastCopySecs.get())
+
+  def resetStoreCopySecs(): Unit =
+    lastCopySecs.set(java.lang.Double.doubleToLongBits(Double.NaN))
 
   /** Gated query `cluster_append`: the cluster map after an incremental
     * append must equal the from-scratch full-corpus map — the oracle IS

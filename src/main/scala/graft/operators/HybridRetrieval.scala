@@ -229,10 +229,10 @@ object HybridRetrieval {
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // every IVF/BM25 parameter is threaded explicitly (mirroring
     // hybridTopKIvf) so the three hybrid entry points share one parameter
-    // surface — a drift in ivfProbeIndexedFromDir's or oracleIvf's defaults
+    // surface — a drift in the float tier's gate defaults or oracleIvf's defaults
     // can no longer break the hybrid_rrf_indexed gate non-obviously
-    val vec = Similarity.ivfProbeIndexedFromDir(spark, dir, numQueries, kList,
-        numCentroids, nProbe)
+    val vec = Similarity.lifecycle(Similarity.Tier.Ivf)(Similarity.Build(numCentroids), nProbe,
+        numQueries = numQueries, k = kList)(spark, dir)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("vrank"))
     fuse(lexList(Tables.documents(spark, dir), numQueries, kList, k1, b),
@@ -249,8 +249,9 @@ object HybridRetrieval {
                  c1: Int = 8, c2: Int = 8, nProbe1: Int = 2, nProbe2: Int = 2,
                  iterations: Int = 2,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val vec = Similarity.imiAnnFromDir(spark, dir, numQueries, kList,
-        c1, c2, nProbe1, nProbe2, iterations)
+    val vec = Similarity.lifecycle(Similarity.Tier.Imi)(
+        Similarity.Build(c1, c2, iterations = iterations), nProbe1, nProbe2,
+        numQueries, kList)(spark, dir)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("vrank"))
     fuse(lexList(Tables.documents(spark, dir), numQueries, kList, k1, b),
@@ -285,8 +286,9 @@ object HybridRetrieval {
                     c1: Int = 8, c2: Int = 8, nProbe1: Int = 2, nProbe2: Int = 2,
                     iterations: Int = 2,
                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val vec = Similarity.imiSq8ProbeFromDir(spark, dir, numQueries, kList,
-        c1, c2, nProbe1, nProbe2, iterations)
+    val vec = Similarity.lifecycle(Similarity.Tier.ImiSq8)(
+        Similarity.Build(c1, c2, iterations = iterations), nProbe1, nProbe2,
+        numQueries, kList)(spark, dir)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("vrank"))
     fuse(lexList(Tables.documents(spark, dir), numQueries, kList, k1, b),

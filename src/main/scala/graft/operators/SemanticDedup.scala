@@ -138,7 +138,8 @@ object SemanticDedup {
                  iterations: Int = 2, tau: Double = 0.4): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     Similarity.requireOracleDim(e, dir)
-    val idx = Similarity.imiStoreFor(dir, e, c1, c2, iterations)
+    val idx = Similarity.store(spark, Similarity.Tier.Imi, dir,
+      Similarity.Build(c1, c2, iterations = iterations))
     pruneAssigned(
       spark.read.parquet(Similarity.ivfDataDir(idx))
         .select(col("vec_id"), col("embedding"), col("centroid_id")), tau)

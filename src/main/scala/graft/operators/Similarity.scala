@@ -235,12 +235,25 @@ object Similarity {
   }
 
   /** Score probed cells only and keep each query's top-k. */
-  private def scoreProbed(probes: DataFrame, cells: DataFrame, k: Int): DataFrame = {
+  private def scoreProbed(probes: DataFrame, cells: DataFrame, k: Int): DataFrame =
+    scoreCells(probes, cells, cosine(col("qe"), col("ne")), k)
+
+  /** Join each query's probe rows to its cells' candidates, drop the
+    * query itself, score with `score` and keep the top-k — the tail
+    * every cell-bounded scorer shares. */
+  private def scoreCells(probes: DataFrame, cells: DataFrame, score: Column,
+                         k: Int): DataFrame =
+    rankTopK(broadcast(probes).join(cells, Seq("centroid_id"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", score), k)
+
+  /** Each query's top-k by (cosine desc, neighbor_id asc), as the
+    * (query_id, rank, neighbor_id, cosine_r) surface every kNN gate
+    * emits. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    broadcast(probes).join(cells, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qe"), col("ne")))
+    scored
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -250,29 +263,13 @@ object Similarity {
 
   /** IVF ANN top-k: score only vectors in the query's `nProbe` nearest
     * cells. For the persisted variant whose probe reads only the probed
-    * cells' FILES, see [[writeIvfIndex]] / [[probeIvfIndex]]. */
+    * cells' FILES, see [[Tier]] / [[probe]]. */
   def ivfKnn(embeddings: DataFrame, queries: DataFrame, k: Int = 10,
              numCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
     val centroids = trainCentroids(embeddings, numCentroids)
     val n = assignToCentroids(embeddings, centroids)
       .select(col("centroid_id"), col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
     scoreProbed(queryProbes(queries, centroids, nProbe), n, k)
-  }
-
-  /** Materialize the IVF index: the corpus written PARTITIONED BY
-    * centroid_id (one directory per cell), so probes become partition
-    * pruning — at 100 TB a probe lists and reads |probed cells| / |cells|
-    * of the data, never the corpus. Returns the trained centroids, and
-    * PERSISTS them (plus a health baseline) in underscore-prefixed
-    * sidecars inside the index — Spark's file index treats `_`-paths as
-    * hidden, so the data scan never sees them, and the index is
-    * self-contained: a later session can append or probe without the
-    * builder's driver state. */
-  def writeIvfIndex(embeddings: DataFrame, dir: String, numCentroids: Int = 16,
-                   ): Array[(Int, Array[Double])] = {
-    val centroids = trainCentroids(embeddings, numCentroids)
-    writeIvfIndexWith(embeddings, dir, centroids)
-    centroids
   }
 
   // ------------------------------------------------------ IVF maintenance
@@ -283,8 +280,8 @@ object Similarity {
     *   dir/_health_v<g>/                build-time health baseline
     *   dir/_manifest.properties         the live gen g
     *
-    * Every whole-index rewrite — a rebuild, [[compactIvfIndex]], or
-    * [[requantizeIvfIndex]] — stages a complete next generation beside
+    * Every whole-index rewrite — a rebuild, [[compact]], [[remove]] or
+    * [[requantize]] — stages a complete next generation beside
     * the live one and publishes it through [[StoreCommit]], which then
     * deletes the retired generation. Appends land files INSIDE the live
     * generation's cell dirs — a single-table write under parquet's commit
@@ -296,139 +293,498 @@ object Similarity {
     override def generation: Option[Long] = Some(gen)
   }
 
-  /** Every tier's generation dirs: the data and the sidecars. */
-  private val IvfLayout = StoreCommit.Layout("graft ivf index manifest",
-    genPrefixes = Seq("data_v", "_quantizer_v", "_health_v", "_sq8_v",
-      "_quantizer1_v", "_quantizer2_v", "_pq_v"))
+  /** Every tier's generation dirs: the data, the health baseline, and
+    * each tier's sidecars — a new sidecar is declared once, on its
+    * [[Coarse]] or [[Codec]]. */
+  private lazy val IvfLayout = StoreCommit.Layout("graft ivf index manifest",
+    genPrefixes = Seq("data_v", "_health_v") ++ Tier.all.flatMap(_.sidecars).distinct)
 
   private[graft] def ivfGen(dir: String): Long = StoreCommit.read(dir)(_("gen").toLong)
 
   private[graft] def ivfDataDir(dir: String): String =
     s"$dir/data_v${ivfGen(dir)}"
 
-  /** Write index data from PRE-TRAINED centroids. Assignment is a pure
-    * per-vector function of the quantizer, so appending a batch and
-    * rebuilding from the union with the same quantizer produce the same
-    * logical content — the property the append path's spec pins down.
-    *
-    * In "overwrite" mode (a build or rebuild) this stages and promotes a
-    * full next generation — data, quantizer, and health baseline (the
-    * baseline rides the SAME write pass via `observe`: an
-    * accumulator-backed aggregate, zero extra scans). In "append" mode
-    * the new rows land inside the live generation's cell directories and
-    * the build-time baseline stays, which is what drift is measured
-    * against. */
-  def writeIvfIndexWith(embeddings: DataFrame, dir: String,
-                        centroids: Array[(Int, Array[Double])],
-                        mode: String = "overwrite"): Unit =
-    if (mode == "append")
-      assignToCentroids(embeddings, centroids)
-        .write.mode("append").partitionBy("centroid_id")
-        .parquet(ivfDataDir(dir))
-    else
-      promoteGeneration(embeddings.sparkSession, dir, embeddings, centroids,
-        preserveHealthBaseline = false, coalesceCells = false)
+  /** A float tier's live rows (vec_id, embedding). Its payload is
+    * lossless, so its requantize re-encodes these: the rewrite then
+    * holds exactly what the build and the appends left in the index. */
+  private[graft] def liveFloatRows(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(ivfDataDir(dir)).drop("centroid_id")
 
-  /** Stage generation g+1 (data + quantizer + health) beside the live
-    * one, commit with one manifest rename, delete the retired
-    * generation. The shared primitive behind rebuild / compact /
-    * requantize — they differ only in which rows, which centroids, and
-    * whether the health baseline carries over (compaction preserves it:
-    * content is unchanged, so drift measured against the ORIGINAL build
-    * must keep accumulating; a requantize resets it — the new quantizer
-    * is the new baseline). */
-  private def promoteGeneration(spark: SparkSession, dir: String,
-                                rows: DataFrame,
-                                centroids: Array[(Int, Array[Double])],
-                                preserveHealthBaseline: Boolean,
-                                coalesceCells: Boolean): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    // a fresh dir has no live generation: gen -1 sweeps every version
-    val cur = if (StoreCommit.exists(dir)) ivfGen(dir) else -1L
-    val next = cur + 1
-    StoreCommit.sweep(dir, IvfManifest(cur))
-    val assigned = assignToCentroids(rows, centroids)
-    val toWrite = if (coalesceCells)
-      // one writer per cell → one file per cell dir, the compaction target
-      assigned.repartition(col("centroid_id"))
-    else assigned
-    if (preserveHealthBaseline) {
-      toWrite.write.partitionBy("centroid_id").parquet(s"$dir/data_v$next")
-      spark.read.parquet(s"$dir/_health_v$cur")
-        .coalesce(1).write.parquet(s"$dir/_health_v$next")
-    } else {
-      val obs = org.apache.spark.sql.Observation(s"ivf_health_${obsSeq.incrementAndGet()}")
-      toWrite.observe(obs, count(lit(1)).as("n"), avg(assignedSim(centroids)).as("mean_sim"))
-        .write.partitionBy("centroid_id").parquet(s"$dir/data_v$next")
-      import spark.implicits._
-      Seq((obs.get("n").asInstanceOf[Long], obs.get("mean_sim").asInstanceOf[Double]))
-        .toDF("n", "mean_sim")
-        .coalesce(1).write.parquet(s"$dir/_health_v$next")
-    }
-    saveQuantizer(spark, s"$dir/_quantizer_v$next", centroids)
-    StoreCommit.commit(dir, IvfManifest(next))
+  // ------------------------------------------------------- vector tiers
+
+  /** How a tier partitions space into cells, and the sidecars that
+    * persist it. */
+  sealed abstract class Coarse(val sidecars: Seq[String])
+  object Coarse {
+    /** One flat md5 [[hashCentroids]] quantizer — data-independent, so
+      * DuckDB recomputes it and every IVF oracle can gate the tier. */
+    case object FlatHash extends Coarse(Seq("_quantizer_v"))
+    /** One flat quantizer trained by exact Lloyd ([[trainCentroids]]). */
+    case object FlatTrained extends Coarse(Seq("_quantizer_v"))
+    /** The inverted multi-index: two half-space codebooks
+      * ([[trainImi]]); a vector's cell is the combined id cid₁·C₂+cid₂,
+      * so every store mechanic works on the flat shapes. */
+    case object Imi extends Coarse(Seq("_quantizer1_v", "_quantizer2_v"))
   }
+
+  /** What a cell row stores for its vector, and the sidecar that
+    * persists the codec's trained state. */
+  sealed abstract class Codec(val sidecars: Seq[String])
+  object Codec {
+    /** The float vector itself. */
+    case object F32 extends Codec(Nil)
+    /** uint8 codes under per-dim extrema ([[sq8Encode]]): 4× fewer
+      * bytes per vector, decoded for an asymmetric re-score. */
+    case object Sq8 extends Codec(Seq("_sq8_v"))
+    /** m product-quantization codes of the raw vector, scored in O(m)
+      * lookups per candidate ([[adcScore]]). */
+    case object Pq extends Codec(Seq("_pq_v"))
+    /** m PQ codes of the residual x − c_cell under L2 codebooks, plus
+      * the exact ‖x‖ ([[residualFrame]]) — the FAISS IVFPQ encoding. */
+    case object PqRes extends Codec(Seq("_pq_v"))
+  }
+
+  /** Every build parameter a tier store can depend on — all of them key
+    * the [[store]] registry, so two callers with different parameters
+    * never share a build. `c` is the flat C (C₁ under IMI), `c2` IMI's
+    * C₂, `kpq` the PQ codebook size, `iterations` the Lloyd rounds of
+    * every trained codebook, and `dPrime` > 0 builds over the dPrime-dim
+    * Matryoshka prefix of each vector ([[mrlTruncate]]). */
+  final case class Build(c: Int = 16, c2: Int = 0, kpq: Int = PqK,
+                         iterations: Int = 2, dPrime: Int = 0)
+
+  /** One ANN serving tier as data — a (coarse quantizer × codec) value,
+    * the way product quantization (Jégou et al., PAMI 2011) and FAISS's
+    * index factory name an index. Its gates' default build parameters
+    * and probe widths ride along. A `health` tier writes a build-time
+    * `_health_v` baseline (count, mean assigned cosine) that
+    * [[indexHealth]] measures drift against: compaction carries it
+    * forward, so drift keeps counting from the original build; remove
+    * and requantize refresh it in the same write pass. */
+  final case class Tier(name: String, coarse: Coarse, codec: Codec, defaults: Build,
+                        nProbe: Int, nProbe2: Int = 0, health: Boolean = false) {
+    def sidecars: Seq[String] = coarse.sidecars ++ codec.sidecars
+  }
+
+  object Tier {
+    val Ivf = Tier("ivf", Coarse.FlatHash, Codec.F32, Build(), 4, health = true)
+    val IvfTrained = Ivf.copy(name = "ivf_trained", coarse = Coarse.FlatTrained)
+    val IvfSq8 = Tier("ivf_sq8", Coarse.FlatHash, Codec.Sq8, Build(), 4)
+    val Imi = Tier("imi", Coarse.Imi, Codec.F32, Build(8, 8), 2, 2)
+    val ImiSq8 = Imi.copy(name = "imi_sq8", codec = Codec.Sq8)
+    val IvfPq = Tier("ivf_pq", Coarse.FlatHash, Codec.Pq, Build(), 4)
+    // residual encoding only pays under a coarse quantizer that fits the
+    // data, so this tier trains its coarse centroids
+    val IvfPqRes = Tier("ivf_pqr", Coarse.FlatTrained, Codec.PqRes, Build(), 4)
+    val all: Seq[Tier] = Seq(Ivf, IvfTrained, IvfSq8, Imi, ImiSq8, IvfPq, IvfPqRes)
+  }
+
+  /** A generation's frozen encode state: the coarse codebook(s), plus
+    * the SQ8 extrema or the PQ codebooks. Appends encode under it, so
+    * append + probe equals a same-state rebuild over the union; only a
+    * requantize replaces it. */
+  final case class TierState(coarse: Seq[Array[(Int, Array[Double])]],
+                             sq8: Option[(Array[Double], Array[Double])] = None,
+                             pq: Option[Array[Array[(Int, Array[Double])]]] = None)
+
+  /** The tier's stage step: train the coarse quantizer and the codec
+    * state on `rows` (SOURCE floats — codes are lossy, so a requantize
+    * re-reads the upstream vectors, never decoded codes). */
+  def train(tier: Tier, rows: DataFrame, p: Build, dim: Int): TierState = {
+    val coarse = tier.coarse match {
+      case Coarse.FlatHash => Seq(hashCentroids(dim, p.c))
+      case Coarse.FlatTrained => Seq(trainCentroids(rows, p.c, p.iterations, Some(dim)))
+      case Coarse.Imi =>
+        val (c1, c2) = trainImi(rows, p.c, p.c2, p.iterations, dim)
+        Seq(c1, c2)
+    }
+    tier.codec match {
+      case Codec.F32 => TierState(coarse)
+      case Codec.Sq8 => TierState(coarse, sq8 = Some(sq8Stats(rows, dim)))
+      case Codec.Pq => TierState(coarse, pq = Some(trainPq(rows, dim, PqM, p.kpq, p.iterations)))
+      case Codec.PqRes =>
+        val resid = residualFrame(assignToCentroids(rows, coarse.head), coarse.head)
+        TierState(coarse, pq = Some(trainPqL2(resid.select(col("vec_id"), col("embedding")),
+          dim, PqM, p.kpq, p.iterations)))
+    }
+  }
+
+  /** The tier's encode step: assign `rows` to cells under the frozen
+    * state and encode the payload — one scan projection ending in
+    * `centroid_id`, the partition column. */
+  private def encode(tier: Tier, s: TierState, rows: DataFrame): DataFrame = {
+    val assigned = tier.coarse match {
+      case Coarse.Imi =>
+        val Seq(c1, c2) = s.coarse
+        assignImi(rows, c1, c2, c1.head._2.length)
+          .withColumn("centroid_id", col("cid1") * c2.length + col("cid2"))
+          .drop("cid1", "cid2")
+      case _ => assignToCentroids(rows, s.coarse.head)
+    }
+    tier.codec match {
+      case Codec.F32 => assigned
+      case Codec.Sq8 =>
+        val (mn, mx) = s.sq8.get
+        assigned.select(col("vec_id"), sq8Encode(col("embedding"), mn, mx).as("codes"),
+          col("centroid_id"))
+      case Codec.Pq =>
+        assigned.select(col("vec_id"), pqEncodeExpr(s.pq.get).as("codes"), col("centroid_id"))
+      case Codec.PqRes =>
+        residualFrame(assigned, s.coarse.head).select(col("vec_id"),
+          pqEncodeL2Expr(s.pq.get).as("codes"), col("norm"), col("centroid_id"))
+    }
+  }
+
+  /** The live generation's frozen state, read from its sidecars (each
+    * read memoized per path — see [[sidecarMemo]]). */
+  private def readState(spark: SparkSession, tier: Tier, dir: String,
+                        g: Long): TierState =
+    TierState(tier.coarse.sidecars.map(q => readQuantizerPath(spark, s"$dir/$q$g")),
+      sq8 = if (tier.codec == Codec.Sq8) Some(readSq8Sidecar(spark, dir, g)) else None,
+      pq = if (tier.codec.sidecars.contains("_pq_v")) Some(readPqSidecar(spark, dir, g)) else None)
+
+  private def saveSidecars(spark: SparkSession, tier: Tier, dir: String, g: Long,
+                           s: TierState): Unit = {
+    for ((q, c) <- tier.coarse.sidecars.zip(s.coarse)) saveQuantizer(spark, s"$dir/$q$g", c)
+    import spark.implicits._
+    for ((mn, mx) <- s.sq8)
+      Seq((mn.toSeq, mx.toSeq)).toDF("mn", "mx")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/_sq8_v$g")
+    s.pq.foreach(savePqCodebooks(spark, s"$dir/_pq_v$g", _))
+  }
+
+  /** Build `tier` at `dir` over `rows`: train, then publish a fresh
+    * generation. Returns the trained state. */
+  def build(tier: Tier, dir: String, rows: DataFrame, p: Build): TierState = {
+    val s = train(tier, rows, p, embeddingDim(rows))
+    buildWith(tier, dir, rows, s)
+    s
+  }
+
+  /** Build `tier` at `dir` over `rows` under a given state (a float
+    * tier under caller-supplied centroids). */
+  def buildWith(tier: Tier, dir: String, rows: DataFrame, s: TierState): Unit =
+    publish(tier, dir, rows, s, coalesce = false)
+
+  /** Re-quantize: re-encode every source row under a new state (from
+    * [[train]] at new parameters, or a caller's centroids) into a
+    * cell-coalesced next generation — a re-quantize IS a re-partition of
+    * space, so every row must re-assign; what stays O(batch) is the
+    * append, and this pay-once rewrite is amortized across the appends
+    * whose growth or drift triggered it. After it the index equals a
+    * from-scratch build under the new state. */
+  def requantize(tier: Tier, dir: String, rows: DataFrame, s: TierState): Unit =
+    publish(tier, dir, rows, s, coalesce = true)
+
+  /** A full next generation: `rows` encoded under `s` (one writer per
+    * cell when `coalesce`), a health tier's fresh baseline, the
+    * sidecars. */
+  private def publish(tier: Tier, dir: String, rows: DataFrame, s: TierState,
+                      coalesce: Boolean): Unit =
+    promote(dir) { (_, next) =>
+      val cells = encode(tier, s, rows)
+      writeCells(rows.sparkSession, dir, next,
+        if (coalesce) cells.repartition(col("centroid_id")) else cells,
+        if (tier.health) Some(s.coarse.head) else None)
+      saveSidecars(rows.sparkSession, tier, dir, next, s)
+    }
+
+  /** O(batch) ingestion: encode the rows under the live generation's
+    * FROZEN state and land the files inside its cell directories — old
+    * data is never re-read or re-encoded, so ingestion stays O(batch),
+    * not O(corpus). Recall degrades only as the data drifts from the
+    * frozen state, which [[indexHealth]] measures and a requantize
+    * repairs. */
+  def append(spark: SparkSession, tier: Tier, dir: String, rows: DataFrame): Unit = {
+    val g = ivfGen(dir)
+    encode(tier, readState(spark, tier, dir, g), rows)
+      .write.mode("append").partitionBy("centroid_id").parquet(s"$dir/data_v$g")
+  }
+
+  /** Takedown: a filtered generation rewrite — the kept rows move
+    * verbatim under the frozen state (codes are never re-encoded; a
+    * removal under the build-time stats decodes exactly as before),
+    * cell-coalesced, so the rewrite doubles as a compaction. Cost is
+    * O(index rewrite), so takedowns batch on the compaction cadence. */
+  def remove(spark: SparkSession, tier: Tier, dir: String, removedIds: DataFrame): Unit =
+    rewriteGeneration(spark, tier, dir,
+      _.join(removedIds.select(col("vec_id")), Seq("vec_id"), "left_anti"), refreshHealth = true)
+
+  /** Compaction: N appends leave N file sets in every cell dir, so probe
+    * cost grows with calendar time, not data size; the identity rewrite
+    * returns every cell to ONE file — same state, same content. */
+  def compact(spark: SparkSession, tier: Tier, dir: String): Unit =
+    rewriteGeneration(spark, tier, dir, identity, refreshHealth = false)
+
+  /** The kept rows of the live generation, cell-coalesced into the next
+    * one, with the tier's sidecars carried forward UNCHANGED (the
+    * frozen-state rule). A health tier refreshes its baseline when the
+    * content changed (`refreshHealth`) and carries it otherwise. */
+  private def rewriteGeneration(spark: SparkSession, tier: Tier, dir: String,
+                                keep: DataFrame => DataFrame,
+                                refreshHealth: Boolean): Unit =
+    promote(dir) { (g, next) =>
+      val refresh = tier.health && refreshHealth
+      writeCells(spark, dir, next,
+        keep(spark.read.parquet(s"$dir/data_v$g")).repartition(col("centroid_id")),
+        if (refresh) Some(readState(spark, tier, dir, g).coarse.head) else None)
+      val carried = tier.sidecars ++ (if (tier.health && !refresh) Seq("_health_v") else Nil)
+      for (q <- carried)
+        spark.read.parquet(s"$dir/$q$g").coalesce(1).write.parquet(s"$dir/$q$next")
+    }
+
+  /** Stage generation g+1 beside the live g (`stage(g, g + 1)`), then
+    * commit it with one manifest rename — [[StoreCommit]] deletes the
+    * retired generation. A fresh dir has no live generation: gen -1
+    * sweeps every version. */
+  private def promote(dir: String)(stage: (Long, Long) => Unit): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val cur = if (StoreCommit.exists(dir)) ivfGen(dir) else -1L
+    StoreCommit.sweep(dir, IvfManifest(cur))
+    stage(cur, cur + 1)
+    StoreCommit.commit(dir, IvfManifest(cur + 1))
+  }
+
+  /** Write generation `next`'s cells. With `healthOf`'s centroids the
+    * build-time health baseline rides the SAME write pass via `observe`
+    * (an accumulator-backed aggregate, zero extra scans). */
+  private def writeCells(spark: SparkSession, dir: String, next: Long, cells: DataFrame,
+                         healthOf: Option[Array[(Int, Array[Double])]]): Unit =
+    healthOf match {
+      case None => cells.write.partitionBy("centroid_id").parquet(s"$dir/data_v$next")
+      case Some(centroids) =>
+        val obs = org.apache.spark.sql.Observation(s"ivf_health_${obsSeq.incrementAndGet()}")
+        cells.observe(obs, count(lit(1)).as("n"), avg(assignedSim(centroids)).as("mean_sim"))
+          .write.partitionBy("centroid_id").parquet(s"$dir/data_v$next")
+        import spark.implicits._
+        Seq((obs.get("n").asInstanceOf[Long], obs.get("mean_sim").asInstanceOf[Double]))
+          .toDF("n", "mean_sim")
+          .coalesce(1).write.parquet(s"$dir/_health_v$next")
+    }
 
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Append new vectors to an existing index: assign against the PERSISTED
-    * quantizer, write only the new rows (appended files land in their
-    * cells' partition directories — the old data is not rewritten, and at
-    * 100 TB never re-read). Centroids are unchanged by design: recall
-    * degrades only as the data DRIFTS from them, which [[indexHealth]]
-    * measures and [[IvfHealth.shouldRecluster]] turns into the
-    * [[maybeRequantize]] decision — the alternative (recluster on every
-    * append) would make ingestion O(corpus) instead of O(batch). */
-  def appendToIvfIndex(spark: SparkSession, dir: String, newVectors: DataFrame): Unit =
-    writeIvfIndexWith(newVectors, dir, readQuantizer(spark, dir), mode = "append")
-
-  /** Rewrite the live generation's cells coalesced — ONE file per cell —
-    * and promote: N daily appends leave N file sets in every cell dir, so
-    * probe cost grows with calendar time, not data size; compaction
-    * returns it to O(1) files per probed cell. Same quantizer, same
-    * logical content (the `ivf_index_compact` gate re-passes the SAME
-    * oracle over a compacted index), original health baseline preserved.
-    * At real scale "one file per cell" is the numCentroids sizing rule
-    * (cells ≈ healthy parquet files); a size-tiered split within a cell
-    * would change only the repartition key, not the promote mechanics. */
-  def compactIvfIndex(spark: SparkSession, dir: String): Unit = {
-    val centroids = readQuantizer(spark, dir)
-    val rows = spark.read.parquet(ivfDataDir(dir)).drop("centroid_id")
-    promoteGeneration(spark, dir, rows, centroids,
-      preserveHealthBaseline = true, coalesceCells = true)
+  /** ANN over a persisted tier: the coarse probe frame (each query's
+    * nProbe nearest cells; nProbe×nProbe2 cell pairs under IMI), the
+    * partition-pruned read of ONLY the probed cells ([[prunedCellScan]]),
+    * the optional filtered-search restriction ([[semiJoinAllowed]] on the
+    * candidate rows — the index is never rebuilt per predicate, and
+    * filtering candidates, not the top-k, keeps k results whenever the
+    * probed cells hold them), then the codec's exact scorer: a float
+    * cosine, an asymmetric cosine against SQ8-decoded lists, or the O(m)
+    * ADC lookup sum. */
+  def probe(spark: SparkSession, tier: Tier, dir: String, queries: DataFrame,
+            allowedOpt: Option[DataFrame] = None)(
+            k: Int = 10, nProbe: Int = tier.nProbe, nProbe2: Int = tier.nProbe2): DataFrame = {
+    val g = ivfGen(dir)
+    val s = readState(spark, tier, dir, g)
+    val probes = tier.coarse match {
+      case Coarse.Imi => imiProbeFrame(queries, s.coarse(0), s.coarse(1), nProbe, nProbe2)
+      case _ => queryProbes(queries, s.coarse.head, nProbe)
+    }
+    val cells = semiJoinAllowed(prunedCellScan(spark, s"$dir/data_v$g", probes), allowedOpt)
+    val ids = Seq(col("centroid_id"), col("vec_id").as("neighbor_id"))
+    tier.codec match {
+      case Codec.F32 =>
+        scoreProbed(probes, cells.select(ids :+ col("embedding").as("ne"): _*), k)
+      case Codec.Sq8 =>
+        val (mn, mx) = s.sq8.get
+        scoreCells(probes, cells.select(ids :+ sq8Decode(col("codes"), mn, mx).as("dv"): _*),
+          mixedCosine(col("qe"), col("dv")), k)
+      case Codec.Pq =>
+        adcScore(probes, cells.select(ids :+ col("codes"): _*), s.pq.get, k)
+      case Codec.PqRes =>
+        adcScore(probes, cells.select(ids ++ Seq(col("codes"), col("norm")): _*), s.pq.get, k,
+          residualOf = Some(s.coarse.head))
+    }
   }
 
-  /** Re-quantize with caller-supplied centroids (typically at a
-    * [[sizedCentroidCount]] after growth) and promote: the maintenance op
-    * [[IvfHealth.shouldRecluster]]'s triggers exist for. A full rebuild
-    * at the new C — by design: re-quantizing IS re-partitioning space, so
-    * every row must re-assign; what stays O(batch) is the daily append,
-    * and this pay-once rewrite is amortized across the appends that
-    * triggered it. */
-  def requantizeIvfIndex(spark: SparkSession, dir: String,
-                         centroids: Array[(Int, Array[Double])]): Unit = {
-    val rows = spark.read.parquet(ivfDataDir(dir)).drop("centroid_id")
-    promoteGeneration(spark, dir, rows, centroids,
-      preserveHealthBaseline = false, coalesceCells = true)
+  /** Which rows a memoized store holds: the whole corpus, the BACKLOG
+    * (every vector except the [[DedupIndex.DeltaMod]] residue class —
+    * the split every incremental gate shares), or the backlog with that
+    * delta appended (the post-lifecycle state health is read from). */
+  private[operators] sealed trait Slice
+  private[operators] object Slice {
+    case object Full extends Slice
+    case object Backlog extends Slice
+    case object Appended extends Slice
   }
 
-  /** Remove vectors from the index — deletion, IVF edition. Assignment
-    * is strictly per-vector, so removal is a FILTERED generation promote
-    * under the SAME quantizer: one read of the live generation minus the
-    * removed ids, rewritten cell-coalesced (the rewrite doubles as a
-    * compaction) and published by the usual one-rename commit. The
-    * health baseline refreshes, as a from-scratch build over the kept
-    * rows would. Cost is O(index rewrite) — the [[compactIvfIndex]]
-    * cost class — so takedowns batch on the compaction cadence; after
-    * it the index is indistinguishable from a rebuild over the kept
-    * vectors (`ivf_index_remove`). */
-  def removeFromIvfIndex(spark: SparkSession, dir: String,
-                         removedIds: DataFrame): Unit = {
-    val centroids = readQuantizer(spark, dir)
-    val kept = spark.read.parquet(ivfDataDir(dir)).drop("centroid_id")
-      .join(removedIds.select(col("vec_id")), Seq("vec_id"), "left_anti")
-    promoteGeneration(spark, dir, kept, centroids,
-      preserveHealthBaseline = false, coalesceCells = true)
+  private final case class StoreKey(tier: Tier, p: Build, slice: Slice, dir: String)
+
+  /** A store build that runs once, outside the registry map: concurrent
+    * builds of different keys overlap, and a second caller of the same
+    * key waits on the first (a failed build is retried by the next). */
+  private final class Once(build: => String) { lazy val path: String = build }
+
+  private val stores = new java.util.concurrent.ConcurrentHashMap[StoreKey, Once]()
+
+  /** The store registry: one persisted temp-dir index per (tier, build
+    * params, slice, source dir) per JVM — the build-once economics every
+    * indexed gate shares (a deployment writes the index once and every
+    * probe reads it, so warm passes time the consume path alone). The
+    * key carries EVERY build parameter: keyed on less, a second caller
+    * with other parameters would silently get the first caller's build.
+    * Temp dirs are removed on JVM exit. */
+  private[operators] def store(spark: SparkSession, tier: Tier, dir: String, p: Build,
+                               slice: Slice = Slice.Full): String =
+    stores.computeIfAbsent(StoreKey(tier, p, slice, dir), _ => new Once({
+      val src = source(spark, dir, p)
+      val isDelta = col("vec_id") % DedupIndex.DeltaMod === 0
+      if (slice == Slice.Appended) {
+        val c = ClusterStore.copyStore(store(spark, tier, dir, p, Slice.Backlog),
+          s"graft_${tier.name}_health")
+        append(spark, tier, c, src.filter(isDelta))
+        c
+      } else {
+        val tmp = java.nio.file.Files.createTempDirectory(s"graft_${tier.name}")
+        TempDirs.registerForCleanup(tmp)
+        val idx = tmp.resolve("index").toString
+        val rows = if (slice == Slice.Backlog) src.filter(!isDelta) else src
+        val dim = if (p.dPrime > 0) p.dPrime else dimForDir(dir, src)
+        buildWith(tier, idx, rows, train(tier, rows, p, dim))
+        idx
+      }
+    })).path
+
+  /** The vectors a store over `dir` indexes: the corpus, or its
+    * dPrime-dim Matryoshka prefix. */
+  private def source(spark: SparkSession, dir: String, p: Build): DataFrame = {
+    val e = Tables.embeddings(spark, dir)
+    if (p.dPrime > 0) mrlTruncate(e, p.dPrime) else e
+  }
+
+  /** One lifecycle step of a gate over a persisted tier. */
+  sealed trait Op extends Product
+  object Op {
+    /** Probe the memoized full-corpus store. */
+    case object Probe extends Op
+    /** Probe for a `shortlist`-deep candidate list, then the exact
+      * full-precision refine of those ids only ([[exactRefine]]). */
+    final case class Rerank(shortlist: Int = 50) extends Op
+    /** Probe restricted to the documents in `lang` (the doc_id↔vec_id
+      * alignment of the corpus). */
+    final case class Filtered(lang: String = "en") extends Op
+    /** Append the delta to a copy of the backlog store, probe. */
+    case object Append extends Op
+    /** The same append, arriving as watermark-deduped micro-batches with
+      * planted re-deliveries ([[graft.streaming.IndexIngest]]). */
+    final case class StreamAppend(nBatches: Int = 4) extends Op
+    /** Append, then compact, probe. */
+    case object Compact extends Op
+    /** Remove the delta from a copy of the full store, probe with the
+      * surviving queries. */
+    case object Remove extends Op
+    /** Append, then requantize at `to`, probe: a float tier from its own
+      * live rows, a lossy codec from the source vectors. */
+    final case class Requantize(to: Build) extends Op
+  }
+
+  /** The lifecycle-gate builder: the gate over (tier, op, params). Each
+    * mutating op runs on a copy of the memoized store
+    * ([[ClusterStore.copyStore]] — gate scaffolding, timed separately; a
+    * production op mutates in place), then probes with the first
+    * `numQueries` vectors. The oracles state what each op must leave
+    * behind: append, stream-append and compact equal a probe over the
+    * union under the backlog's frozen state; remove equals the tier over
+    * the kept rows with its state frozen at the full build; requantize
+    * equals a from-scratch build at the new parameters. */
+  def lifecycle(tier: Tier, op: Op = Op.Probe)(
+      p: Build = tier.defaults, nProbe: Int = tier.nProbe, nProbe2: Int = tier.nProbe2,
+      numQueries: Int = 8, k: Int = 10): (SparkSession, String) => DataFrame = (spark, dir) => {
+    val e = Tables.embeddings(spark, dir)
+    val dim = requireOracleDim(e, dir)
+    val src = source(spark, dir, p)
+    val isDelta = col("vec_id") % DedupIndex.DeltaMod === 0
+    val first = col("vec_id") < numQueries
+    val idx = op match {
+      case Op.Probe | Op.Rerank(_) | Op.Filtered(_) => store(spark, tier, dir, p)
+      case Op.Remove =>
+        val c = ClusterStore.copyStore(store(spark, tier, dir, p), s"graft_${tier.name}_remove")
+        remove(spark, tier, c, src.filter(isDelta).select(col("vec_id")))
+        c
+      case _ =>
+        val c = ClusterStore.copyStore(store(spark, tier, dir, p, Slice.Backlog),
+          s"graft_${tier.name}_${op.productPrefix.toLowerCase}")
+        op match {
+          case Op.StreamAppend(nBatches) =>
+            import spark.implicits._
+            val delta = src.filter(isDelta).select(col("vec_id"), col("embedding"))
+              .orderBy(col("vec_id")).as[(Long, Seq[Float])].collect()
+            graft.streaming.IndexIngest.replayVectors(spark, delta,
+              b => append(spark, tier, c, b), nBatches)
+          case _ => append(spark, tier, c, src.filter(isDelta))
+        }
+        op match {
+          case Op.Compact => compact(spark, tier, c)
+          case Op.Requantize(to) =>
+            // re-encoding the float index's own rows also proves the
+            // build and the append left the full corpus in it
+            val rows = if (tier.codec == Codec.F32) liveFloatRows(spark, c) else src
+            requantize(tier, c, rows, train(tier, rows, to, dim))
+          case _ =>
+        }
+        c
+    }
+    val queries = src.filter(if (op == Op.Remove) first && !isDelta else first)
+    val allowed = op match {
+      case Op.Filtered(lang) => Some(Tables.documents(spark, dir)
+        .filter(col("lang") === lang).select(col("doc_id").as("vec_id")))
+      case _ => None
+    }
+    op match {
+      case Op.Rerank(shortlist) =>
+        exactRefine(e, probe(spark, tier, idx, queries)(shortlist, nProbe, nProbe2)
+          .select(col("query_id"), col("neighbor_id")), k)
+      case _ => probe(spark, tier, idx, queries, allowed)(k, nProbe, nProbe2)
+    }
+  }
+
+  /** The health gates `ivf_index_health` / `ivf_imi_health`: the
+    * [[indexHealth]] SCAN math, value-gated over the memoized APPENDED
+    * store (build + append — the post-lifecycle state health is read
+    * from). Emits the exact-integer form of [[IvfHealth]]'s signals:
+    * build/now row counts and build/now assigned-cosine mass, each
+    * per-row cosine rounded to micros BEFORE a long sum (float SUMS are
+    * partition-order-dependent and can never hash-match an oracle;
+    * integer sums of rounded terms are exact on both engines). Under IMI
+    * a row's quality is the sum of its two half-space assigned cosines.
+    * The "build" slice is the DeltaMod backlog predicate — appends never
+    * rewrite old rows. Growth/drift are one division away. */
+  def healthGate(tier: Tier)(p: Build = tier.defaults): (SparkSession, String) => DataFrame =
+    (spark, dir) => {
+      requireOracleDim(Tables.embeddings(spark, dir), dir)
+      val idx = store(spark, tier, dir, p, Slice.Appended)
+      val g = ivfGen(idx)
+      val books = readState(spark, tier, idx, g).coarse
+      val sims = tier.coarse match {
+        case Coarse.Imi =>
+          val h = books(0).head._2.length
+          val c2 = books(1).length
+          Seq(assignedSimOf(books(0), expr(s"centroid_id DIV $c2"), slice(col("embedding"), 1, h)),
+            assignedSimOf(books(1), pmod(col("centroid_id"), lit(c2)),
+              slice(col("embedding"), h + 1, h)))
+        case _ => Seq(assignedSim(books.head))
+      }
+      val micro = sims.map(s => floor(s * 1e6 + 0.5).cast("long")).reduce(_ + _)
+      val isBuild = col("vec_id") % DedupIndex.DeltaMod =!= 0
+      spark.read.parquet(s"$idx/data_v$g").agg(
+        count(when(isBuild, lit(1))).as("n_build"),
+        count(lit(1)).as("n_now"),
+        sum(when(isBuild, micro)).as("sim_build_micros"),
+        sum(micro).as("sim_now_micros"))
+    }
+
+  /** The tier an index dir holds, from its live generation's sidecars.
+    * Tiers that differ only in how they TRAIN (hash vs trained flat
+    * quantizer, raw vs residual PQ) share one layout and one rewrite, so
+    * the first match serves every store op but a requantize. */
+  private[graft] def tierAt(dir: String): Tier = {
+    val g = ivfGen(dir)
+    val present = Tier.all.flatMap(_.sidecars).distinct
+      .filter(q => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$dir/$q$g"))).toSet
+    Tier.all.find(_.sidecars.toSet == present).getOrElse(throw new IllegalStateException(
+      s"no vector tier has the sidecars ${present.mkString(", ")} found under $dir"))
   }
 
   /** The measured quantizer sizing rule, C ∝ N: cells stay probe-sized
@@ -439,19 +795,23 @@ object Similarity {
   def sizedCentroidCount(currentC: Int, growth: Double): Int =
     math.max(currentC, math.ceil(currentC * growth).toInt)
 
-  /** The automated maintenance decision: read [[indexHealth]] (one scan),
-    * and when its growth/drift triggers fire, re-quantize with C sized by
-    * the measured rule — centroids re-trained on the index's own rows.
-    * Returns the new centroid count if a requantize ran. */
+  /** The automated maintenance decision for a health tier: read
+    * [[indexHealth]] (one scan), and when its growth/drift triggers
+    * fire, re-quantize with C sized by the measured rule — centroids
+    * re-trained on the index's own rows. A live generation without a
+    * `_health_v` baseline (every compressed tier) has no drift signal:
+    * nothing fires. Returns the new centroid count if a requantize ran. */
   def maybeRequantize(spark: SparkSession, dir: String,
                       maxDrift: Double = 0.05, maxGrowth: Double = 4.0,
                      ): Option[Int] = {
+    val baseline = java.nio.file.Paths.get(s"$dir/_health_v${ivfGen(dir)}")
+    if (!java.nio.file.Files.isDirectory(baseline)) return None
     val h = indexHealth(spark, dir)
     if (!h.shouldRecluster(maxDrift, maxGrowth)) None
     else {
       val newC = sizedCentroidCount(readQuantizer(spark, dir).length, h.growth)
-      val rows = spark.read.parquet(ivfDataDir(dir)).drop("centroid_id")
-      requantizeIvfIndex(spark, dir, trainCentroids(rows, newC))
+      val rows = liveFloatRows(spark, dir)
+      requantize(Tier.Ivf, dir, rows, TierState(Seq(trainCentroids(rows, newC))))
       Some(newC)
     }
   }
@@ -515,8 +875,14 @@ object Similarity {
     * decays as data drifts away from the centroids it was quantized
     * with. */
   private[graft] def assignedSim(centroids: Array[(Int, Array[Double])]): Column =
+    assignedSimOf(centroids, col("centroid_id"), col("embedding"))
+
+  /** [[assignedSim]] of the `view` vector column against the centroid
+    * whose id is `cid` (an IMI half: its slice and its half-cell id). */
+  private def assignedSimOf(centroids: Array[(Int, Array[Double])], cid: Column,
+                            view: Column): Column =
     coalesce(centroids.map { case (id, c) =>
-      when(col("centroid_id") === id, litCosine(col("embedding"), c))
+      when(cid === id, litCosine(view, c))
     }.toIndexedSeq: _*)
 
   /** One-pass (count, mean assigned-cosine) over index rows. */
@@ -546,22 +912,6 @@ object Similarity {
     val base = spark.read.parquet(s"$dir/_health_v${ivfGen(dir)}").first()
     val (n, sim) = scanHealth(spark.read.parquet(ivfDataDir(dir)), centroids)
     IvfHealth(base.getAs[Long]("n"), n, base.getAs[Double]("mean_sim"), sim)
-  }
-
-  /** ANN over the materialized index: the union of all queries' probed
-    * cells becomes a partition filter on the scan (`PartitionFilters` in
-    * the plan — only those directories are listed/read); the per-query
-    * cell join then keeps each query to its own nProbe cells. */
-  def probeIvfIndex(spark: SparkSession, dir: String,
-                    centroids: Array[(Int, Array[Double])], queries: DataFrame,
-                    k: Int = 10, nProbe: Int = 4,
-                    allowedOpt: Option[DataFrame] = None): DataFrame = {
-    val probes = queryProbes(queries, centroids, nProbe)
-    // the probed-cell union is O(|centroids|) driver values, never data
-    val cells = semiJoinAllowed(
-      prunedCellScan(spark, ivfDataDir(dir), probes), allowedOpt)
-      .select(col("centroid_id"), col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-    scoreProbed(probes, cells, k)
   }
 
   /** The filtered-search candidate restriction: semi-join the caller's
@@ -982,137 +1332,7 @@ object Similarity {
        |SELECT query_id, rank, neighbor_id, FLOOR(cosine * 1e8 + 0.5) / 1e8 AS cosine_r
        |FROM ranked WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
-  // -------------------------------------- SQ8 × persisted IVF (composed)
-
-  /** The compressed-tier index: cells store SQ8 CODES (64 B/vector, 4×
-    * less than float32 — at 100 TB this is 4× more corpus per byte of
-    * cell storage AND per byte of probe read), assignment runs on the
-    * FULL-precision vectors at build time, and the per-dim stats persist
-    * in an `_sq8_v<g>` sidecar beside the quantizer so a later session
-    * probes without the builder's driver state. Same generation+manifest
-    * commit discipline as the float index. */
-  def writeIvfSq8Index(e: DataFrame, dir: String, numCentroids: Int = 16): Unit =
-    stageSq8Generation(e, dir, numCentroids, gen = 0L)
-
-  /** Stage one complete SQ8 generation (data + quantizer + stats
-    * sidecars) from SOURCE float vectors and commit it — shared by the
-    * initial build and [[requantizeIvfSq8Index]]. */
-  private def stageSq8Generation(e: DataFrame, dir: String, numCentroids: Int,
-                                 gen: Long): Unit = {
-    val spark = e.sparkSession
-    val dim = embeddingDim(e)
-    val centroids = hashCentroids(dim, numCentroids)
-    val (mn, mx) = sq8Stats(e, dim)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    assignToCentroids(e, centroids)
-      .select(col("vec_id"), sq8Encode(col("embedding"), mn, mx).as("codes"),
-        col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/data_v$gen")
-    saveQuantizer(spark, s"$dir/_quantizer_v$gen", centroids)
-    import spark.implicits._
-    Seq((mn.toSeq, mx.toSeq)).toDF("mn", "mx")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_sq8_v$gen")
-    StoreCommit.commit(dir, IvfManifest(gen))
-  }
-
-  /** Re-quantize the compressed tier: the stats-refresh op the
-    * frozen-stats staleness rule defers to. Codes are LOSSY, so a real
-    * requantize must re-read the SOURCE float vectors (the embeddings
-    * table a deployment keeps upstream) — re-encoding decoded codes
-    * would compound quantization error. Re-derives quantizer AND
-    * extrema over the source, stages the full next generation, one
-    * rename. After it the index is indistinguishable from a
-    * from-scratch build at the new C (`ivf_sq8_requantize`). */
-  def requantizeIvfSq8Index(spark: SparkSession, dir: String, source: DataFrame,
-                            numCentroids: Int): Unit =
-    promoteFreshGeneration(dir)(
-      stageSq8Generation(source, dir, numCentroids, _))
-
-  /** Partition-pruned probe over the SQ8 index: list/read ONLY the probed
-    * cells' directories, decode candidates with the sidecar stats, exact
-    * asymmetric re-score (full-precision queries). */
-  def probeIvfSq8Index(spark: SparkSession, dir: String, queries: DataFrame,
-                       k: Int = 10, nProbe: Int = 4): DataFrame = {
-    val centroids = readQuantizer(spark, dir)
-    val g = ivfGen(dir)
-    val (mn, mx) = readSq8Sidecar(spark, dir, g)
-    val probes = queryProbes(queries, centroids, nProbe)
-    val probedCells = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val cells = spark.read.parquet(ivfDataDir(dir))
-      .filter(col("centroid_id").isin(probedCells.map(Integer.valueOf).toIndexedSeq: _*))
-      .select(col("centroid_id"), col("vec_id").as("neighbor_id"),
-        sq8Decode(col("codes"), mn, mx).as("dv"))
-    scoreProbedDecoded(probes, cells, k)
-  }
-
-  /** Score pruned DECODED cells (dv lists) asymmetrically against the
-    * full-precision query vectors and keep each query's top-k — the
-    * compressed-tier twin of [[scoreProbed]], shared by the flat SQ8 and
-    * two-level IMI×SQ8 probe paths so the re-score/rank tail cannot
-    * drift between them. */
-  private def scoreProbedDecoded(probes: DataFrame, cells: DataFrame,
-                                 k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    broadcast(probes).join(cells, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", mixedCosine(col("qe"), col("dv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        graft.functions.StableRound.stableRound(col("cosine"), 8).as("cosine_r"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** O(batch) ingestion into the SQ8 index: encode the batch against the
-    * PERSISTED quantizer AND the persisted stats (both frozen at build —
-    * the quantizer-drift argument applies verbatim to the extrema, and
-    * both refresh on the same requantize cadence), land files in the
-    * cells' partition directories. Old data never re-read or re-encoded. */
-  def appendToIvfSq8Index(spark: SparkSession, dir: String,
-                          newVectors: DataFrame): Unit = {
-    val centroids = readQuantizer(spark, dir)
-    val (mn, mx) = readSq8Sidecar(spark, dir, ivfGen(dir))
-    assignToCentroids(newVectors, centroids)
-      .select(col("vec_id"), sq8Encode(col("embedding"), mn, mx).as("codes"),
-        col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id").parquet(ivfDataDir(dir))
-  }
-
-  /** Deletion for the COMPRESSED tier — the last serving surface without
-    * it. A filtered generation rewrite of the CODES under the frozen
-    * build-time quantizer and extrema: kept rows are rewritten verbatim
-    * (codes are already encoded under the stored stats, so removal never
-    * re-encodes), cell-coalesced (the rewrite doubles as a compaction),
-    * and published by the same one-rename manifest commit as the float
-    * store. Stats-staleness rule, mirroring append's: after a removal
-    * the persisted extrema may be looser than the kept corpus's true
-    * extrema — that is CORRECT for decoding the surviving codes (they
-    * were encoded under those extrema), and both sidecars refresh on the
-    * same requantize cadence. Cost is O(index rewrite) — the compact
-    * cost class — so takedowns batch on the compaction cadence. */
-  def removeFromIvfSq8Index(spark: SparkSession, dir: String,
-                            removedIds: DataFrame): Unit =
-    rewriteSq8Generation(spark, dir,
-      _.join(removedIds.select(col("vec_id")), Seq("vec_id"), "left_anti"))
-
-  /** Compaction for the compressed tier: N appends leave N file sets in
-    * every cell dir (probe cost grows with calendar time); the
-    * identity-filter generation rewrite returns it to ONE file per cell
-    * under the unchanged frozen quantizer + stats — content-preserving
-    * by construction (`ivf_sq8_compact` re-passes the append oracle). */
-  def compactIvfSq8Index(spark: SparkSession, dir: String): Unit =
-    rewriteSq8Generation(spark, dir, identity)
-
-  /** The shared filtered-generation rewrite of the CODES under the
-    * frozen build-time quantizer and extrema — codes move verbatim,
-    * never re-encoded ([[removeFromIvfSq8Index]] filters,
-    * [[compactIvfSq8Index]] keeps everything; both coalesce to one file
-    * per cell and publish with the one-rename manifest commit). */
-  private def rewriteSq8Generation(spark: SparkSession, dir: String,
-                                   keep: DataFrame => DataFrame): Unit =
-    rewriteGeneration(spark, dir, Seq("_quantizer_v", "_sq8_v"), keep)
+  // ------------------------------------------ SQ8 tier: sidecar + twins
 
   /** The persisted per-dim extrema sidecar of generation `g` — the ONE
     * decode point for `_sq8_v` shared by both compressed tiers' probe
@@ -1138,82 +1358,7 @@ object Similarity {
     (r.getAs[Seq[Double]]("mn").toArray, r.getAs[Seq[Double]]("mx").toArray)
   }
 
-  /** ONE generation-rewrite discipline for every tiered store: stage the
-    * kept rows cell-coalesced into data_v(g+1) and carry the listed
-    * sidecars forward UNCHANGED (the frozen-stats/frozen-codebook rule)
-    * between the two [[StoreCommit]] sweeps. A new sidecar goes into the
-    * tier's `sidecars` list and [[IvfLayout]]. */
-  private def rewriteGeneration(spark: SparkSession, dir: String,
-                                sidecars: Seq[String],
-                                keep: DataFrame => DataFrame): Unit = {
-    val g = ivfGen(dir)
-    val next = g + 1
-    StoreCommit.sweep(dir, IvfManifest(g))
-    keep(spark.read.parquet(s"$dir/data_v$g"))
-      .repartition(col("centroid_id"))
-      .write.partitionBy("centroid_id").parquet(s"$dir/data_v$next")
-    for (q <- sidecars)
-      spark.read.parquet(s"$dir/$q$g").coalesce(1).write.parquet(s"$dir/$q$next")
-    StoreCommit.commit(dir, IvfManifest(next))
-  }
-
-  /** A FULL-rebuild promote (the requantize ops): residue swept, then a
-    * complete next generation staged and committed by `stage`. */
-  private def promoteFreshGeneration(dir: String)(stage: Long => Unit): Unit = {
-    val g = ivfGen(dir)
-    StoreCommit.sweep(dir, IvfManifest(g))
-    stage(g + 1)
-  }
-
-  /** One memoized temp-dir store per (JVM, memo key) — the build-once
-    * economics every indexed gate shares. The KEY must carry every build
-    * parameter (source dir + C/iterations/...): keyed on the dir alone, a
-    * second caller with different params would silently receive an index
-    * built with the first caller's params. */
-  private def memoStore(map: java.util.concurrent.ConcurrentHashMap[String, String],
-                        key: String, prefix: String)(build: String => Unit): String =
-    map.computeIfAbsent(key, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory(prefix)
-      TempDirs.registerForCleanup(tmp)
-      val p = tmp.resolve("index").toString
-      build(p)
-      p
-    })
-
-  private val ivfSq8Stores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfSq8Backlogs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The memoized full-corpus SQ8 index for `dir` (one per JVM — the
-    * build-once economics every indexed gate uses). */
-  private def sq8StoreFor(spark: SparkSession, dir: String, e: DataFrame,
-                          numCentroids: Int): String =
-    memoStore(ivfSq8Stores, s"$dir#c$numCentroids", "graft_ivf_sq8")(
-      writeIvfSq8Index(e, _, numCentroids))
-
-  /** Gated query `ivf_sq8_remove`: takedown proven on the compressed
-    * tier — copy the memoized full-corpus SQ8 index,
-    * [[removeFromIvfSq8Index]] the DeltaMod residue class, probe with
-    * the surviving low-id queries. The oracle is [[ivfSq8Oracle]]'s
-    * chain with assignment/probes/decode restricted to the KEPT relation
-    * while the extrema stay frozen at the BUILD corpus: removed vectors
-    * must vanish from cells and candidate sets with nothing else moving
-    * — in particular, no code may re-encode (kept-relation stats would
-    * shift the decoded values and hash-mismatch). */
-  def ivfSq8RemoveProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                               k: Int = 10, numCentroids: Int = 16,
-                               nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val full = sq8StoreFor(spark, dir, e, numCentroids)
-    val idx = ClusterStore.copyStore(full, "graft_ivf_sq8_remove")
-    removeFromIvfSq8Index(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0).select(col("vec_id")))
-    probeIvfSq8Index(spark, idx,
-      e.filter(col("vec_id") < numQueries &&
-        col("vec_id") % DedupIndex.DeltaMod =!= 0), k, nProbe)
-  }
-
-  /** DuckDB twin of [[ivfSq8RemoveProbeFromDir]]: [[ivfSq8Oracle]] over
+  /** DuckDB twin of `ivf_sq8_remove`: [[ivfSq8Oracle]] over
     * the kept relation, stats frozen at the full build corpus. */
   def ivfSq8RemoveOracle(numQueries: Int = 8, k: Int = 10, numCentroids: Int = 16,
                          nProbe: Int = 4, dim: Int = LshOracleDim): String =
@@ -1226,70 +1371,7 @@ object Similarity {
        |SELECT query_id, rank, neighbor_id, FLOOR(cosine * 1e8 + 0.5) / 1e8 AS cosine_r
        |FROM s_ranked WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
-  /** Gated query `ivf_sq8_append`: build the SQ8 index over the BACKLOG
-    * (stats and quantizer frozen there), append the DeltaMod delta, probe.
-    * The oracle freezes the stats at the backlog relation too — append +
-    * probe must equal a probe over the union encoded under BUILD-time
-    * stats, which is exactly what the production path produces (a
-    * from-scratch rebuild would re-derive stats over the union; that is
-    * the REQUANTIZE operation, not the append). */
-  /** The memoized BACKLOG SQ8 index (every vector except the DeltaMod
-    * residue class — the split all incremental gates share). */
-  private def sq8BacklogFor(dir: String, e: DataFrame, numCentroids: Int): String =
-    memoStore(ivfSq8Backlogs, s"$dir#c$numCentroids", "graft_ivf_sq8_backlog")(
-      writeIvfSq8Index(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        _, numCentroids))
-
-  def ivfSq8AppendProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                               k: Int = 10, numCentroids: Int = 16,
-                               nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val backlog = sq8BacklogFor(dir, e, numCentroids)
-    val idx = ClusterStore.copyStore(backlog, "graft_ivf_sq8_append")
-    appendToIvfSq8Index(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    probeIvfSq8Index(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_sq8_compact`: the probe-cost maintenance op on the
-    * compressed tier proven content-preserving — backlog + append (cell
-    * dirs now hold one file set per batch) + [[compactIvfSq8Index]] +
-    * probe must re-pass the SAME append oracle (backlog-frozen stats,
-    * codes verbatim). */
-  def ivfSq8CompactProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                                k: Int = 10, numCentroids: Int = 16,
-                                nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      sq8BacklogFor(dir, e, numCentroids), "graft_ivf_sq8_compact")
-    appendToIvfSq8Index(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    compactIvfSq8Index(spark, idx)
-    probeIvfSq8Index(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_sq8_requantize`: the stats-refresh op — backlog +
-    * append + [[requantizeIvfSq8Index]] from the full SOURCE vectors at
-    * newC + probe must equal a from-scratch SQ8 build at newC
-    * ([[ivfSq8Oracle]] at numCentroids = newC: quantizer AND extrema
-    * re-derived over the union — the operation the frozen-stats
-    * staleness rule defers to). */
-  def ivfSq8RequantizeProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                                   k: Int = 10, numCentroids: Int = 16,
-                                   newC: Int = 32, nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      sq8BacklogFor(dir, e, numCentroids), "graft_ivf_sq8_requant")
-    appendToIvfSq8Index(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    requantizeIvfSq8Index(spark, idx, e, newC)
-    probeIvfSq8Index(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** DuckDB twin of [[ivfSq8AppendProbeFromDir]]: [[ivfSq8Oracle]]'s
+  /** DuckDB twin of `ivf_sq8_append`: [[ivfSq8Oracle]]'s
     * chain with the stats CTE frozen at the backlog slice. */
   def ivfSq8AppendOracle(numQueries: Int = 8, k: Int = 10, numCentroids: Int = 16,
                          nProbe: Int = 4, dim: Int = LshOracleDim): String =
@@ -1302,21 +1384,7 @@ object Similarity {
        |SELECT query_id, rank, neighbor_id, FLOOR(cosine * 1e8 + 0.5) / 1e8 AS cosine_r
        |FROM s_ranked WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
-  /** Gated query `ivf_sq8_probe`: the composed compressed tier end-to-end
-    * — build (full-precision assignment, SQ8 cells, stats sidecar), probe
-    * (pruned cell read → decode → asymmetric re-score) — under an oracle
-    * whose probe chain is [[ivfRankedCtesSql]] with ONLY the re-score's
-    * neighbor side swapped to the shared decoded lists. */
-  def ivfSq8ProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                         k: Int = 10, numCentroids: Int = 16,
-                         nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = sq8StoreFor(spark, dir, e, numCentroids)
-    probeIvfSq8Index(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** DuckDB twin of [[ivfSq8ProbeFromDir]]: hash-quantizer sims +
+  /** DuckDB twin of `ivf_sq8_probe`: hash-quantizer sims +
     * [[sq8DecCtesSql]] (single-sourced with `ann_sq8_topk`) + the
     * standard probe chain re-scoring against `dec.dv`. */
   def ivfSq8Oracle(numQueries: Int = 8, k: Int = 10, numCentroids: Int = 16,
@@ -1396,59 +1464,6 @@ object Similarity {
     p1.join(p2, Seq("query_id"))
   }
 
-  /** Persist the IMI index: data partitioned by the COMBINED cell id
-    * (cid₁·C₂+cid₂ — one directory per (cid₁, cid₂) pair, so probes are
-    * partition pruning exactly as in the flat store), both half
-    * codebooks in `_quantizer1_v`/`_quantizer2_v` sidecars, same
-    * one-rename manifest commit. */
-  def writeImiIndex(e: DataFrame, dir: String, c1: Int = 8, c2: Int = 8,
-                    iterations: Int = 2): Unit =
-    stageImiGeneration(e, dir, c1, c2, iterations, gen = 0L)
-
-  /** Stage one complete IMI generation (combined-cell data + both half
-    * codebooks) from SOURCE vectors and commit — shared by the build
-    * and [[requantizeImiIndex]]. */
-  private def stageImiGeneration(e: DataFrame, dir: String, c1: Int, c2: Int,
-                                 iterations: Int, gen: Long): Unit = {
-    val spark = e.sparkSession
-    val dim = embeddingDim(e)
-    val (cents1, cents2) = trainImi(e, c1, c2, iterations, dim)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    assignImi(e, cents1, cents2, dim / 2)
-      .withColumn("centroid_id", col("cid1") * c2 + col("cid2"))
-      .drop("cid1", "cid2")
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/data_v$gen")
-    saveQuantizer(spark, s"$dir/_quantizer1_v$gen", cents1)
-    saveQuantizer(spark, s"$dir/_quantizer2_v$gen", cents2)
-    StoreCommit.commit(dir, IvfManifest(gen))
-  }
-
-  /** Re-quantize the IMI tier: retrain BOTH half codebooks on the
-    * source at the new (C₁, C₂) and stage a complete next generation —
-    * the growth-maintenance op, amortized across the appends whose
-    * drift triggered it (a re-quantize IS a re-partition of space, so
-    * every row must re-assign). */
-  def requantizeImiIndex(spark: SparkSession, dir: String, source: DataFrame,
-                         c1: Int, c2: Int, iterations: Int = 2): Unit =
-    promoteFreshGeneration(dir)(
-      stageImiGeneration(source, dir, c1, c2, iterations, _))
-
-  /** Partition-pruned probe over the persisted IMI index: quantizers
-    * reload from the sidecars, each query's nProbe₁×nProbe₂ cell pairs
-    * map to combined ids, the union of probed ids prunes the scan, exact
-    * full-precision re-score. */
-  def probeImiIndex(spark: SparkSession, dir: String, queries: DataFrame,
-                    k: Int = 10, nProbe1: Int = 2, nProbe2: Int = 2): DataFrame = {
-    val g = ivfGen(dir)
-    val cents1 = readQuantizerPath(spark, s"$dir/_quantizer1_v$g")
-    val cents2 = readQuantizerPath(spark, s"$dir/_quantizer2_v$g")
-    val probes = imiProbeFrame(queries, cents1, cents2, nProbe1, nProbe2)
-    val cells = prunedCellScan(spark, s"$dir/data_v$g", probes)
-      .select(col("centroid_id"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("ne"))
-    scoreProbed(probes, cells, k)
-  }
-
   /** (query_id, qe, centroid_id) per probed COMBINED cell — the
     * nProbe₁×nProbe₂ product cells with the query vector carried, shared
     * by the float-IMI and IMI×SQ8 probe paths. */
@@ -1481,204 +1496,7 @@ object Similarity {
       .filter(col("centroid_id").isin(probedCells.map(Integer.valueOf).toIndexedSeq: _*))
   }
 
-  /** Both persisted half-codebooks of the live generation. */
-  private def readImiQuantizers(spark: SparkSession, dir: String)
-      : (Array[(Int, Array[Double])], Array[(Int, Array[Double])]) = {
-    val g = ivfGen(dir)
-    (readQuantizerPath(spark, s"$dir/_quantizer1_v$g"),
-      readQuantizerPath(spark, s"$dir/_quantizer2_v$g"))
-  }
-
-  /** O(batch) ingestion into the IMI index: assign the batch against the
-    * PERSISTED half-codebooks (frozen at build — the quantizer-drift
-    * argument applies per half), land files in the combined-cell
-    * partition directories. Old data never re-read or re-assigned —
-    * assignment is a pure per-vector function of the two codebooks, so
-    * append + probe equals a same-codebook rebuild over the union. */
-  def appendToImiIndex(spark: SparkSession, dir: String,
-                       newVectors: DataFrame): Unit = {
-    val (cents1, cents2) = readImiQuantizers(spark, dir)
-    assignImi(newVectors, cents1, cents2, cents1.head._2.length)
-      .withColumn("centroid_id", col("cid1") * cents2.length + col("cid2"))
-      .drop("cid1", "cid2")
-      .write.mode("append").partitionBy("centroid_id").parquet(ivfDataDir(dir))
-  }
-
-  /** Deletion on the IMI index: the filtered generation rewrite under
-    * the frozen half-codebooks (rows move verbatim, cell-coalesced —
-    * doubles as a compaction), sidecars carried forward, one-rename
-    * commit — the same takedown mechanics as every other store. */
-  def removeFromImiIndex(spark: SparkSession, dir: String,
-                         removedIds: DataFrame): Unit =
-    rewriteImiGeneration(spark, dir,
-      _.join(removedIds.select(col("vec_id")), Seq("vec_id"), "left_anti"))
-
-  /** Compaction for the IMI tier: N appends leave N file sets per cell
-    * dir; the identity-filter generation rewrite returns every cell to
-    * ONE file under the unchanged frozen codebooks — content-preserving
-    * (`ivf_imi_compact` re-passes the append oracle). */
-  def compactImiIndex(spark: SparkSession, dir: String): Unit =
-    rewriteImiGeneration(spark, dir, identity)
-
-  private def rewriteImiGeneration(spark: SparkSession, dir: String,
-                                   keep: DataFrame => DataFrame): Unit =
-    rewriteGeneration(spark, dir, Seq("_quantizer1_v", "_quantizer2_v"), keep)
-
-  private val imiStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val imiBacklogs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The memoized BACKLOG IMI index (codebooks trained on every vector
-    * except the DeltaMod residue class). */
-  private def imiBacklogFor(dir: String, e: DataFrame, c1: Int, c2: Int,
-                            iterations: Int): String =
-    memoStore(imiBacklogs, s"$dir#${c1}x$c2#i$iterations", "graft_imi_backlog")(
-      writeImiIndex(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        _, c1, c2, iterations))
-
-  /** Gated query `ivf_imi_append`: the O(batch) path on the two-level
-    * index — codebooks TRAINED on the backlog, the DeltaMod delta
-    * appended under them, probe. The oracle trains its unrolled Lloyd
-    * chains over the backlog slice only (`trainWhere`) while final
-    * assignment/probing cover the union — exactly the production
-    * frozen-quantizer semantics. */
-  def imiAppendProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                            k: Int = 10, c1: Int = 8, c2: Int = 8,
-                            nProbe1: Int = 2, nProbe2: Int = 2,
-                            iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      imiBacklogFor(dir, e, c1, c2, iterations), "graft_imi_append")
-    appendToImiIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    probeImiIndex(spark, idx, e.filter(col("vec_id") < numQueries),
-      k, nProbe1, nProbe2)
-  }
-
-  /** Gated query `ivf_imi_compact`: backlog + append (cell dirs now
-    * hold one file set per batch) + [[compactImiIndex]] + probe — must
-    * re-pass the append oracle (content-preserving under the
-    * backlog-frozen codebooks). */
-  def imiCompactProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                             k: Int = 10, c1: Int = 8, c2: Int = 8,
-                             nProbe1: Int = 2, nProbe2: Int = 2,
-                             iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      imiBacklogFor(dir, e, c1, c2, iterations), "graft_imi_compact")
-    appendToImiIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    compactImiIndex(spark, idx)
-    probeImiIndex(spark, idx, e.filter(col("vec_id") < numQueries),
-      k, nProbe1, nProbe2)
-  }
-
-  /** Gated query `ivf_imi_requantize`: backlog + append +
-    * [[requantizeImiIndex]] from the full source at the new (C₁, C₂) +
-    * probe — must equal a from-scratch IMI build at the new codebook
-    * sizes (both Lloyd chains re-trained over the union). */
-  def imiRequantizeProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                                k: Int = 10, c1: Int = 8, c2: Int = 8,
-                                newC1: Int = 16, newC2: Int = 16,
-                                nProbe1: Int = 2, nProbe2: Int = 2,
-                                iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      imiBacklogFor(dir, e, c1, c2, iterations), "graft_imi_requant")
-    appendToImiIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    requantizeImiIndex(spark, idx, e, newC1, newC2, iterations)
-    probeImiIndex(spark, idx, e.filter(col("vec_id") < numQueries),
-      k, nProbe1, nProbe2)
-  }
-
-  /** Gated query `ivf_imi_remove`: takedown on the two-level index —
-    * copy the memoized full-corpus-trained index, remove the DeltaMod
-    * residue class, probe with the surviving low-id queries. The oracle
-    * keeps training on the FULL corpus (where the index was built) and
-    * restricts assignment/probing/scoring to the kept rows
-    * (`keepWhere`). */
-  def imiRemoveProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                            k: Int = 10, c1: Int = 8, c2: Int = 8,
-                            nProbe1: Int = 2, nProbe2: Int = 2,
-                            iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val full = imiStoreFor(dir, e, c1, c2, iterations)
-    val idx = ClusterStore.copyStore(full, "graft_imi_remove")
-    removeFromImiIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0).select(col("vec_id")))
-    probeImiIndex(spark, idx,
-      e.filter(col("vec_id") < numQueries &&
-        col("vec_id") % DedupIndex.DeltaMod =!= 0), k, nProbe1, nProbe2)
-  }
-
-  /** Gated query `ivf_ann_imi`: the full two-level pipeline — train both
-    * half codebooks (T exact Lloyd iterations each), build the persisted
-    * combined-cell index, reload the sidecar quantizers, partition-pruned
-    * probe, exact re-score — under an oracle that unrolls BOTH training
-    * chains via [[kmeansIterCtesSql]] over the half relations. */
-  def imiAnnFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                    k: Int = 10, c1: Int = 8, c2: Int = 8, nProbe1: Int = 2,
-                    nProbe2: Int = 2, iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = imiStoreFor(dir, e, c1, c2, iterations)
-    probeImiIndex(spark, idx, e.filter(col("vec_id") < numQueries),
-      k, nProbe1, nProbe2)
-  }
-
-  private val imiHashBacklogs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val imiHealthStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Gated query `ivf_imi_health`: the drift scan on the two-level tier,
-    * in exact integers — per row, quality = the SUM of the two half-space
-    * assigned cosines (each micros-rounded BEFORE the long sum, the
-    * `ivf_index_health` discipline), split into build/now populations by
-    * the DeltaMod backlog predicate (appends never rewrite old rows).
-    * The store is a hash-codebook backlog (iterations = 0 — the health
-    * rule must be oracle-reproducible; trained health is the same scan
-    * over trained codebooks) with the delta appended — the post-lifecycle
-    * state health is read from. Growth/drift are one division away
-    * ([[IvfHealth]]); the triggers and the [[requantizeImiIndex]] they
-    * fire are the same maintenance loop as the float tier's. */
-  def imiHealthGateFromDir(spark: SparkSession, dir: String,
-                           c1: Int = 8, c2: Int = 8): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val backlog = memoStore(imiHashBacklogs, s"$dir#${c1}x$c2#i0",
-        "graft_imi_hash_backlog")(
-      writeImiIndex(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        _, c1, c2, iterations = 0))
-    val idx = imiHealthStores.computeIfAbsent(s"$dir#${c1}x$c2", _ => {
-      val c = ClusterStore.copyStore(backlog, "graft_imi_health")
-      appendToImiIndex(spark, c,
-        e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-      c
-    })
-    val (cents1, cents2) = readImiQuantizers(spark, idx)
-    val halfDim = cents1.head._2.length
-    val cid1 = expr(s"centroid_id DIV ${cents2.length}")
-    val cid2 = pmod(col("centroid_id"), lit(cents2.length))
-    def assignedHalf(cents: Array[(Int, Array[Double])], cid: Column,
-                     lo: Int): Column =
-      coalesce(cents.map { case (id, c) =>
-        when(cid === id, litCosine(slice(col("embedding"), lo, halfDim), c))
-      }.toIndexedSeq: _*)
-    val micro =
-      floor(assignedHalf(cents1, cid1, 1) * 1e6 + 0.5).cast("long") +
-        floor(assignedHalf(cents2, cid2, halfDim + 1) * 1e6 + 0.5).cast("long")
-    val isBuild = col("vec_id") % DedupIndex.DeltaMod =!= 0
-    spark.read.parquet(ivfDataDir(idx)).agg(
-      count(when(isBuild, lit(1))).as("n_build"),
-      count(lit(1)).as("n_now"),
-      sum(when(isBuild, micro)).as("sim_build_micros"),
-      sum(micro).as("sim_now_micros"))
-  }
-
-  /** DuckDB twin of [[imiHealthGateFromDir]]: per-half md5 codebooks +
+  /** DuckDB twin of `ivf_imi_health` ([[healthGate]]): per-half md5 codebooks +
     * argmax assignment (ties → larger cid, as everywhere), per-half
     * micros rounding, one integer sum. */
   def imiHealthOracle(c1: Int = 8, c2: Int = 8,
@@ -1711,15 +1529,7 @@ object Similarity {
        |FROM m""".stripMargin
   }
 
-  /** The memoized full-corpus trained IMI index (one per JVM, per
-    * (dir, build params)) — `private[operators]` so the SemDeDup gate can
-    * prune over the SAME persisted assignment a probe serves from. */
-  private[operators] def imiStoreFor(dir: String, e: DataFrame, c1: Int, c2: Int,
-                                     iterations: Int): String =
-    memoStore(imiStores, s"$dir#${c1}x$c2#i$iterations", "graft_imi_index")(
-      writeImiIndex(e, _, c1, c2, iterations))
-
-  /** DuckDB twin of [[imiAnnFromDir]]: `half1`/`half2` slice CTEs, two
+  /** DuckDB twin of `ivf_ann_imi`: `half1`/`half2` slice CTEs, two
     * md5-init + unrolled-Lloyd chains (prefixes `h1_`/`h2_` — the
     * [[kmeansTrainOracle]] fragments over the half relations), per-half
     * argmax assignment (ties → larger cid) and probe windows (ties →
@@ -1824,257 +1634,6 @@ object Similarity {
 
   // ------------------------- IMI × SQ8: two-level cells, uint8 codes
 
-  /** The tier a 100 TB deployment actually serves: the two-level IMI
-    * quantizer (O(√C·dim) assignment, C₁·C₂ partition-pruned cells —
-    * retiring the flat O(N·C) sweep) COMPOSED with SQ8 compression
-    * (cells store uint8 CODES, 4× less storage AND 4× less probe read
-    * than float32). Build = both half assignments + the encode in ONE
-    * corpus scan; probe = pruned combined-cell read → decode →
-    * asymmetric re-score against full-precision queries; lifecycle =
-    * the shared [[rewriteGeneration]] discipline over exactly one
-    * sidecar list (`_quantizer1_v`, `_quantizer2_v`, `_sq8_v`).
-    * Codebooks AND extrema freeze at build and refresh together on the
-    * requantize cadence — the staleness rule of both parent tiers,
-    * unchanged by the composition. */
-  def writeImiSq8Index(e: DataFrame, dir: String, c1: Int = 8, c2: Int = 8,
-                       iterations: Int = 2): Unit =
-    stageImiSq8Generation(e, dir, c1, c2, iterations, gen = 0L)
-
-  /** Stage one complete IMI×SQ8 generation (combined-cell CODES + both
-    * half codebooks + extrema) from SOURCE float vectors and commit —
-    * shared by the build and [[requantizeImiSq8Index]]. Assignment and
-    * encode fuse into one scan projection (both half argmaxes + the
-    * per-dim quantize are expression-level). */
-  private def stageImiSq8Generation(e: DataFrame, dir: String, c1: Int, c2: Int,
-                                    iterations: Int, gen: Long): Unit = {
-    val spark = e.sparkSession
-    val dim = embeddingDim(e)
-    val (cents1, cents2) = trainImi(e, c1, c2, iterations, dim)
-    val (mn, mx) = sq8Stats(e, dim)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    assignImi(e, cents1, cents2, dim / 2)
-      .withColumn("centroid_id", col("cid1") * cents2.length + col("cid2"))
-      .select(col("vec_id"), sq8Encode(col("embedding"), mn, mx).as("codes"),
-        col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/data_v$gen")
-    saveQuantizer(spark, s"$dir/_quantizer1_v$gen", cents1)
-    saveQuantizer(spark, s"$dir/_quantizer2_v$gen", cents2)
-    import spark.implicits._
-    Seq((mn.toSeq, mx.toSeq)).toDF("mn", "mx")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_sq8_v$gen")
-    StoreCommit.commit(dir, IvfManifest(gen))
-  }
-
-  /** Partition-pruned probe over the composed tier: reload both half
-    * codebooks + extrema from the sidecars, map each query's
-    * nProbe₁×nProbe₂ cell pairs to combined ids, read ONLY those cells'
-    * code files, decode, asymmetric re-score ([[scoreProbedDecoded]] —
-    * the same tail as the flat SQ8 probe). */
-  def probeImiSq8Index(spark: SparkSession, dir: String, queries: DataFrame,
-                       k: Int = 10, nProbe1: Int = 2, nProbe2: Int = 2): DataFrame = {
-    val g = ivfGen(dir)
-    val cents1 = readQuantizerPath(spark, s"$dir/_quantizer1_v$g")
-    val cents2 = readQuantizerPath(spark, s"$dir/_quantizer2_v$g")
-    val (mn, mx) = readSq8Sidecar(spark, dir, g)
-    val probes = imiProbeFrame(queries, cents1, cents2, nProbe1, nProbe2)
-    val cells = prunedCellScan(spark, s"$dir/data_v$g", probes)
-      .select(col("centroid_id"), col("vec_id").as("neighbor_id"),
-        sq8Decode(col("codes"), mn, mx).as("dv"))
-    scoreProbedDecoded(probes, cells, k)
-  }
-
-  /** O(batch) ingestion into the composed tier: assign the batch under
-    * the PERSISTED half codebooks and encode under the PERSISTED extrema
-    * (all frozen at build — saturating clamp for out-of-range values,
-    * as in the flat tier), land code files in the combined-cell
-    * partition directories. Old codes never re-read or re-encoded. */
-  def appendToImiSq8Index(spark: SparkSession, dir: String,
-                          newVectors: DataFrame): Unit = {
-    val (cents1, cents2) = readImiQuantizers(spark, dir)
-    val (mn, mx) = readSq8Sidecar(spark, dir, ivfGen(dir))
-    assignImi(newVectors, cents1, cents2, cents1.head._2.length)
-      .withColumn("centroid_id", col("cid1") * cents2.length + col("cid2"))
-      .select(col("vec_id"), sq8Encode(col("embedding"), mn, mx).as("codes"),
-        col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id").parquet(ivfDataDir(dir))
-  }
-
-  /** Deletion on the composed tier: the filtered generation rewrite
-    * under ALL frozen sidecars — kept codes move verbatim (they were
-    * encoded under the stored extrema; re-encoding would shift decoded
-    * values), cell-coalesced, one-rename commit. */
-  def removeFromImiSq8Index(spark: SparkSession, dir: String,
-                            removedIds: DataFrame): Unit =
-    rewriteImiSq8Generation(spark, dir,
-      _.join(removedIds.select(col("vec_id")), Seq("vec_id"), "left_anti"))
-
-  /** Compaction: identity-filter generation rewrite — one code file per
-    * combined cell, codebooks/extrema unchanged, content-preserving
-    * (`imi_sq8_compact` re-passes the append oracle). */
-  def compactImiSq8Index(spark: SparkSession, dir: String): Unit =
-    rewriteImiSq8Generation(spark, dir, identity)
-
-  private def rewriteImiSq8Generation(spark: SparkSession, dir: String,
-                                      keep: DataFrame => DataFrame): Unit =
-    rewriteGeneration(spark, dir,
-      Seq("_quantizer1_v", "_quantizer2_v", "_sq8_v"), keep)
-
-  /** Re-quantize the composed tier: codes are LOSSY, so the refresh
-    * re-reads the SOURCE float vectors — BOTH half codebooks retrained
-    * and the extrema re-derived at the new (C₁, C₂), full next
-    * generation staged, one rename. After it the index is
-    * indistinguishable from a from-scratch composed build at the new
-    * sizes (`imi_sq8_requantize`). */
-  def requantizeImiSq8Index(spark: SparkSession, dir: String, source: DataFrame,
-                            c1: Int, c2: Int, iterations: Int = 2): Unit =
-    promoteFreshGeneration(dir)(
-      stageImiSq8Generation(source, dir, c1, c2, iterations, _))
-
-  private val imiSq8Stores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val imiSq8Backlogs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The memoized full-corpus composed index (one per JVM, per
-    * (dir, build params)). */
-  private def imiSq8StoreFor(dir: String, e: DataFrame, c1: Int, c2: Int,
-                             iterations: Int): String =
-    memoStore(imiSq8Stores, s"$dir#${c1}x$c2#i$iterations", "graft_imi_sq8")(
-      writeImiSq8Index(e, _, c1, c2, iterations))
-
-  /** The memoized BACKLOG composed index (codebooks AND extrema derived
-    * from every vector except the DeltaMod residue class — the shared
-    * incremental-gate split). */
-  private def imiSq8BacklogFor(dir: String, e: DataFrame, c1: Int, c2: Int,
-                               iterations: Int): String =
-    memoStore(imiSq8Backlogs, s"$dir#${c1}x$c2#i$iterations", "graft_imi_sq8_backlog")(
-      writeImiSq8Index(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        _, c1, c2, iterations))
-
-  /** Gated query `imi_sq8_probe`: the composed serving tier end-to-end —
-    * train both half codebooks, build the combined-cell CODE index,
-    * reload all three sidecars, pruned probe, decode, asymmetric
-    * re-score — under [[imiSq8Oracle]]: the trained-IMI chain with ONLY
-    * the re-score's neighbor side swapped to the shared decoded lists
-    * (the `ivf_sq8_probe` substitution lifted onto the two-level
-    * chain). */
-  def imiSq8ProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                         k: Int = 10, c1: Int = 8, c2: Int = 8,
-                         nProbe1: Int = 2, nProbe2: Int = 2,
-                         iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = imiSq8StoreFor(dir, e, c1, c2, iterations)
-    probeImiSq8Index(spark, idx, e.filter(col("vec_id") < numQueries),
-      k, nProbe1, nProbe2)
-  }
-
-  /** Gated query `imi_sq8_append`: the O(batch) path — codebooks and
-    * extrema frozen at the backlog build, the DeltaMod delta assigned
-    * and encoded under them, probe. Oracle trains AND derives stats on
-    * the backlog slice only while serving covers the union — the
-    * production frozen-sidecar semantics. */
-  def imiSq8AppendProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                               k: Int = 10, c1: Int = 8, c2: Int = 8,
-                               nProbe1: Int = 2, nProbe2: Int = 2,
-                               iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      imiSq8BacklogFor(dir, e, c1, c2, iterations), "graft_imi_sq8_append")
-    appendToImiSq8Index(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    probeImiSq8Index(spark, idx, e.filter(col("vec_id") < numQueries),
-      k, nProbe1, nProbe2)
-  }
-
-  /** Gated query `imi_sq8_stream_append`: the STREAMING ingestion path
-    * on the tier a 100 TB deployment serves — the delta arrives as
-    * watermark-deduped micro-batches ([[graft.streaming.IndexIngest]],
-    * plants and all) and each surviving batch lands through the SAME
-    * [[appendToImiSq8Index]] the batch gate proves. Encode is a pure
-    * per-vector function of the frozen codebooks + extrema, so the
-    * stream lands exactly what the one-shot batch append lands: the
-    * SAME oracle as `imi_sq8_append` — which is the point of the
-    * callback-sink design: ONE ingest transform serves every tier. */
-  def imiSq8StreamAppendProbeFromDir(spark: SparkSession, dir: String,
-                                     numQueries: Int = 8,
-                                     k: Int = 10, c1: Int = 8, c2: Int = 8,
-                                     nProbe1: Int = 2, nProbe2: Int = 2,
-                                     iterations: Int = 2,
-                                     nBatches: Int = 4): DataFrame = {
-    import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      imiSq8BacklogFor(dir, e, c1, c2, iterations), "graft_imi_sq8_stream")
-    val delta = e.filter(col("vec_id") % DedupIndex.DeltaMod === 0)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id"))
-      .as[(Long, Seq[Float])].collect()
-    graft.streaming.IndexIngest.replayVectors(spark, delta,
-      b => appendToImiSq8Index(spark, idx, b), nBatches)
-    probeImiSq8Index(spark, idx, e.filter(col("vec_id") < numQueries),
-      k, nProbe1, nProbe2)
-  }
-
-  /** Gated query `imi_sq8_remove`: takedown on the composed tier — copy
-    * the memoized full-corpus index, remove the DeltaMod residue class
-    * (codes rewritten verbatim under the frozen sidecars), probe with
-    * the surviving low-id queries. Oracle: training and stats stay at
-    * the full corpus (where the index was built), serving restricted to
-    * kept rows. */
-  def imiSq8RemoveProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                               k: Int = 10, c1: Int = 8, c2: Int = 8,
-                               nProbe1: Int = 2, nProbe2: Int = 2,
-                               iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      imiSq8StoreFor(dir, e, c1, c2, iterations), "graft_imi_sq8_remove")
-    removeFromImiSq8Index(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0).select(col("vec_id")))
-    probeImiSq8Index(spark, idx,
-      e.filter(col("vec_id") < numQueries &&
-        col("vec_id") % DedupIndex.DeltaMod =!= 0), k, nProbe1, nProbe2)
-  }
-
-  /** Gated query `imi_sq8_compact`: backlog + append + identity rewrite
-    * + probe — must re-pass the append oracle (codes verbatim under the
-    * frozen sidecars; calendar time changes file counts, not content). */
-  def imiSq8CompactProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                                k: Int = 10, c1: Int = 8, c2: Int = 8,
-                                nProbe1: Int = 2, nProbe2: Int = 2,
-                                iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      imiSq8BacklogFor(dir, e, c1, c2, iterations), "graft_imi_sq8_compact")
-    appendToImiSq8Index(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    compactImiSq8Index(spark, idx)
-    probeImiSq8Index(spark, idx, e.filter(col("vec_id") < numQueries),
-      k, nProbe1, nProbe2)
-  }
-
-  /** Gated query `imi_sq8_requantize`: backlog + append +
-    * [[requantizeImiSq8Index]] from the full source at the new (C₁, C₂)
-    * + probe — must equal a from-scratch composed build at the new
-    * sizes (codebooks AND extrema re-derived over the union). */
-  def imiSq8RequantizeProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                                   k: Int = 10, c1: Int = 8, c2: Int = 8,
-                                   newC1: Int = 16, newC2: Int = 16,
-                                   nProbe1: Int = 2, nProbe2: Int = 2,
-                                   iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      imiSq8BacklogFor(dir, e, c1, c2, iterations), "graft_imi_sq8_requant")
-    appendToImiSq8Index(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    requantizeImiSq8Index(spark, idx, e, newC1, newC2, iterations)
-    probeImiSq8Index(spark, idx, e.filter(col("vec_id") < numQueries),
-      k, nProbe1, nProbe2)
-  }
-
   /** DuckDB twin of the composed tier: [[imiAnnOracle]]'s trained
     * two-level chain with [[sq8DecCtesSql]] injected (stats over
     * `sq8src` — the staleness scope — decoding the SERVED relation) and
@@ -2140,15 +1699,18 @@ object Similarity {
     // 25% — or the comparison would just measure probe budgets, not
     // quantizers
     val Seq(ivf, sq8, imi, imisq8) = ParallelJobs.parSeq(Seq(
-      () => ivfProbeIndexedFromDir(spark, dir, numQueries, k, numCentroids, nProbe)
+      () => lifecycle(Tier.Ivf)(Build(numCentroids), nProbe, numQueries = numQueries,
+        k = k)(spark, dir)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("in_ivf")),
-      () => ivfSq8ProbeFromDir(spark, dir, numQueries, k, numCentroids, nProbe)
+      () => lifecycle(Tier.IvfSq8)(Build(numCentroids), nProbe, numQueries = numQueries,
+        k = k)(spark, dir)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("in_sq8")),
-      () => imiAnnFromDir(spark, dir, numQueries, k, nProbe1 = 4, nProbe2 = 4)
+      () => lifecycle(Tier.Imi)(nProbe = 4, nProbe2 = 4, numQueries = numQueries, k = k)(spark, dir)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("in_imi")),
       // the fourth tier: the composed IMI×SQ8 serving configuration — its
       // recall now gates alongside the tiers it composes
-      () => imiSq8ProbeFromDir(spark, dir, numQueries, k, nProbe1 = 4, nProbe2 = 4)
+      () => lifecycle(Tier.ImiSq8)(nProbe = 4, nProbe2 = 4, numQueries = numQueries,
+        k = k)(spark, dir)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("in_imisq8"))))
     truth
       .join(ivf, Seq("query_id", "neighbor_id"), "left")
@@ -2186,11 +1748,14 @@ object Similarity {
     // (pq and pqr share one memoized store: whichever branch wins the
     // computeIfAbsent builds it, the other blocks on the map entry)
     val Seq(pq, pqr, pqres) = ParallelJobs.parSeq(Seq(
-      () => ivfPqProbeFromDir(spark, dir, numQueries, k, numCentroids, nProbe)
+      () => lifecycle(Tier.IvfPq)(Build(numCentroids), nProbe, numQueries = numQueries,
+        k = k)(spark, dir)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("in_pq")),
-      () => ivfPqRerankFromDir(spark, dir, numQueries, k, numCentroids, nProbe)
+      () => lifecycle(Tier.IvfPq, Op.Rerank())(Build(numCentroids), nProbe,
+        numQueries = numQueries, k = k)(spark, dir)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("in_pqr")),
-      () => ivfPqResProbeFromDir(spark, dir, numQueries, k, numCentroids, nProbe)
+      () => lifecycle(Tier.IvfPqRes)(Build(numCentroids), nProbe, numQueries = numQueries,
+        k = k)(spark, dir)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("in_pqres"))))
     truth
       .join(pq, Seq("query_id", "neighbor_id"), "left")
@@ -2402,23 +1967,7 @@ object Similarity {
        |SELECT query_id, rank, neighbor_id, FLOOR(cosine * 1e8 + 0.5) / 1e8 AS cosine_r
        |FROM t_ranked WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
-  // ------------------------------------- gated persisted-index lifecycle
-
-  /** One persisted hash-quantizer IVF index per (JVM, source dir) — the
-    * same memoize-the-build economics as [[ClusterStore.buildStoreFor]]:
-    * a production deployment writes the index once and every probe reads
-    * it, so the gate's warm passes time the PROBE path alone. Temp dirs
-    * are removed on JVM exit. */
-  private val ivfIndexStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The memoized hash-quantizer persisted index for (dir, C) — shared
-    * by every gate that probes it (the memoStore key rule: params in
-    * the key, so a caller at a different C gets its own build). */
-  private def hashIndexStoreFor(dir: String, e: DataFrame,
-                                numCentroids: Int): String =
-    ivfIndexStores.computeIfAbsent(s"$dir#c$numCentroids", _ =>
-      buildHashIndex(e, "graft_ivf_index",
-        requireOracleDim(e, dir), numCentroids))
+  // ------------------------------------- persisted-index lifecycle twins
 
   private[operators] def requireOracleDim(e: DataFrame, dir: String): Int = {
     val dim = dimForDir(dir, e)
@@ -2428,77 +1977,7 @@ object Similarity {
     dim
   }
 
-  private def buildHashIndex(e: DataFrame, prefix: String, dim: Int,
-                             numCentroids: Int): String = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    TempDirs.registerForCleanup(tmp)
-    val idx = tmp.resolve("index").toString
-    writeIvfIndexWith(e, idx, hashCentroids(dim, numCentroids))
-    idx
-  }
-
-  /** Gated query `ivf_probe_indexed`: ANN over the PERSISTED IVF index —
-    * [[writeIvfIndex]]'s partitioned layout probed via partition pruning,
-    * under the [[hashCentroids]] quantizer so the oracle is the SAME
-    * [[ivfAnnOracle]] as the in-memory `ivf_ann_topk` gate. Probing reads
-    * the quantizer back from the index's `_quantizer` sidecar (the
-    * self-containment a later session relies on), so the gate proves the
-    * full persisted path: save → reload → probe ≡ in-memory IVF ≡ DuckDB. */
-  def ivfProbeIndexedFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                             k: Int = 10, numCentroids: Int = 16,
-                             nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val idx = hashIndexStoreFor(dir, e, numCentroids)
-    probeIvfIndex(spark, idx, readQuantizer(spark, idx),
-      e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** One TRAINED persisted index per (JVM, source dir) for
-    * `ivf_probe_trained`. */
-  private val ivfTrainedStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Gated query `ivf_probe_trained`: the full production configuration —
-    * index built with the TRAINED quantizer ([[trainCentroids]]' exact
-    * Lloyd iterations), quantizer round-tripped through the sidecar,
-    * partition-pruned probe — under [[ivfAnnTrainedOracle]]: save →
-    * reload → pruned probe must equal the in-memory trained pipeline,
-    * the `ivf_probe_indexed` proof lifted onto the trained path. */
-  def ivfProbeTrainedFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                             k: Int = 10, numCentroids: Int = 16,
-                             nProbe: Int = 4, iterations: Int = 2): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val dim = requireOracleDim(e, dir)
-    val idx = ivfTrainedStores.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_trained")
-      TempDirs.registerForCleanup(tmp)
-      val p = tmp.resolve("index").toString
-      writeIvfIndexWith(e, p, trainCentroids(e, numCentroids, iterations, Some(dim)))
-      p
-    })
-    probeIvfIndex(spark, idx, readQuantizer(spark, idx),
-      e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_index_remove`: deletion proven end-to-end — copy
-    * the memoized full-corpus index, [[removeFromIvfIndex]] the DeltaMod
-    * residue class, probe with the surviving low-id queries. The oracle
-    * is [[ivfAnnOracle]] over the KEPT vectors: removed vectors must
-    * vanish from cells AND from candidate/neighbor sets, with nothing
-    * else moving. */
-  def ivfRemoveProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                            k: Int = 10, numCentroids: Int = 16,
-                            nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val full = hashIndexStoreFor(dir, e, numCentroids)
-    val idx = ClusterStore.copyStore(full, "graft_ivf_remove")
-    removeFromIvfIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0).select(col("vec_id")))
-    probeIvfIndex(spark, idx, readQuantizer(spark, idx),
-      e.filter(col("vec_id") < numQueries &&
-        col("vec_id") % DedupIndex.DeltaMod =!= 0), k, nProbe)
-  }
-
-  /** DuckDB twin of [[ivfRemoveProbeFromDir]]: the standard IVF oracle
+  /** DuckDB twin of `ivf_index_remove`: the standard IVF oracle
     * over the kept-vector relation (queries are the surviving low ids —
     * the same `vec_id < numQueries` window evaluated over kept rows). */
   def ivfRemoveOracle(numQueries: Int = 8, k: Int = 10, numCentroids: Int = 16,
@@ -2508,156 +1987,7 @@ object Similarity {
       extraCtes = "kept_vecs AS (SELECT * FROM embeddings " +
         s"WHERE vec_id % ${DedupIndex.DeltaMod} <> 0), ")
 
-  /** One BACKLOG index per (JVM, source dir): every vector except the
-    * [[DedupIndex.DeltaMod]] residue class — the same split the other
-    * incremental gates use, so the paths are directly comparable. */
-  private val ivfBacklogStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Gated query `ivf_index_append`: the O(batch) ingestion path proven
-    * end-to-end — append the delta to a copy of the memoized backlog index
-    * ([[appendToIvfIndex]]: assign against the persisted quantizer, land
-    * files in the cells' partition directories, never rewrite or re-read
-    * old data), then probe the appended index. Assignment is a pure
-    * per-vector function of the quantizer, so append + probe must equal a
-    * same-quantizer rebuild over the union — i.e. the full-corpus
-    * [[ivfAnnOracle]], the SAME oracle as `ivf_ann_topk`. The store copy
-    * is gate scaffolding (timed separately, see
-    * [[ClusterStore.copyStore]]); a production append mutates in place. */
-  def ivfAppendProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                            k: Int = 10, numCentroids: Int = 16,
-                            nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val backlogIdx = ivfBacklogStores.computeIfAbsent(dir, _ =>
-      buildHashIndex(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        "graft_ivf_backlog", requireOracleDim(e, dir), numCentroids))
-    val idx = ClusterStore.copyStore(backlogIdx, "graft_ivf_append")
-    appendToIvfIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    probeIvfIndex(spark, idx, readQuantizer(spark, idx),
-      e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_stream_append`: STREAMING ingestion into the float
-    * serving store — the delta arrives as MemoryStream micro-batches with
-    * planted re-deliveries (same vec_id AND embedding, one batch behind),
-    * [[graft.streaming.IndexIngest.dedupArrivals]] drops the plants
-    * within the watermark, and each surviving micro-batch lands through
-    * the SAME [[appendToIvfIndex]] the batch gate proves. The appended
-    * content is then exactly the plant-free delta, and assignment is a
-    * pure per-vector function of the frozen quantizer, so stream-append
-    * in any batch order equals a same-quantizer rebuild over the union —
-    * i.e. the full-corpus [[ivfAnnOracle]], the SAME oracle as
-    * `ivf_index_append`. A plant that survived dedup would append a
-    * duplicate row, surface as a duplicate neighbor at adjacent ranks,
-    * and shift every rank below it — the oracle cannot hash-match that. */
-  def ivfStreamAppendProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                                  k: Int = 10, numCentroids: Int = 16,
-                                  nProbe: Int = 4, nBatches: Int = 4): DataFrame = {
-    import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-    val backlogIdx = ivfBacklogStores.computeIfAbsent(dir, _ =>
-      buildHashIndex(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        "graft_ivf_backlog", requireOracleDim(e, dir), numCentroids))
-    val idx = ClusterStore.copyStore(backlogIdx, "graft_ivf_stream")
-    val delta = e.filter(col("vec_id") % DedupIndex.DeltaMod === 0)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id"))
-      .as[(Long, Seq[Float])].collect()
-    graft.streaming.IndexIngest.replayVectors(spark, delta,
-      b => appendToIvfIndex(spark, idx, b), nBatches)
-    probeIvfIndex(spark, idx, readQuantizer(spark, idx),
-      e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_index_compact`: the probe-cost maintenance op
-    * proven content-preserving — build backlog + append delta (the state
-    * whose cell dirs hold one file set per batch) + [[compactIvfIndex]]
-    * (rewrite coalesced, promote the next generation) + probe, under the
-    * SAME full-corpus [[ivfAnnOracle]] as the other IVF gates. The
-    * one-file-per-cell claim is asserted by the lifecycle spec; the gate
-    * pins that compaction changed no content. */
-  def ivfCompactProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                             k: Int = 10, numCentroids: Int = 16,
-                             nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val backlogIdx = ivfBacklogStores.computeIfAbsent(dir, _ =>
-      buildHashIndex(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        "graft_ivf_backlog", requireOracleDim(e, dir), numCentroids))
-    val idx = ClusterStore.copyStore(backlogIdx, "graft_ivf_compact")
-    appendToIvfIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    compactIvfIndex(spark, idx)
-    probeIvfIndex(spark, idx, readQuantizer(spark, idx),
-      e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_requantize`: the growth-maintenance op proven
-    * end-to-end — build backlog at C, append the delta, then
-    * [[requantizeIvfIndex]] to `newC` cells and probe. The oracle is
-    * [[ivfAnnOracle]] AT newC over the full corpus: a re-quantized index
-    * must be indistinguishable from one built from scratch at the new C
-    * (assignment is a pure function of the quantizer, and requantize
-    * re-assigns every row). The gate re-quantizes with the deterministic
-    * [[hashCentroids]] so DuckDB reproduces the new quantizer;
-    * [[maybeRequantize]] — the trained-centroid trigger path over the
-    * same primitive — is spec-covered (trained centroids are
-    * float-sum-order sensitive, so they cannot be oracle-hashed). */
-  def ivfRequantizeProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                                k: Int = 10, numCentroids: Int = 16,
-                                newC: Int = 32, nProbe: Int = 4): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val dim = requireOracleDim(e, dir)
-    val backlogIdx = ivfBacklogStores.computeIfAbsent(dir, _ =>
-      buildHashIndex(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        "graft_ivf_backlog", dim, numCentroids))
-    val idx = ClusterStore.copyStore(backlogIdx, "graft_ivf_requant")
-    appendToIvfIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    requantizeIvfIndex(spark, idx, hashCentroids(dim, newC))
-    probeIvfIndex(spark, idx, readQuantizer(spark, idx),
-      e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** One APPENDED index per (JVM, source dir) for the health gate: the
-    * backlog index (shared memo) copied once, delta appended once — the
-    * post-lifecycle state health is meant to be read from. */
-  private val ivfHealthStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Gated query `ivf_index_health`: the [[indexHealth]] SCAN math,
-    * value-gated over an index that went through the full lifecycle
-    * (build + append). Emits the exact-integer form of IvfHealth's four
-    * signals — build/now row counts and build/now assigned-cosine mass —
-    * with the per-row cosine rounded to micros BEFORE a long sum (the
-    * [[graft.operators.UnigramLm]] discipline: float SUMS are
-    * partition-order-dependent and can never hash-match an oracle;
-    * integer sums of rounded terms are exact on both engines). The
-    * "build" slice is the [[DedupIndex.DeltaMod]] backlog predicate —
-    * appends never rewrite old rows, so the backlog slice of the appended
-    * index IS the build-time population. Growth/drift are one division
-    * away for a consumer; the gate pins the scan. */
-  def indexHealthGateFromDir(spark: SparkSession, dir: String,
-                             numCentroids: Int = 16): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val backlogIdx = ivfBacklogStores.computeIfAbsent(dir, _ =>
-      buildHashIndex(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        "graft_ivf_backlog", requireOracleDim(e, dir), numCentroids))
-    val idx = ivfHealthStores.computeIfAbsent(dir, _ => {
-      val c = ClusterStore.copyStore(backlogIdx, "graft_ivf_health")
-      appendToIvfIndex(spark, c,
-        e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-      c
-    })
-    val centroids = readQuantizer(spark, idx)
-    val micro = floor(assignedSim(centroids) * 1e6 + 0.5).cast("long")
-    val isBuild = col("vec_id") % DedupIndex.DeltaMod =!= 0
-    spark.read.parquet(ivfDataDir(idx)).agg(
-      count(when(isBuild, lit(1))).as("n_build"),
-      count(lit(1)).as("n_now"),
-      sum(when(isBuild, micro)).as("sim_build_micros"),
-      sum(micro).as("sim_now_micros"))
-  }
-
-  /** DuckDB twin of [[indexHealthGateFromDir]]: same md5 quantizer, same
+  /** DuckDB twin of `ivf_index_health` ([[healthGate]]): same md5 quantizer, same
     * argmax assignment (ties to the larger centroid id, as everywhere in
     * the IVF gates), same micros rounding, same integer sums. */
   def indexHealthOracle(numCentroids: Int = 16, dim: Int = LshOracleDim): String =
@@ -2780,9 +2110,9 @@ object Similarity {
     * compression tier) and, the scale point, O(m) score cost per
     * candidate instead of O(dim): a probe precomputes one m×kpq
     * lookup table per QUERY and every candidate costs m table reads. */
-  val PqM = 4
-  val PqK = 8
-  val PqIterations = 2
+  final val PqM = 4
+  final val PqK = 8
+  final val PqIterations = 2
 
   /** Train the m per-subspace codebooks (after Jégou, Douze & Schmid,
     * "Product Quantization for Nearest Neighbor Search", TPAMI 2011) —
@@ -2811,35 +2141,6 @@ object Similarity {
     }.toIndexedSeq: _*)
   }
 
-  /** The PQ-compressed IVF tier: cells store m-int CODE rows (m·log₂kpq
-    * information bits per vector — at 100 TB the whole index is smaller
-    * than the SQ8 tier's by another ~20×, small enough that probed
-    * cells live in executor memory), coarse assignment on the
-    * full-precision vectors at build, the m codebooks persisted in a
-    * `_pq_v<g>` sidecar. Same generation+manifest commit discipline as
-    * every other tier. */
-  def writeIvfPqIndex(e: DataFrame, dir: String, numCentroids: Int = 16,
-                      kpq: Int = PqK, iterations: Int = PqIterations): Unit =
-    stagePqGeneration(e, dir, numCentroids, kpq, iterations, gen = 0L)
-
-  /** Stage one complete PQ generation (coded cells + coarse quantizer +
-    * codebook sidecar) from SOURCE float vectors and commit — shared by
-    * the initial build and [[requantizeIvfPqIndex]]. */
-  private def stagePqGeneration(e: DataFrame, dir: String, numCentroids: Int,
-                                kpq: Int, iterations: Int, gen: Long): Unit = {
-    val spark = e.sparkSession
-    val dim = embeddingDim(e)
-    val coarse = hashCentroids(dim, numCentroids)
-    val cbs = trainPq(e, dim, PqM, kpq, iterations)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    assignToCentroids(e, coarse)
-      .select(col("vec_id"), pqEncodeExpr(cbs).as("codes"), col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/data_v$gen")
-    saveQuantizer(spark, s"$dir/_quantizer_v$gen", coarse)
-    savePqCodebooks(spark, s"$dir/_pq_v$gen", cbs)
-    StoreCommit.commit(dir, IvfManifest(gen))
-  }
-
   /** The m codebooks as one sidecar: rows (s, cid, c DOUBLE[]) —
     * m·kpq·(dim/m) doubles, driver-sized by construction. */
   private def savePqCodebooks(spark: SparkSession, path: String,
@@ -2863,24 +2164,6 @@ object Similarity {
         .map(_._2.map(t => (t._2, t._3)).sortBy(_._1)))
       .asInstanceOf[Array[Array[(Int, Array[Double])]]]
 
-  /** Partition-pruned ADC probe: read ONLY the probed cells' code rows,
-    * score each candidate in O(m) via the per-query lookup tables —
-    * never touching a float vector on the neighbor side. The 100 TB
-    * shape: probe reads shrink by the code/float ratio (~20× vs SQ8's
-    * 4×) AND per-candidate score cost drops from O(dim) to O(m). */
-  def probeIvfPqIndex(spark: SparkSession, dir: String, queries: DataFrame,
-                      k: Int = 10, nProbe: Int = 4,
-                      allowedOpt: Option[DataFrame] = None): DataFrame = {
-    val coarse = readQuantizer(spark, dir)
-    val g = ivfGen(dir)
-    val cbs = readPqSidecar(spark, dir, g)
-    val probes = queryProbes(queries, coarse, nProbe)
-    val cells = semiJoinAllowed(
-      prunedCellScan(spark, s"$dir/data_v$g", probes), allowedOpt)
-      .select(col("centroid_id"), col("vec_id").as("neighbor_id"), col("codes"))
-    adcScore(probes, cells, cbs, k)
-  }
-
   /** Asymmetric-distance (ADC) scoring: per probe row (query-sized ×
     * nProbe — broadcast by construction) precompute lut_s[j] =
     * ⟨q_s, c_{s,j}⟩ for every subspace s and code j (O(nProbe·kpq·dim)
@@ -2894,194 +2177,45 @@ object Similarity {
     * partials in the same order ([[pqScoredSql]]), so the doubles are
     * bit-identical (litDot ↔ list_inner_product is the proven pair of
     * the LSH twin). Codebook norms ship as plan literals, computed by
-    * the same sequential fold DuckDB's list_inner_product(c, c) runs. */
+    * the same sequential fold DuckDB's list_inner_product(c, c) runs.
+    *
+    * Residual codes (`residualOf` = the coarse quantizer) reconstruct
+    * x̂ = c_cell + d, so the numerator is ⟨q, c⟩ + Σ_s lut_s[j_s] (one
+    * per-probe-row dot + the raw LUTs) and the denominator uses the
+    * EXACT stored ‖x‖ — never a reconstructed norm: estimating ‖x̂‖ from
+    * ‖c‖²+2⟨c,d⟩+‖d‖² was measured to DOUBLE the cosine MAE (0.23 vs
+    * 0.11) and halve recall, because k-means shrinkage biases ‖d‖ low
+    * per candidate while the numerator error stays centered. This is
+    * the FAISS IVFPQ shape for IP/cosine metrics; every sum keeps the
+    * left-to-right association its SQL twin ([[pqrScoredSql]]) writes. */
   private def adcScore(probes: DataFrame, cells: DataFrame,
-                       cbs: Array[Array[(Int, Array[Double])]], k: Int): DataFrame = {
+                       cbs: Array[Array[(Int, Array[Double])]], k: Int,
+                       residualOf: Option[Array[(Int, Array[Double])]] = None): DataFrame = {
     val m = cbs.length
     val sub = cbs(0)(0)._2.length
-    val n2 = cbs.map(_.map { case (_, c) => c.foldLeft(0.0)((a, x) => a + x * x) })
-    val lutted = (0 until m).foldLeft(
-      // qq as the fused FloatVecDot kernel (≡ aggregate(zip_with(qe, qe,
-      // ·)) bit-for-bit — the proven pair); probe-row-bounded either way
-      probes.withColumn("qq", graft.functions.FloatVecDot.dot(col("qe"), col("qe")))
-    )((df, s) => df.withColumn(s"lut$s", array(cbs(s).map { case (_, c) =>
-      litDot(slice(col("qe"), s * sub + 1, sub), c)
-    }.toIndexedSeq: _*)))
-    val num = (0 until m).map(s => element_at(col(s"lut$s"),
-      element_at(col("codes"), s + 1) + 1)).reduce(_ + _)
-    val rn2 = (0 until m).map(s => element_at(
-      array(n2(s).map(lit).toIndexedSeq: _*),
-      element_at(col("codes"), s + 1) + 1)).reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    broadcast(lutted).join(cells, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", num / (sqrt(col("qq")) * sqrt(rn2)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        graft.functions.StableRound.stableRound(col("cosine"), 8).as("cosine_r"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** O(batch) ingestion into the PQ tier: encode the batch under the
-    * PERSISTED coarse quantizer and codebooks (frozen at build — the
-    * staleness rule of every tier), land files in cell dirs. */
-  def appendToIvfPqIndex(spark: SparkSession, dir: String,
-                         newVectors: DataFrame): Unit = {
-    val coarse = readQuantizer(spark, dir)
-    val cbs = readPqSidecar(spark, dir, ivfGen(dir))
-    assignToCentroids(newVectors, coarse)
-      .select(col("vec_id"), pqEncodeExpr(cbs).as("codes"), col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id").parquet(ivfDataDir(dir))
-  }
-
-  /** Takedown on the PQ tier: filtered generation rewrite of the CODE
-    * rows under the frozen coarse quantizer + codebooks (codes move
-    * verbatim — removal never re-encodes). */
-  def removeFromIvfPqIndex(spark: SparkSession, dir: String,
-                           removedIds: DataFrame): Unit =
-    rewritePqGeneration(spark, dir,
-      _.join(removedIds.select(col("vec_id")), Seq("vec_id"), "left_anti"))
-
-  /** PQ-tier compaction: identity-filter rewrite back to one file per
-    * cell, content-preserving (re-passes the append oracle). */
-  def compactIvfPqIndex(spark: SparkSession, dir: String): Unit =
-    rewritePqGeneration(spark, dir, identity)
-
-  private def rewritePqGeneration(spark: SparkSession, dir: String,
-                                  keep: DataFrame => DataFrame): Unit =
-    rewriteGeneration(spark, dir, Seq("_quantizer_v", "_pq_v"), keep)
-
-  /** Re-quantize the PQ tier: codes are LOSSY, so the rebuild re-reads
-    * the SOURCE float vectors, re-trains the m codebooks, re-derives the
-    * coarse quantizer at the new C, and stages a complete next
-    * generation — after it the index equals a from-scratch build. */
-  def requantizeIvfPqIndex(spark: SparkSession, dir: String, source: DataFrame,
-                           numCentroids: Int, kpq: Int = PqK,
-                           iterations: Int = PqIterations): Unit =
-    promoteFreshGeneration(dir)(
-      stagePqGeneration(source, dir, numCentroids, kpq, iterations, _))
-
-  private val ivfPqStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfPqBacklogs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def pqStoreFor(spark: SparkSession, dir: String, e: DataFrame,
-                         numCentroids: Int, kpq: Int, iterations: Int): String =
-    memoStore(ivfPqStores, s"$dir#c$numCentroids#k$kpq#i$iterations", "graft_ivf_pq")(
-      writeIvfPqIndex(e, _, numCentroids, kpq, iterations))
-
-  /** The memoized BACKLOG PQ index (every vector except the DeltaMod
-    * residue class — the split all incremental gates share). */
-  private def pqBacklogFor(dir: String, e: DataFrame, numCentroids: Int,
-                           kpq: Int, iterations: Int): String =
-    memoStore(ivfPqBacklogs, s"$dir#c$numCentroids#k$kpq#i$iterations",
-      "graft_ivf_pq_backlog")(
-      writeIvfPqIndex(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        _, numCentroids, kpq, iterations))
-
-  /** Gated query `ivf_pq_probe`: the PQ tier end-to-end — trained
-    * codebooks, coded cells, pruned probe, O(m)-per-candidate ADC
-    * re-score — under an oracle whose probe chain is [[ivfRankedCtesSql]]
-    * with ONLY the scored CTE swapped for the ADC sum. */
-  def ivfPqProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                        k: Int = 10, numCentroids: Int = 16, nProbe: Int = 4,
-                        kpq: Int = PqK, iterations: Int = PqIterations): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = pqStoreFor(spark, dir, e, numCentroids, kpq, iterations)
-    probeIvfPqIndex(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_pq_append`: build over the BACKLOG (codebooks
-    * frozen there), append the DeltaMod delta under the persisted
-    * codebooks, probe — oracle trains the codebooks on the backlog
-    * relation and encodes the full corpus under them. */
-  def ivfPqAppendProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                              k: Int = 10, numCentroids: Int = 16, nProbe: Int = 4,
-                              kpq: Int = PqK, iterations: Int = PqIterations): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      pqBacklogFor(dir, e, numCentroids, kpq, iterations), "graft_ivf_pq_append")
-    appendToIvfPqIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    probeIvfPqIndex(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_pq_remove`: takedown on the PQ tier — codes of the
-    * removed ids vanish from cells with nothing else moving (codebooks
-    * stay frozen at the full build; the oracle trains on the full corpus
-    * and serves the kept relation). */
-  def ivfPqRemoveProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                              k: Int = 10, numCentroids: Int = 16, nProbe: Int = 4,
-                              kpq: Int = PqK, iterations: Int = PqIterations): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val full = pqStoreFor(spark, dir, e, numCentroids, kpq, iterations)
-    val idx = ClusterStore.copyStore(full, "graft_ivf_pq_remove")
-    removeFromIvfPqIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0).select(col("vec_id")))
-    probeIvfPqIndex(spark, idx,
-      e.filter(col("vec_id") < numQueries &&
-        col("vec_id") % DedupIndex.DeltaMod =!= 0), k, nProbe)
-  }
-
-  /** Gated query `ivf_pq_compact`: backlog + append + identity rewrite
-    * to one file per cell — content-preserving (re-passes the append
-    * oracle, codes verbatim). */
-  def ivfPqCompactProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                               k: Int = 10, numCentroids: Int = 16, nProbe: Int = 4,
-                               kpq: Int = PqK, iterations: Int = PqIterations): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      pqBacklogFor(dir, e, numCentroids, kpq, iterations), "graft_ivf_pq_compact")
-    appendToIvfPqIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    compactIvfPqIndex(spark, idx)
-    probeIvfPqIndex(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_pq_requantize`: backlog + append +
-    * [[requantizeIvfPqIndex]] from the full SOURCE at newC + probe must
-    * equal a from-scratch PQ build at newC (codebooks AND coarse
-    * quantizer re-derived over the union). */
-  def ivfPqRequantizeProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                                  k: Int = 10, numCentroids: Int = 16, newC: Int = 32,
-                                  nProbe: Int = 4, kpq: Int = PqK,
-                                  iterations: Int = PqIterations): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      pqBacklogFor(dir, e, numCentroids, kpq, iterations), "graft_ivf_pq_requant")
-    appendToIvfPqIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    requantizeIvfPqIndex(spark, idx, e, newC, kpq, iterations)
-    probeIvfPqIndex(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_pq_rerank`: the SERVING configuration of the PQ
-    * tier — ADC shortlists `shortlist` candidates per query in O(m) per
-    * candidate (never touching a float on the neighbor side), then ONLY
-    * those R ids re-score exactly against the full-precision vectors
-    * (the FAISS IVFPQ+refine shape). At 100 TB the economics: the probe
-    * reads codes (~20× less than SQ8, ~80× less than float32), and the
-    * refine is an R-row point-lookup equi-join per query against the
-    * primary float store — R·numQueries rows, not a corpus scan. The
-    * recall deficit of raw 12-bit ADC top-k (the honest `hits_pq`
-    * number in `ann_recall`) is what the shortlist buys back: the
-    * shortlist bounds recall, and R ≫ k recovers most of it. */
-  def ivfPqRerankFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                         k: Int = 10, numCentroids: Int = 16, nProbe: Int = 4,
-                         kpq: Int = PqK, iterations: Int = PqIterations,
-                         shortlist: Int = 50): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = pqStoreFor(spark, dir, e, numCentroids, kpq, iterations)
-    exactRefine(e, probeIvfPqIndex(spark, idx,
-      e.filter(col("vec_id") < numQueries), shortlist, nProbe)
-      .select(col("query_id"), col("neighbor_id")), k)
+    // qq/qc as fused kernels (≡ the aggregate(zip_with(...)) composites
+    // bit-for-bit: FloatVecDot the proven self-dot pair, MixedVecDot
+    // float×double in the same left-to-right order); probe-row-bounded
+    val withQq = probes.withColumn("qq", graft.functions.FloatVecDot.dot(col("qe"), col("qe")))
+    val withQc = residualOf.fold(withQq)(coarse => withQq.withColumn("qc",
+      graft.functions.VecExprs.mixedDot(col("qe"),
+        element_at(centsLit(coarse), col("centroid_id") + 1))))
+    val lutted = (0 until m).foldLeft(withQc)((df, s) =>
+      df.withColumn(s"lut$s", array(cbs(s).map { case (_, c) =>
+        litDot(slice(col("qe"), s * sub + 1, sub), c)
+      }.toIndexedSeq: _*)))
+    val luts = (0 until m).map(s => element_at(col(s"lut$s"),
+      element_at(col("codes"), s + 1) + 1))
+    val score = residualOf match {
+      case Some(_) => (col("qc") +: luts).reduce(_ + _) / (sqrt(col("qq")) * col("norm"))
+      case None =>
+        val n2 = cbs.map(_.map { case (_, c) => c.foldLeft(0.0)((a, x) => a + x * x) })
+        val rn2 = (0 until m).map(s => element_at(
+          array(n2(s).map(lit).toIndexedSeq: _*),
+          element_at(col("codes"), s + 1) + 1)).reduce(_ + _)
+        luts.reduce(_ + _) / (sqrt(col("qq")) * sqrt(rn2))
+    }
+    scoreCells(lutted, cells, score, k)
   }
 
   /** Exact full-precision re-score of a (query_id, neighbor_id)
@@ -3091,19 +2225,12 @@ object Similarity {
   private def exactRefine(e: DataFrame, short: DataFrame, k: Int): DataFrame = {
     val qv = e.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val nv = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    broadcast(short.join(qv, Seq("query_id")))
+    rankTopK(broadcast(short.join(qv, Seq("query_id")))
       .join(nv, Seq("neighbor_id"))
-      .withColumn("cosine", cosine(col("qe"), col("ne")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        graft.functions.StableRound.stableRound(col("cosine"), 8).as("cosine_r"))
-      .orderBy(col("query_id"), col("rank"))
+      .withColumn("cosine", cosine(col("qe"), col("ne"))), k)
   }
 
-  /** DuckDB twin of [[ivfPqRerankFromDir]]: [[ivfPqOracle]]'s chain with
+  /** DuckDB twin of `ivf_pq_rerank`: [[ivfPqOracle]]'s chain with
     * the final top-k replaced by an ADC-ranked R-shortlist CTE and an
     * exact full-precision re-score over it. */
   def ivfPqRerankOracle(numQueries: Int = 8, k: Int = 10, numCentroids: Int = 16,
@@ -3264,62 +2391,29 @@ object Similarity {
       array(c.map(lit).toIndexedSeq: _*)
     }.toIndexedSeq: _*)
 
-  /** The residual frame under a coarse quantizer: r = x − c_assigned,
+  /** The residual frame of an ASSIGNED frame: r = x − c_assigned,
     * computed in double and rounded back to FLOAT32 (the FAISS
     * convention — and the cross-engine anchor: double subtraction of a
     * float and a micros-exact centroid component is IEEE-exact, and both
     * engines round it to the identical float). Carries `centroid_id`,
-    * so build fuses coarse assignment, residual, and the m encode
+    * so an encode fuses coarse assignment, residual, and the m encode
     * argmaxes into ONE scan projection. */
-  private def pqResidualFrame(e: DataFrame,
-                              coarse: Array[(Int, Array[Double])]): DataFrame =
+  private def residualFrame(assigned: DataFrame,
+                            coarse: Array[(Int, Array[Double])]): DataFrame =
     // the residual transform runs as one codegen kernel (r21; the
     // zip_with form it replaces — identical cast order, pinned by
     // Round21Spec — evaluated interpreted, one lambda dispatch per
     // component per row on the build/append scan)
-    assignToCentroids(e, coarse).select(col("vec_id"),
+    assigned.select(col("vec_id"),
       graft.functions.VecExprs.residual(col("embedding"), col("centroid_id"),
         coarse.sortBy(_._1).map(_._2)).as("embedding"),
       // the EXACT norm of the original vector, stored beside the codes:
       // the cosine denominator the probe uses (estimating it from the
       // reconstruction instead injects per-candidate noise — measured,
-      // see adcScoreResidual). One double per row; FAISS IVFPQ stores
-      // norms the same way for reconstruction-free distances.
+      // see adcScore). One double per row; FAISS IVFPQ stores norms the
+      // same way for reconstruction-free distances.
       l2norm(col("embedding")).as("norm"),
       col("centroid_id"))
-
-  /** The residual-encoded PQ tier (Jégou et al. §IV: encode x − c, not
-    * x): residuals concentrate near the origin of each cell, so the SAME
-    * m·log₂(kpq) bits quantize a much smaller volume — the reconstruction
-    * x̂ = c + decode(codes) is strictly more faithful than raw-vector PQ
-    * at equal bits, which is why FAISS's IVFPQ ships this encoding. Same
-    * store layout and sidecars as the raw tier (`_quantizer_v` +
-    * `_pq_v`), same generation/manifest discipline. */
-  def writeIvfPqResIndex(e: DataFrame, dir: String, numCentroids: Int = 16,
-                         kpq: Int = PqK, iterations: Int = PqIterations): Unit =
-    stagePqResGeneration(e, dir, numCentroids, kpq, iterations, gen = 0L)
-
-  private def stagePqResGeneration(e: DataFrame, dir: String, numCentroids: Int,
-                                   kpq: Int, iterations: Int, gen: Long): Unit = {
-    val spark = e.sparkSession
-    val dim = embeddingDim(e)
-    // residuals are only small — and residual encoding only pays — under
-    // a coarse quantizer that FITS the data, so this tier trains its
-    // coarse centroids (exact Lloyd, the ivf_ann_trained machinery)
-    // instead of substituting the hash quantizer the other gates use
-    val coarse = trainCentroids(e, numCentroids, iterations, Some(dim))
-    val resid = pqResidualFrame(e, coarse)
-    val cbs = trainPqL2(resid.select(col("vec_id"), col("embedding")),
-      dim, PqM, kpq, iterations)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    resid
-      .select(col("vec_id"), pqEncodeL2Expr(cbs).as("codes"), col("norm"),
-        col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/data_v$gen")
-    saveQuantizer(spark, s"$dir/_quantizer_v$gen", coarse)
-    savePqCodebooks(spark, s"$dir/_pq_v$gen", cbs)
-    StoreCommit.commit(dir, IvfManifest(gen))
-  }
 
   /** [[trainPq]] under the EUCLIDEAN metric — required for residual
     * codebooks (see [[assignL2Expr]]'s rationale). */
@@ -3339,140 +2433,6 @@ object Similarity {
     array(cbs.zipWithIndex.map { case (cb, s) =>
       assignL2Expr(slice(col("embedding"), s * sub + 1, sub), cb)
     }.toIndexedSeq: _*)
-  }
-
-  /** O(batch) ingestion into the residual tier: coarse-assign, form the
-    * residual, and m-encode the batch under the PERSISTED coarse
-    * quantizer and codebooks — all frozen at build (the staleness rule
-    * of every tier), all fused in one scan projection. */
-  def appendToIvfPqResIndex(spark: SparkSession, dir: String,
-                            newVectors: DataFrame): Unit = {
-    val coarse = readQuantizer(spark, dir)
-    val cbs = readPqSidecar(spark, dir, ivfGen(dir))
-    pqResidualFrame(newVectors, coarse)
-      .select(col("vec_id"), pqEncodeL2Expr(cbs).as("codes"), col("norm"),
-        col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id").parquet(ivfDataDir(dir))
-  }
-
-  /** Partition-pruned ADC probe over the residual tier. Reconstruction
-    * is x̂ = c_cell + d with d = the code centroids, so the numerator is
-    *   ⟨q, x̂⟩ = ⟨q, c⟩ + Σ_s lut_s[j_s]   (one per-probe-row dot + the
-    *                                        raw per-subspace LUTs)
-    * and the denominator uses the EXACT stored ‖x‖ — never a
-    * reconstructed norm: estimating ‖x̂‖ from ‖c‖²+2⟨c,d⟩+‖d‖² was
-    * measured to DOUBLE the cosine MAE (0.23 vs 0.11) and halve recall,
-    * because k-means shrinkage biases ‖d‖ low per candidate while the
-    * numerator error stays centered. This is the FAISS IVFPQ shape for
-    * IP/cosine metrics: codes estimate the inner product, stored norms
-    * make it a cosine. Scoring stays O(m) lookups per candidate. */
-  def probeIvfPqResIndex(spark: SparkSession, dir: String, queries: DataFrame,
-                         k: Int = 10, nProbe: Int = 4,
-                         allowedOpt: Option[DataFrame] = None): DataFrame = {
-    val coarse = readQuantizer(spark, dir)
-    val g = ivfGen(dir)
-    val cbs = readPqSidecar(spark, dir, g)
-    val probes = queryProbes(queries, coarse, nProbe)
-    val cells = semiJoinAllowed(
-      prunedCellScan(spark, s"$dir/data_v$g", probes), allowedOpt)
-      .select(col("centroid_id"), col("vec_id").as("neighbor_id"),
-        col("codes"), col("norm"))
-    adcScoreResidual(probes, cells, coarse, cbs, k)
-  }
-
-  /** [[adcScore]] with the residual numerator and the exact-norm
-    * denominator (see [[probeIvfPqResIndex]]); every sum keeps the
-    * left-to-right association its SQL twin writes. */
-  private def adcScoreResidual(probes: DataFrame, cells: DataFrame,
-                               coarse: Array[(Int, Array[Double])],
-                               cbs: Array[Array[(Int, Array[Double])]],
-                               k: Int): DataFrame = {
-    val m = cbs.length
-    val sub = cbs(0)(0)._2.length
-    // qc/qq as fused kernels (≡ the aggregate(zip_with(...)) composites
-    // bit-for-bit: MixedVecDot is float×double in the same left-to-right
-    // order; FloatVecDot the proven self-dot pair); probe-row-bounded
-    val qc = graft.functions.VecExprs.mixedDot(col("qe"),
-      element_at(centsLit(coarse), col("centroid_id") + 1))
-    val lutted = (0 until m).foldLeft(
-      probes
-        .withColumn("qq", graft.functions.FloatVecDot.dot(col("qe"), col("qe")))
-        .withColumn("qc", qc)
-    )((df, s) => df.withColumn(s"lut$s", array(cbs(s).map { case (_, c) =>
-      litDot(slice(col("qe"), s * sub + 1, sub), c)
-    }.toIndexedSeq: _*)))
-    val num = (col("qc") +: (0 until m).map(s => element_at(col(s"lut$s"),
-      element_at(col("codes"), s + 1) + 1))).reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    broadcast(lutted).join(cells, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", num / (sqrt(col("qq")) * col("norm")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        graft.functions.StableRound.stableRound(col("cosine"), 8).as("cosine_r"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  private val ivfPqResStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfPqResBacklogs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def pqResStoreFor(dir: String, e: DataFrame, numCentroids: Int,
-                            kpq: Int, iterations: Int): String =
-    memoStore(ivfPqResStores, s"$dir#c$numCentroids#k$kpq#i$iterations",
-      "graft_ivf_pqr")(
-      writeIvfPqResIndex(e, _, numCentroids, kpq, iterations))
-
-  private def pqResBacklogFor(dir: String, e: DataFrame, numCentroids: Int,
-                              kpq: Int, iterations: Int): String =
-    memoStore(ivfPqResBacklogs, s"$dir#c$numCentroids#k$kpq#i$iterations",
-      "graft_ivf_pqr_backlog")(
-      writeIvfPqResIndex(e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
-        _, numCentroids, kpq, iterations))
-
-  /** Gated query `ivf_pqr_probe`: the residual tier end-to-end —
-    * codebooks trained on residuals, coded cells, pruned probe, O(m)
-    * ADC re-score with the reconstruction terms. */
-  def ivfPqResProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                           k: Int = 10, numCentroids: Int = 16, nProbe: Int = 4,
-                           kpq: Int = PqK, iterations: Int = PqIterations): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = pqResStoreFor(dir, e, numCentroids, kpq, iterations)
-    probeIvfPqResIndex(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_pqr_append`: build over the BACKLOG (coarse
-    * quantizer is data-independent, codebooks frozen at the backlog's
-    * residuals), append the delta under the persisted sidecars, probe —
-    * oracle trains the residual codebooks on the backlog relation and
-    * encodes the full corpus under them. */
-  def ivfPqResAppendProbeFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                                 k: Int = 10, numCentroids: Int = 16, nProbe: Int = 4,
-                                 kpq: Int = PqK, iterations: Int = PqIterations): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = ClusterStore.copyStore(
-      pqResBacklogFor(dir, e, numCentroids, kpq, iterations), "graft_ivf_pqr_append")
-    appendToIvfPqResIndex(spark, idx,
-      e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
-    probeIvfPqResIndex(spark, idx, e.filter(col("vec_id") < numQueries), k, nProbe)
-  }
-
-  /** Gated query `ivf_pqr_rerank`: the residual tier's SERVING path —
-    * residual-ADC shortlist, exact refine of the R survivors (the
-    * [[ivfPqRerankFromDir]] shape on the more faithful codes). */
-  def ivfPqResRerankFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                            k: Int = 10, numCentroids: Int = 16, nProbe: Int = 4,
-                            kpq: Int = PqK, iterations: Int = PqIterations,
-                            shortlist: Int = 50): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = pqResStoreFor(dir, e, numCentroids, kpq, iterations)
-    exactRefine(e, probeIvfPqResIndex(spark, idx,
-      e.filter(col("vec_id") < numQueries), shortlist, nProbe)
-      .select(col("query_id"), col("neighbor_id")), k)
   }
 
   // --------------------- Matryoshka (MRL) truncated-prefix serving
@@ -3499,30 +2459,6 @@ object Similarity {
         .select(col("query_id"), col("neighbor_id")), k)
   }
 
-  private val mrlIndexStores = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Gated query `ivf_mrl_rerank`: the MRL deployment shape — the IVF
-    * index is built over the TRUNCATED prefix copy (a store dPrime/dim
-    * the size of the primary: at 100 TB the coarse-search tier shrinks
-    * 4× in bytes AND flops before any code compression), probed with
-    * truncated queries for an R-shortlist, then the shared exact refine
-    * against the full-precision primary store. Composes the proven
-    * persisted-IVF probe with the proven refine tail — only the store's
-    * CONTENT (prefixes) is new. */
-  def ivfMrlRerankFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                          k: Int = 10, dPrime: Int = 16, numCentroids: Int = 16,
-                          nProbe: Int = 4, shortlist: Int = 50): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val trunc = mrlTruncate(e, dPrime)
-    val idx = memoStore(mrlIndexStores, s"$dir#d$dPrime#c$numCentroids", "graft_mrl")(
-      writeIvfIndexWith(trunc, _, hashCentroids(dPrime, numCentroids)))
-    exactRefine(e,
-      probeIvfIndex(spark, idx, readQuantizer(spark, idx),
-        trunc.filter(col("vec_id") < numQueries), shortlist, nProbe)
-        .select(col("query_id"), col("neighbor_id")), k)
-  }
-
   /** DuckDB twin of [[mrlRerankFromDir]]: prefix-sliced brute pairs →
     * R-shortlist → the exact-refine tail. */
   def mrlRerankOracle(numQueries: Int = 8, k: Int = 10, dPrime: Int = 16,
@@ -3542,7 +2478,7 @@ object Similarity {
        |),
        |${refineTailSql("shortl", k)}""".stripMargin
 
-  /** DuckDB twin of [[ivfMrlRerankFromDir]]: the standard IVF probe
+  /** DuckDB twin of `ivf_mrl_rerank`: the standard IVF probe
     * chain over a truncated-prefix relation (same md5 quantizer formula
     * at dPrime dims) shortlisted at R, then the exact-refine tail. */
   def ivfMrlRerankOracle(numQueries: Int = 8, k: Int = 10, dPrime: Int = 16,
@@ -3583,7 +2519,7 @@ object Similarity {
     * relation — the `ivf_ann_trained` chains), serving-side sims
     * against the final centroids, coarse assignment, FLOAT32 residuals
     * (the exact double subtraction rounded to float —
-    * [[pqResidualFrame]]'s anchor), residual-sliced L2 [[pqCtesSql]].
+    * [[residualFrame]]'s anchor), residual-sliced L2 [[pqCtesSql]].
     * Ends with `pq_codes` in scope plus `pqr_assign`/`pqr_cent` (the
     * final coarse centroids) and `srv_sims` for the probe chain. */
   private def pqrCtesSql(dim: Int, numCentroids: Int, kpq: Int,
@@ -3626,7 +2562,7 @@ object Similarity {
   /** The residual-ADC `scored` CTE: ⟨q,c⟩ + the m LUT partials over the
     * EXACT neighbor norm (recomputed in SQL by the same sequential fold
     * the Spark side persisted at build), every sum in
-    * [[adcScoreResidual]]'s left-to-right association. */
+    * [[adcScore]]'s left-to-right association. */
   private def pqrScoredSql(p: String, dim: Int, m: Int, iterations: Int,
                            queryRelation: String): String = {
     val sub = dim / m
@@ -3673,7 +2609,7 @@ object Similarity {
        |FROM p_ranked WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
   }
 
-  /** DuckDB twin of [[ivfPqResRerankFromDir]]: the residual chain's
+  /** DuckDB twin of `ivf_pqr_rerank`: the residual chain's
     * top-k replaced by an ADC-ranked R-shortlist + exact re-score (the
     * [[ivfPqRerankOracle]] tail verbatim). */
   def ivfPqResRerankOracle(numQueries: Int = 8, k: Int = 10, numCentroids: Int = 16,
@@ -3703,68 +2639,10 @@ object Similarity {
 
   // ----------------------------- filtered (predicate-constrained) ANN
 
-  /** Filtered vector search — "top-k neighbors among documents WHERE
-    * <predicate>", the constrained-search surface every production
-    * vector store exposes (FAISS IDSelector, the filter clause of
-    * Qdrant/Milvus/pgvector). The index is NOT rebuilt per predicate:
-    * the probe is unchanged (same pruned cell read), and the caller's
-    * allowed-id frame semi-joins the candidates BEFORE the re-score —
-    * at 100 TB the filter costs one equi-join on the probed cells'
-    * candidate rows (cell-bounded, never corpus-sized), and the re-score
-    * only pays for surviving candidates. Post-filtering the top-k would
-    * instead return FEWER than k under selective predicates; filtering
-    * candidates keeps k results whenever the probed cells hold them. */
-  def probeIvfIndexFiltered(spark: SparkSession, dir: String,
-                            centroids: Array[(Int, Array[Double])],
-                            queries: DataFrame, allowed: DataFrame,
-                            k: Int = 10, nProbe: Int = 4): DataFrame =
-    probeIvfIndex(spark, dir, centroids, queries, k, nProbe, Some(allowed))
-
-  /** The PQ tier's filtered probe: same semi-join on the candidate CODE
-    * rows — the filter composes with the compressed tier, so a 100 TB
-    * deployment filters WITHOUT touching float vectors either. */
-  def probeIvfPqIndexFiltered(spark: SparkSession, dir: String,
-                              queries: DataFrame, allowed: DataFrame,
-                              k: Int = 10, nProbe: Int = 4): DataFrame =
-    probeIvfPqIndex(spark, dir, queries, k, nProbe, Some(allowed))
-
-  /** Gated query `ivf_ann_filtered`: filtered search on the persisted
-    * float index — the allowed set is the English documents (the
-    * doc_id↔vec_id alignment of the corpus), so the gate pins that
-    * every returned neighbor satisfies the predicate AND the ranks are
-    * exactly the constrained top-k. */
-  def ivfAnnFilteredFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                            k: Int = 10, numCentroids: Int = 16,
-                            nProbe: Int = 4, lang: String = "en"): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = hashIndexStoreFor(dir, e, numCentroids)
-    val allowed = Tables.documents(spark, dir)
-      .filter(col("lang") === lang).select(col("doc_id").as("vec_id"))
-    probeIvfIndexFiltered(spark, idx, readQuantizer(spark, idx),
-      e.filter(col("vec_id") < numQueries), allowed, k, nProbe)
-  }
-
-  /** Gated query `ivf_pq_filtered`: the same predicate on the PQ tier —
-    * `candWhereOpt` composes with `scoredSqlOpt` in the shared probe
-    * chain, exactly as the Spark semi-join composes with ADC scoring. */
-  def ivfPqFilteredFromDir(spark: SparkSession, dir: String, numQueries: Int = 8,
-                           k: Int = 10, numCentroids: Int = 16, nProbe: Int = 4,
-                           kpq: Int = PqK, iterations: Int = PqIterations,
-                           lang: String = "en"): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    requireOracleDim(e, dir)
-    val idx = pqStoreFor(spark, dir, e, numCentroids, kpq, iterations)
-    val allowed = Tables.documents(spark, dir)
-      .filter(col("lang") === lang).select(col("doc_id").as("vec_id"))
-    probeIvfPqIndexFiltered(spark, idx,
-      e.filter(col("vec_id") < numQueries), allowed, k, nProbe)
-  }
-
   private def langCandWhere(lang: String): String =
     s"a.vec_id IN (SELECT doc_id FROM documents WHERE lang = '$lang')"
 
-  /** DuckDB twin of [[ivfAnnFilteredFromDir]]: the standard IVF chain
+  /** DuckDB twin of `ivf_ann_filtered`: the standard IVF chain
     * with the candidate predicate injected — index/assignment/probes
     * untouched, only candidates that satisfy the filter reach the
     * re-score (the Spark semi-join's position exactly). */
@@ -3777,7 +2655,7 @@ object Similarity {
        |SELECT query_id, rank, neighbor_id, FLOOR(cosine * 1e8 + 0.5) / 1e8 AS cosine_r
        |FROM ranked WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
-  /** DuckDB twin of [[ivfPqFilteredFromDir]]: [[ivfPqOracle]]'s chain
+  /** DuckDB twin of `ivf_pq_filtered`: [[ivfPqOracle]]'s chain
     * with the same candidate predicate. */
   def ivfPqFilteredOracle(numQueries: Int = 8, k: Int = 10, numCentroids: Int = 16,
                           nProbe: Int = 4, kpq: Int = PqK,

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * stores were built for: every store ships a policy-gated maintenance
   * primitive ([[Bm25Index.maybeCompact]], [[DedupIndex.maybeCompact]],
   * [[ClusterStore.maybeCompact]], [[graft.sources.SnapshotStore.maybeCompact]],
-  * [[Similarity.maybeRequantize]] plus the file-count IVF compaction
-  * here), and a daily runner should invoke them all after its appends —
+  * [[Similarity.maybeRequantize]] for the float vector tier, plus the
+  * file-count compaction here for every vector tier), and a daily runner should invoke them all after its appends —
   * not leave them as library calls nobody fires (the round-11 gap this
   * object closes). [[run]] detects each directory's store kind from its
   * on-disk shape and applies the matching policies; a store that is not
@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   * directory listing bounded by epochs/cells); the rewrites they gate are
   * the pay-once operations whose amortization the per-store scaladocs
   * justify. Nothing here scans data except [[Similarity.maybeRequantize]]'s
-  * health pass — one index scan, priced in `ivf_index_health`.
+  * health pass over a float-tier index — one index scan, priced in
+  * `ivf_index_health`.
   */
 object StoreMaintenance {
 
@@ -28,8 +29,8 @@ object StoreMaintenance {
     * stores and the snapshot store; `maxFilesPerCell` gates IVF
     * compaction (appends land files inside live cell dirs, so file
     * count — not an epoch list — is the growth axis there); drift/growth
-    * gate the IVF requantize, matching [[Similarity.maybeRequantize]]
-    * defaults. */
+    * gate the requantize of an index with a health baseline, matching
+    * [[Similarity.maybeRequantize]] defaults. */
   case class Policy(maxEpochs: Int = 8, maxFilesPerCell: Int = 4,
                     maxDrift: Double = 0.05, maxGrowth: Double = 4.0)
 
@@ -65,10 +66,10 @@ object StoreMaintenance {
       Seq(Action(dir, "snapshot_store", "compact",
         graft.sources.SnapshotStore.maybeCompact(spark, dir, policy.maxEpochs)))
     else if (ivfLiveDataDir(dir).isDefined) {
-      // IVF: compaction first (file-count growth from appends), then the
-      // health-triggered requantize — a requantize subsumes compaction
-      // (both promote a coalesced generation), so skip compact when the
-      // requantize fired
+      // a vector tier: the health-triggered requantize (a tier without a
+      // health baseline never fires it), then compaction for file-count
+      // growth from appends — a requantize subsumes compaction (both
+      // promote a coalesced generation), so skip compact when it fired
       val req = Similarity.maybeRequantize(spark, dir,
         policy.maxDrift, policy.maxGrowth)
       val comp = req.isEmpty && maybeCompactIvf(spark, dir, policy.maxFilesPerCell)
@@ -84,11 +85,13 @@ object StoreMaintenance {
       if (java.nio.file.Files.isDirectory(p)) Some(p) else None
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** IVF compaction policy: appends land parquet files INSIDE the live
-    * generation's cell dirs, so probe file-open cost grows with appends
-    * per cell; compact when the average exceeds `maxFilesPerCell`. The
-    * decision is one directory listing (O(cells + files) names, no data
-    * read). Returns whether a compaction ran. */
+  /** Vector-tier compaction policy: appends land parquet files INSIDE
+    * the live generation's cell dirs, so probe file-open cost grows with
+    * appends per cell; compact when the average exceeds
+    * `maxFilesPerCell`, through the one [[Similarity.compact]] over the
+    * tier the live sidecars name. The decision is one directory listing
+    * (O(cells + files) names, no data read). Returns whether a
+    * compaction ran. */
   def maybeCompactIvf(spark: SparkSession, dir: String,
                       maxFilesPerCell: Int = 4): Boolean = {
     val data = ivfLiveDataDir(dir).getOrElse(return false)
@@ -102,7 +105,7 @@ object StoreMaintenance {
       finally s.close()
     }.sum
     val due = files.toDouble / cells.size > maxFilesPerCell
-    if (due) Similarity.compactIvfIndex(spark, dir)
+    if (due) Similarity.compact(spark, Similarity.tierAt(dir), dir)
     due
   }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * stream (at-least-once, so re-deliveries happen), are deduplicated by
   * `vec_id` within a watermark, and every surviving micro-batch lands in
   * the live generation's cell directories through the store's O(batch)
-  * append (`Similarity.appendToIvfIndex` and its tier siblings — the sink
+  * append (`Similarity.append`, written once over every tier — the sink
   * is a callback, so ONE ingest transform serves every tier).
   *
   * Division of labor, mirroring [[CorpusIngest]]: the stream guarantees

@@ -25,7 +25,8 @@ object HybridProfile {
     }
     val docs = Tables.documents(spark, dir)
     // warm the memoized IVF store once so the probe stage measures serving
-    Similarity.ivfProbeIndexedFromDir(spark, dir).write.format("noop").mode("overwrite").save()
+    Similarity.lifecycle(Similarity.Tier.Ivf)()(spark, dir)
+      .write.format("noop").mode("overwrite").save()
     Pinned.release(spark); spark.sharedState.cacheManager.clearCache()
 
     def tf = docs.select(col("doc_id"),
@@ -38,7 +39,7 @@ object HybridProfile {
       dl.crossJoin(df.agg(count(lit(1)).as("nterms")))
     }
     time("lex_list")(HybridRetrieval.lexList(docs, 8, 20, 1.2, 0.75))
-    time("ivf_probe_only")(Similarity.ivfProbeIndexedFromDir(spark, dir))
+    time("ivf_probe_only")(Similarity.lifecycle(Similarity.Tier.Ivf)()(spark, dir))
     time("fuse_on_local") {
       import spark.implicits._
       val lex = (0L until 8L).flatMap(q => (1L to 20L).map(r =>

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.GraftSession
 import graft.operators._
+import graft.operators.Similarity.{Op, Tier}
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -35,14 +36,14 @@ object RecallProfile {
     time("truth_brute") {
       Similarity.bruteForceKnn(e, e.filter(col("vec_id") < 8), 10)
     }
-    time("ivf_probe_indexed")(Similarity.ivfProbeIndexedFromDir(spark, dir))
-    time("ivf_sq8_probe")(Similarity.ivfSq8ProbeFromDir(spark, dir))
-    time("imi_ann")(Similarity.imiAnnFromDir(spark, dir, nProbe1 = 4, nProbe2 = 4))
-    time("imi_sq8_probe")(Similarity.imiSq8ProbeFromDir(spark, dir, nProbe1 = 4, nProbe2 = 4))
+    time("ivf_probe_indexed")(Similarity.lifecycle(Tier.Ivf)()(spark, dir))
+    time("ivf_sq8_probe")(Similarity.lifecycle(Tier.IvfSq8)()(spark, dir))
+    time("imi_ann")(Similarity.lifecycle(Tier.Imi)(nProbe = 4, nProbe2 = 4)(spark, dir))
+    time("imi_sq8_probe")(Similarity.lifecycle(Tier.ImiSq8)(nProbe = 4, nProbe2 = 4)(spark, dir))
     time("ann_recall")(Similarity.annRecallFromDir(spark, dir))
-    time("pq_probe")(Similarity.ivfPqProbeFromDir(spark, dir))
-    time("pqr_rerank")(Similarity.ivfPqRerankFromDir(spark, dir))
-    time("pqres_probe")(Similarity.ivfPqResProbeFromDir(spark, dir))
+    time("pq_probe")(Similarity.lifecycle(Tier.IvfPq)()(spark, dir))
+    time("pqr_rerank")(Similarity.lifecycle(Tier.IvfPq, Op.Rerank())()(spark, dir))
+    time("pqres_probe")(Similarity.lifecycle(Tier.IvfPqRes)()(spark, dir))
     time("ann_recall_pq")(Similarity.annRecallPqFromDir(spark, dir))
     spark.stop()
   }

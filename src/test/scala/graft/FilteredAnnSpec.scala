@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
 class FilteredAnnSpec extends SparkSpec {
 
   test("every filtered neighbor satisfies the predicate; ranks stay contiguous") {
-    for (df <- Seq(Similarity.ivfAnnFilteredFromDir(spark, sf),
-                   Similarity.ivfPqFilteredFromDir(spark, sf))) {
+    for (df <- Seq(Similarity.lifecycle(Tier.Ivf, Op.Filtered())()(spark, sf),
+                   Similarity.lifecycle(Tier.IvfPq, Op.Filtered())()(spark, sf))) {
       val r = df.cache()
       val en = Tables.documents(spark, sf).filter(col("lang") === "en")
         .select(col("doc_id").as("neighbor_id"))
@@ -35,16 +36,15 @@ class FilteredAnnSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val allowedIds = Tables.documents(spark, sf).filter(col("lang") === "en")
       .select(col("doc_id").as("vec_id"))
-    val filtered = Similarity.ivfAnnFilteredFromDir(spark, sf)
+    val filtered = Similarity.lifecycle(Tier.Ivf, Op.Filtered())()(spark, sf)
       .collect().map(_.toSeq)
     val tmp = java.nio.file.Files.createTempDirectory("graft_filtered_twin")
     val idx = tmp.resolve("index").toString
     // the SAME data-independent hash quantizer the gate's store uses
-    // (writeIvfIndex would TRAIN on the subset — a different quantizer)
-    Similarity.writeIvfIndexWith(e.join(allowedIds, Seq("vec_id"), "left_semi"), idx,
-      Similarity.hashCentroids(Similarity.embeddingDim(e), 16))
-    val fresh = Similarity.probeIvfIndex(spark, idx,
-      Similarity.readQuantizer(spark, idx), e.filter(col("vec_id") < 8))
+    // (Tier.IvfTrained would TRAIN on the subset — a different quantizer)
+    Similarity.buildWith(Tier.Ivf, idx, e.join(allowedIds, Seq("vec_id"), "left_semi"),
+      TierState(Seq(Similarity.hashCentroids(Similarity.embeddingDim(e), 16))))
+    val fresh = Similarity.probe(spark, Tier.Ivf, idx, e.filter(col("vec_id") < 8))()
       .collect().map(_.toSeq)
     assert(filtered.toSeq === fresh.toSeq)
   }
@@ -53,8 +53,8 @@ class FilteredAnnSpec extends SparkSpec {
     // post-filtering top-10 of the unfiltered probe would keep only the
     // allowed subset of those 10 — strictly fewer rows than the
     // candidate-filtered search whenever the predicate is selective.
-    val filtered = Similarity.ivfAnnFilteredFromDir(spark, sf).count()
-    val unf = Similarity.ivfProbeIndexedFromDir(spark, sf)
+    val filtered = Similarity.lifecycle(Tier.Ivf, Op.Filtered())()(spark, sf).count()
+    val unf = Similarity.lifecycle(Tier.Ivf)()(spark, sf)
     val en = Tables.documents(spark, sf).filter(col("lang") === "en")
       .select(col("doc_id").as("neighbor_id"))
     val postFiltered = unf.join(en, Seq("neighbor_id"), "left_semi").count()

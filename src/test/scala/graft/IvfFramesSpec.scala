@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.operators.{Multimodal, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -35,8 +36,8 @@ class IvfFramesSpec extends SparkSpec {
 
   test("materialized IVF index: probe equals in-memory IVF and partition-prunes the scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/index"
-    val centroids = Similarity.writeIvfIndex(emb, dir, numCentroids = 8)
-    val fromIndex = Similarity.probeIvfIndex(spark, dir, centroids, queries,
+    Similarity.build(Tier.IvfTrained, dir, emb, Build(8))
+    val fromIndex = Similarity.probe(spark, Tier.IvfTrained, dir, queries)(
       k = 10, nProbe = 4)
     // identical results to the in-memory path (same centroids, same probes)
     val inMemory = Similarity.ivfKnn(emb, queries, k = 10, numCentroids = 8, nProbe = 4)

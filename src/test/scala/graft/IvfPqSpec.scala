@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -26,10 +27,10 @@ class IvfPqSpec extends SparkSpec {
   test("probe is deterministic across reloads; codes are m ints in [0, kpq)") {
     val e = Tables.embeddings(spark, sf).cache()
     val idx = freshIndex("graft_pq_det")
-    Similarity.writeIvfPqIndex(e, idx, numCentroids = 8, kpq = 8, iterations = 1)
+    Similarity.build(Tier.IvfPq, idx, e, Build(8, kpq = 8, iterations = 1))
     val q = e.filter(col("vec_id") < 4)
-    val once = Similarity.probeIvfPqIndex(spark, idx, q, k = 5).collect().map(_.toSeq)
-    val again = Similarity.probeIvfPqIndex(spark, idx, q, k = 5).collect().map(_.toSeq)
+    val once = Similarity.probe(spark, Tier.IvfPq, idx, q)(k = 5).collect().map(_.toSeq)
+    val again = Similarity.probe(spark, Tier.IvfPq, idx, q)(k = 5).collect().map(_.toSeq)
     assert(once.nonEmpty && once.toSeq === again.toSeq)
     val codes = spark.read.parquet(s"$idx/data_v0")
       .select(col("codes")).collect().map(_.getAs[collection.Seq[Int]]("codes"))
@@ -40,7 +41,7 @@ class IvfPqSpec extends SparkSpec {
   test("ADC cosine pinned by an independent plain-Scala recompute from the sidecars") {
     val e = Tables.embeddings(spark, sf).cache()
     val idx = freshIndex("graft_pq_adc")
-    Similarity.writeIvfPqIndex(e, idx, numCentroids = 8, kpq = 8, iterations = 1)
+    Similarity.build(Tier.IvfPq, idx, e, Build(8, kpq = 8, iterations = 1))
     // persisted state, read raw (not through the probe path)
     val cbs = spark.read.parquet(s"$idx/_pq_v0").collect()
       .map(r => ((r.getAs[Int]("s"), r.getAs[Int]("cid")),
@@ -53,8 +54,8 @@ class IvfPqSpec extends SparkSpec {
     // sequential left-to-right folds — the association BOTH engines use
     def dot(q: collection.Seq[Float], c: Array[Double], off: Int): Double =
       (0 until c.length).foldLeft(0.0)((a, i) => a + q(off + i).toDouble * c(i))
-    for (r <- Similarity.probeIvfPqIndex(spark, idx,
-        e.filter(col("vec_id") < 4), k = 5).collect()) {
+    for (r <- Similarity.probe(spark, Tier.IvfPq, idx,
+        e.filter(col("vec_id") < 4))(k = 5).collect()) {
       val q = vecs(r.getAs[Long]("query_id"))
       val cs = codes(r.getAs[Long]("neighbor_id"))
       val num = (0 until m).foldLeft(0.0)((a, s) => a + dot(q, cbs((s, cs(s))), s * sub))
@@ -71,11 +72,11 @@ class IvfPqSpec extends SparkSpec {
   test("remove: kept codes move verbatim; both sidecars advance with the generation") {
     val e = Tables.embeddings(spark, sf).cache()
     val idx = freshIndex("graft_pq_rm")
-    Similarity.writeIvfPqIndex(e, idx, numCentroids = 8, kpq = 8, iterations = 1)
+    Similarity.build(Tier.IvfPq, idx, e, Build(8, kpq = 8, iterations = 1))
     val before = spark.read.parquet(s"$idx/data_v0")
       .filter(col("vec_id") % 5 =!= 0)
       .orderBy(col("vec_id")).collect().map(_.toSeq)
-    Similarity.removeFromIvfPqIndex(spark, idx,
+    Similarity.remove(spark, Tier.IvfPq, idx,
       e.filter(col("vec_id") % 5 === 0).select(col("vec_id")))
     val after = spark.read.parquet(s"$idx/data_v1")
       .orderBy(col("vec_id")).collect().map(_.toSeq)
@@ -88,13 +89,13 @@ class IvfPqSpec extends SparkSpec {
   test("append + requantize equals a from-scratch build at the new C") {
     val e = Tables.embeddings(spark, sf).cache()
     val idx = freshIndex("graft_pq_rq")
-    Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 5 =!= 0), idx,
-      numCentroids = 8, kpq = 8, iterations = 1)
-    Similarity.appendToIvfPqIndex(spark, idx, e.filter(col("vec_id") % 5 === 0))
-    Similarity.requantizeIvfPqIndex(spark, idx, e, numCentroids = 16,
-      kpq = 8, iterations = 1)
+    Similarity.build(Tier.IvfPq, idx, e.filter(col("vec_id") % 5 =!= 0),
+      Build(8, kpq = 8, iterations = 1))
+    Similarity.append(spark, Tier.IvfPq, idx, e.filter(col("vec_id") % 5 === 0))
+    Similarity.requantize(Tier.IvfPq, idx, e,
+      Similarity.train(Tier.IvfPq, e, Build(16, kpq = 8, iterations = 1), Similarity.embeddingDim(e)))
     val fresh = freshIndex("graft_pq_fresh")
-    Similarity.writeIvfPqIndex(e, fresh, numCentroids = 16, kpq = 8, iterations = 1)
+    Similarity.build(Tier.IvfPq, fresh, e, Build(16, kpq = 8, iterations = 1))
     val a = spark.read.parquet(s"$idx/data_v1")
       .orderBy(col("vec_id")).collect().map(_.toSeq)
     val b = spark.read.parquet(s"$fresh/data_v0")
@@ -104,8 +105,8 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("rerank returns EXACT cosines and never less recall than raw ADC top-k") {
-    val r = Similarity.ivfPqRerankFromDir(spark, sf).cache()
-    val raw = Similarity.ivfPqProbeFromDir(spark, sf).cache()
+    val r = Similarity.lifecycle(Tier.IvfPq, Op.Rerank())()(spark, sf).cache()
+    val raw = Similarity.lifecycle(Tier.IvfPq)()(spark, sf).cache()
     // exactness: every reranked cosine equals the brute pair cosine
     val e = Tables.embeddings(spark, sf)
     val qv = e.select(col("vec_id").as("query_id"), col("embedding").as("qe"))

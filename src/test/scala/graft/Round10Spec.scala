@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.operators.{ClusterStore, CorpusSplit, Dedup, NearDupClusters, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -15,19 +16,25 @@ class Round10Spec extends SparkSpec {
   // ---------------------------------------------- persisted IVF lifecycle
 
   test("ivf_probe_indexed: persisted-index probe equals the in-memory gated IVF pipeline") {
-    val fromIndex = rows(Similarity.ivfProbeIndexedFromDir(spark, sf))
+    val fromIndex = rows(Similarity.lifecycle(Tier.Ivf)()(spark, sf))
     val inMemory = rows(Similarity.ivfAnnFromDir(spark, sf))
     assert(fromIndex == inMemory)
   }
 
   test("ivf_index_append: append + probe equals a same-quantizer full-corpus probe") {
-    val appended = rows(Similarity.ivfAppendProbeFromDir(spark, sf))
+    val appended = rows(Similarity.lifecycle(Tier.Ivf, Op.Append)()(spark, sf))
     val inMemory = rows(Similarity.ivfAnnFromDir(spark, sf))
     assert(appended == inMemory)
   }
 
+  test("store registry: a second C on the same dir gets its own backlog build") {
+    rows(Similarity.lifecycle(Tier.Ivf, Op.Append)()(spark, sf))
+    val at8 = rows(Similarity.lifecycle(Tier.Ivf, Op.Append)(Build(8))(spark, sf))
+    assert(at8 == rows(Similarity.ivfAnnFromDir(spark, sf, numCentroids = 8)))
+  }
+
   test("ivf_index_health: counts split on the DeltaMod predicate; repeat reads identical") {
-    val r = Similarity.indexHealthGateFromDir(spark, sf).collect().head
+    val r = Similarity.healthGate(Tier.Ivf)()(spark, sf).collect().head
     val e = Tables.embeddings(spark, sf)
     val total = e.count()
     val delta = e.filter(
@@ -36,7 +43,7 @@ class Round10Spec extends SparkSpec {
     assert(r.getAs[Long]("n_build") == total - delta)
     // the micros sums are exact integers — a second scan must reproduce
     // them bit-for-bit (the property float avg() could never give a gate)
-    val r2 = Similarity.indexHealthGateFromDir(spark, sf).collect().head
+    val r2 = Similarity.healthGate(Tier.Ivf)()(spark, sf).collect().head
     assert(r.toSeq == r2.toSeq)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.operators.{Bm25Index, DedupIndex, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -182,15 +183,16 @@ class Round11Spec extends SparkSpec {
     val dim = e.select(size(col("embedding"))).first().getInt(0)
     val idx = tmpDir("ivf_compact")
     val cents = Similarity.hashCentroids(dim, 8)
-    Similarity.writeIvfIndexWith(e.filter(col("vec_id") % 4 === 0), idx, cents)
+    Similarity.buildWith(Tier.Ivf, idx, e.filter(col("vec_id") % 4 === 0),
+      TierState(Seq(cents)))
     for (r <- 1 to 3)
-      Similarity.appendToIvfIndex(spark, idx,
+      Similarity.append(spark, Tier.Ivf, idx,
         e.filter(col("vec_id") % 4 === r))
     val q = e.filter(col("vec_id") < 4)
-    val before = rows(Similarity.probeIvfIndex(spark, idx, cents, q))
+    val before = rows(Similarity.probe(spark, Tier.Ivf, idx, q)())
     val filesBefore = parquetFiles(s"$idx/data_v0").size
 
-    Similarity.compactIvfIndex(spark, idx)
+    Similarity.compact(spark, Tier.Ivf, idx)
 
     val dataDir = Similarity.ivfDataDir(idx)
     assert(dataDir.endsWith("data_v1"), "compaction promotes the generation")
@@ -198,8 +200,7 @@ class Round11Spec extends SparkSpec {
     assert(filesAfter <= 8, s"one file per cell (got $filesAfter for 8 cells)")
     assert(filesAfter < filesBefore,
       s"compaction must shrink the file count ($filesBefore -> $filesAfter)")
-    assert(rows(Similarity.probeIvfIndex(spark, idx,
-      Similarity.readQuantizer(spark, idx), q)) === before)
+    assert(rows(Similarity.probe(spark, Tier.Ivf, idx, q)()) === before)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$idx/data_v0")),
       "the retired generation is deleted after commit")
     // the health BASELINE survives compaction (content is unchanged, so
@@ -213,19 +214,18 @@ class Round11Spec extends SparkSpec {
     val dim = e.select(size(col("embedding"))).first().getInt(0)
     val idx = tmpDir("ivf_heal")
     val cents = Similarity.hashCentroids(dim, 8)
-    Similarity.writeIvfIndexWith(e, idx, cents)
+    Similarity.buildWith(Tier.Ivf, idx, e, TierState(Seq(cents)))
     val q = e.filter(col("vec_id") < 4)
-    val before = rows(Similarity.probeIvfIndex(spark, idx, cents, q))
+    val before = rows(Similarity.probe(spark, Tier.Ivf, idx, q)())
     // residue of a crashed promote: a half-written next generation
     val junk = java.nio.file.Paths.get(s"$idx/data_v1/centroid_id=0")
     java.nio.file.Files.createDirectories(junk)
     java.nio.file.Files.writeString(junk.resolve("part-junk.parquet"), "not parquet")
     // readers resolve the manifest: the residue is invisible
-    assert(rows(Similarity.probeIvfIndex(spark, idx, cents, q)) === before)
+    assert(rows(Similarity.probe(spark, Tier.Ivf, idx, q)()) === before)
     // the next promote stages at gen 1, healing the residue first
-    Similarity.compactIvfIndex(spark, idx)
-    assert(rows(Similarity.probeIvfIndex(spark, idx,
-      Similarity.readQuantizer(spark, idx), q)) === before)
+    Similarity.compact(spark, Tier.Ivf, idx)
+    assert(rows(Similarity.probe(spark, Tier.Ivf, idx, q)()) === before)
   }
 
   test("maybeRequantize: fires on growth, sizes C by the measured rule, resets the baseline") {
@@ -233,9 +233,9 @@ class Round11Spec extends SparkSpec {
     val dim = e.select(size(col("embedding"))).first().getInt(0)
     val idx = tmpDir("ivf_requant")
     // build tiny (every 8th vector), then append the rest: growth = 8 > 4
-    Similarity.writeIvfIndexWith(e.filter(col("vec_id") % 8 === 0), idx,
-      Similarity.hashCentroids(dim, 4))
-    Similarity.appendToIvfIndex(spark, idx, e.filter(col("vec_id") % 8 =!= 0))
+    Similarity.buildWith(Tier.Ivf, idx, e.filter(col("vec_id") % 8 === 0),
+      TierState(Seq(Similarity.hashCentroids(dim, 4))))
+    Similarity.append(spark, Tier.Ivf, idx, e.filter(col("vec_id") % 8 =!= 0))
     val h = Similarity.indexHealth(spark, idx)
     assert(h.growth > 4.0 && h.shouldRecluster())
     val expectedC = Similarity.sizedCentroidCount(4, h.growth) // C ∝ N
@@ -321,18 +321,17 @@ class Round11Spec extends SparkSpec {
     val e = Tables.embeddings(spark, sf)
     val dim = e.select(size(col("embedding"))).first().getInt(0)
     val idx = tmpDir("ivf_requant_eq")
-    Similarity.writeIvfIndexWith(
-      e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0), idx,
-      Similarity.hashCentroids(dim, 16))
-    Similarity.appendToIvfIndex(spark, idx,
+    Similarity.buildWith(Tier.Ivf, idx, e.filter(col("vec_id") % DedupIndex.DeltaMod =!= 0),
+      TierState(Seq(Similarity.hashCentroids(dim, 16))))
+    Similarity.append(spark, Tier.Ivf, idx,
       e.filter(col("vec_id") % DedupIndex.DeltaMod === 0))
     val newCents = Similarity.hashCentroids(dim, 32)
-    Similarity.requantizeIvfIndex(spark, idx, newCents)
+    Similarity.requantize(Tier.Ivf, idx, Similarity.liveFloatRows(spark, idx),
+      TierState(Seq(newCents)))
     val scratch = tmpDir("ivf_requant_scratch")
-    Similarity.writeIvfIndexWith(e, scratch, newCents)
+    Similarity.buildWith(Tier.Ivf, scratch, e, TierState(Seq(newCents)))
     val q = e.filter(col("vec_id") < 8)
-    assert(rows(Similarity.probeIvfIndex(spark, idx,
-        Similarity.readQuantizer(spark, idx), q)) ===
-      rows(Similarity.probeIvfIndex(spark, scratch, newCents, q)))
+    assert(rows(Similarity.probe(spark, Tier.Ivf, idx, q)()) ===
+      rows(Similarity.probe(spark, Tier.Ivf, scratch, q)()))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.operators.{Bm25Index, DedupIndex, Similarity, StoreMaintenance}
 import graft.sources.{SnapshotStore, Tables}
 import org.apache.spark.sql.functions._
@@ -117,11 +118,11 @@ class Round12Spec extends SparkSpec {
   test("ivf promote sweeps orphaned generations from a crashed post-commit delete") {
     val emb = Tables.embeddings(spark, sf)
     val dir = tmpDir("ivf_orphan")
-    Similarity.writeIvfIndex(emb, dir, numCentroids = 4)
+    Similarity.build(Tier.IvfTrained, dir, emb, Build(4))
     // an unreferenced generation (post-commit delete crashed mid-promote)
     val orphan = java.nio.file.Paths.get(s"$dir/data_v7")
     java.nio.file.Files.createDirectories(orphan)
-    Similarity.compactIvfIndex(spark, dir) // any promote sweeps
+    Similarity.compact(spark, Tier.IvfTrained, dir) // any promote sweeps
     assert(!java.nio.file.Files.exists(orphan),
       "promoteGeneration must sweep generations the manifest does not reference")
   }
@@ -154,21 +155,28 @@ class Round12Spec extends SparkSpec {
 
   test("IVF file-count policy: appends grow files per cell; maintenance compacts them") {
     val emb = Tables.embeddings(spark, sf)
-    val dir = tmpDir("maint_ivf")
     val half = emb.filter(col("vec_id") % 2 === 0)
-    Similarity.writeIvfIndex(half, dir, numCentroids = 4)
-    for (r <- 0 to 2)
-      Similarity.appendToIvfIndex(spark, dir,
-        emb.filter(col("vec_id") % 2 =!= 0).filter(col("vec_id") % 3 === r))
-    val filesBefore = parquetFiles(Similarity.ivfDataDir(dir)).size
-    val acts = StoreMaintenance.run(spark, Seq(dir),
-      StoreMaintenance.Policy(maxFilesPerCell = 1, maxDrift = 1e9, maxGrowth = 1e9))
-    assert(acts.exists(a => a.store == "ivf" && a.action == "compact" && a.fired),
-      s"file-count policy must fire, got $acts")
-    val filesAfter = parquetFiles(Similarity.ivfDataDir(dir)).size
-    assert(filesAfter < filesBefore,
-      s"IVF compaction must shrink file count ($filesBefore -> $filesAfter)")
-    assert(!acts.exists(a => a.action == "requantize" && a.fired),
-      "drift/growth thresholds set unreachable: requantize must not fire")
+    // every tier: the compressed ones carry no health baseline, and the
+    // sweep must compact them rather than die reading one (one append
+    // already puts a second file in a cell)
+    for ((tier, p, batches) <- Seq((Tier.IvfTrained, Build(4), 3), (Tier.IvfSq8, Build(4), 1),
+        (Tier.Imi, Build(2, 2, iterations = 0), 1),
+        (Tier.IvfPq, Build(4, kpq = 4, iterations = 0), 1))) {
+      val dir = tmpDir(s"maint_${tier.name}")
+      Similarity.build(tier, dir, half, p)
+      for (r <- 0 until batches)
+        Similarity.append(spark, tier, dir,
+          emb.filter(col("vec_id") % 2 =!= 0).filter(col("vec_id") % batches === r))
+      val filesBefore = parquetFiles(Similarity.ivfDataDir(dir)).size
+      val acts = StoreMaintenance.run(spark, Seq(dir),
+        StoreMaintenance.Policy(maxFilesPerCell = 1, maxDrift = 1e9, maxGrowth = 1e9))
+      assert(acts.exists(a => a.store == "ivf" && a.action == "compact" && a.fired),
+        s"${tier.name}: file-count policy must fire, got $acts")
+      val filesAfter = parquetFiles(Similarity.ivfDataDir(dir)).size
+      assert(filesAfter < filesBefore,
+        s"${tier.name}: IVF compaction must shrink file count ($filesBefore -> $filesAfter)")
+      assert(!acts.exists(a => a.action == "requantize" && a.fired),
+        s"${tier.name}: drift/growth thresholds set unreachable: requantize must not fire")
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.operators.{ClusterStore, CorpusDiff, Curation, Multimodal, NearDupClusters, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -229,9 +230,9 @@ class Round13Spec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft_sq8ivf")
       .resolve("index").toString
-    Similarity.writeIvfSq8Index(emb, dir, numCentroids = 8)
-    val out = Similarity.probeIvfSq8Index(spark, dir,
-      emb.filter(col("vec_id") < 8), k = 10, nProbe = 4)
+    Similarity.build(Tier.IvfSq8, dir, emb, Build(8))
+    val out = Similarity.probe(spark, Tier.IvfSq8, dir,
+      emb.filter(col("vec_id") < 8))(k = 10, nProbe = 4)
     // the probed-cell filter reaches the scan as a PARTITION filter
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("centroid_id"),
@@ -335,13 +336,15 @@ class Round13Spec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val root = java.nio.file.Files.createTempDirectory("graft_ivf_rm")
     val dir = root.resolve("idx").toString
-    Similarity.writeIvfIndex(emb, dir, numCentroids = 8)
+    Similarity.build(Tier.IvfTrained, dir, emb, Build(8))
     val n0 = spark.read.parquet(Similarity.ivfDataDir(dir)).count()
-    Similarity.removeFromIvfIndex(spark, dir,
+    Similarity.remove(spark, Tier.IvfTrained, dir,
       emb.filter(col("vec_id") % 5 === 0).select(col("vec_id")))
     val data = spark.read.parquet(Similarity.ivfDataDir(dir))
     assert(data.filter(col("vec_id") % 5 === 0).count() === 0)
     assert(data.count() === n0 - emb.filter(col("vec_id") % 5 === 0).count())
+    // the health baseline refreshed in the same write: it counts the kept rows
+    assert(Similarity.indexHealth(spark, dir).nBuild === data.count())
     // same quantizer: kept rows' assignments are unchanged vs a rebuild
     val rebuilt = Similarity.assignToCentroids(
       emb.filter(col("vec_id") % 5 =!= 0), Similarity.readQuantizer(spark, dir))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.operators.{Curation, Multimodal, SemanticDedup, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -112,9 +113,9 @@ class Round14Spec extends SparkSpec {
     val h = dim / 2
     val tmp = java.nio.file.Files.createTempDirectory("graft_imi_spec")
     val idx = tmp.resolve("index").toString
-    Similarity.writeImiIndex(e, idx, c1 = 4, c2 = 4, iterations = 1)
+    Similarity.build(Tier.Imi, idx, e, Build(4, 4, iterations = 1))
     val queries = e.filter(col("vec_id") < 4)
-    val persisted = Similarity.probeImiIndex(spark, idx, queries, k = 5)
+    val persisted = Similarity.probe(spark, Tier.Imi, idx, queries)(k = 5)
       .collect().map(_.toSeq)
     // in-memory: same codebooks (training is deterministic), same probe
     val (cents1, cents2) = Similarity.trainImi(e, 4, 4, iterations = 1, dim)
@@ -128,7 +129,7 @@ class Round14Spec extends SparkSpec {
     assert(cellDirs === populated)
     assert(persisted.nonEmpty)
     // save -> reload -> probe is deterministic
-    val again = Similarity.probeImiIndex(spark, idx, queries, k = 5)
+    val again = Similarity.probe(spark, Tier.Imi, idx, queries)(k = 5)
       .collect().map(_.toSeq)
     assert(persisted.toSeq === again.toSeq)
     // cell-bounded candidates: every returned neighbor shares BOTH
@@ -160,13 +161,13 @@ class Round14Spec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = java.nio.file.Files.createTempDirectory("graft_sq8_rm_spec")
     val idx = tmp.resolve("index").toString
-    Similarity.writeIvfSq8Index(e, idx, numCentroids = 8)
+    Similarity.build(Tier.IvfSq8, idx, e, Build(8))
     // plant crash residue: a staged next generation whose manifest never
     // advanced (the failure mode the orphan sweep exists for)
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(idx, "data_v1", "centroid_id=0"))
     val removed = e.filter(col("vec_id") % 5 === 0).select(col("vec_id"))
-    Similarity.removeFromIvfSq8Index(spark, idx, removed)
+    Similarity.remove(spark, Tier.IvfSq8, idx, removed)
     val kept = spark.read.parquet(s"$idx/data_v1")
     assert(kept.filter(col("vec_id") % 5 === 0).count() === 0)
     assert(kept.count() === e.filter(col("vec_id") % 5 =!= 0).count())
@@ -177,8 +178,8 @@ class Round14Spec extends SparkSpec {
     assert(s.getAs[Seq[Double]]("mn") === mn.toSeq)
     assert(s.getAs[Seq[Double]]("mx") === mx.toSeq)
     // probe works against the new generation
-    val probe = Similarity.probeIvfSq8Index(spark, idx,
-      e.filter(col("vec_id") === 1), k = 3)
+    val probe = Similarity.probe(spark, Tier.IvfSq8, idx,
+      e.filter(col("vec_id") === 1))(k = 3)
     assert(probe.count() === 3)
   }
 
@@ -202,11 +203,11 @@ class Round14Spec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = java.nio.file.Files.createTempDirectory("graft_sq8_cp_spec")
     val idx = tmp.resolve("index").toString
-    Similarity.writeIvfSq8Index(e.filter(col("vec_id") % 5 =!= 0), idx, numCentroids = 8)
-    Similarity.appendToIvfSq8Index(spark, idx, e.filter(col("vec_id") % 5 === 0))
+    Similarity.build(Tier.IvfSq8, idx, e.filter(col("vec_id") % 5 =!= 0), Build(8))
+    Similarity.append(spark, Tier.IvfSq8, idx, e.filter(col("vec_id") % 5 === 0))
     val before = spark.read.parquet(s"$idx/data_v0")
       .orderBy(col("vec_id")).collect().map(_.toSeq)
-    Similarity.compactIvfSq8Index(spark, idx)
+    Similarity.compact(spark, Tier.IvfSq8, idx)
     val after = spark.read.parquet(s"$idx/data_v1")
       .orderBy(col("vec_id")).collect().map(_.toSeq)
     assert(after.toSeq === before.toSeq, "codes move verbatim")
@@ -228,12 +229,13 @@ class Round14Spec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = java.nio.file.Files.createTempDirectory("graft_imi_rq_spec")
     val idx = tmp.resolve("index").toString
-    Similarity.writeImiIndex(e.filter(col("vec_id") % 5 =!= 0), idx,
-      c1 = 4, c2 = 4, iterations = 1)
-    Similarity.appendToImiIndex(spark, idx, e.filter(col("vec_id") % 5 === 0))
-    Similarity.requantizeImiIndex(spark, idx, e, c1 = 8, c2 = 8, iterations = 1)
+    Similarity.build(Tier.Imi, idx, e.filter(col("vec_id") % 5 =!= 0),
+      Build(4, 4, iterations = 1))
+    Similarity.append(spark, Tier.Imi, idx, e.filter(col("vec_id") % 5 === 0))
+    Similarity.requantize(Tier.Imi, idx, e,
+      Similarity.train(Tier.Imi, e, Build(8, 8, iterations = 1), Similarity.embeddingDim(e)))
     val fresh = tmp.resolve("fresh").toString
-    Similarity.writeImiIndex(e, fresh, c1 = 8, c2 = 8, iterations = 1)
+    Similarity.build(Tier.Imi, fresh, e, Build(8, 8, iterations = 1))
     val a = spark.read.parquet(s"$idx/data_v1")
       .orderBy(col("vec_id")).collect().map(_.toSeq)
     val b = spark.read.parquet(s"$fresh/data_v0")
@@ -241,8 +243,10 @@ class Round14Spec extends SparkSpec {
     assert(a.toSeq === b.toSeq,
       "append + requantize must be indistinguishable from a fresh build")
     val q = e.filter(col("vec_id") < 3)
-    assert(Similarity.probeImiIndex(spark, idx, q, k = 5).collect().map(_.toSeq).toSeq
-      === Similarity.probeImiIndex(spark, fresh, q, k = 5).collect().map(_.toSeq).toSeq)
+    assert(Similarity.probe(spark, Tier.Imi, idx, q)(k = 5)
+      .collect().map(_.toSeq).toSeq
+      === Similarity.probe(spark, Tier.Imi, fresh, q)(k = 5)
+      .collect().map(_.toSeq).toSeq)
   }
 
   test("pruneAssigned == pruneWith under the same assignment (the probe seam is faithful)") {

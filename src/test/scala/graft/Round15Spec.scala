@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.operators.{CurateE2e, Multimodal, SemanticDedup, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -124,10 +125,12 @@ class Round15Spec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = java.nio.file.Files.createTempDirectory("graft_imisq8_spec")
     val idx = tmp.resolve("index").toString
-    Similarity.writeImiSq8Index(e, idx, c1 = 4, c2 = 4, iterations = 1)
+    Similarity.build(Tier.ImiSq8, idx, e, Build(4, 4, iterations = 1))
     val q = e.filter(col("vec_id") < 4)
-    val once = Similarity.probeImiSq8Index(spark, idx, q, k = 5).collect().map(_.toSeq)
-    val again = Similarity.probeImiSq8Index(spark, idx, q, k = 5).collect().map(_.toSeq)
+    val once = Similarity.probe(spark, Tier.ImiSq8, idx, q)(k = 5)
+      .collect().map(_.toSeq)
+    val again = Similarity.probe(spark, Tier.ImiSq8, idx, q)(k = 5)
+      .collect().map(_.toSeq)
     assert(once.nonEmpty && once.toSeq === again.toSeq)
     // the stored codes are the SAME sq8Encode the flat tier writes: decode
     // roundtrips through the persisted stats bit-for-bit
@@ -142,12 +145,13 @@ class Round15Spec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = java.nio.file.Files.createTempDirectory("graft_imisq8_rq_spec")
     val idx = tmp.resolve("index").toString
-    Similarity.writeImiSq8Index(e.filter(col("vec_id") % 5 =!= 0), idx,
-      c1 = 4, c2 = 4, iterations = 1)
-    Similarity.appendToImiSq8Index(spark, idx, e.filter(col("vec_id") % 5 === 0))
-    Similarity.requantizeImiSq8Index(spark, idx, e, c1 = 8, c2 = 8, iterations = 1)
+    Similarity.build(Tier.ImiSq8, idx, e.filter(col("vec_id") % 5 =!= 0),
+      Build(4, 4, iterations = 1))
+    Similarity.append(spark, Tier.ImiSq8, idx, e.filter(col("vec_id") % 5 === 0))
+    Similarity.requantize(Tier.ImiSq8, idx, e,
+      Similarity.train(Tier.ImiSq8, e, Build(8, 8, iterations = 1), Similarity.embeddingDim(e)))
     val fresh = tmp.resolve("fresh").toString
-    Similarity.writeImiSq8Index(e, fresh, c1 = 8, c2 = 8, iterations = 1)
+    Similarity.build(Tier.ImiSq8, fresh, e, Build(8, 8, iterations = 1))
     val a = spark.read.parquet(s"$idx/data_v1")
       .orderBy(col("vec_id")).collect().map(_.toSeq)
     val b = spark.read.parquet(s"$fresh/data_v0")
@@ -160,11 +164,11 @@ class Round15Spec extends SparkSpec {
     val e = Tables.embeddings(spark, sf).cache()
     val tmp = java.nio.file.Files.createTempDirectory("graft_imisq8_rm_spec")
     val idx = tmp.resolve("index").toString
-    Similarity.writeImiSq8Index(e, idx, c1 = 4, c2 = 4, iterations = 1)
+    Similarity.build(Tier.ImiSq8, idx, e, Build(4, 4, iterations = 1))
     val before = spark.read.parquet(s"$idx/data_v0")
       .filter(col("vec_id") % 5 =!= 0)
       .orderBy(col("vec_id")).collect().map(_.toSeq)
-    Similarity.removeFromImiSq8Index(spark, idx,
+    Similarity.remove(spark, Tier.ImiSq8, idx,
       e.filter(col("vec_id") % 5 === 0).select(col("vec_id")))
     val after = spark.read.parquet(s"$idx/data_v1")
       .orderBy(col("vec_id")).collect().map(_.toSeq)
@@ -250,10 +254,10 @@ class Round15Spec extends SparkSpec {
       probe(tmp).select(col("query_id"), col("neighbor_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).count(truth)
     }
-    val raw = hitsOf(Similarity.writeIvfPqIndex(e, _),
-      d => Similarity.probeIvfPqIndex(spark, d, queries))
-    val res = hitsOf(Similarity.writeIvfPqResIndex(e, _),
-      d => Similarity.probeIvfPqResIndex(spark, d, queries))
+    val raw = hitsOf(Similarity.build(Tier.IvfPq, _, e, Build()),
+      d => Similarity.probe(spark, Tier.IvfPq, d, queries)())
+    val res = hitsOf(Similarity.build(Tier.IvfPqRes, _, e, Build()),
+      d => Similarity.probe(spark, Tier.IvfPqRes, d, queries)())
     info(s"clustered corpus: raw-PQ hits $raw, residual-PQ hits $res of 80")
     assert(res > raw,
       s"residual codes must out-rank raw codes on clustered data ($res vs $raw)")
@@ -306,12 +310,13 @@ class Round15Spec extends SparkSpec {
     val delta = e.filter(col("vec_id") % 5 === 0)
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_spec")
     val idx = tmp.resolve("index").toString
-    Similarity.writeIvfIndexWith(backlog, idx, Similarity.hashCentroids(dim, 4))
+    Similarity.buildWith(Tier.Ivf, idx, backlog,
+      TierState(Seq(Similarity.hashCentroids(dim, 4))))
     val deltaRows = delta.select(col("vec_id"), col("embedding"))
       .orderBy(col("vec_id"))
       .as[(Long, Seq[Float])].collect()
     graft.streaming.IndexIngest.replayVectors(spark, deltaRows,
-      b => Similarity.appendToIvfIndex(spark, idx, b), nBatches = 3)
+      b => Similarity.append(spark, Tier.Ivf, idx, b), nBatches = 3)
     val stored = spark.read.parquet(Similarity.ivfDataDir(idx))
       .groupBy(col("vec_id")).count()
     assert(stored.filter(col("count") > 1).count() === 0,
@@ -383,7 +388,8 @@ class Round15Spec extends SparkSpec {
       .map(r => ((r.getLong(0), r.getLong(2)), r.getDouble(3))).toMap
     for ((name, df, floor) <- Seq(
       ("ann_mrl_rerank", Similarity.mrlRerankFromDir(spark, sf), 25),
-      ("ivf_mrl_rerank", Similarity.ivfMrlRerankFromDir(spark, sf), 20))) {
+      ("ivf_mrl_rerank",
+        Similarity.lifecycle(Tier.Ivf, Op.Rerank())(Build(dPrime = 16))(spark, sf), 20))) {
       val rows = df.collect()
       val overlaps = rows.flatMap(r =>
         truth.get((r.getLong(0), r.getLong(2))).map(c => (c, r.getDouble(3))))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Similarity.{Build, Op, Tier, TierState}
 import graft.functions.BpeMerge
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.functions.{col, transform}
@@ -296,9 +297,9 @@ class Round8Spec extends SparkSpec {
     val delta = e.filter(col("vec_id") % 5 === 0)
     val dirAppend = tmpDir("graft_ivf_append")
     val dirUnion = tmpDir("graft_ivf_union")
-    val cents = Similarity.writeIvfIndex(backlog, dirAppend, numCentroids = 8)
-    Similarity.appendToIvfIndex(spark, dirAppend, delta)
-    Similarity.writeIvfIndexWith(e, dirUnion, cents)
+    val cents = Similarity.build(Tier.IvfTrained, dirAppend, backlog, Build(8)).coarse.head
+    Similarity.append(spark, Tier.IvfTrained, dirAppend, delta)
+    Similarity.buildWith(Tier.IvfTrained, dirUnion, e, TierState(Seq(cents)))
     // the persisted quantizer is the trained one, bit-for-bit
     val readBack = Similarity.readQuantizer(spark, dirAppend)
     assert(readBack.map(_._1).toSeq === cents.map(_._1).toSeq)
@@ -306,8 +307,8 @@ class Round8Spec extends SparkSpec {
       assert(a.toSeq === b.toSeq)
     }
     val q = e.filter(col("vec_id") < 5)
-    val appended = Similarity.probeIvfIndex(spark, dirAppend, cents, q).collect()
-    val rebuilt = Similarity.probeIvfIndex(spark, dirUnion, cents, q).collect()
+    val appended = Similarity.probe(spark, Tier.IvfTrained, dirAppend, q)().collect()
+    val rebuilt = Similarity.probe(spark, Tier.IvfTrained, dirUnion, q)().collect()
     assert(appended.toSeq === rebuilt.toSeq,
       "append path diverged from a same-quantizer rebuild on the union")
     assert(appended.nonEmpty)
@@ -318,7 +319,7 @@ class Round8Spec extends SparkSpec {
     import graft.operators.Similarity
     val e = graft.sources.Tables.embeddings(spark, sf)
     val dir = tmpDir("graft_ivf_health")
-    Similarity.writeIvfIndex(e, dir, numCentroids = 8)
+    Similarity.build(Tier.IvfTrained, dir, e, Build(8))
     val fresh = Similarity.indexHealth(spark, dir)
     assert(math.abs(fresh.drift) < 1e-9 && fresh.growth === 1.0)
     assert(!fresh.shouldRecluster())
@@ -327,7 +328,7 @@ class Round8Spec extends SparkSpec {
     // property, tested as advertised
     val inDist = e.filter(col("vec_id") % 3 === 0)
       .withColumn("vec_id", col("vec_id") + 2000000L)
-    Similarity.appendToIvfIndex(spark, dir, inDist)
+    Similarity.append(spark, Tier.IvfTrained, dir, inDist)
     val mid = Similarity.indexHealth(spark, dir)
     assert(!mid.shouldRecluster(),
       s"in-distribution append tripped recluster: drift=${mid.drift} growth=${mid.growth}")
@@ -339,7 +340,7 @@ class Round8Spec extends SparkSpec {
     val shifted = e
       .withColumn("vec_id", col("vec_id") + 1000000L)
       .withColumn("embedding", transform(col("embedding"), x => -x))
-    Similarity.appendToIvfIndex(spark, dir, shifted)
+    Similarity.append(spark, Tier.IvfTrained, dir, shifted)
     val after = Similarity.indexHealth(spark, dir)
     assert(after.drift > mid.drift,
       s"negated batch should worsen drift: ${mid.drift} -> ${after.drift}")
