@@ -5,22 +5,33 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import java.awt.image.BufferedImage
+import javax.imageio.{IIOImage, ImageIO, ImageReader, ImageWriteParam}
+import javax.imageio.stream.{ImageInputStream, MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+import scala.util.control.NonFatal
+
 /** Multimodal-column plumbing: image/audio/video payloads are opaque
   * `binary` columns with typed metadata; decode / feature-extraction runs
   * per-partition over batches.
   *
   * The Spark-side contract is real and tested — schema, partitioning,
   * batch shape, deterministic output — and the decode seam holds REAL
-  * decoders for five real formats: [[decodePpm]] (binary netpbm P6),
+  * decoders for six real formats: [[decodePpm]] (binary netpbm P6),
   * [[decodeBmp]] (24-bit BI_RGB, bottom-up padded rows), [[decodeWav]]
-  * (RIFF 16-bit PCM), and since round 16 the JDK's `javax.imageio` for
-  * the COMPRESSED formats a real corpus actually ships — PNG
-  * (zlib/DEFLATE, lossless, pixel-exact gate) and baseline JPEG (DCT,
-  * lossy, dims + bounded-drift gate) — plus [[decodeAnyImage]]'s
-  * magic-sniff dispatch over all four image containers in one relation.
-  * Only video / compressed audio remain behind `fakeDecodeFeatures`
-  * (no codec in the JDK): swapping in an ffmpeg call changes ONE
-  * function, not the plan.
+  * (RIFF 16-bit PCM), and the JDK's `javax.imageio` for the COMPRESSED
+  * formats a real corpus actually ships — PNG (zlib/DEFLATE, lossless,
+  * pixel-exact gate), baseline JPEG (DCT, lossy, dims + bounded-drift
+  * gate) and animated GIF (the multi-frame container) — plus
+  * [[decodeAnyImage]]'s magic-sniff dispatch over the image containers in
+  * one relation. Only video / compressed audio remain behind
+  * `fakeDecodeFeatures` (no codec in the JDK): swapping in an ffmpeg call
+  * changes ONE function, not the plan.
+  *
+  * The seam is written once: [[perPayload]] is the one boundary between
+  * the relational plan and procedural code (a DataFrame enters, a
+  * per-payload function runs inside `mapPartitions`, a typed DataFrame
+  * comes out). Every payload builder and every extractor crosses it, and
+  * each container supplies only its own build, decode and reduce steps.
   *
   * Scale design: payloads never pass through a shuffle — metadata extraction
   * is expression-level on the scan, and feature extraction is mapPartitions
@@ -29,6 +40,106 @@ import org.apache.spark.sql.types._
   * metadata/feature columns, never on the blobs.
   */
 object Multimodal {
+
+  // ------------------------------------------------- the decode seam
+
+  /** The decode seam: select `media_id`, `payload` and the `side`
+    * columns, run `f` on each payload inside `mapPartitions` (payloads
+    * never shuffle; only the narrow rows `f` returns leave the scan) and
+    * type the rows by `schema`. `f` gets the id, the payload and the
+    * selected row (for side columns). A NULL payload reaches `f` as empty
+    * bytes — the one place that convention lives, so no decoder or
+    * reducer can NPE a task on a NULL cell. */
+  private def perPayload(media: DataFrame, schema: StructType, side: String*)(
+      f: (Long, Array[Byte], Row) => Seq[Row]): DataFrame = {
+    val rows = media.select(("media_id" +: "payload" +: side).map(col): _*).rdd
+      .mapPartitions(_.flatMap { r =>
+        f(r.getLong(0), if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1), r)
+      })
+    media.sparkSession.createDataFrame(rows, schema)
+  }
+
+  /** The row of a payload its decoder rejected: `id`, the `known` leading
+    * values, then -1 (false for a flag) in every remaining column of
+    * `schema` — kept visible, never silently dropped. */
+  private def rejected(schema: StructType, id: Long, known: Any*): Row =
+    Row.fromSeq(id +: known ++: schema.drop(1 + known.length).map(f =>
+      if (f.dataType == BooleanType) false else -1L))
+
+  /** One non-null BIGINT column per name. */
+  private def longSchema(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType, nullable = false)))
+
+  private val payloadSchema = longSchema("media_id").add("payload", BinaryType, nullable = false)
+
+  /** Wrap each doc's bytes into the container payload `build` makes,
+    * through [[perPayload]]: a real encoder is imperative per payload, and
+    * payloads are created and consumed per partition without ever crossing
+    * a shuffle. A NULL text builds from empty bytes. Each `side` column is
+    * a BIGINT computed from the same bytes. */
+  private def asPayloads(docs: DataFrame, build: Array[Byte] => Array[Byte],
+                         side: (String, Array[Byte] => Long)*): DataFrame = {
+    val schema = StructType(payloadSchema ++ longSchema(side.map(_._1): _*))
+    perPayload(docs.select(col("doc_id").as("media_id"),
+      col("text").cast("binary").as("payload")), schema) { (id, bytes, _) =>
+      Seq(Row.fromSeq(id +: build(bytes) +: side.map(_._2(bytes))))
+    }
+  }
+
+  // ------------------------------------------------- the oracles' seam
+
+  /** The hex-twin prefix every decode oracle shares: CTE `b` holds each
+    * doc's payload bytes as the hex string `hx` (two chars per byte — the
+    * byte view Spark's `cast("binary")` sees, even for multi-byte UTF-8)
+    * and their count `n`; a NULL text is the empty payload, as on the Spark
+    * side. CTE `name` selects `cols`, then the first `(n // unit) * unit`
+    * bytes (the builder's whole units; all `n` bytes for unit 1) as the
+    * BIGINT list `bs`. `p` prefixes both CTE names. */
+  private def hexBytesCtes(name: String, cols: String, unit: Int, p: String = ""): String = {
+    val upto = if (unit == 1) "n" else s"(n // $unit) * $unit"
+    s"""${p}b AS (
+       |  SELECT doc_id AS media_id, COALESCE(hex(encode(text)), '') AS hx,
+       |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n
+       |  FROM documents
+       |), $p$name AS (
+       |  SELECT media_id, $cols
+       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
+       |          FOR x IN range(1, CAST($upto AS INTEGER) + 1)] AS bs
+       |  FROM ${p}b
+       |)""".stripMargin
+  }
+
+  /** [[hexBytesCtes]] cut to whole 2-channel s16le frames (`d`: `m`
+    * bytes), then the signed sample list `ss` (the ≥ 2¹⁵ fold) with the
+    * frame count named `frames` — the WAV builder's rule, shared by the
+    * audio twins. */
+  private def s16Ctes(frames: String): String =
+    s"""${hexBytesCtes("d", "(n // 4) * 4 AS m,", 4)}, s AS (
+       |  SELECT media_id, m // 4 AS $frames,
+       |         [CASE WHEN bs[2*j - 1] + 256 * bs[2*j] >= 32768
+       |               THEN bs[2*j - 1] + 256 * bs[2*j] - 65536
+       |               ELSE bs[2*j - 1] + 256 * bs[2*j] END
+       |          FOR j IN range(1, CAST(m // 2 AS INTEGER) + 1)] AS ss
+       |  FROM d
+       |)""".stripMargin
+
+  /** `expr` as BIGINT, or -1 for an image of height `h` = 0 (the builder
+    * made no decodable image). */
+  private def guarded(expr: String) = s"CAST(CASE WHEN h = 0 THEN -1 ELSE $expr END AS BIGINT)"
+
+  /** The guarded width/height/n_pixels select items of a `w`-wide rule
+    * image. */
+  private def guardedDims(w: Int): String =
+    s"""${guarded(w.toString)} AS width,
+       |       ${guarded("h")} AS height,
+       |       ${guarded(s"h * $w")} AS n_pixels,""".stripMargin
+
+  /** Guarded sum of triplet channel `o` (the byte at 3i - (2 - o)) over
+    * the `w`·h pixels. */
+  private def chanSum(o: Int, w: Int) = guarded(
+    s"COALESCE(list_sum([bs[3*i - ${2 - o}] FOR i IN range(1, CAST(h * $w AS INTEGER) + 1)]), 0)")
+
+  // ------------------------------------------------- opaque payloads
 
   /** Treat document text as an opaque payload (the container has no real
     * media files; byte semantics are identical). */
@@ -78,20 +189,12 @@ object Multimodal {
     out
   }
 
-  private val featureSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("features", ArrayType(FloatType, containsNull = false), nullable = false)))
+  private val featureSchema = longSchema("media_id")
+    .add("features", ArrayType(FloatType, containsNull = false), nullable = false)
 
   /** Per-partition batched "decode" → fixed-width feature vectors. */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        Row(r.getLong(0), fakeDecodeFeatures(r.getAs[Array[Byte]](1)).toSeq)
-      }
-    }
-    spark.createDataFrame(rows, featureSchema)
-  }
+  def extractFeatures(media: DataFrame): DataFrame =
+    perPayload(media, featureSchema)((id, p, _) => Seq(Row(id, fakeDecodeFeatures(p).toSeq)))
 
   // ------------------------------------------------- real byte features
 
@@ -120,51 +223,32 @@ object Multimodal {
     (hist, sum, h)
   }
 
-  private val byteFeatureSchema = StructType(
-    Seq(StructField("media_id", LongType, nullable = false),
-      StructField("byte_length", LongType, nullable = false),
-      StructField("sum_bytes", LongType, nullable = false),
-      StructField("phash", LongType, nullable = false)) ++
-      (0 until 16).map(i => StructField(s"h$i", LongType, nullable = false)))
+  private val byteFeatureSchema =
+    longSchema(Seq("media_id", "byte_length", "sum_bytes", "phash") ++ (0 until 16).map(i => s"h$i"): _*)
 
   /** Per-partition batched feature extraction — payloads never shuffle;
     * the narrow feature rows do. */
-  def extractByteFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        val (hist, sum, h) = byteFeatures(payload)
-        Row.fromSeq(r.getLong(0) +: payload.length.toLong +: sum +: h +: hist.toSeq)
-      }
+  def extractByteFeatures(media: DataFrame): DataFrame =
+    perPayload(media, byteFeatureSchema) { (id, payload, _) =>
+      val (hist, sum, h) = byteFeatures(payload)
+      Seq(Row.fromSeq(id +: payload.length.toLong +: sum +: h +: hist.toSeq))
     }
-    spark.createDataFrame(rows, byteFeatureSchema)
-  }
 
   /** Gated query: byte features over every document payload. */
   def featuresFromDir(spark: SparkSession, dir: String): DataFrame =
     extractByteFeatures(asBinaryPayloads(Tables.documents(spark, dir)))
       .orderBy(col("media_id"))
 
-  /** DuckDB twin: the payload's bytes via hex expansion (two hex chars per
-    * byte — same byte view as the metadata oracle), histogram bins by
-    * high nibble, the hash via the same list_reduce fold shape as
+  /** DuckDB twin: the payload's bytes via hex expansion (same byte view as
+    * the metadata oracle), histogram bins by high nibble, the hash via the
+    * same list_reduce fold shape as
     * [[graft.functions.Fingerprint.fingerprintSql]], seeded 0 so an empty
     * payload folds to 0 like the imperative loop. Sums cast back to
     * BIGINT (DuckDB aggregates BIGINT into HUGEINT). */
   val byteFeaturesOracle: String = {
     val bins = (0 until 16).map(i =>
       s"CAST(len(list_filter(bs, v -> v // 16 = $i)) AS BIGINT) AS h$i").mkString(",\n       ")
-    s"""WITH b AS (
-       |  SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-       |         CAST(octet_length(encode(text)) AS BIGINT) AS n
-       |  FROM documents
-       |), bytes AS (
-       |  SELECT media_id, n,
-       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
-       |          FOR x IN range(1, CAST(n AS INTEGER) + 1)] AS bs
-       |  FROM b
-       |)
+    s"""WITH ${hexBytesCtes("bytes", "n,", 1)}
        |SELECT media_id, n AS byte_length,
        |       CAST(COALESCE(list_sum(bs), 0) AS BIGINT) AS sum_bytes,
        |       list_reduce(list_prepend(CAST(0 AS BIGINT), bs),
@@ -303,8 +387,8 @@ object Multimodal {
     * expressions on the scan (binary concat + substr; no shuffle), so the
     * decoder downstream faces a genuine header it must actually parse. */
   def asPpmPayloads(docs: DataFrame): DataFrame = {
-    // a NULL text builds from empty bytes (the asBmpPayloads/asWavPayloads
-    // convention): the decoder sees a valid 8×0 header, not a NULL payload
+    // a NULL text builds from empty bytes (the asPayloads convention): the
+    // decoder sees a valid 8×0 header, not a NULL payload
     val bin = coalesce(col("text"), lit("")).cast("binary")
     val h = floor(length(bin) / lit(24)).cast("int")
     docs.select(col("doc_id").as("media_id"),
@@ -313,49 +397,42 @@ object Multimodal {
       col("source"), lit("image/x-portable-pixmap").as("mime"))
   }
 
-  private val ppmFeatureSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("n_pixels", LongType, nullable = false),
-    StructField("r_sum", LongType, nullable = false),
-    StructField("g_sum", LongType, nullable = false),
-    StructField("b_sum", LongType, nullable = false)))
-
-  /** Decode P6 payloads per partition (payloads never shuffle; only the
-    * 7-long feature rows do) and reduce each image to exact integer
-    * channel statistics from the ACTUAL pixel layout — R/G/B sums walk
-    * the triplet structure the header declared, which is what makes this
-    * a decode gate rather than a byte-fold gate. A payload the decoder
-    * rejects reports width = -1 (kept visible, never silently dropped). */
-  def extractPpmFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        decodePpm(r.getAs[Array[Byte]](1)) match {
-          case Some(img) =>
-            var rs = 0L; var gs = 0L; var bs = 0L
-            var p = 0
-            while (p < img.pixels.length) {
-              rs += img.pixels(p) & 0xff
-              gs += img.pixels(p + 1) & 0xff
-              bs += img.pixels(p + 2) & 0xff
-              p += 3
-            }
-            Row(r.getLong(0), img.width.toLong, img.height.toLong,
-              img.width.toLong * img.height, rs, gs, bs)
-          case None => Row(r.getLong(0), -1L, -1L, -1L, -1L, -1L, -1L)
-        }
-      }
+  /** Exact R, G, B sums over an RGB-triplet plane. */
+  private def rgbSums(px: Array[Byte]): (Long, Long, Long) = {
+    var rs = 0L; var gs = 0L; var bs = 0L
+    var p = 0
+    while (p < px.length) {
+      rs += px(p) & 0xff
+      gs += px(p + 1) & 0xff
+      bs += px(p + 2) & 0xff
+      p += 3
     }
-    spark.createDataFrame(rows, ppmFeatureSchema)
+    (rs, gs, bs)
   }
+
+  private val rgbFeatureSchema =
+    longSchema("media_id", "width", "height", "n_pixels", "r_sum", "g_sum", "b_sum")
+
+  /** Decode image payloads of any container ([[decodeAnyImage]]) per
+    * partition (payloads never shuffle; only the 7-long feature rows do)
+    * and reduce each image to exact integer channel statistics from the
+    * ACTUAL pixel layout — R/G/B sums walk the triplet structure the
+    * header declared, which is what makes this a decode gate rather than a
+    * byte-fold gate. A payload the decoder rejects reports width = -1
+    * (kept visible, never silently dropped). */
+  def extractRgbFeatures(media: DataFrame): DataFrame =
+    perPayload(media, rgbFeatureSchema) { (id, p, _) =>
+      Seq(decodeAnyImage(p).fold(rejected(rgbFeatureSchema, id)) { img =>
+        val (rs, gs, bs) = rgbSums(img.pixels)
+        Row(id, img.width.toLong, img.height.toLong, img.width.toLong * img.height, rs, gs, bs)
+      })
+    }
 
   /** Gated query `multimodal_decode`: real P6 payloads built from every
     * doc, decoded through the mapPartitions seam, reduced to integer
     * channel sums. */
   def decodeGateFromDir(spark: SparkSession, dir: String): DataFrame =
-    extractPpmFeatures(asPpmPayloads(Tables.documents(spark, dir)))
+    extractRgbFeatures(asPpmPayloads(Tables.documents(spark, dir)))
       .orderBy(col("media_id"))
 
   /** DuckDB twin: recomputes the expected decode output from the builder's
@@ -364,16 +441,7 @@ object Multimodal {
     * pattern). A decoder that mis-parses the header or mis-strides the
     * triplets cannot hash-match this. */
   val decodeOracle: String =
-    s"""WITH b AS (
-       |  SELECT doc_id AS media_id, COALESCE(hex(encode(text)), '') AS hx,
-       |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n
-       |  FROM documents
-       |), px AS (
-       |  SELECT media_id, n // 24 AS h, (n // 24) * 8 AS npix,
-       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
-       |          FOR x IN range(1, CAST((n // 24) * 24 AS INTEGER) + 1)] AS bs
-       |  FROM b
-       |)
+    s"""WITH ${hexBytesCtes("px", "n // 24 AS h, (n // 24) * 8 AS npix,", 24)}
        |SELECT media_id, CAST(8 AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
        |       CAST(npix AS BIGINT) AS n_pixels,
        |       CAST(COALESCE(list_sum([bs[3*i - 2] FOR i IN range(1, CAST(npix AS INTEGER) + 1)]), 0) AS BIGINT) AS r_sum,
@@ -390,6 +458,7 @@ object Multimodal {
     * fold. */
   final case class BmpImage(width: Int, height: Int, pixels: Array[Byte])
 
+  // little-endian fields of the BMP and WAV headers
   private def putU16(b: Array[Byte], off: Int, v: Int): Unit = {
     b(off) = (v & 0xff).toByte; b(off + 1) = ((v >> 8) & 0xff).toByte
   }
@@ -397,6 +466,10 @@ object Multimodal {
     var i = 0
     while (i < 4) { b(off + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
   }
+  private def u16(b: Array[Byte], off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
+  private def u32(b: Array[Byte], off: Int): Long =
+    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
+      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
 
   /** Build a REAL binary BMP from raw bytes: BITMAPFILEHEADER +
     * 40-byte BITMAPINFOHEADER (little-endian fields), then the pixel
@@ -438,16 +511,12 @@ object Multimodal {
     * image-order rows. None for anything malformed. */
   def decodeBmp(payload: Array[Byte]): Option[BmpImage] = {
     if (payload == null) return None // a null cell must reject, not NPE a task
-    def u16(off: Int) = (payload(off) & 0xff) | ((payload(off + 1) & 0xff) << 8)
-    def u32(off: Int): Long =
-      (payload(off) & 0xffL) | ((payload(off + 1) & 0xffL) << 8) |
-        ((payload(off + 2) & 0xffL) << 16) | ((payload(off + 3) & 0xffL) << 24)
     if (payload.length < 54 || payload(0) != 'B' || payload(1) != 'M') None
     else {
-      val dataOffset = u32(10)
-      val biSize = u32(14)
-      val width = u32(18).toInt  // reinterpret as s32le
-      val height = u32(22).toInt // negative = top-down: unsupported, reject
+      val dataOffset = u32(payload, 10)
+      val biSize = u32(payload, 14)
+      val width = u32(payload, 18).toInt  // reinterpret as s32le
+      val height = u32(payload, 22).toInt // negative = top-down: unsupported, reject
       // the pixel-plane bound FIRST, before any size arithmetic: both w
       // and h are < 2^31 here, so w.toLong*h cannot overflow — whereas
       // stride*height and w.toLong*h*3 both CAN (w=h≈1.76e9 wraps them
@@ -456,8 +525,8 @@ object Multimodal {
       // ADVICE caught). With this guard holding, stride ≤ 3w+3 and
       // need ≤ 3wh+3h ≈ 8.6e9 stay comfortably inside Long, and
       // rowBytes·height = 3wh fits Int by construction.
-      if (biSize < 40 || u16(26) != 1 || u16(28) != 24 || u32(30) != 0 ||
-        width <= 0 || height <= 0 ||
+      if (biSize < 40 || u16(payload, 26) != 1 || u16(payload, 28) != 24 ||
+        u32(payload, 30) != 0 || width <= 0 || height <= 0 ||
         width.toLong * height > Int.MaxValue / 3) None
       else {
         val stride = (width.toLong * 3 + 3) / 4 * 4
@@ -487,32 +556,13 @@ object Multimodal {
   }
 
   /** Wrap each doc's bytes into a real BMP payload (width 5 → odd
-    * stride, so every row carries a pad byte). Built imperatively in
-    * the same per-partition seam the decoder runs in — payloads are
-    * created and consumed without ever crossing a shuffle. */
-  def asBmpPayloads(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    val rows = docs.select(col("doc_id"), col("text").cast("binary")).rdd
-      .mapPartitions { it =>
-        it.map { r =>
-          // a null text casts to a null binary; build the header-only BMP
-          // (height 0) the decoder REJECTS — visible as a -1 row, never an
-          // executor-killing NPE
-          val bytes =
-            if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
-          Row(r.getLong(0), buildBmp(bytes))
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
+    * stride, so every row carries a pad byte). A NULL or sub-row text
+    * builds the header-only BMP (height 0) the decoder REJECTS — visible
+    * as a -1 row. */
+  def asBmpPayloads(docs: DataFrame): DataFrame = asPayloads(docs, buildBmp(_))
 
-  private val bmpFeatureSchema = StructType(
-    Seq("media_id", "width", "height", "n_pixels",
-      "b_sum", "g_sum", "r_sum", "row_weighted")
-      .map(StructField(_, LongType, nullable = false)))
+  private val bmpFeatureSchema = longSchema(
+    "media_id", "width", "height", "n_pixels", "b_sum", "g_sum", "r_sum", "row_weighted")
 
   /** Decode BMP payloads per partition and reduce each image to exact
     * integer statistics of the ACTUAL pixel layout: per-channel sums
@@ -521,39 +571,32 @@ object Multimodal {
     * decoder ignoring the bottom-up file order (plain channel sums are
     * row-order-invariant and would not). Rejected payloads report -1,
     * kept visible. */
-  def extractBmpFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        decodeBmp(r.getAs[Array[Byte]](1)) match {
-          case Some(img) =>
-            var bs = 0L; var gs = 0L; var rs = 0L; var rw = 0L
-            val rowBytes = img.width * 3
-            var y = 0
-            while (y < img.height) {
-              val base = y * rowBytes
-              var j = 0; var rowSum = 0L
-              while (j < rowBytes) {
-                val v = img.pixels(base + j) & 0xff
-                rowSum += v
-                (j % 3: @annotation.switch) match {
-                  case 0 => bs += v
-                  case 1 => gs += v
-                  case _ => rs += v
-                }
-                j += 1
-              }
-              rw += (y + 1).toLong * rowSum
-              y += 1
+  def extractBmpFeatures(media: DataFrame): DataFrame =
+    perPayload(media, bmpFeatureSchema) { (id, p, _) =>
+      Seq(decodeBmp(p).fold(rejected(bmpFeatureSchema, id)) { img =>
+        var bs = 0L; var gs = 0L; var rs = 0L; var rw = 0L
+        val rowBytes = img.width * 3
+        var y = 0
+        while (y < img.height) {
+          val base = y * rowBytes
+          var j = 0; var rowSum = 0L
+          while (j < rowBytes) {
+            val v = img.pixels(base + j) & 0xff
+            rowSum += v
+            (j % 3: @annotation.switch) match {
+              case 0 => bs += v
+              case 1 => gs += v
+              case _ => rs += v
             }
-            Row(r.getLong(0), img.width.toLong, img.height.toLong,
-              img.width.toLong * img.height, bs, gs, rs, rw)
-          case None => Row(r.getLong(0), -1L, -1L, -1L, -1L, -1L, -1L, -1L)
+            j += 1
+          }
+          rw += (y + 1).toLong * rowSum
+          y += 1
         }
-      }
+        Row(id, img.width.toLong, img.height.toLong,
+          img.width.toLong * img.height, bs, gs, rs, rw)
+      })
     }
-    spark.createDataFrame(rows, bmpFeatureSchema)
-  }
 
   /** Gated query `multimodal_decode_bmp`: the decode seam's SECOND real
     * format through the same build → parse → exact-integer-statistics
@@ -568,37 +611,19 @@ object Multimodal {
     * rows of 15 bytes, channel c at in-row position ≡ c (mod 3), row
     * weight (y+1) for image row y = byte position ÷ 15. A decoder that
     * reads rows top-down, forgets the pad byte, or mis-strides channels
-    * cannot hash-match. Docs under 15 bytes build a height-0 BMP the
-    * decoder must REJECT (-1 row). */
-  val bmpDecodeOracle: String = {
-    def guarded(expr: String) = s"CAST(CASE WHEN h = 0 THEN -1 ELSE $expr END AS BIGINT)"
-    // channel o ∈ {0=B,1=G,2=R} lives at 1-based positions 3i-(2-o)
-    def chanSum(o: Int) = guarded(
-      s"COALESCE(list_sum([bs[3*i - ${2 - o}] FOR i IN range(1, CAST(h * 5 AS INTEGER) + 1)]), 0)")
-    // COALESCE: a NULL text builds from empty bytes on the Spark side
-    // (asBmpPayloads) → height-0 reject; the oracle must reach the same
-    // h = 0 → -1 row, not propagate NULL through n
-    s"""WITH b AS (
-       |  SELECT doc_id AS media_id, COALESCE(hex(encode(text)), '') AS hx,
-       |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n
-       |  FROM documents
-       |), px AS (
-       |  SELECT media_id, n // 15 AS h,
-       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
-       |          FOR x IN range(1, CAST((n // 15) * 15 AS INTEGER) + 1)] AS bs
-       |  FROM b
-       |)
+    * cannot hash-match. Docs under 15 bytes (a NULL text included) build
+    * a height-0 BMP the decoder must REJECT (-1 row). Channel o ∈
+    * {0=B,1=G,2=R} of the file's B,G,R order. */
+  val bmpDecodeOracle: String =
+    s"""WITH ${hexBytesCtes("px", "n // 15 AS h,", 15)}
        |SELECT media_id,
-       |       ${guarded("5")} AS width,
-       |       ${guarded("h")} AS height,
-       |       ${guarded("h * 5")} AS n_pixels,
-       |       ${chanSum(0)} AS b_sum,
-       |       ${chanSum(1)} AS g_sum,
-       |       ${chanSum(2)} AS r_sum,
+       |       ${guardedDims(5)}
+       |       ${chanSum(0, 5)} AS b_sum,
+       |       ${chanSum(1, 5)} AS g_sum,
+       |       ${chanSum(2, 5)} AS r_sum,
        |       ${guarded("COALESCE(list_sum([((j - 1) // 15 + 1) * bs[j] " +
              "FOR j IN range(1, CAST(h * 15 AS INTEGER) + 1)]), 0)")} AS row_weighted
        |FROM px ORDER BY media_id""".stripMargin
-  }
 
   // ------------------- third real format: WAV/PCM (1-D sample stream)
 
@@ -646,15 +671,11 @@ object Multimodal {
     * VALID (0 frames) per the format, unlike BMP's height-0 reject. */
   def decodeWav(payload: Array[Byte]): Option[WavAudio] = {
     if (payload == null) return None // a null cell must reject, not NPE a task
-    def u16(off: Int) = (payload(off) & 0xff) | ((payload(off + 1) & 0xff) << 8)
-    def u32(off: Int): Long =
-      (payload(off) & 0xffL) | ((payload(off + 1) & 0xffL) << 8) |
-        ((payload(off + 2) & 0xffL) << 16) | ((payload(off + 3) & 0xffL) << 24)
     def tag(off: Int): String = new String(payload, off, 4, "US-ASCII")
     if (payload.length < 12 || tag(0) != "RIFF" || tag(8) != "WAVE") None
-    else if (u32(4) + 8 > payload.length) None // truncated vs declared size
+    else if (u32(payload, 4) + 8 > payload.length) None // truncated vs declared size
     else {
-      val end = (u32(4) + 8).toInt // ≤ payload.length, so Int-safe
+      val end = (u32(payload, 4) + 8).toInt // ≤ payload.length, so Int-safe
       var off = 12L
       var channels = 0
       var dataStart = -1L
@@ -662,17 +683,17 @@ object Multimodal {
       var bad = false
       while (!bad && off + 8 <= end) {
         val id = tag(off.toInt)
-        val sz = u32(off.toInt + 4)
-        val body = off + 8
+        val sz = u32(payload, off.toInt + 4)
+        val body = off.toInt + 8
         if (sz > end - body) bad = true // chunk overruns the envelope
         else {
           if (id == "fmt ") {
             // canonical PCM fmt: format 1, ≥1 channel, 16-bit samples,
             // self-consistent block alignment
-            if (sz < 16 || u16(body.toInt) != 1 || u16(body.toInt + 2) < 1 ||
-              u16(body.toInt + 14) != 16 ||
-              u16(body.toInt + 12) != u16(body.toInt + 2) * 2) bad = true
-            else channels = u16(body.toInt + 2)
+            if (sz < 16 || u16(payload, body) != 1 || u16(payload, body + 2) < 1 ||
+              u16(payload, body + 14) != 16 ||
+              u16(payload, body + 12) != u16(payload, body + 2) * 2) bad = true
+            else channels = u16(payload, body + 2)
           } else if (id == "data") {
             dataStart = body; dataLen = sz
           } // unknown chunks (LIST, cue, ...) skip — the container allows them
@@ -686,8 +707,7 @@ object Multimodal {
         val samples = new Array[Short](n)
         var i = 0
         while (i < n) {
-          val b = dataStart.toInt + 2 * i
-          samples(i) = ((payload(b) & 0xff) | (payload(b + 1) << 8)).toShort
+          samples(i) = u16(payload, dataStart.toInt + 2 * i).toShort
           i += 1
         }
         Some(WavAudio(channels, samples))
@@ -695,30 +715,12 @@ object Multimodal {
     }
   }
 
-  /** Wrap each doc's bytes into a real WAV payload — built imperatively
-    * in the same per-partition seam the decoder runs in (payloads never
-    * cross a shuffle), like [[asBmpPayloads]]. */
-  def asWavPayloads(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    val rows = docs.select(col("doc_id"), col("text").cast("binary")).rdd
-      .mapPartitions { it =>
-        it.map { r =>
-          // a null text casts to a null binary; build the header-only WAV
-          // (0 frames — valid, all-zero stats) instead of NPE-ing a task
-          val bytes =
-            if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
-          Row(r.getLong(0), buildWav(bytes))
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
+  /** Wrap each doc's bytes into a real WAV payload. A NULL text builds
+    * the header-only WAV (0 frames — valid, all-zero stats). */
+  def asWavPayloads(docs: DataFrame): DataFrame = asPayloads(docs, buildWav(_))
 
-  private val wavFeatureSchema = StructType(
-    Seq("media_id", "channels", "n_frames", "ch0_sum", "ch1_sum", "peak_abs")
-      .map(StructField(_, LongType, nullable = false)))
+  private val wavFeatureSchema =
+    longSchema("media_id", "channels", "n_frames", "ch0_sum", "ch1_sum", "peak_abs")
 
   /** Decode WAV payloads per partition and reduce each stream to exact
     * integer statistics of the ACTUAL sample layout: per-channel sums
@@ -727,33 +729,25 @@ object Multimodal {
     * signedness-sensitive statistic that catches a decoder reading
     * s16le as unsigned (sums alone could compensate across positive and
     * negative errors). Rejected payloads report -1, kept visible. */
-  def extractWavFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        decodeWav(r.getAs[Array[Byte]](1)) match {
-          case Some(w) =>
-            var s0 = 0L; var s1 = 0L; var peak = 0L
-            var i = 0
-            while (i < w.samples.length) {
-              val v = w.samples(i).toLong
-              (i % w.channels: @annotation.switch) match {
-                case 0 => s0 += v
-                case 1 => s1 += v
-                case _ => ()
-              }
-              val a = math.abs(v)
-              if (a > peak) peak = a
-              i += 1
-            }
-            Row(r.getLong(0), w.channels.toLong,
-              (w.samples.length / w.channels).toLong, s0, s1, peak)
-          case None => Row(r.getLong(0), -1L, -1L, -1L, -1L, -1L)
+  def extractWavFeatures(media: DataFrame): DataFrame =
+    perPayload(media, wavFeatureSchema) { (id, p, _) =>
+      Seq(decodeWav(p).fold(rejected(wavFeatureSchema, id)) { w =>
+        var s0 = 0L; var s1 = 0L; var peak = 0L
+        var i = 0
+        while (i < w.samples.length) {
+          val v = w.samples(i).toLong
+          (i % w.channels: @annotation.switch) match {
+            case 0 => s0 += v
+            case 1 => s1 += v
+            case _ => ()
+          }
+          val a = math.abs(v)
+          if (a > peak) peak = a
+          i += 1
         }
-      }
+        Row(id, w.channels.toLong, (w.samples.length / w.channels).toLong, s0, s1, peak)
+      })
     }
-    spark.createDataFrame(rows, wavFeatureSchema)
-  }
 
   /** Gated query `multimodal_decode_wav`: the decode seam's THIRD real
     * format — and its first 1-D SAMPLE STREAM: RIFF chunk walk,
@@ -771,23 +765,7 @@ object Multimodal {
     * decoder that mis-strides the interleave or reads samples unsigned
     * cannot hash-match. */
   val wavDecodeOracle: String =
-    s"""WITH b AS (
-       |  SELECT doc_id AS media_id, COALESCE(hex(encode(text)), '') AS hx,
-       |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n
-       |  FROM documents
-       |), d AS (
-       |  SELECT media_id, (n // 4) * 4 AS m,
-       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
-       |          FOR x IN range(1, CAST((n // 4) * 4 AS INTEGER) + 1)] AS bs
-       |  FROM b
-       |), s AS (
-       |  SELECT media_id, m // 4 AS n_frames,
-       |         [CASE WHEN bs[2*j - 1] + 256 * bs[2*j] >= 32768
-       |               THEN bs[2*j - 1] + 256 * bs[2*j] - 65536
-       |               ELSE bs[2*j - 1] + 256 * bs[2*j] END
-       |          FOR j IN range(1, CAST(m // 2 AS INTEGER) + 1)] AS ss
-       |  FROM d
-       |)
+    s"""WITH ${s16Ctes("n_frames")}
        |SELECT media_id, CAST(2 AS BIGINT) AS channels,
        |       CAST(n_frames AS BIGINT) AS n_frames,
        |       CAST(COALESCE(list_sum([ss[2*i - 1]
@@ -812,71 +790,93 @@ object Multimodal {
     * 300 MB. */
   val ImageIoMaxPixels: Long = 100000000L
 
+  /** The one ImageIO stream-open site: `payload` as an in-memory
+    * `MemoryCacheImageInputStream` (`ImageIO.createImageInputStream`
+    * would, under ImageIO's default disk cache, spool every payload
+    * through a temp file), handed with the first reader that claims it to
+    * `read`, which sets the reader's input mode and guards. None for an
+    * empty payload, bytes no reader claims, or anything ImageIO throws
+    * (truncated stream, bad magic, unsupported type) — corrupt payloads
+    * reject, never mis-sum. Reader and stream are always released. */
+  private def withImageReader[T](payload: Array[Byte])(
+      read: (ImageReader, ImageInputStream) => Option[T]): Option[T] = {
+    if (payload == null || payload.length == 0) return None
+    val iis = new MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(payload))
+    var reader: ImageReader = null
+    try {
+      val readers = ImageIO.getImageReaders(iis)
+      if (!readers.hasNext) None
+      else {
+        reader = readers.next()
+        read(reader, iis)
+      }
+    } catch { case NonFatal(_) => None }
+    finally {
+      if (reader != null) reader.dispose()
+      try iis.close() catch { case _: java.io.IOException => () }
+    }
+  }
+
+  /** Image `f` of `reader` (header dims `w`×`h`, already guarded)
+    * normalized to sRGB triplets through `getRGB` — per-pixel, fine at
+    * gate scale; a production hot path would read the raster's backing
+    * buffer per image type. */
+  private def readRgb(reader: ImageReader, f: Int, w: Int, h: Int): RgbImage = {
+    val img = reader.read(f)
+    val px = new Array[Byte](w * h * 3)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val rgb = img.getRGB(x, y)
+        val p = (y * w + x) * 3
+        px(p) = ((rgb >> 16) & 0xff).toByte
+        px(p + 1) = ((rgb >> 8) & 0xff).toByte
+        px(p + 2) = (rgb & 0xff).toByte
+        x += 1
+      }
+      y += 1
+    }
+    RgbImage(w, h, px)
+  }
+
   /** REAL PNG/JPEG decode through the JDK's `javax.imageio` (java.desktop
     * — standard library, present on every executor JVM, fully headless
     * for raster work): PNG is a genuine DEFLATE/zlib codec, JPEG a
     * genuine DCT codec — the first COMPRESSED formats behind the decode
     * seam, closing the "a real multimodal corpus is mostly JPEG" gap
     * that PPM/BMP/WAV (hand-parsed uncompressed layouts) left open.
-    *
-    * Dimensions are validated from the header via the ImageReader API
-    * BEFORE any pixel decode (see [[ImageIoMaxPixels]]); pixels are
-    * normalized to sRGB triplets through `getRGB` — per-pixel, fine at
-    * gate scale; a production hot path would read the raster's backing
-    * buffer per image type. None for anything ImageIO rejects
-    * (truncated stream, bad magic, unsupported type) — corrupt payloads
-    * reject, never mis-sum. */
-  def decodeImageIo(payload: Array[Byte]): Option[RgbImage] = {
-    if (payload == null || payload.length == 0) return None
-    var iis: javax.imageio.stream.ImageInputStream = null
-    var reader: javax.imageio.ImageReader = null
-    try {
-      iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      if (!readers.hasNext) None
-      else {
-        reader = readers.next()
-        reader.setInput(iis, true, true)
-        val w = reader.getWidth(0); val h = reader.getHeight(0)
-        if (w <= 0 || h <= 0 || w.toLong * h > ImageIoMaxPixels) None
-        else {
-          val img = reader.read(0)
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              val p = (y * w + x) * 3
-              px(p) = ((rgb >> 16) & 0xff).toByte
-              px(p + 1) = ((rgb >> 8) & 0xff).toByte
-              px(p + 2) = (rgb & 0xff).toByte
-              x += 1
-            }
-            y += 1
-          }
-          Some(RgbImage(w, h, px))
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally {
-      if (reader != null) reader.dispose()
-      if (iis != null) try iis.close() catch { case _: java.io.IOException => () }
+    * Reads image 0 ONLY; dimensions are validated from the header via
+    * the ImageReader API BEFORE any pixel decode (see
+    * [[ImageIoMaxPixels]]). */
+  def decodeImageIo(payload: Array[Byte]): Option[RgbImage] =
+    withImageReader(payload) { (reader, iis) =>
+      reader.setInput(iis, true, true)
+      val w = reader.getWidth(0); val h = reader.getHeight(0)
+      if (w <= 0 || h <= 0 || w.toLong * h > ImageIoMaxPixels) None
+      else Some(readRgb(reader, 0, w, h))
     }
+
+  /** Encode through an in-memory `MemoryCacheImageOutputStream` (the
+    * default `ImageIO.createImageOutputStream` spools through a temp
+    * file): `write` gets the open stream; the bytes are taken after it
+    * closes. */
+  private def imageIoBytes(write: MemoryCacheImageOutputStream => Unit): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val ios = new MemoryCacheImageOutputStream(bos)
+    try write(ios) finally ios.close()
+    bos.toByteArray
   }
 
   /** Build a `BufferedImage` from raw bytes under the PPM builder's rule
     * — 8-wide, h = ⌊n/24⌋ rows, pixel k's R,G,B = bytes 3k..3k+2 — or
     * None when the bytes fill no complete row (BufferedImage cannot
-    * represent height 0; the empty payload downstream rejects, the
-    * asBmpPayloads convention). */
-  private def buildRuleImage(data: Array[Byte], width: Int = 8): Option[java.awt.image.BufferedImage] = {
+    * represent height 0; the empty payload downstream rejects). */
+  private def buildRuleImage(data: Array[Byte], width: Int = 8): Option[BufferedImage] = {
     val h = data.length / (width * 3)
     if (h == 0) None
     else {
-      val img = new java.awt.image.BufferedImage(
-        width, h, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+      val img = new BufferedImage(width, h, BufferedImage.TYPE_3BYTE_BGR)
       var k = 0
       while (k < width * h) {
         val r = data(3 * k) & 0xff
@@ -889,120 +889,59 @@ object Multimodal {
     }
   }
 
-  private def encodeImageIo(img: java.awt.image.BufferedImage, fmt: String): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    require(javax.imageio.ImageIO.write(img, fmt, bos), s"no ImageIO writer for $fmt")
-    bos.toByteArray
+  /** Gray mass (Σ r+g+b) of the bytes [[buildRuleImage]] uses — 0 when
+    * they fill no row. */
+  private def ruleGraySum(bytes: Array[Byte]): Long = {
+    var gs = 0L
+    var i = 0
+    val used = (bytes.length / 24) * 24
+    while (i < used) { gs += bytes(i) & 0xff; i += 1 }
+    gs
   }
 
   /** Wrap each doc's bytes into a REAL PNG (RFC 2083: zlib/DEFLATE
     * pixel stream, CRC-checked chunks) under the SAME pixel rule as
     * [[asPpmPayloads]] — PNG is lossless, so the decoded raster must
     * equal the rule's bytes EXACTLY, which is what lets the DuckDB twin
-    * oracle the decode without understanding DEFLATE. Built in the
-    * mapPartitions seam (a real encoder is imperative per payload);
-    * docs under one row (n < 24) emit an EMPTY payload the decoder
-    * rejects (-1 row, kept visible). */
-  def asPngPayloads(docs: DataFrame): DataFrame =
-    asImageIoPayloads(docs, "png", "image/png")
+    * oracle the decode without understanding DEFLATE. Docs under one row
+    * (n < 24) emit an EMPTY payload the decoder rejects (-1 row, kept
+    * visible). */
+  def asPngPayloads(docs: DataFrame): DataFrame = asImageIoPayloads(docs, "png")
 
   /** [[asPngPayloads]]'s lossy sibling: a REAL JPEG (ITU T.81 baseline
     * DCT, the JDK encoder's default quality) under the same pixel rule. */
-  def asJpegPayloads(docs: DataFrame): DataFrame =
-    asImageIoPayloads(docs, "jpg", "image/jpeg")
+  def asJpegPayloads(docs: DataFrame): DataFrame = asImageIoPayloads(docs, "jpg")
 
-  private def asImageIoPayloads(docs: DataFrame, fmt: String, mime: String): DataFrame = {
-    val spark = docs.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("src_gray_sum", LongType, nullable = false)))
-    val rows = docs.select(col("doc_id"), col("text").cast("binary")).rdd
-      .mapPartitions { it =>
-        it.map { r =>
-          val bytes =
-            if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
-          buildRuleImage(bytes) match {
-            case Some(img) =>
-              // the rule bytes' gray mass rides beside the payload so the
-              // lossy (JPEG) gate can bound decode error without re-reading
-              // the source text downstream
-              var gs = 0L
-              var i = 0
-              val used = (bytes.length / 24) * 24
-              while (i < used) { gs += bytes(i) & 0xff; i += 1 }
-              Row(r.getLong(0), encodeImageIo(img, fmt), gs)
-            case None => Row(r.getLong(0), Array.emptyByteArray, 0L)
-          }
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
-
-  /** Decode ImageIO payloads per partition, exact integer channel sums
-    * from the ACTUAL decoded raster — [[extractPpmFeatures]]'s contract
-    * over the compressed formats. Rejected payloads report -1. */
-  def extractImageIoFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        decodeImageIo(r.getAs[Array[Byte]](1)) match {
-          case Some(img) =>
-            var rs = 0L; var gs = 0L; var bs = 0L
-            var p = 0
-            while (p < img.pixels.length) {
-              rs += img.pixels(p) & 0xff
-              gs += img.pixels(p + 1) & 0xff
-              bs += img.pixels(p + 2) & 0xff
-              p += 3
-            }
-            Row(r.getLong(0), img.width.toLong, img.height.toLong,
-              img.width.toLong * img.height, rs, gs, bs)
-          case None => Row(r.getLong(0), -1L, -1L, -1L, -1L, -1L, -1L)
-        }
-      }
-    }
-    spark.createDataFrame(rows, ppmFeatureSchema)
-  }
+  /** The rule image encoded as `fmt`; the rule bytes' gray mass rides
+    * beside the payload as `src_gray_sum`, so the lossy (JPEG) gate can
+    * bound decode error without re-reading the source text downstream. */
+  private def asImageIoPayloads(docs: DataFrame, fmt: String): DataFrame =
+    asPayloads(docs, bytes => buildRuleImage(bytes).fold(Array.emptyByteArray)(img =>
+      imageIoBytes(ios => require(ImageIO.write(img, fmt, ios), s"no ImageIO writer for $fmt"))),
+      "src_gray_sum" -> (ruleGraySum _))
 
   /** Gated query `multimodal_decode_png`: build real PNGs (DEFLATE),
     * decode through javax.imageio, exact channel sums. Lossless
     * roundtrip ⇒ the sums equal the rule's — a decoder (or encoder)
     * corrupting any pixel cannot hash-match. */
   def pngGateFromDir(spark: SparkSession, dir: String): DataFrame =
-    extractImageIoFeatures(asPngPayloads(Tables.documents(spark, dir)))
+    extractRgbFeatures(asPngPayloads(Tables.documents(spark, dir)))
       .orderBy(col("media_id"))
 
   /** DuckDB twin of the PNG gate: [[decodeOracle]]'s rule — 8×⌊n/24⌋,
     * triplet-strided channel sums over the text hex — with the ONE
     * convention difference that h = 0 REJECTS (-1 row): BufferedImage
     * cannot hold zero rows, so sub-row docs ship an empty payload
-    * (where P6 validly encodes 8×0). */
-  val pngDecodeOracle: String = {
-    def guarded(expr: String) = s"CAST(CASE WHEN h = 0 THEN -1 ELSE $expr END AS BIGINT)"
-    // offset o ∈ {0=R,1=G,2=B}: the rule stores R,G,B at bytes 3k..3k+2
-    // (unlike the BMP twin, whose file order is B,G,R)
-    def chanSum(o: Int) = guarded(
-      s"COALESCE(list_sum([bs[3*i - ${2 - o}] FOR i IN range(1, CAST(h * 8 AS INTEGER) + 1)]), 0)")
-    s"""WITH b AS (
-       |  SELECT doc_id AS media_id, COALESCE(hex(encode(text)), '') AS hx,
-       |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n
-       |  FROM documents
-       |), px AS (
-       |  SELECT media_id, n // 24 AS h,
-       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
-       |          FOR x IN range(1, CAST((n // 24) * 24 AS INTEGER) + 1)] AS bs
-       |  FROM b
-       |)
+    * (where P6 validly encodes 8×0). Channel o ∈ {0=R,1=G,2=B}: the rule
+    * stores R,G,B at bytes 3k..3k+2 (unlike the BMP twin's B,G,R). */
+  val pngDecodeOracle: String =
+    s"""WITH ${hexBytesCtes("px", "n // 24 AS h,", 24)}
        |SELECT media_id,
-       |       ${guarded("8")} AS width,
-       |       ${guarded("h")} AS height,
-       |       ${guarded("h * 8")} AS n_pixels,
-       |       ${chanSum(0)} AS r_sum,
-       |       ${chanSum(1)} AS g_sum,
-       |       ${chanSum(2)} AS b_sum
+       |       ${guardedDims(8)}
+       |       ${chanSum(0, 8)} AS r_sum,
+       |       ${chanSum(1, 8)} AS g_sum,
+       |       ${chanSum(2, 8)} AS b_sum
        |FROM px ORDER BY media_id""".stripMargin
-  }
 
   /** Per-pixel gray-error budget for the JPEG gate: the decoded image's
     * total gray mass (Σ r+g+b) must sit within `JpegGrayTolPerPixel` ×
@@ -1015,12 +954,8 @@ object Multimodal {
     * worst case, not a tuned constant. */
   val JpegGrayTolPerPixel: Long = 24L
 
-  private val jpegFeatureSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("n_pixels", LongType, nullable = false),
-    StructField("gray_in_tol", BooleanType, nullable = false)))
+  private val jpegFeatureSchema = longSchema("media_id", "width", "height", "n_pixels")
+    .add("gray_in_tol", BooleanType, nullable = false)
 
   /** Gated query `multimodal_decode_jpeg`: build real JPEGs, decode
     * through javax.imageio, emit the EXACT-STABLE outputs — header
@@ -1029,44 +964,30 @@ object Multimodal {
     * Pixel-exact sums cannot gate a lossy codec cross-engine; dims +
     * bounded content drift is the honest contract (the pixel-exact
     * version of this gate is `multimodal_decode_png`). */
-  def jpegGateFromDir(spark: SparkSession, dir: String): DataFrame = {
-    val spark0 = spark
-    val media = asJpegPayloads(Tables.documents(spark, dir))
-    val rows = media.select(col("media_id"), col("payload"), col("src_gray_sum"))
-      .rdd.mapPartitions { it =>
-        it.map { r =>
-          decodeImageIo(r.getAs[Array[Byte]](1)) match {
-            case Some(img) =>
-              var g = 0L
-              var p = 0
-              while (p < img.pixels.length) { g += img.pixels(p) & 0xff; p += 1 }
-              val npix = img.width.toLong * img.height
-              val inTol = math.abs(g - r.getLong(2)) <= JpegGrayTolPerPixel * npix
-              Row(r.getLong(0), img.width.toLong, img.height.toLong, npix, inTol)
-            case None => Row(r.getLong(0), -1L, -1L, -1L, false)
-          }
-        }
-      }
-    spark0.createDataFrame(rows, jpegFeatureSchema).orderBy(col("media_id"))
-  }
+  def jpegGateFromDir(spark: SparkSession, dir: String): DataFrame =
+    perPayload(asJpegPayloads(Tables.documents(spark, dir)), jpegFeatureSchema,
+      "src_gray_sum") { (id, p, r) =>
+      Seq(decodeImageIo(p).fold(rejected(jpegFeatureSchema, id)) { img =>
+        val (rs, gs, bs) = rgbSums(img.pixels)
+        val npix = img.width.toLong * img.height
+        val inTol = math.abs(rs + gs + bs - r.getLong(2)) <= JpegGrayTolPerPixel * npix
+        Row(id, img.width.toLong, img.height.toLong, npix, inTol)
+      })
+    }.orderBy(col("media_id"))
 
   /** DuckDB twin of the JPEG gate: dimensions from the builder rule,
     * `gray_in_tol` TRUE for every buildable doc — the Spark side earns
     * the TRUE by actually decoding and bounding the drift. */
-  val jpegDecodeOracle: String = {
-    def guarded(expr: String) = s"CAST(CASE WHEN h = 0 THEN -1 ELSE $expr END AS BIGINT)"
+  val jpegDecodeOracle: String =
     s"""WITH b AS (
        |  SELECT doc_id AS media_id,
        |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) // 24 AS h
        |  FROM documents
        |)
        |SELECT media_id,
-       |       ${guarded("8")} AS width,
-       |       ${guarded("h")} AS height,
-       |       ${guarded("h * 8")} AS n_pixels,
+       |       ${guardedDims(8)}
        |       (h > 0) AS gray_in_tol
        |FROM b ORDER BY media_id""".stripMargin
-  }
 
   // ------------------------- mixed-format corpus: sniff-and-dispatch
 
@@ -1112,12 +1033,8 @@ object Multimodal {
       case _ => None
     }
 
-  private val mixedSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("format", StringType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("n_pixels", LongType, nullable = false)))
+  private val mixedSchema = StructType(longSchema("media_id")
+    .add("format", StringType, nullable = false) ++ longSchema("width", "height", "n_pixels"))
 
   /** Gated query `multimodal_decode_mixed`: a corpus where each doc ships
     * in a DIFFERENT real container (doc_id mod 4 → PPM / BMP / PNG /
@@ -1133,20 +1050,12 @@ object Multimodal {
       asBmpPayloads(docs.filter(col("doc_id") % 4 === 1)).select("media_id", "payload"),
       asPngPayloads(docs.filter(col("doc_id") % 4 === 2)).select("media_id", "payload"),
       asJpegPayloads(docs.filter(col("doc_id") % 4 === 3)).select("media_id", "payload"))
-    val media = parts.reduce(_.unionAll(_))
-    val rows = media.rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        val fmt = sniffImageFormat(payload)
-        decodeAnyImage(payload) match {
-          case Some(img) =>
-            Row(r.getLong(0), fmt, img.width.toLong, img.height.toLong,
-              img.width.toLong * img.height)
-          case None => Row(r.getLong(0), fmt, -1L, -1L, -1L)
-        }
-      }
-    }
-    spark.createDataFrame(rows, mixedSchema).orderBy(col("media_id"))
+    perPayload(parts.reduce(_.unionAll(_)), mixedSchema) { (id, p, _) =>
+      val fmt = sniffImageFormat(p)
+      Seq(decodeAnyImage(p).fold(rejected(mixedSchema, id, fmt)) { img =>
+        Row(id, fmt, img.width.toLong, img.height.toLong, img.width.toLong * img.height)
+      })
+    }.orderBy(col("media_id"))
   }
 
   /** DuckDB twin of the mixed gate: format + dimensions from each
@@ -1195,21 +1104,7 @@ object Multimodal {
     * (reject, the PNG/JPEG convention). Written through ImageIO's
     * sequence API (prepareWriteSequence / writeToSequence), so the
     * payload has genuine GIF87/89 multi-image structure to walk. */
-  def asGifPayloads(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    val rows = docs.select(col("doc_id"), col("text").cast("binary")).rdd
-      .mapPartitions { it =>
-        it.map { r =>
-          val bytes =
-            if (r.isNullAt(1)) Array.emptyByteArray else r.getAs[Array[Byte]](1)
-          Row(r.getLong(0), buildGif(bytes))
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
+  def asGifPayloads(docs: DataFrame): DataFrame = asPayloads(docs, buildGif)
 
   /** Build the animated GIF for [[asGifPayloads]]; empty array when the
     * bytes fill no complete frame. Two measured requirements for the
@@ -1225,33 +1120,26 @@ object Multimodal {
   def buildGif(bytes: Array[Byte]): Array[Byte] = {
     val nFrames = bytes.length / GifFrameBytes
     if (nFrames == 0) Array.emptyByteArray
-    else {
-      val bos = new java.io.ByteArrayOutputStream()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
+    else imageIoBytes { ios =>
+      val writer = ImageIO.getImageWritersByFormatName("gif").next()
       try {
         writer.setOutput(ios)
         writer.prepareWriteSequence(null)
         val param = writer.getDefaultWriteParam
-        param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DISABLED)
+        param.setProgressiveMode(ImageWriteParam.MODE_DISABLED)
         var f = 0
         while (f < nFrames) {
-          writer.writeToSequence(
-            new javax.imageio.IIOImage(indexedFrame(bytes, f), null, null), param)
+          writer.writeToSequence(new IIOImage(indexedFrame(bytes, f), null, null), param)
           f += 1
         }
         writer.endWriteSequence()
-      } finally {
-        writer.dispose()
-        ios.close()
-      }
-      bos.toByteArray
+      } finally writer.dispose()
     }
   }
 
   /** Frame f of the rule bytes as an exactly-indexed image (its own
     * ≤32-entry palette in first-appearance order). */
-  private def indexedFrame(bytes: Array[Byte], f: Int): java.awt.image.BufferedImage = {
+  private def indexedFrame(bytes: Array[Byte], f: Int): BufferedImage = {
     val px = new Array[Int](GifFrameW * GifFrameH)
     val pal = new java.util.LinkedHashMap[Integer, Integer]()
     var k = 0
@@ -1266,8 +1154,7 @@ object Multimodal {
     pal.forEach((rgb, i) => cmap(i) = rgb)
     val icm = new java.awt.image.IndexColorModel(8, cmap.length, cmap, 0, false, -1,
       java.awt.image.DataBuffer.TYPE_BYTE)
-    val img = new java.awt.image.BufferedImage(GifFrameW, GifFrameH,
-      java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
+    val img = new BufferedImage(GifFrameW, GifFrameH, BufferedImage.TYPE_BYTE_INDEXED, icm)
     k = 0
     while (k < px.length) {
       img.getRaster.setSample(k % GifFrameW, k / GifFrameW, 0, pal.get(px(k)).intValue())
@@ -1294,63 +1181,30 @@ object Multimodal {
     * plus the AGGREGATE [[ImageIoMaxFrames]]/[[ImageIoMaxTotalPixels]]
     * caps — total allocation is bounded no matter what the container
     * claims. */
-  def decodeFrames(payload: Array[Byte]): Option[Seq[RgbImage]] = {
-    if (payload == null || payload.length == 0) return None
-    var iis: javax.imageio.stream.ImageInputStream = null
-    var reader: javax.imageio.ImageReader = null
-    try {
-      iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      if (!readers.hasNext) None
+  def decodeFrames(payload: Array[Byte]): Option[Seq[RgbImage]] =
+    withImageReader(payload) { (reader, iis) =>
+      reader.setInput(iis)
+      val n = reader.getNumImages(true)
+      if (n <= 0 || n > ImageIoMaxFrames) None
       else {
-        reader = readers.next()
-        reader.setInput(iis)
-        val n = reader.getNumImages(true)
-        if (n <= 0 || n > ImageIoMaxFrames) None
-        else {
-          val out = Seq.newBuilder[RgbImage]
-          var totalPx = 0L
-          var f = 0
-          var ok = true
-          while (ok && f < n) {
-            val w = reader.getWidth(f); val h = reader.getHeight(f)
-            totalPx += (if (w > 0 && h > 0) w.toLong * h else 0L)
-            if (w <= 0 || h <= 0 || w.toLong * h > ImageIoMaxPixels ||
-              totalPx > ImageIoMaxTotalPixels) ok = false
-            else {
-              val img = reader.read(f)
-              val px = new Array[Byte](w * h * 3)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val rgb = img.getRGB(x, y)
-                  val p = (y * w + x) * 3
-                  px(p) = ((rgb >> 16) & 0xff).toByte
-                  px(p + 1) = ((rgb >> 8) & 0xff).toByte
-                  px(p + 2) = (rgb & 0xff).toByte
-                  x += 1
-                }
-                y += 1
-              }
-              out += RgbImage(w, h, px)
-            }
-            f += 1
-          }
-          if (ok) Some(out.result()) else None
+        val out = Seq.newBuilder[RgbImage]
+        var totalPx = 0L
+        var f = 0
+        var ok = true
+        while (ok && f < n) {
+          val w = reader.getWidth(f); val h = reader.getHeight(f)
+          totalPx += (if (w > 0 && h > 0) w.toLong * h else 0L)
+          if (w <= 0 || h <= 0 || w.toLong * h > ImageIoMaxPixels ||
+            totalPx > ImageIoMaxTotalPixels) ok = false
+          else out += readRgb(reader, f, w, h)
+          f += 1
         }
+        if (ok) Some(out.result()) else None
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally {
-      if (reader != null) reader.dispose()
-      if (iis != null) try iis.close() catch { case _: java.io.IOException => () }
     }
-  }
 
-  private val gifFrameSchema = StructType(
-    Seq("media_id", "frame", "width", "height", "r_sum", "g_sum", "b_sum")
-      .map(StructField(_, LongType, nullable = false)))
+  private val gifFrameSchema =
+    longSchema("media_id", "frame", "width", "height", "r_sum", "g_sum", "b_sum")
 
   /** Gated query `multimodal_decode_gif`: build real animated GIFs,
     * walk EVERY frame through the multi-frame reader, exact per-frame
@@ -1358,47 +1212,21 @@ object Multimodal {
     * pipeline consumes). ≤256 colors per frame by construction ⇒ the
     * palette roundtrip is lossless and the sums hash-match the rule
     * twin. Rejected payloads emit one visible frame = -1 row. */
-  def gifGateFromDir(spark: SparkSession, dir: String): DataFrame = {
-    val media = asGifPayloads(Tables.documents(spark, dir))
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        decodeFrames(r.getAs[Array[Byte]](1)) match {
-          case Some(frames) =>
-            frames.zipWithIndex.map { case (img, f) =>
-              var rs = 0L; var gs = 0L; var bs = 0L
-              var p = 0
-              while (p < img.pixels.length) {
-                rs += img.pixels(p) & 0xff
-                gs += img.pixels(p + 1) & 0xff
-                bs += img.pixels(p + 2) & 0xff
-                p += 3
-              }
-              Row(r.getLong(0), f.toLong, img.width.toLong, img.height.toLong,
-                rs, gs, bs)
-            }
-          case None => Seq(Row(r.getLong(0), -1L, -1L, -1L, -1L, -1L, -1L))
-        }
-      }
-    }
-    spark.createDataFrame(rows, gifFrameSchema)
-      .orderBy(col("media_id"), col("frame"))
-  }
+  def gifGateFromDir(spark: SparkSession, dir: String): DataFrame =
+    perPayload(asGifPayloads(Tables.documents(spark, dir)), gifFrameSchema) { (id, p, _) =>
+      decodeFrames(p).fold(Seq(rejected(gifFrameSchema, id)))(_.zipWithIndex.map {
+        case (img, f) =>
+          val (rs, gs, bs) = rgbSums(img.pixels)
+          Row(id, f.toLong, img.width.toLong, img.height.toLong, rs, gs, bs)
+      })
+    }.orderBy(col("media_id"), col("frame"))
 
   /** DuckDB twin of the GIF gate: frames unnested laterally, channel
     * sums over each frame's 96-byte slice of the text hex. A reader
     * that merges frames, drops the tail frame, or mis-strides channels
     * cannot hash-match. */
   val gifDecodeOracle: String =
-    s"""WITH b AS (
-       |  SELECT doc_id AS media_id, COALESCE(hex(encode(text)), '') AS hx,
-       |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n
-       |  FROM documents
-       |), px AS (
-       |  SELECT media_id, n // 96 AS nf,
-       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
-       |          FOR x IN range(1, CAST((n // 96) * 96 AS INTEGER) + 1)] AS bs
-       |  FROM b
-       |)
+    s"""WITH ${hexBytesCtes("px", "n // 96 AS nf,", 96)}
        |SELECT media_id,
        |       CAST(t.f AS BIGINT) AS frame,
        |       CAST(CASE WHEN t.f = -1 THEN -1 ELSE 8 END AS BIGINT) AS width,
@@ -1414,9 +1242,38 @@ object Multimodal {
 
   // --------------------- preprocessing operators: resize + audio windows
 
-  private val resizeSchema = StructType(
-    Seq("media_id", "width", "height", "cell", "gray")
-      .map(StructField(_, LongType, nullable = false)))
+  /** A decoded image at least `t`×`t` pixels and within
+    * [[AhashMaxPixels]] — the input a `t`-band [[grayCells]] grid needs. */
+  private def gridImage(payload: Array[Byte], t: Int): Option[RgbImage] =
+    decodeAnyImage(payload).filter(img => img.width >= t && img.height >= t &&
+      img.width.toLong * img.height <= AhashMaxPixels)
+
+  /** The integer band rule on both engines, never a float resample: pixel
+    * (row, c) of a w×h image falls in cell (⌊t·row/h⌋, ⌊t·c/w⌋). Returns
+    * each cell's gray mass (gray = r+g+b) and pixel count, row-major. */
+  private def grayCells(img: RgbImage, t: Int): (Array[Long], Array[Long]) = {
+    val w = img.width; val h = img.height
+    val sum = new Array[Long](t * t)
+    val cnt = new Array[Long](t * t)
+    var p = 0
+    var row = 0
+    while (row < h) {
+      val i = ((row.toLong * t) / h).toInt
+      var c = 0
+      while (c < w) {
+        val j = ((c.toLong * t) / w).toInt
+        sum(i * t + j) += (img.pixels(p) & 0xff) +
+          (img.pixels(p + 1) & 0xff) + (img.pixels(p + 2) & 0xff)
+        cnt(i * t + j) += 1
+        p += 3
+        c += 1
+      }
+      row += 1
+    }
+    (sum, cnt)
+  }
+
+  private val resizeSchema = longSchema("media_id", "width", "height", "cell", "gray")
 
   /** Thumbnail side length of [[resizeThumb]] — 4×4 gray cells. */
   val ThumbGrid = 4
@@ -1424,53 +1281,26 @@ object Multimodal {
   /** REAL image RESIZE — the preprocessing step every vision-model
     * pipeline runs before featurization: box-mean downsample onto a
     * [[ThumbGrid]]×[[ThumbGrid]] gray grid using the same integer band
-    * rule as [[ahashFeatures]] (row r → band ⌊4r/h⌋, col c → ⌊4c/w⌋ —
-    * never a float resample), each cell the FLOOR-DIVIDED mean of
-    * gray = r+g+b over its band. Exact integer math end to end, so the
-    * thumbnail hash-matches the DuckDB rule twin. Decode is
-    * [[decodeAnyImage]] — one resize pass serves a mixed-container
-    * corpus. Output is EXPLODED (one row per cell, `cell` = 4·i+j
-    * row-major) so every column stays a hash-safe scalar; images
-    * smaller than the grid (w or h < 4) and rejected payloads emit a
-    * single `cell = -1` row, kept visible.
+    * rule as [[ahashFeatures]] ([[grayCells]]), each cell the
+    * FLOOR-DIVIDED mean of gray = r+g+b over its band. Exact integer
+    * math end to end, so the thumbnail hash-matches the DuckDB rule
+    * twin. Decode is [[decodeAnyImage]] — one resize pass serves a
+    * mixed-container corpus. Output is EXPLODED (one row per cell,
+    * `cell` = 4·i+j row-major) so every column stays a hash-safe
+    * scalar; images smaller than the grid (w or h < 4) and rejected
+    * payloads emit a single `cell = -1` row, kept visible.
     *
     * Scale: decode + resize per partition (payloads never shuffle);
     * only 16 scalar rows per image leave the scan — the thumbnail
     * table is what a patch-embedding or dedup stage consumes. */
-  def resizeThumb(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val T = ThumbGrid
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        decodeAnyImage(r.getAs[Array[Byte]](1)) match {
-          case Some(img) if img.width >= T && img.height >= T &&
-            img.width.toLong * img.height <= AhashMaxPixels =>
-            val w = img.width; val h = img.height
-            val sum = new Array[Long](T * T)
-            val cnt = new Array[Long](T * T)
-            var p = 0
-            var row = 0
-            while (row < h) {
-              val i = ((row.toLong * T) / h).toInt
-              var c = 0
-              while (c < w) {
-                val j = ((c.toLong * T) / w).toInt
-                sum(i * T + j) += (img.pixels(p) & 0xff) +
-                  (img.pixels(p + 1) & 0xff) + (img.pixels(p + 2) & 0xff)
-                cnt(i * T + j) += 1
-                p += 3
-                c += 1
-              }
-              row += 1
-            }
-            (0 until T * T).map(t =>
-              Row(r.getLong(0), w.toLong, h.toLong, t.toLong, sum(t) / cnt(t)))
-          case _ => Seq(Row(r.getLong(0), -1L, -1L, -1L, -1L))
-        }
+  def resizeThumb(media: DataFrame): DataFrame =
+    perPayload(media, resizeSchema) { (id, p, _) =>
+      gridImage(p, ThumbGrid).fold(Seq(rejected(resizeSchema, id))) { img =>
+        val (sum, cnt) = grayCells(img, ThumbGrid)
+        (0 until ThumbGrid * ThumbGrid).map(t =>
+          Row(id, img.width.toLong, img.height.toLong, t.toLong, sum(t) / cnt(t)))
       }
     }
-    spark.createDataFrame(rows, resizeSchema)
-  }
 
   /** Gated query `multimodal_resize`: P6 payloads (the rule the oracle
     * can recompute) box-mean downsampled to the 4×4 gray thumbnail. */
@@ -1484,16 +1314,7 @@ object Multimodal {
     * band rule. h < 4 (fewer rows than the grid) rejects: a single
     * cell = -1 row. */
   val resizeOracle: String =
-    s"""WITH b AS (
-       |  SELECT doc_id AS media_id, COALESCE(hex(encode(text)), '') AS hx,
-       |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n
-       |  FROM documents
-       |), px AS (
-       |  SELECT media_id, n // 24 AS h,
-       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
-       |          FOR x IN range(1, CAST((n // 24) * 24 AS INTEGER) + 1)] AS bs
-       |  FROM b
-       |), g AS (
+    s"""WITH ${hexBytesCtes("px", "n // 24 AS h,", 24)}, g AS (
        |  SELECT media_id, h,
        |         [bs[3*p - 2] + bs[3*p - 1] + bs[3*p]
        |          FOR p IN range(1, CAST(h * 8 AS INTEGER) + 1)] AS gs
@@ -1512,11 +1333,7 @@ object Multimodal {
        |FROM g, UNNEST(CASE WHEN h < 4 THEN [-1] ELSE range(0, 16) END) AS t(cell)
        |ORDER BY media_id, cell""".stripMargin
 
-  private val energySchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("win", LongType, nullable = false),
-    StructField("n_frames", LongType, nullable = false),
-    StructField("energy", LongType, nullable = false)))
+  private val energySchema = longSchema("media_id", "win", "n_frames", "energy")
 
   /** Frames per [[audioEnergy]] window. */
   val EnergyWindowFrames = 64
@@ -1531,26 +1348,20 @@ object Multimodal {
     * stage consumes. Rejected payloads and empty streams emit no rows
     * (0 frames ⇒ 0 windows, the valid-empty WAV convention). */
   def audioEnergy(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     val W = EnergyWindowFrames
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        decodeWav(r.getAs[Array[Byte]](1)) match {
-          case Some(a) if a.samples.nonEmpty =>
-            val nf = a.samples.length / a.channels
-            val spw = W * a.channels // samples per full window
-            (0 until (nf + W - 1) / W).map { w =>
-              var e = 0L
-              var s = w * spw
-              val endS = math.min((w + 1) * spw, a.samples.length)
-              while (s < endS) { e += math.abs(a.samples(s).toLong); s += 1 }
-              Row(r.getLong(0), w.toLong, math.min(W, nf - w * W).toLong, e)
-            }
-          case _ => Seq.empty[Row]
+    perPayload(media, energySchema) { (id, p, _) =>
+      decodeWav(p).filter(_.samples.nonEmpty).fold(Seq.empty[Row]) { a =>
+        val nf = a.samples.length / a.channels
+        val spw = W * a.channels // samples per full window
+        (0 until (nf + W - 1) / W).map { w =>
+          var e = 0L
+          var s = w * spw
+          val endS = math.min((w + 1) * spw, a.samples.length)
+          while (s < endS) { e += math.abs(a.samples(s).toLong); s += 1 }
+          Row(id, w.toLong, math.min(W, nf - w * W).toLong, e)
         }
       }
     }
-    spark.createDataFrame(rows, energySchema)
   }
 
   /** Gated query `audio_energy_windows`: WAV payloads (the builder rule)
@@ -1564,23 +1375,7 @@ object Multimodal {
     * energy a slice-bounded abs-sum. A decoder that mis-strides windows
     * or drops the short tail window cannot hash-match. */
   val audioEnergyOracle: String =
-    s"""WITH b AS (
-       |  SELECT doc_id AS media_id, COALESCE(hex(encode(text)), '') AS hx,
-       |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n
-       |  FROM documents
-       |), d AS (
-       |  SELECT media_id, (n // 4) * 4 AS m,
-       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
-       |          FOR x IN range(1, CAST((n // 4) * 4 AS INTEGER) + 1)] AS bs
-       |  FROM b
-       |), s AS (
-       |  SELECT media_id, m // 4 AS nf,
-       |         [CASE WHEN bs[2*j - 1] + 256 * bs[2*j] >= 32768
-       |               THEN bs[2*j - 1] + 256 * bs[2*j] - 65536
-       |               ELSE bs[2*j - 1] + 256 * bs[2*j] END
-       |          FOR j IN range(1, CAST(m // 2 AS INTEGER) + 1)] AS ss
-       |  FROM d
-       |)
+    s"""WITH ${s16Ctes("nf")}
        |SELECT media_id, CAST(t.w AS BIGINT) AS win,
        |       CAST(least(64, nf - 64 * t.w) AS BIGINT) AS n_frames,
        |       CAST(COALESCE(list_sum([abs(ss[j]) FOR j IN
@@ -1602,12 +1397,7 @@ object Multimodal {
 
   // ---------------------------- perceptual hash (aHash) + image near-dup
 
-  private val ahashSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("ahash_hi", LongType, nullable = false),
-    StructField("ahash_lo", LongType, nullable = false)))
+  private val ahashSchema = longSchema("media_id", "width", "height", "ahash_hi", "ahash_lo")
 
   /** Pixel-count ceiling for the aHash bit rule: the cross-multiplied
     * comparison cs·(w·h) is bounded by 765·npix², which stays inside a
@@ -1619,10 +1409,10 @@ object Multimodal {
 
   /** Average-hash (aHash) over DECODED pixels — the perceptual-dedup
     * signature of an image corpus: map the image onto an 8×8 grid of
-    * cells (row r → band ⌊8r/h⌋, column c → band ⌊8c/w⌋ — the same
-    * integer band rule on both engines, never a resample), set bit
-    * 8·i+j when the cell's mean gray (gray = r+g+b, no division) is ≥
-    * the image mean. Near-identical images — re-encodes, small crops of
+    * cells ([[grayCells]]: row r → band ⌊8r/h⌋, column c → band ⌊8c/w⌋ —
+    * the same integer band rule on both engines, never a resample), set
+    * bit 8·i+j when the cell's mean gray (gray = r+g+b, no division) is
+    * ≥ the image mean. Near-identical images — re-encodes, small crops of
     * padding, brightness-preserving edits — land within a few bits,
     * which [[ahashNearDups]] turns into the SimHash banding join.
     * EXACT integer rule throughout: mean comparison is the cross-
@@ -1648,51 +1438,24 @@ object Multimodal {
     * noise the bits sit at the threshold and lossy coding flips ~15/64
     * — measured, reported in Round16Spec). The PPM gate's oracle is
     * unchanged: a P6 payload routes to the same decoder as before. */
-  def ahashFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val rows = media.select(col("media_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        decodeAnyImage(r.getAs[Array[Byte]](1)) match {
-          case Some(img) if img.width >= 8 && img.height >= 8 &&
-            img.width.toLong * img.height <= AhashMaxPixels =>
-            val w = img.width; val h = img.height
-            val cellSum = new Array[Long](64)
-            val cellN = new Array[Long](64)
-            var total = 0L
-            var p = 0
-            var row = 0
-            while (row < h) {
-              val i = ((row.toLong * 8) / h).toInt
-              var c = 0
-              while (c < w) {
-                val j = ((c.toLong * 8) / w).toInt
-                val g = (img.pixels(p) & 0xff) + (img.pixels(p + 1) & 0xff) +
-                  (img.pixels(p + 2) & 0xff)
-                cellSum(i * 8 + j) += g
-                cellN(i * 8 + j) += 1
-                total += g
-                p += 3
-                c += 1
-              }
-              row += 1
-            }
-            val npix = w.toLong * h
-            var hi = 0L; var lo = 0L
-            var b = 0
-            while (b < 64) {
-              // cell mean >= image mean, cross-multiplied (ties -> 1)
-              if (cellSum(b) * npix >= total * cellN(b)) {
-                if (b < 32) lo |= 1L << b else hi |= 1L << (b - 32)
-              }
-              b += 1
-            }
-            Row(r.getLong(0), w.toLong, h.toLong, hi, lo)
-          case _ => Row(r.getLong(0), -1L, -1L, -1L, -1L)
+  def ahashFeatures(media: DataFrame): DataFrame =
+    perPayload(media, ahashSchema) { (id, p, _) =>
+      Seq(gridImage(p, 8).fold(rejected(ahashSchema, id)) { img =>
+        val (cellSum, cellN) = grayCells(img, 8)
+        val total = cellSum.sum
+        val npix = img.width.toLong * img.height
+        var hi = 0L; var lo = 0L
+        var b = 0
+        while (b < 64) {
+          // cell mean >= image mean, cross-multiplied (ties -> 1)
+          if (cellSum(b) * npix >= total * cellN(b)) {
+            if (b < 32) lo |= 1L << b else hi |= 1L << (b - 32)
+          }
+          b += 1
         }
-      }
+        Row(id, img.width.toLong, img.height.toLong, hi, lo)
+      })
     }
-    spark.createDataFrame(rows, ahashSchema)
-  }
 
   /** Gated query `multimodal_ahash`: the perceptual signature of every
     * P6 payload built from the corpus (the [[decodeGateFromDir]] seam,
@@ -1753,16 +1516,7 @@ object Multimodal {
     * oracle. Builder geometry is width 8 (one pixel column per grid
     * column), so the column band is the identity and only rows band. */
   private def ahashCtesSql(p: String = ""): String =
-    s"""${p}b AS (
-       |  SELECT doc_id AS media_id, COALESCE(hex(encode(text)), '') AS hx,
-       |         CAST(COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS n
-       |  FROM documents
-       |), ${p}px AS (
-       |  SELECT media_id, n // 24 AS h,
-       |         [CAST('0x' || substr(hx, 2*x - 1, 2) AS BIGINT)
-       |          FOR x IN range(1, CAST((n // 24) * 24 AS INTEGER) + 1)] AS bs
-       |  FROM ${p}b
-       |), ${p}g AS (
+    s"""${hexBytesCtes("px", "n // 24 AS h,", 24, p)}, ${p}g AS (
        |  SELECT media_id, h,
        |         [bs[3*q - 2] + bs[3*q - 1] + bs[3*q]
        |          FOR q IN range(1, CAST(h * 8 AS INTEGER) + 1)] AS gs

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.{StoreCommit, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -530,7 +530,7 @@ object Similarity {
         if (refresh) Some(readState(spark, tier, dir, g).coarse.head) else None)
       val carried = tier.sidecars ++ (if (tier.health && !refresh) Seq("_health_v") else Nil)
       for (q <- carried)
-        spark.read.parquet(s"$dir/$q$g").coalesce(1).write.parquet(s"$dir/$q$next")
+        spark.read.parquet(sidecarParts(s"$dir/$q$g"): _*).coalesce(1).write.parquet(s"$dir/$q$next")
     }
 
   /** Stage generation g+1 beside the live g (`stage(g, g + 1)`), then
@@ -845,29 +845,45 @@ object Similarity {
   private def readQuantizerPath(spark: SparkSession,
                                 path: String): Array[(Int, Array[Double])] =
     sidecarMemo.computeIfAbsent("q:" + path, _ =>
-      readQuantizerPathUncached(spark, path))
+      readSidecar(spark, path)
+        .map(r => (r.getAs[Int]("centroid_id"),
+          r.getAs[Seq[Double]]("centroid").toArray))
+        .sortBy(_._1))
       .asInstanceOf[Array[(Int, Array[Double])]]
 
-  private def readQuantizerPathUncached(spark: SparkSession,
-                                        path: String): Array[(Int, Array[Double])] = {
-    def read() = spark.read.parquet(path).collect()
-      .map(r => (r.getAs[Int]("centroid_id"),
-        r.getAs[Seq[Double]]("centroid").toArray))
-      .sortBy(_._1)
+  /** The part files of the sidecar directory `path`, the paths every
+    * sidecar read passes to Spark: its hidden-path filter matches the
+    * directory's own `_` prefix, so reading the directory itself logs
+    * "All paths were ignored" on every read. */
+  private def sidecarParts(path: String): Seq[String] = {
+    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(path))
+    try listing.toArray.toSeq.map(_.toString).filter { f =>
+      val name = f.substring(f.lastIndexOf('/') + 1)
+      !name.startsWith("_") && !name.startsWith(".")
+    }.sorted finally listing.close()
+  }
+
+  /** Every row of the sidecar directory `path` ([[sidecarParts]]).
+    *
+    * Empty-listing guard (observed once in a 162-query 8-worker verify
+    * run): a freshly-committed sidecar read from another session can
+    * transiently list ZERO files, and an empty quantizer silently
+    * empties every downstream probe (probes -> isin() -> cells -> the
+    * whole vector list) with no exception — the failure surfaced as a
+    * hybrid-fusion gate returning single-list RRF. Refresh this
+    * session's cached listing, re-list and retry once; if the sidecar is
+    * genuinely empty, fail LOUDLY rather than serve an empty tier. */
+  private def readSidecar(spark: SparkSession, path: String): Array[Row] = {
+    def read(): Array[Row] = {
+      val parts = sidecarParts(path)
+      if (parts.isEmpty) Array.empty[Row] else spark.read.parquet(parts: _*).collect()
+    }
     val first = read()
-    // Empty-listing guard (observed once in a 162-query 8-worker verify
-    // run): a freshly-committed sidecar read from another session can
-    // transiently list ZERO files, and an empty quantizer silently
-    // empties every downstream probe (probes -> isin() -> cells -> the
-    // whole vector list) with no exception — the failure surfaced as a
-    // hybrid-fusion gate returning single-list RRF. Refresh this
-    // session's cached listing and retry once; if the sidecar is
-    // genuinely empty, fail LOUDLY rather than serve an empty tier.
     val out = if (first.nonEmpty) first else {
       spark.catalog.refreshByPath(path)
       read()
     }
-    require(out.nonEmpty, s"quantizer sidecar at $path listed empty twice")
+    require(out.nonEmpty, s"sidecar at $path listed empty twice")
     out
   }
 
@@ -909,7 +925,7 @@ object Similarity {
 
   def indexHealth(spark: SparkSession, dir: String): IvfHealth = {
     val centroids = readQuantizer(spark, dir)
-    val base = spark.read.parquet(s"$dir/_health_v${ivfGen(dir)}").first()
+    val base = readSidecar(spark, s"$dir/_health_v${ivfGen(dir)}").head
     val (n, sim) = scanHealth(spark.read.parquet(ivfDataDir(dir)), centroids)
     IvfHealth(base.getAs[Long]("n"), n, base.getAs[Double]("mean_sim"), sim)
   }
@@ -1339,24 +1355,10 @@ object Similarity {
     * and append paths (a sidecar schema change lands in one place). */
   private def readSq8Sidecar(spark: SparkSession, dir: String,
                              g: Long): (Array[Double], Array[Double]) =
-    sidecarMemo.computeIfAbsent("s:" + s"$dir/_sq8_v$g", _ =>
-      readSq8SidecarUncached(spark, dir, g))
-      .asInstanceOf[(Array[Double], Array[Double])]
-
-  private def readSq8SidecarUncached(spark: SparkSession, dir: String,
-                                     g: Long): (Array[Double], Array[Double]) = {
-    val path = s"$dir/_sq8_v$g"
-    // same empty-listing guard as readQuantizerPath (one refresh+retry,
-    // then loud failure — head() on a transiently-empty listing would
-    // otherwise throw an opaque NoSuchElementException)
-    val rows = spark.read.parquet(path).collect()
-    val r = (if (rows.nonEmpty) rows else {
-      spark.catalog.refreshByPath(path)
-      spark.read.parquet(path).collect()
-    }).headOption.getOrElse(
-      throw new IllegalStateException(s"sq8 sidecar at $path listed empty twice"))
-    (r.getAs[Seq[Double]]("mn").toArray, r.getAs[Seq[Double]]("mx").toArray)
-  }
+    sidecarMemo.computeIfAbsent("s:" + s"$dir/_sq8_v$g", _ => {
+      val r = readSidecar(spark, s"$dir/_sq8_v$g").head
+      (r.getAs[Seq[Double]]("mn").toArray, r.getAs[Seq[Double]]("mx").toArray)
+    }).asInstanceOf[(Array[Double], Array[Double])]
 
   /** DuckDB twin of `ivf_sq8_remove`: [[ivfSq8Oracle]] over
     * the kept relation, stats frozen at the full build corpus. */
@@ -2157,7 +2159,7 @@ object Similarity {
   private def readPqSidecar(spark: SparkSession, dir: String,
                             g: Long): Array[Array[(Int, Array[Double])]] =
     sidecarMemo.computeIfAbsent("p:" + s"$dir/_pq_v$g", _ =>
-      spark.read.parquet(s"$dir/_pq_v$g").collect()
+      readSidecar(spark, s"$dir/_pq_v$g")
         .map(r => (r.getAs[Int]("s"), r.getAs[Int]("cid"),
           r.getAs[Seq[Double]]("c").toArray))
         .groupBy(_._1).toArray.sortBy(_._1)

@@ -15,10 +15,10 @@ class Round16Spec extends SparkSpec {
     // SAME channel sums the uncompressed P6 container carries for the
     // same rule — a cross-codec equality no single-format gate can give.
     val docs = graft.sources.Tables.documents(spark, sf)
-    val png = Multimodal.extractImageIoFeatures(Multimodal.asPngPayloads(docs))
+    val png = Multimodal.extractRgbFeatures(Multimodal.asPngPayloads(docs))
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
-    val ppm = Multimodal.extractPpmFeatures(Multimodal.asPpmPayloads(docs))
+    val ppm = Multimodal.extractRgbFeatures(Multimodal.asPpmPayloads(docs))
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
     assert(png.keySet === ppm.keySet)
@@ -281,6 +281,28 @@ class Round16Spec extends SparkSpec {
     assert(Multimodal.audioEnergy(
       Seq((8L, Multimodal.buildWav(Array.emptyByteArray))).toDF("media_id", "payload"))
       .count() === 0)
+  }
+
+  test("a NULL text is the empty payload in every multimodal gate") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_null_text")
+    try {
+      // docs 1 and 5 are congruent mod 4: the mixed gate routes both to BMP
+      Seq((1L, Option.empty[String]), (5L, Some(""))).toDF("doc_id", "text")
+        .select(col("doc_id"), col("text"), lit("en").as("lang"), lit("t").as("source"),
+          lit(0L).as("n_chars"))
+        .write.parquet(s"$dir/documents.parquet")
+      val gates = SparkEntry.gates.filter(g => g.name.startsWith("multimodal_") ||
+        g.name == "audio_energy_windows" || g.name == "dedup_image_ahash")
+      assert(gates.size === 14)
+      // multimodal_meta is expression-level: both engines propagate the NULL
+      for (g <- gates if g.name != "multimodal_meta") {
+        val out = g.build(spark, dir.toString).collect()
+        def rowsOf(id: Long) = out.filter(_.getLong(0) == id).map(_.toSeq.tail).toSeq
+        if (g.name != "dedup_image_ahash")
+          assert(rowsOf(1L) === rowsOf(5L), s"${g.name}: NULL text diverged from empty text")
+      }
+    } finally scala.util.Try(graft.sources.StoreCommit.deleteRecursively(dir))
   }
 
   test("guardedAppend: a replayed batchId is skipped; new batchIds append") {
