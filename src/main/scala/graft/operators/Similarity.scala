@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.sources.{StoreCommit, Tables}
+import graft.sources.{StoreCommit, Tables, Writers}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -518,8 +519,10 @@ object Similarity {
 
   /** The kept rows of the live generation, cell-coalesced into the next
     * one, with the tier's sidecars carried forward UNCHANGED (the
-    * frozen-state rule). A health tier refreshes its baseline when the
-    * content changed (`refreshHealth`) and carries it otherwise. */
+    * frozen-state rule) as file copies of their parts, no Spark job. A
+    * health tier refreshes its baseline when the content changed
+    * (`refreshHealth`) and carries it otherwise. Copies, not hard links:
+    * a link would share one inode between the two generations' files. */
   private def rewriteGeneration(spark: SparkSession, tier: Tier, dir: String,
                                 keep: DataFrame => DataFrame,
                                 refreshHealth: Boolean): Unit =
@@ -529,8 +532,8 @@ object Similarity {
         keep(spark.read.parquet(s"$dir/data_v$g")).repartition(col("centroid_id")),
         if (refresh) Some(readState(spark, tier, dir, g).coarse.head) else None)
       val carried = tier.sidecars ++ (if (tier.health && !refresh) Seq("_health_v") else Nil)
-      for (q <- carried)
-        spark.read.parquet(sidecarParts(s"$dir/$q$g"): _*).coalesce(1).write.parquet(s"$dir/$q$next")
+      for (q <- carried; f <- sidecarParts(s"$dir/$q$g").map(Paths.get(_)))
+        Files.copy(f, Files.createDirectories(Paths.get(s"$dir/$q$next")).resolve(f.getFileName))
     }
 
   /** Stage generation g+1 beside the live g (`stage(g, g + 1)`), then
@@ -553,16 +556,13 @@ object Similarity {
     healthOf match {
       case None => cells.write.partitionBy("centroid_id").parquet(s"$dir/data_v$next")
       case Some(centroids) =>
-        val obs = org.apache.spark.sql.Observation(s"ivf_health_${obsSeq.incrementAndGet()}")
-        cells.observe(obs, count(lit(1)).as("n"), avg(assignedSim(centroids)).as("mean_sim"))
-          .write.partitionBy("centroid_id").parquet(s"$dir/data_v$next")
+        val h = Writers.observed(cells, count(lit(1)).as("n"),
+          avg(assignedSim(centroids)).as("mean_sim"))(
+          _.write.partitionBy("centroid_id").parquet(s"$dir/data_v$next"))
         import spark.implicits._
-        Seq((obs.get("n").asInstanceOf[Long], obs.get("mean_sim").asInstanceOf[Double]))
-          .toDF("n", "mean_sim")
+        Seq((h.getAs[Long]("n"), h.getAs[Double]("mean_sim"))).toDF("n", "mean_sim")
           .coalesce(1).write.parquet(s"$dir/_health_v$next")
     }
-
-  private val obsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** ANN over a persisted tier: the coarse probe frame (each query's
     * nProbe nearest cells; nProbe×nProbe2 cell pairs under IMI), the

@@ -1,7 +1,7 @@
 package graft.procurement
 
 import graft.sources.{Ingest, SnapshotStore, Writers}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The daily batch pipeline — the reference's 8-task Airflow DAG
@@ -12,9 +12,21 @@ import org.apache.spark.sql.functions._
   *   - The shared aggregated-orders CTE is computed ONCE and cached; the
   *     reference re-executes identical SQL text in Q2 and Q3
   *     (pipeline.py:496-505 vs :617-625).
-  *   - Results stay in the plan end-to-end; only the summary scalars are
-  *     collected (the reference fetchall()s every result through the driver,
-  *     pipeline.py:430,541,679 — its scalability cliff).
+  *   - Results stay in the plan end-to-end; nothing but the summary
+  *     scalars reaches the driver (the reference fetchall()s every result
+  *     through the driver, pipeline.py:430,541,679 — its scalability cliff).
+  *   - Each result is evaluated once per sink pair ([[Writers.dualSink]]):
+  *     the JSON and CSV files are written concurrently from one
+  *     single-partition plan over the cached Q1/Q2 result (Q3: its pinned
+  *     id-sorted stage), and Q1/Q2's ORDER BY sorts inside that partition
+  *     (the keys end in the (sku_id, warehouse_id) group key, a total
+  *     order) instead of a global range sort per format.
+  *   - The summary scalars (O20/O21) are observed on the three JSON writes
+  *     and the stock count on its CSV write, not collected by separate
+  *     aggregate jobs.
+  *   - Q3 is built inside its task: its PO-id offsets collect is an action,
+  *     and a failure there logs and retries as supplier_orders, like every
+  *     other stage.
   */
 object Pipeline {
 
@@ -45,14 +57,14 @@ object Pipeline {
     // failing stage (whose exception TaskLog rethrows by design) must not
     // leak cached blocks into a long-lived session that catches and retries
     val caches = scala.collection.mutable.Buffer[DataFrame]()
+    def cached(df: DataFrame): DataFrame = { caches += df.cache(); df }
     try {
 
     // S1/S4: all-string order CSV for the day (read inside the task so a
     // missing/corrupt source surfaces as a load_orders exception log)
     val (orders, ordersLoaded) = task[(DataFrame, Long)]("load_orders",
       p => Map("orders_loaded" -> p._2.toString)) {
-      val o = Ingest.orders(spark, s"$rawDir/orders/$ddMMyyyy").cache()
-      caches += o
+      val o = cached(Ingest.orders(spark, s"$rawDir/orders/$ddMMyyyy"))
       (o, o.count()) // S5 row-count validation
     }
 
@@ -60,7 +72,7 @@ object Pipeline {
     val stockRecords = task[Long]("stock_json_to_csv",
       n => Map("stock_records" -> n.toString)) {
       Ingest.stockJsonToCsv(spark,
-        s"$rawDir/stock/$ddMMyyyy/stock.json", s"$outDir/stock_csv/$ddMMyyyy").count()
+        s"$rawDir/stock/$ddMMyyyy/stock.json", s"$outDir/stock_csv/$ddMMyyyy")
     }
 
     // S3: snapshot JSON → upsert store (last-write-wins on re-runs). The
@@ -76,42 +88,38 @@ object Pipeline {
       (day, day.count())
     }
 
-    // Q1 (cached: shared by Q2/Q3 through the nd result)
-    val aggregated = Queries.ordersAggregated(
-      orders, master("products"), master("warehouses")).cache()
-    caches += aggregated
-    task[Unit]("aggregate_orders") {
-      val q1 = aggregated.orderBy(col("total_quantity").desc, col("sku_id"), col("warehouse_id"))
-      Writers.dualSink(q1, outDir, "aggregated_orders", ddMMyyyy)
+    // Q1 (cached: shared by Q2/Q3 through the nd result). Each sink pair
+    // below returns the summary scalars (O20/O21) observed on its write
+    val aggregated = cached(Queries.ordersAggregated(
+      orders, master("products"), master("warehouses")))
+    val aggStats = task[Row]("aggregate_orders") {
+      Writers.dualSink(aggregated, outDir, "aggregated_orders", ddMMyyyy,
+        Seq(col("total_quantity").desc, col("sku_id"), col("warehouse_id")),
+        count(lit(1)).as("rows"))
     }
 
     // Q2
-    val nd = Queries.netDemand(aggregated, master("safety_stock"),
-      master("safety_stock_by_warehouse"), master("warehouses"),
-      daySnapshots, runDate).cache()
-    caches += nd
-    task[Unit]("net_demand") {
-      Writers.dualSink(nd, outDir, "net_demand", ddMMyyyy)
+    val nd = cached(Queries.netDemand(aggregated, master("safety_stock"),
+      master("safety_stock_by_warehouse"), master("warehouses"), daySnapshots, runDate))
+    val ndStats = task[Row]("net_demand") {
+      Writers.dualSink(nd, outDir, "net_demand", ddMMyyyy,
+        Seq(col("net_demand").desc, col("sku_id"), col("warehouse_id")),
+        sum(col("net_demand")).as("total_nd"),
+        count(when(col("net_demand") > 0, lit(1))).as("with_demand"))
     }
 
-    // Q3
-    val po = Queries.supplierOrders(nd, master("supplier_products"),
-      master("suppliers"), runDate)
-    task[Unit]("supplier_orders") {
-      Writers.dualSink(po, outDir, "supplier_orders", ddMMyyyy)
+    // Q3, built inside its task: the PO-id offsets collect is an action,
+    // so its failure logs and retries as supplier_orders. Its rows are
+    // already in PO-id order: no sort keys
+    val poStats = task[Row]("supplier_orders") {
+      val po = Queries.supplierOrders(nd, master("supplier_products"),
+        master("suppliers"), runDate)
+      Writers.dualSink(po, outDir, "supplier_orders", ddMMyyyy, Nil,
+        count(lit(1)).as("pos"), coalesce(sum(col("total_cost")), lit(0.0)).as("cost"))
     }
-
-    // O20/O21: summary scalars — single collected row per aggregate
-    val ndStats = nd.agg(
-      sum(col("net_demand")).as("total_nd"),
-      count(when(col("net_demand") > 0, lit(1))).as("with_demand"),
-      count(lit(1)).as("rows")).first()
-    val poStats = po.agg(
-      count(lit(1)).as("pos"),
-      coalesce(sum(col("total_cost")), lit(0.0)).as("cost")).first()
 
     val summary = RunSummary(ddMMyyyy, ordersLoaded, stockRecords, snapshotRows,
-      ndStats.getAs[Long]("rows"), ndStats.getAs[Long]("total_nd"),
+      aggStats.getAs[Long]("rows"), ndStats.getAs[Long]("total_nd"),
       ndStats.getAs[Long]("with_demand"), poStats.getAs[Long]("pos"),
       poStats.getAs[Double]("cost"))
 

@@ -72,7 +72,9 @@ object Queries {
         coalesce(col("ssw_qty"), col("ss_qty"), lit(0)).as("safety_stock_qty"))
   }
 
-  /** Q2 — calculate_net_demand (dags/pipeline.py:495-545).
+  /** Q2 — calculate_net_demand (dags/pipeline.py:495-545), unsorted: the
+    * reference's `ORDER BY net_demand DESC` is applied by the sink, inside
+    * its single partition (see [[Pipeline]]).
     * `snapshots` is the day's inventory (possibly empty — zeros semantics,
     * SURVEY §2.4(4)); `runDate` is appended as calculation_date dd-MM-yyyy. */
   def netDemand(aggregated: DataFrame, safetyStock: DataFrame,
@@ -103,7 +105,6 @@ object Queries {
           .as("net_demand"),
         lit(runDate.format(java.time.format.DateTimeFormatter.ofPattern("dd-MM-yyyy")))
           .as("calculation_date"))
-      .orderBy(col("net_demand").desc, col("sku_id"), col("warehouse_id"))
   }
 
   /** The cheapest-active-supplier pick (pipeline.py:654-662) with the

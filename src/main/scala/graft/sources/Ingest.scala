@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.ParallelJobs
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Raw-ingestion sources mirroring the reference's contracts.
   *
@@ -25,14 +28,6 @@ object Ingest {
       .schema(StructType(columns.map(StructField(_, StringType, nullable = true))))
       .csv(path)
 
-  /** Infer-free all-string CSV read when column names come from the header
-    * itself (ad-hoc files). */
-  def csvAllStrings(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "false") // everything stays string
-      .csv(path)
-
   val orderColumns: Seq[String] =
     Seq("order_id", "supplier_id", "sku_id", "quantity", "warehouse_id", "order_date")
 
@@ -43,13 +38,14 @@ object Ingest {
   def jsonArray(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", "true").json(path)
 
-  /** S2: stock JSON → CSV with the fixed header column order. */
-  def stockJsonToCsv(spark: SparkSession, jsonPath: String, csvOut: String): DataFrame = {
+  /** S2: stock JSON → CSV with the fixed header column order. Returns the
+    * row count, observed on the CSV write (no second scan of the JSON). */
+  def stockJsonToCsv(spark: SparkSession, jsonPath: String, csvOut: String): Long = {
     val df = jsonArray(spark, jsonPath)
       .select(col("warehouse_id").cast("long"), col("sku_id").cast("long"),
         col("current_stock").cast("long"))
-    df.write.mode("overwrite").option("header", "true").csv(csvOut)
-    df
+    Writers.observed(df, count(lit(1)))(
+      _.write.mode("overwrite").option("header", "true").csv(csvOut)).getLong(0)
   }
 }
 
@@ -57,10 +53,29 @@ object Ingest {
   * result lands as a JSON + CSV pair in a per-date directory. */
 object Writers {
 
+  /** Write `df` as one JSON file and one CSV file under
+    * `baseDir/dataset/runDate/{json,csv}`, the two formats concurrently
+    * ([[ParallelJobs]]). `sortKeys` order the rows inside the single sink
+    * partition: for a total order that is the file a global `orderBy`
+    * before `coalesce(1)` writes, without its range-partitioning jobs.
+    * Returns `stats`, aggregated over the rows of the JSON write
+    * ([[observed]]). */
   def dualSink(df: DataFrame, baseDir: String, dataset: String, runDate: String,
-               singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").json(s"$baseDir/$dataset/$runDate/json")
-    out.write.mode("overwrite").option("header", "true").csv(s"$baseDir/$dataset/$runDate/csv")
+               sortKeys: Seq[Column], stats: Column*): Row = {
+    val out = df.coalesce(1).sortWithinPartitions(sortKeys: _*)
+    val dir = s"$baseDir/$dataset/$runDate"
+    ParallelJobs.par2(
+      () => observed(out, stats: _*)(_.write.mode("overwrite").json(s"$dir/json")),
+      () => out.write.mode("overwrite").option("header", "true").csv(s"$dir/csv"))._1
+  }
+
+  /** Run `write` over `df` with `stats` (at least one) aggregated on the
+    * rows it writes (`Dataset.observe`: they ride the write's own job) and
+    * return them as one row. The Observation is made per call, so a
+    * retried write observes afresh. */
+  def observed(df: DataFrame, stats: Column*)(write: DataFrame => Unit): Row = {
+    val obs = Observation()
+    write(df.observe(obs, stats.head, stats.tail: _*))
+    Await.result(obs.future, Duration.Inf)
   }
 }

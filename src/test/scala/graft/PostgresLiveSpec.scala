@@ -15,10 +15,11 @@ import org.scalatest.BeforeAndAfterAll
   * Lifecycle: a throwaway cluster in a temp dir, initdb'd and run AS THE
   * `nobody` USER (PostgreSQL refuses to start as root, which this
   * container is), listening on a free localhost port with trust auth.
-  * Every precondition — server binaries, su, the public org.postgresql
-  * driver on the test classpath (see build.sbt), a startable server — is
-  * checked with `assume`, so environments without PostgreSQL cancel
-  * these tests instead of failing them. */
+  * The cheap preconditions — server binaries, su, the public
+  * org.postgresql driver on the test classpath (see build.sbt) — are
+  * checked when the tests are registered: without them every test is
+  * registered as ignored and reported skipped. A server that then fails
+  * to start cancels the tests through `assume` instead of failing them. */
 class PostgresLiveSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val work = java.nio.file.Files.createTempDirectory("graft_pglive")
@@ -43,9 +44,15 @@ class PostgresLiveSpec extends SparkSpec with BeforeAndAfterAll {
   private def haveDriver: Boolean =
     scala.util.Try(Class.forName("org.postgresql.Driver")).isSuccess
 
+  private val runnable = haveBinaries && haveDriver
+
+  /** A live-server test, ignored without binaries or driver. */
+  private def liveTest(name: String)(body: => Any): Unit =
+    if (runnable) test(name)(body) else ignore(name)(body)
+
   /** Some(port) when a live server came up; None cancels every test. */
   private lazy val port: Option[Int] =
-    if (!haveBinaries || !haveDriver) None
+    if (!runnable) None
     else scala.util.Try {
       val sock = new java.net.ServerSocket(0)
       val p = sock.getLocalPort
@@ -94,7 +101,7 @@ class PostgresLiveSpec extends SparkSpec with BeforeAndAfterAll {
     MasterData.masterFramesJdbc(spark, url, opts)
   }
 
-  test("S6-live: all six master tables roundtrip through PostgreSQL bit-exactly") {
+  liveTest("S6-live: all six master tables roundtrip through PostgreSQL bit-exactly") {
     assume(port.isDefined, "no live PostgreSQL available in this environment")
     assert(live.keySet === MasterData.masterTables.toSet)
     for (t <- MasterData.masterTables) {
@@ -105,7 +112,7 @@ class PostgresLiveSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
-  test("S6-live: dimension probes push filters into the remote PostgreSQL SQL") {
+  liveTest("S6-live: dimension probes push filters into the remote PostgreSQL SQL") {
     assume(port.isDefined, "no live PostgreSQL available in this environment")
     val probe = live("products").filter(col("is_active")).select("sku_id")
     val plan = probe.queryExecution.executedPlan.toString
@@ -113,7 +120,7 @@ class PostgresLiveSpec extends SparkSpec with BeforeAndAfterAll {
       s"filter must reach the JDBC scan, got:\n$plan")
   }
 
-  test("S6-live: Q1 over live PostgreSQL master data equals Q1 over fixture frames") {
+  liveTest("S6-live: Q1 over live PostgreSQL master data equals Q1 over fixture frames") {
     assume(port.isDefined, "no live PostgreSQL available in this environment")
     import spark.implicits._
     val orders = gen.rawOrders(java.time.LocalDate.of(2026, 1, 14), 500).toDF()

@@ -2,6 +2,8 @@ package graft
 
 import graft.procurement.{DataGenerator, Pipeline, Queries}
 import graft.sources.{Ingest, SnapshotStore}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -166,4 +168,112 @@ class ProcurementPipelineSpec extends SparkSpec {
       runDate, master, retryDelayMs = 0L)
     assert(day === fresh)
   }
+
+  /** The one file of `format` a sink half holds. */
+  private def sinkFile(dataset: String, format: String): String = {
+    val files = new java.io.File(s"$tmp/out/$dataset/14-01-2026/$format").listFiles()
+      .map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(s".$format"))
+    assert(files.length === 1, s"$dataset/$format: ${files.mkString(", ")}")
+    s"$tmp/out/$dataset/14-01-2026/$format/${files.head}"
+  }
+
+  /** A sink's rows in file order, every value as its written text: the CSV
+    * read as all strings, the JSON cast to string in the CSV's columns. */
+  private def sinkRows(dataset: String): (Seq[Row], Seq[Row], DataFrame) = {
+    val csv = spark.read.option("header", "true").csv(sinkFile(dataset, "csv"))
+    val json = spark.read.json(sinkFile(dataset, "json"))
+    (csv.collect().toSeq,
+      json.select(csv.columns.map(c => col(c).cast("string")).toIndexedSeq: _*).collect().toSeq,
+      json)
+  }
+
+  test("sinks: one file per half, rows in (metric desc, sku_id, warehouse_id) order, JSON = CSV") {
+    summary
+    for ((ds, metric) <- Seq("aggregated_orders" -> "total_quantity", "net_demand" -> "net_demand")) {
+      val (csv, json, typed) = sinkRows(ds)
+      assert(csv.nonEmpty, ds)
+      assert(json === csv, s"$ds: JSON and CSV rows differ")
+      val keys = typed.select(col(metric), col("sku_id"), col("warehouse_id")).collect()
+        .map(r => (-r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(keys === keys.sorted, s"$ds: rows out of order")
+      assert(keys.distinct.size === keys.size, s"$ds: sort keys not a total order")
+    }
+  }
+
+  test("summary: every RunSummary field recomputes from the written files") {
+    val s = summary
+    val (_, _, agg) = sinkRows("aggregated_orders")
+    val (_, _, nd) = sinkRows("net_demand")
+    val (_, _, po) = sinkRows("supplier_orders")
+    val demand = nd.select("net_demand").collect().map(_.getLong(0))
+    assert(s.runDate === "14-01-2026")
+    assert(s.ordersLoaded === Ingest.orders(spark, s"$tmp/raw/orders/14-01-2026").count())
+    assert(s.stockRecords ===
+      spark.read.option("header", "true").csv(s"$tmp/out/stock_csv/14-01-2026").count())
+    assert(s.stockRecords ===
+      Ingest.jsonArray(spark, s"$tmp/raw/stock/14-01-2026/stock.json").count())
+    assert(s.snapshotRows === SnapshotStore.readDay(spark, s"$tmp/store", "2026-01-14").count())
+    assert(s.aggregatedRows === agg.count())
+    assert(s.aggregatedRows === demand.length)
+    assert(s.totalNetDemand === demand.sum)
+    assert(s.itemsWithDemand === demand.count(_ > 0))
+    assert(s.purchaseOrders === po.count())
+    // the observed sum runs over the JSON write's one partition in row
+    // order, so the file's costs summed in file order give the same bits
+    val cost = po.select("total_cost").collect().map(_.getDouble(0)).foldLeft(0.0)(_ + _)
+    assert(java.lang.Double.doubleToLongBits(s.totalCost) ===
+      java.lang.Double.doubleToLongBits(cost))
+    val written = Files.readString(
+      java.nio.file.Paths.get(s"$tmp/out/pipeline_summary/summary_14-01-2026.json"))
+    assert(written.contains(s""""total_cost":${s.totalCost}}"""))
+    assert(written.contains(s""""purchase_orders":${s.purchaseOrders},"""))
+  }
+
+  test("a day without orders writes its sinks and observes a zero summary") {
+    val t = Files.createTempDirectory("graft_no_orders").toString
+    Pipeline.writeRawDay(spark, gen, s"$t/raw", runDate, numOrders = 0, snapshotDate = runDate)
+    val s = Pipeline.run(spark, s"$t/raw", s"$t/store", s"$t/out", runDate, master)
+    assert((s.ordersLoaded, s.aggregatedRows, s.totalNetDemand, s.itemsWithDemand,
+      s.purchaseOrders, s.totalCost) === ((0L, 0L, 0L, 0L, 0L, 0.0)))
+    assert(s.snapshotRows > 0)
+    for (ds <- Seq("aggregated_orders", "net_demand", "supplier_orders"))
+      assert(new java.io.File(s"$t/out/$ds/14-01-2026/json").isDirectory, ds)
+  }
+
+  test("job budget: no job between supplier_orders and store_maintenance; the day's jobs bounded") {
+    summary // session warm and master caches filled: the day counts its own jobs only
+    val t = Files.createTempDirectory("graft_jobs").toString
+    Pipeline.writeRawDay(spark, gen, s"$t/raw", runDate, numOrders = 1000,
+      snapshotDate = runDate)
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.run(spark, s"$t/raw", s"$t/store", s"$t/out", runDate, master)
+      org.apache.spark.ListenerBusFlush(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // (start, end) of each task's success record, in epoch ms
+    val ts = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmssSSS")
+      .withZone(java.time.ZoneOffset.UTC)
+    val field = (name: String) => s""""$name": "([^"]+)"""".r
+    val spans = new java.io.File(s"$t/out/logs/tasks/14-01-2026").listFiles().toSeq.map { f =>
+      val txt = Files.readString(f.toPath)
+      def get(name: String) = field(name).findFirstMatchIn(txt).get.group(1)
+      val end = java.time.Instant.from(ts.parse(get("timestamp"))).toEpochMilli
+      get("task_name") -> (end - math.round(get("duration_sec").toDouble * 1000), end)
+    }.toMap
+    val jobs = starts.toArray.toSeq.map(_.asInstanceOf[java.lang.Long].longValue)
+    val gapFrom = spans("supplier_orders")._2
+    val gapTo = spans("store_maintenance")._1 - 1 // duration_sec is rounded to the ms
+    assert(jobs.count(j => j > gapFrom && j < gapTo) === 0,
+      s"jobs between supplier_orders and store_maintenance: ${jobs.filter(j => j > gapFrom && j < gapTo)}")
+    assert(jobs.size <= JobBudget, s"the day ran ${jobs.size} jobs")
+  }
+
+  /** Jobs of one fresh-store 1,000-order day, as measured (41). The day
+    * ran about 50 while the summary scalars were separate aggregate jobs
+    * and each sink format paid its own global range sort. */
+  private val JobBudget = 41
 }

@@ -183,6 +183,29 @@ class Round14Spec extends SparkSpec {
     assert(probe.count() === 3)
   }
 
+  test("remove and compact carry every sidecar forward row-identical (IVF-SQ8, IMI)") {
+    val e = Tables.embeddings(spark, sf).cache()
+    // a sidecar's rows from its listed part files, in a stable order
+    def rows(path: String): Seq[String] = {
+      val parts = new java.io.File(path).listFiles().map(_.getPath)
+        .filterNot(f => Seq("_", ".").exists(new java.io.File(f).getName.startsWith))
+      spark.read.parquet(parts.toIndexedSeq: _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    }
+    for ((tier, p) <- Seq(Tier.IvfSq8 -> Build(8), Tier.Imi -> Build(4, 4, iterations = 1))) {
+      val idx = java.nio.file.Files.createTempDirectory("graft_carry_spec")
+        .resolve("index").toString
+      Similarity.build(tier, idx, e, p)
+      // each commit retires the generation before it: read gen 0 first
+      val built = tier.sidecars.map(q => q -> rows(s"$idx/${q}0")).toMap
+      assert(built.values.forall(_.nonEmpty))
+      Similarity.remove(spark, tier, idx, e.filter(col("vec_id") % 5 === 0).select(col("vec_id")))
+      for (q <- tier.sidecars) assert(rows(s"$idx/${q}1") === built(q), s"${tier.name} $q after remove")
+      Similarity.compact(spark, tier, idx)
+      for (q <- tier.sidecars) assert(rows(s"$idx/${q}2") === built(q), s"${tier.name} $q after compact")
+      assert(!new java.io.File(s"$idx/${tier.sidecars.head}1").exists, "gen 1 retired")
+    }
+  }
+
   // ------------------------------------- fuzzy membership from frames
 
   test("fuzzyContaminatedIds: membership derives from the eval frame, not an id convention") {
